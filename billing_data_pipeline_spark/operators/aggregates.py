@@ -189,6 +189,16 @@ def grouped_profile(
     expr_gs = [g for g in group_cols if not isinstance(g, str)]
     expr_names = iter(df.select(*expr_gs).columns if expr_gs else ())
     added: list[Column] = []
+    taken = set(df.columns)
+
+    def helper(name: str) -> str:
+        # a helper column name no input column (or earlier helper)
+        # shadows — select("*", ...) must never produce a duplicate name
+        while name in taken:
+            name = "_" + name
+        taken.add(name)
+        return name
+
     for i, g in enumerate(group_cols):
         if isinstance(g, str):
             gnames.append(g)
@@ -200,7 +210,7 @@ def grouped_profile(
             # original column
             nm = next(expr_names)
             gnames.append(nm)
-            k = f"_gp_key{i}" if nm in df.columns else nm
+            k = helper(f"_gp_key{i}") if nm in taken else helper(nm)
             knames.append(k)
             added.append(g.alias(k))
     # Shuffle narrow precomputed values, not raw inputs (r12, guide
@@ -213,19 +223,18 @@ def grouped_profile(
     # WHERE the row-local expressions run moves (scan side, where the
     # guide wants per-row work, instead of post-shuffle).
     m = F.col(measure) if isinstance(measure, str) else measure
-    added.append(m.alias("_gp_m"))
-    aggs = measure_aggs("_gp_m")
+    m_name = helper("_gp_m")
+    added.append(m.alias(m_name))
+    aggs = measure_aggs(m_name)
     for i, (alias, _pred) in enumerate((conditions or {}).items()):
-        added.append(
-            F.when(_pred, 1).otherwise(0).alias(f"_gp_c{i}")
-        )
-        aggs.append(F.sum(f"_gp_c{i}").alias(alias))
+        c_name = helper(f"_gp_c{i}")
+        added.append(F.when(_pred, 1).otherwise(0).alias(c_name))
+        aggs.append(F.sum(c_name).alias(alias))
     if time_col:
         aggs.append(F.min(time_col).alias("first_activity"))
         aggs.append(F.max(time_col).alias("last_activity"))
-    # k is never an existing column (either _gp_key{i} or an alias absent
-    # from df.columns), so select("*", ...) appends without collisions —
-    # one plan op instead of a withColumn per key
+    # every added name comes from helper(), so select("*", ...) appends
+    # without collisions — one plan op instead of a withColumn per key
     tmp = df.select("*", *added) if added else df
     # Explicit width: a bare repartition(*cols) lets AQE coalesce the
     # shuffle to ~1 partition at local data sizes (64 MB advisory), which

@@ -169,39 +169,30 @@ def upsert_latest_wins(
 
 def append_new_rows_per_file(
     batch: DataFrame,
-    table_path: str,
+    ledger,
     keys: Sequence[str],
     file_col: str,
+    file_hashes: dict[str, str],
     existing_filter: Column | None = None,
 ) -> tuple[int, dict[str, int]]:
     """Idempotent append that also reports rows-added PER source file.
 
+    ``ledger`` is the target table's ``operators.ledger.FileLedger``.
     ``file_col`` names a column in ``batch`` carrying the source-file key
-    (it is dropped before the write). Mirrors the reference's per-file
+    (it is dropped before the write); ``file_hashes`` maps every file of
+    the batch to its content hash. Mirrors the reference's per-file
     new_record_count bookkeeping (ingest.py:262-265) without appending one
-    file at a time: one anti-join + one write for the whole batch, then a
-    cheap groupBy on the surviving rows for the per-file split.
+    file at a time: one anti-join against ``ledger.table``, a cheap
+    groupBy on the surviving rows for the per-file split, then ONE
+    ``ledger.record`` commit that publishes the rows and every file's
+    ledger entry together — a file whose rows were all already present
+    records 0, and a crash anywhere before the commit leaves neither.
     """
-    from pyspark.errors import AnalysisException
-
-    spark = batch.sparkSession
-    try:
-        existing = spark.read.parquet(table_path)
-    except AnalysisException as exc:
-        # Same contract as append_new_rows (review r7 — this per-file
-        # twin, the one the PIPELINE calls, kept the bare except the r5/r6
-        # fixes removed from its sibling): only a genuinely-absent table
-        # is "first batch"; a transient read failure must PROPAGATE or a
-        # replayed batch re-appends every row as silent duplicates.
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-            existing = None
-        else:
-            raise
-    if existing is None:
+    table = ledger.table
+    if table.latest_version() is None:
         new_rows = dedup_within_batch(batch, keys)
     else:
-        new_rows = dedup_append(batch, existing, keys, existing_filter)
+        new_rows = dedup_append(batch, table.read(), keys, existing_filter)
     new_rows = new_rows.persist()
     try:
         per_file = {
@@ -210,12 +201,13 @@ def append_new_rows_per_file(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        n = sum(per_file.values())
-        if n:
-            new_rows.drop(file_col).write.mode("append").parquet(table_path)
+        ledger.record(
+            [(f, h, per_file.get(f, 0)) for f, h in file_hashes.items()],
+            new_rows.drop(file_col),
+        )
     finally:
         new_rows.unpersist()
-    return n, per_file
+    return sum(per_file.values()), per_file
 
 
 def assert_unique(df: DataFrame, keys: Sequence[str]) -> None:

@@ -5,7 +5,9 @@ file_hash, processed_at, record_count — reference: pipeline/assets/
 ingest.py:164-172) and skips any file whose (filename, md5) is already
 recorded, reprocessing when the hash changed (ingest.py:217-231).
 
-Here the ledger is a small parquet table. File hashes are computed
+Here the ledger is not a table of its own: its rows ride in the ``meta``
+of ``raw_billing``'s append commits (``FileLedger``), so a file and the
+rows it contributed publish together. File hashes are computed
 *distributed*: executors stream each file through md5 in bounded chunks
 (pyarrow filesystem streams inside a mapInPandas kernel), the driver only
 sees (path, hash) pairs — so hashing scales with the cluster instead of
@@ -142,136 +144,81 @@ def hash_files(spark: SparkSession, paths: list[str]) -> DataFrame:
 
 
 class FileLedger:
-    """Parquet-backed processed-files ledger with hash-aware skip.
+    """The processed-files ledger as a view over a table's commit log.
 
-    Versioned layout: immutable ``v_*`` dirs under ``<path>_versions`` with
-    an atomically-renamed ``_current`` pointer. ``record`` keeps the
-    PREVIOUS version on disk for one generation (outstanding lazy frames
-    from ``load()`` stay readable across one upsert — review r5: the old
-    immediate rmtree invalidated them mid-plan) and serializes concurrent
-    writers with an O_EXCL lock (two unserialized upserts both built on the
-    same base and the loser's rows vanished)."""
+    Each ``record`` is ONE ``mode="append"`` commit to the table: the new
+    rows plus, in the same log entry's ``meta``, the ledger rows for the
+    files they came from. Rows and ledger therefore publish by one
+    manifest swap — a crash before it leaves neither, after it both — so a
+    retried ingest never re-appends rows whose files were not recorded
+    (NULL-key rows, which no anti-join can catch, included).
 
-    def __init__(self, spark: SparkSession, ledger_path: str):
-        from ..sources.os_snapshot import local_fs_path
+    The ledger is the latest entry per filename over the table's RETAINED
+    commit log. Any future overwrite or compaction of the table must carry
+    the folded ledger (``entries()``) in its own commit's ``meta``, or the
+    vacuum that retires the older commits forgets their files."""
+
+    def __init__(self, spark: SparkSession, table_path: str):
+        # looked up at call time so a wrapped factory sees every table
+        from ..sources import os_snapshot
 
         self.spark = spark
-        # Closed-world path gate (review r7): the ledger mixes os-level
-        # pointer/lock/mkdir ops with Spark-resolved URI writes — on an
-        # 's3a://...' warehouse the os side silently created a
-        # cwd-relative 's3a:' junk tree while Spark wrote to real S3,
-        # splitting the ledger's state (hash-skip defeated / torn-state
-        # crash). Local paths and file:/// only; object stores need a
-        # conditional-PUT ledger over sources/objectstore.
-        self.path = local_fs_path(ledger_path)
+        # the factory is the closed-world path gate: a local path or
+        # file:/// gets the POSIX table, any other scheme raises (no
+        # object-store binding is passed here)
+        self.table = os_snapshot.snapshot_table_for(spark, table_path)
 
-    def _versions_dir(self) -> str:
-        return self.path + "_versions"
+    def entries(self) -> list[dict]:
+        """Every ledger row in the retained log, oldest commit first —
+        driver-side, no Spark job."""
+        return [
+            e
+            for c in self.table.commits()
+            for e in ((c.get("meta") or {}).get("files") or ())
+        ]
 
-    def _pointer(self) -> str:
-        return os.path.join(self._versions_dir(), "_current")
-
-    def _current_dir(self) -> str | None:
-        """Pointed-at version dir, or None for a never-written ledger.
-        ONLY a missing pointer means empty: a pointer that cannot be read
-        (EACCES/EIO) or that names a missing dir is a torn/transient state
-        and RAISES — resolving it to an empty ledger would let the next
-        record() publish a history containing only the newest batch
-        (review r5, the silent-history-loss class)."""
-        try:
-            with open(self._pointer()) as f:
-                name = f.read().strip()
-        except FileNotFoundError:
-            return None
-        d = os.path.join(self._versions_dir(), name)
-        if not os.path.isdir(d):
-            raise OSError(
-                f"ledger pointer {self._pointer()} names missing version"
-                f" {name!r} — torn state; restore the version dir or delete"
-                f" the pointer to reset the ledger explicitly"
-            )
-        return d
+    def _latest(self) -> dict[str, dict]:
+        return {e["filename"]: e for e in self.entries()}
 
     def load(self) -> DataFrame:
-        """Resolve via the atomic pointer; a ledger that has never been
-        written is empty. Read failures of a POINTED-AT version RAISE —
-        a blanket except would return empty on any torn/transient state,
-        silently discarding history and (inside record) persisting a
-        ledger containing only the newest rows (reviews r4/r5)."""
-        cur = self._current_dir()
-        if cur is None:
-            # legacy single-dir layout (pre-r4) or never written
-            if os.path.exists(self.path):
-                return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
-            return self.spark.createDataFrame([], LEDGER_SCHEMA)
-        return self.spark.read.schema(LEDGER_SCHEMA).parquet(cur)
+        """Latest entry per filename as a ``LEDGER_SCHEMA`` frame."""
+        return self.spark.createDataFrame(
+            [
+                (
+                    e["filename"],
+                    e["file_hash"],
+                    datetime.fromisoformat(e["processed_at"]),
+                    e["record_count"],
+                )
+                for e in self._latest().values()
+            ],
+            LEDGER_SCHEMA,
+        )
 
     def filter_unprocessed(self, candidates: DataFrame) -> DataFrame:
-        """Anti-join candidates (filename, file_hash) against the ledger.
+        """Candidates (filename, file_hash) the ledger does not hold.
 
         A file re-appears for processing when its name is new OR its hash
         changed — i.e. skip only exact (filename, file_hash) matches,
         matching the reference's skip/reprocess split (ingest.py:223-231).
+        The ledger is already on the driver, so this is a set filter, not
+        a join (the hex hash has no newline, so the pair key is
+        unambiguous).
         """
-        return candidates.join(
-            self.load().select("filename", "file_hash"),
-            on=["filename", "file_hash"],
-            how="left_anti",
+        done = [f"{f}\n{e['file_hash']}" for f, e in self._latest().items()]
+        return candidates.filter(
+            ~F.concat_ws("\n", "filename", "file_hash").isin(done)
         )
 
-    def record(self, processed: list[tuple[str, str, int]]) -> None:
-        """Upsert (filename, file_hash, record_count) rows, latest wins.
-
-        Publishes a fresh immutable version dir and atomically renames the
-        pointer over ``_current`` — a crash mid-write leaves the old
-        version referenced, never a torn table (review r4). The merged
-        plan writes DIRECTLY to the new dir (review r5: the old
-        collect-then-createDataFrame round trip was a leftover from the
-        in-place overwrite era — immutable version dirs never read the
-        path being written). Concurrent writers serialize on a lock file;
-        versions older than {current, previous} are swept after publish.
-        """
-        if not processed:
-            return
-        import tempfile
-        import uuid
-
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        rows = [(f, h, now, n) for f, h, n in processed]
-        update = self.spark.createDataFrame(rows, LEDGER_SCHEMA)
-
-        os.makedirs(self._versions_dir(), exist_ok=True)
-        # Shared fs_mutex (advice r5): the critical section includes a
-        # Spark merge+write whose duration is unbounded on a busy cluster,
-        # so the holder must HEARTBEAT the lock mtime — the old bare
-        # stale-unlink assumed ledger writes complete in milliseconds and
-        # let a second writer steal the lock mid-write, reintroducing the
-        # lost-update race the lock exists to prevent.
-        from ..sources.fslock import fs_mutex
-
-        lock = os.path.join(self._versions_dir(), "_lock")
-        with fs_mutex(lock):
-            merged = (
-                self.load()
-                .join(update.select("filename"), on="filename", how="left_anti")
-                .unionByName(update)
-            )
-            vdir_name = f"v_{uuid.uuid4().hex}"
-            vdir = os.path.join(self._versions_dir(), vdir_name)
-            merged.coalesce(1).write.mode("errorifexists").parquet(vdir)
-            prev = self._current_dir()
-            fd, tmp = tempfile.mkstemp(dir=self._versions_dir(), prefix="_ptr_")
-            with os.fdopen(fd, "w") as f:
-                f.write(vdir_name)
-            os.replace(tmp, self._pointer())  # atomic publish
-            # grace sweep: keep {current, previous}; older versions are
-            # unreachable by any frame loaded after the prior publish
-            keep = {vdir_name, os.path.basename(prev) if prev else vdir_name}
-            import shutil
-
-            for name in os.listdir(self._versions_dir()):
-                if name.startswith("v_") and name not in keep:
-                    shutil.rmtree(
-                        os.path.join(self._versions_dir(), name),
-                        ignore_errors=True,
-                    )
+    def record(self, processed: list[tuple[str, str, int]], rows: DataFrame) -> int:
+        """Append ``rows`` and record (filename, file_hash, record_count)
+        for ``processed`` in ONE commit; latest entry per filename wins on
+        load. A zero-row ``rows`` still commits (an empty, schema-carrying
+        version) so the files are recorded. Returns the published
+        version."""
+        now = datetime.now(timezone.utc).replace(tzinfo=None).isoformat()
+        files = [
+            {"filename": f, "file_hash": h, "record_count": n, "processed_at": now}
+            for f, h, n in processed
+        ]
+        return self.table.commit(rows, mode="append", meta={"files": files})

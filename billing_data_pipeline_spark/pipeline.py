@@ -12,8 +12,17 @@ Stage semantics preserved:
   ``raw_billing`` (J1) with a content-hash file ledger (ST5) and a
   partition-pruned backfill window (ST6/OPT1).
 - aggregates: four FULL-REFRESH tables (the reference's DELETE + INSERT,
-  S8/OPT5) as atomic parquet overwrites.
+  S8/OPT5) as atomic snapshot overwrites.
 - insights: the five report queries -> markdown at the collect edge (S10).
+
+Every warehouse table publishes through one protocol,
+``os_snapshot.snapshot_table_for``. The reference keeps its rows and its
+``processed_files`` ledger in one database; here the ledger is the fold
+over ``raw_billing``'s retained commit log — each ingest is ONE append
+commit whose log entry also carries the ingested files' ledger rows
+(``FileLedger``), so a crash at any stage boundary is retried exactly
+once. Any future overwrite or compaction of ``raw_billing`` must carry
+the folded ledger in its own commit entry.
 
 Every stage returns an O2-style metrics dict.
 """
@@ -38,7 +47,8 @@ from .sources.csv_source import (
 
 class BillingPipeline:
     """One warehouse directory holding raw_billing + the four aggregate
-    tables + the processing ledger, all plain parquet."""
+    tables, each a snapshot table; the processing ledger lives in
+    raw_billing's commit log."""
 
     def __init__(self, spark: SparkSession, warehouse_dir: str):
         self.spark = spark
@@ -47,38 +57,25 @@ class BillingPipeline:
     def table_path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
 
-    #: full-refresh tables that publish through SnapshotTable on a local
-    #: warehouse (review r6: a crash mid-plain-overwrite deletes the old
-    #: aggregate table before the new one commits — the exact torn-table
-    #: failure versioned_sink exists to prevent; its own docstring says
-    #: Spark overwrite "is NOT atomic")
-    _SNAPSHOT_TABLES = ("daily_aggs", "user_aggs", "service_aggs", "region_aggs")
+    def _table(self, name: str):
+        # via the factory, looked up at call time: it normalizes file:///
+        # (a raw SnapshotTable(url) made a cwd-relative 'file:' junk tree,
+        # review r7) and rejects schemes the POSIX protocol cannot serve
+        from .sources import os_snapshot
 
-    def _snapshot_capable(self) -> bool:
-        """SnapshotTable's manifest/lock protocol is os-level (POSIX
-        rename); remote warehouses (s3a://, hdfs://) keep the plain
-        overwrite until a conditional-PUT manifest backend exists —
-        documented residual, mirrors versioned_sink's own object-store
-        note."""
-        return "://" not in self.warehouse or self.warehouse.startswith("file:")
+        return os_snapshot.snapshot_table_for(self.spark, self.table_path(name))
+
+    def ledger(self) -> FileLedger:
+        return FileLedger(self.spark, self.table_path("raw_billing"))
 
     def read(self, name: str) -> DataFrame:
         if name == "processed_files":
-            # the ledger publishes via a versioned dir + atomic pointer
-            # (r4 crash-safety); its own load() resolves the pointer
-            return FileLedger(self.spark, self.table_path(name)).load()
-        if name in self._SNAPSHOT_TABLES and self._snapshot_capable():
-            # snapshot_table_for, not a raw SnapshotTable(url) (review
-            # r7): a 'file:///...' warehouse handed the literal URL to
-            # os.rename/makedirs, creating a cwd-relative 'file:' junk
-            # tree and crashing every publish; the factory normalizes
-            # the scheme once for the whole kit.
-            from .sources.os_snapshot import snapshot_table_for
-
-            st = snapshot_table_for(self.spark, self.table_path(name))
-            if st.latest_version() is not None:
-                return st.read()
-            # pre-r6 warehouse written as plain parquet: fall through
+            return self.ledger().load()
+        st = self._table(name)
+        if st.latest_version() is not None:
+            return st.read()
+        # a table written as plain parquet (before snapshots, or by the
+        # stream CLI) still reads
         return self.spark.read.parquet(self.table_path(name))
 
     # -- stage 1: ingest ----------------------------------------------------
@@ -122,7 +119,8 @@ class BillingPipeline:
                 )
 
             files = [p for p in files if _in_window(p)]
-        ledger = FileLedger(self.spark, self.table_path("processed_files"))
+        ledger = self.ledger()
+        _refuse_plain_parquet(ledger.table)
         metrics = {
             "files_discovered": len(files),
             "files_new_or_changed": 0,
@@ -132,25 +130,21 @@ class BillingPipeline:
             return metrics
         candidates = hash_files(self.spark, files)
         todo = ledger.filter_unprocessed(candidates).collect()
-        todo_names = {r["filename"] for r in todo}
-        metrics["files_new_or_changed"] = len(todo_names)
-        if not todo_names:
+        todo_hashes = {r["filename"]: r["file_hash"] for r in todo}
+        metrics["files_new_or_changed"] = len(todo_hashes)
+        if not todo_hashes:
             return metrics
 
         # Filter the lake to new/changed files using the SAME partition-
         # qualified key the ledger uses (basenames collide across Hive
         # partitions — every partition's file is 'billing.csv').
         batch = lake.withColumn("_lk", ledger_key(F.input_file_name())).filter(
-            F.col("_lk").isin(todo_names)
+            F.col("_lk").isin(list(todo_hashes))
         )
-        n, per_file = append_new_rows_per_file(
-            batch, self.table_path("raw_billing"), list(RAW_BILLING_KEYS), "_lk"
-        )
-        # Per-file new-row counts, matching the reference's per-file
-        # new_record_count (ingest.py:262-265) — a file whose rows were all
-        # already present records 0, not the batch total.
-        ledger.record(
-            [(r["filename"], r["file_hash"], per_file.get(r["filename"], 0)) for r in todo]
+        # one append commit: the new rows plus each file's ledger entry
+        # with its own new-row count (reference ingest.py:262-265)
+        n, _ = append_new_rows_per_file(
+            batch, ledger, list(RAW_BILLING_KEYS), "_lk", todo_hashes
         )
         metrics["rows_appended"] = n
         return metrics
@@ -212,23 +206,15 @@ class BillingPipeline:
         from pyspark.sql import Observation
 
         metrics = {}
-        snapshot = self._snapshot_capable()
         for name, df in tables.items():
             obs = Observation(f"{name}_obs")
-            observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            if snapshot:
-                # atomic publish: stage, rename, manifest swap — a crash
-                # mid-refresh leaves the previous version readable, never
-                # a deleted/torn table (review r6); keep one prior
-                # version so in-flight readers of the old snapshot finish.
-                # Via the factory: normalizes file:/// (review r7).
-                from .sources.os_snapshot import snapshot_table_for
-
-                st = snapshot_table_for(self.spark, self.table_path(name))
-                st.commit(observed, mode="overwrite")
-                st.vacuum(keep=2)
-            else:
-                observed.write.mode("overwrite").parquet(self.table_path(name))
+            # atomic publish: stage, rename, manifest swap — a crash
+            # mid-refresh leaves the previous version readable, never a
+            # deleted/torn table (review r6); keep one prior version so
+            # in-flight readers of the old snapshot finish
+            st = self._table(name)
+            st.commit(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+            st.vacuum(keep=2)
             try:
                 metrics[f"{name}_rows"] = obs.get["rows"]
             except Exception:
@@ -254,39 +240,6 @@ class BillingPipeline:
             service_aggs=self.read("service_aggs"),
         )
 
-    def _table_data_bytes(self, name: str) -> int:
-        """Data-file bytes of a warehouse table, scheme-aware. The local
-        fast path is session.dir_input_bytes; non-posix warehouses
-        (s3a://, hdfs://) go through the Hadoop FileSystem — os.walk on a
-        remote URI silently measured 0 bytes and made run() skip every
-        downstream stage forever (review r5)."""
-        path = self.table_path(name)
-        if "://" not in path or path.startswith("file:"):
-            from .session import dir_input_bytes
-
-            return dir_input_bytes(path.removeprefix("file:"))
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        try:
-            fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            if not fs.exists(hpath):
-                return 0
-            total = 0
-            it = fs.listFiles(hpath, True)
-            while it.hasNext():
-                f = it.next()
-                p = f.getPath()
-                n = p.getName()
-                if not n.startswith((".", "_")):
-                    # skip committer garbage under _temporary/ at any depth
-                    if "/_" not in p.toString().split(path, 1)[-1]:
-                        total += f.getLen()
-            return total
-        except Exception:
-            # an unreachable FS must not silently look empty: let the
-            # downstream read raise the real error
-            return 1
-
     # -- the DAG ------------------------------------------------------------
 
     def run(
@@ -297,14 +250,13 @@ class BillingPipeline:
     ) -> dict:
         """Topological materialization of the whole asset graph."""
         metrics = {"ingest": self.ingest(source_root, from_date, to_date)}
-        if self._table_data_bytes("raw_billing") == 0:
-            # First-ever run over an empty window: nothing ingested, no
-            # raw table yet — report empty metrics instead of crashing the
-            # downstream reads (review r3; mirrors the reference's
-            # continue-on-empty sensors). Checked via data-file bytes, not
-            # bare directory existence: a crash-orphaned dir holding only
-            # committer garbage (_temporary/...) must take this branch too,
-            # or the downstream read dies on UNABLE_TO_INFER_SCHEMA.
+        if not any(e["record_count"] for e in self.ledger().entries()):
+            # No commit in raw_billing's log has rows (nothing ingested
+            # yet, or only header-only files): report empty metrics
+            # instead of aggregating nothing (review r3; mirrors the
+            # reference's continue-on-empty sensors). Read from the
+            # ledger's record counts — no Spark job, and crash orphans
+            # are invisible because only published commits count.
             metrics["aggregates"] = {}
             metrics["insights"] = {}
             metrics["report_markdown"] = ""
@@ -314,3 +266,29 @@ class BillingPipeline:
         metrics["insights"] = report_metrics
         metrics["report_markdown"] = report
         return metrics
+
+
+def _refuse_plain_parquet(table) -> None:
+    """Fail closed when ``raw_billing`` holds data but no snapshot
+    manifest: a warehouse written before raw_billing became a snapshot
+    table, or by the ``stream`` CLI. Its rows carry no ledger, and the
+    first commit would hide them and then re-append them. Entries of the
+    snapshot protocol itself (``v=N`` crash orphans, ``_staging_*``,
+    ``_lock``) are not data."""
+    if table.latest_version() is not None:
+        return
+    try:
+        names = os.listdir(table.path)
+    except FileNotFoundError:
+        return
+    if any(
+        not n.startswith(("_", ".")) and not (n[:2] == "v=" and n[2:].isdigit())
+        for n in names
+    ):
+        raise RuntimeError(
+            f"{table.path} holds plain parquet data but no snapshot"
+            " manifest (_latest): it was written before raw_billing became"
+            " a snapshot table, or by the stream command. Backfill into a"
+            " fresh warehouse: run the pipeline with a new warehouse"
+            " directory over the same lake."
+        )

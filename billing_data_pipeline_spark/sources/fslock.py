@@ -1,7 +1,7 @@
 """Shared POSIX file mutex with stale-break and holder heartbeat.
 
 One implementation for every metadata lock in the repo (SnapshotTable's
-manifest lock, FileLedger's version-publish lock). Semantics:
+manifest lock). Semantics:
 
 - acquire = ``O_CREAT|O_EXCL`` on the lock path (the portable POSIX
   mutex), writing a per-acquisition token;

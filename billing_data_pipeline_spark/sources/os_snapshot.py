@@ -123,6 +123,10 @@ class ObjectStoreSnapshotTable:
         names a version absent from the commit list (review r7)."""
         return self._head()[1]["version"]
 
+    def commits(self) -> list[dict]:
+        """The retained commit log, oldest first (SnapshotTable.commits)."""
+        return self._head()[1]["commits"]
+
     def epochs(self) -> set:
         _, state = self._head()
         return {
@@ -135,12 +139,14 @@ class ObjectStoreSnapshotTable:
             self.store.fire(name)
 
     def commit(self, df=None, mode: str = "overwrite", epoch=None,
-               writer: Callable[[str], None] | None = None) -> int:
+               writer: Callable[[str], None] | None = None,
+               meta=None) -> int:
         """Write the next version and publish it with one conditional PUT.
         Exactly one of ``df`` (a Spark DataFrame) or ``writer`` (a callable
         given the data URL — the seam the non-Spark multi-process sweep
-        uses) provides the data. Same idempotent-epoch contract as
-        SnapshotTable.commit, including the checkpoint-reset guard."""
+        uses) provides the data. Same idempotent-epoch and ``meta``
+        contract as SnapshotTable.commit, including the checkpoint-reset
+        guard."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
         if (df is None) == (writer is None):
@@ -195,7 +201,7 @@ class ObjectStoreSnapshotTable:
                     "version": version,
                     "commits": state["commits"]
                     + [{"v": version, "mode": mode, "epoch": epoch,
-                        "dir": uid}],
+                        "dir": uid, "meta": meta}],
                 }
                 # last-moment liveness check: if vacuum tombstoned our
                 # begin marker (it deletes the marker BEFORE the data),
@@ -338,7 +344,7 @@ def local_fs_path(url: str) -> str:
     """Normalize a bare path or ``file:///`` URL to a plain filesystem
     path; RAISE for any other scheme. The shared closed-world gate for
     every os-level protocol in the kit (SnapshotTable's rename/O_EXCL,
-    FileLedger's pointer, fs_mutex): running one against 's3a://...' as a
+    fs_mutex): running one against 's3a://...' as a
     literal string silently splits state between a cwd-relative
     's3a:' junk tree and the real store (review r7)."""
     from urllib.parse import urlparse

@@ -17,6 +17,10 @@ without requiring a table format:
   ``append`` (log-structured: a snapshot at version v = the last overwrite
   at or before v plus every append after it — the same add-file idea as a
   table format's transaction log, reduced to one JSON manifest);
+- a commit entry may carry a small JSON ``meta`` object — per-commit
+  metadata published atomically with the data (the pipeline's file ledger
+  rides on ``raw_billing``'s append commits this way, as a table format
+  keeps commit info in its log);
 - an optional ``epoch`` id makes commits idempotent: re-committing an
   already-recorded epoch is a no-op. That is exactly the foreachBatch
   exactly-once contract — a replayed micro-batch (restart after crash,
@@ -178,6 +182,12 @@ class SnapshotTable:
             c["epoch"] for c in self._load()["commits"] if c.get("epoch") is not None
         }
 
+    def commits(self) -> list[dict]:
+        """The retained commit log, oldest first: ``{"v", "mode", "epoch",
+        "meta"}`` per commit (``meta`` is None when the commit carried
+        none)."""
+        return self._load()["commits"]
+
     def versions(self) -> list[int]:
         """Version directories present on disk (may include unpublished
         crash orphans — the manifest, not the listing, is the truth)."""
@@ -194,11 +204,15 @@ class SnapshotTable:
     def _vdir(self, version: int) -> str:
         return os.path.join(self.path, f"v={version}")
 
-    def commit(self, df: DataFrame, mode: str = "overwrite", epoch=None) -> int:
+    def commit(
+        self, df: DataFrame, mode: str = "overwrite", epoch=None, meta=None
+    ) -> int:
         """Write ``df`` as the next version and publish it atomically.
         ``mode='append'`` adds to the current snapshot instead of replacing
         it. A non-None ``epoch`` already in the log makes this a no-op
-        (idempotent replay). Returns the published version number.
+        (idempotent replay). ``meta`` (JSON-serializable) is stored in the
+        commit's log entry, published by the same manifest swap as the
+        data. Returns the published version number.
 
         The data write happens OUTSIDE the lock into an unreferenced
         ``_staging_*`` directory (review r4: holding the lock across a
@@ -212,9 +226,12 @@ class SnapshotTable:
             lambda staging: df.write.mode("errorifexists").parquet(staging),
             mode=mode,
             epoch=epoch,
+            meta=meta,
         )
 
-    def commit_files(self, write_fn, mode: str = "overwrite", epoch=None) -> int:
+    def commit_files(
+        self, write_fn, mode: str = "overwrite", epoch=None, meta=None
+    ) -> int:
         """``commit`` with the data write abstracted: ``write_fn(staging)``
         materializes the version's files under the (not-yet-existing)
         staging directory. This is the engine-agnostic seam the
@@ -238,7 +255,7 @@ class SnapshotTable:
         try:
             with self._inprogress(staging):
                 write_fn(staging)
-                published = self._publish_staging(staging, mode, epoch)
+                published = self._publish_staging(staging, mode, epoch, meta)
                 if isinstance(published, int):
                     return published  # replay raced us: already in
                 version, trash = published
@@ -249,7 +266,7 @@ class SnapshotTable:
             if trash is not None:
                 shutil.rmtree(trash, ignore_errors=True)
 
-    def _publish_staging(self, staging: str, mode: str, epoch):
+    def _publish_staging(self, staging: str, mode: str, epoch, meta):
         """Locked metadata region of commit(): allocate a version, rename
         the staged data into place, publish the manifest. Returns the
         replayed version (int) when the epoch raced in concurrently, else
@@ -281,7 +298,9 @@ class SnapshotTable:
                 os.rename(vdir, trash)
             os.rename(staging, vdir)
             man["version"] = version
-            man["commits"].append({"v": version, "mode": mode, "epoch": epoch})
+            man["commits"].append(
+                {"v": version, "mode": mode, "epoch": epoch, "meta": meta}
+            )
             fd, tmp = tempfile.mkstemp(dir=self.path, prefix="_manifest_")
             with os.fdopen(fd, "w") as f:
                 json.dump(man, f)

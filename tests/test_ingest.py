@@ -94,7 +94,7 @@ def test_file_ledger_rejects_remote_scheme_normalizes_file_url(spark, tmp_path):
     with pytest.raises(NotImplementedError, match="local"):
         FileLedger(spark, "s3a://bucket/wh/processed_files")
     led = FileLedger(spark, f"file://{tmp_path}/processed_files")
-    assert led.path == f"{tmp_path}/processed_files"
+    assert led.table.path == f"{tmp_path}/processed_files"
 
 
 def test_append_new_rows_idempotent(spark, tmp_path):
@@ -131,7 +131,7 @@ def test_ledger_skips_unchanged_reprocesses_changed(spark, tmp_path):
     assert todo.count() == 2
 
     hashes = {r["filename"]: r["file_hash"] for r in cands.collect()}
-    ledger.record([(n, h, 1) for n, h in hashes.items()])
+    ledger.record([(n, h, 1) for n, h in hashes.items()], spark.range(0))
     assert ledger.filter_unprocessed(hash_files(spark, [str(f1), str(f2)])).count() == 0
 
     # Modify f2 in place: name matches, hash differs -> reprocess only f2.
@@ -144,7 +144,7 @@ def test_ledger_skips_unchanged_reprocesses_changed(spark, tmp_path):
     new_hash = {
         r["filename"]: r["file_hash"] for r in hash_files(spark, [str(f2)]).collect()
     }
-    ledger.record([(str(f2), new_hash[str(f2)], 1)])
+    ledger.record([(str(f2), new_hash[str(f2)], 1)], spark.range(0))
     led = ledger.load()
     assert led.count() == 2
     assert (
@@ -172,12 +172,12 @@ def test_ledger_keys_distinguish_hive_partitions(spark, tmp_path):
     c1 = hash_files(spark, paths[:1])
     todo1 = ledger.filter_unprocessed(c1).collect()
     assert len(todo1) == 1
-    ledger.record([(r["filename"], r["file_hash"], 1) for r in todo1])
+    ledger.record([(r["filename"], r["file_hash"], 1) for r in todo1], spark.range(0))
 
     c23 = hash_files(spark, paths)
     todo2 = ledger.filter_unprocessed(c23).collect()
     assert sorted(r["filename"] for r in todo2) == sorted(paths[1:])
-    ledger.record([(r["filename"], r["file_hash"], 1) for r in todo2])
+    ledger.record([(r["filename"], r["file_hash"], 1) for r in todo2], spark.range(0))
 
     # Third run: NOTHING is re-processed and no entry was evicted.
     assert ledger.filter_unprocessed(hash_files(spark, paths)).count() == 0

@@ -66,6 +66,28 @@ def _rows(tbl, version=None):
     return sorted(out)
 
 
+def test_commit_meta_rides_in_the_log_on_both_duals(make_store, tmp_path):
+    """Both tables snapshot_table_for can return keep one interface: a
+    commit's JSON ``meta`` is published in its log entry and read back,
+    oldest first, through ``commits()``; a commit without one reads
+    None."""
+    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
+
+    posix = SnapshotTable(None, str(tmp_path / "posix"))
+    duals = [
+        (ObjectStoreSnapshotTable(None, make_store()), lambda t, w, **k: t.commit(writer=w, **k)),
+        (posix, lambda t, w, **k: t.commit_files(w, **k)),
+    ]
+    for table, commit in duals:
+        assert table.commits() == []
+        commit(table, _w([1]), mode="append", meta={"files": [{"filename": "a"}]})
+        commit(table, _w([2]), mode="append")
+        assert [(c["v"], c["meta"]) for c in table.commits()] == [
+            (0, {"files": [{"filename": "a"}]}),
+            (1, None),
+        ]
+
+
 def test_commit_read_append_time_travel_vacuum(make_store):
     store = make_store()
     t = ObjectStoreSnapshotTable(None, store)

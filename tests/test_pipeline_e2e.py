@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from datetime import date
 
+import pytest
+
 from billing_data_pipeline_spark.pipeline import BillingPipeline
 
 CSV_HEADER = (
@@ -198,3 +200,199 @@ def test_billing_insights_renders_on_empty_and_all_null_input(spark):
         raw, user_aggs, region_aggs, service_aggs=service_aggs
     )
     assert "| free | n/a |" in md2  # NULL success rate renders, not crashes
+
+
+# -- exactly-once under a crash at every stage boundary ----------------------
+
+
+class _Crash(RuntimeError):
+    """The injected fault."""
+
+
+def _crash_lake(tmp_path):
+    """Two days: day 22 is ingested first (a windowed run); day 23 then
+    brings a new row, a NULL-key row (empty invoice_id — no anti-join can
+    ever match it) and a copy of a day-22 row (a cross-file duplicate)."""
+    root = tmp_path / "crash_lake"
+
+    def row(day, i, invoice):
+        return (
+            f"2025-04-{day} 10:00:{i:02d},res-{i},user-{i},{1.5 * (i + 1)},eu,pro,"
+            f"inference,true,gpu,{invoice},USD\n"
+        )
+
+    days = {
+        22: [row(22, 0, "inv-0"), row(22, 1, "inv-1"), row(22, 2, "")],
+        23: [row(23, 3, "inv-3"), row(23, 4, ""), row(22, 0, "inv-0")],
+    }
+    for day, rows in days.items():
+        p = root / "year=2025" / "month=04" / f"day={day}"
+        p.mkdir(parents=True)
+        (p / "billing.csv").write_text(CSV_HEADER + "".join(rows))
+    return str(root)
+
+
+def _ledger_counts(pipe):
+    return {
+        r["filename"].rsplit("/", 2)[-2]: r["record_count"]
+        for r in pipe.read("processed_files").collect()
+    }
+
+
+def _fail_once(fn, when=lambda *a, **k: True, after=False):
+    """``fn`` that raises _Crash once: on the first call matching ``when``,
+    before the call or (``after``) once it has returned."""
+
+    def wrapper(*args, **kwargs):
+        if wrapper.fired or not when(*args, **kwargs):
+            return fn(*args, **kwargs)
+        wrapper.fired = True
+        if after:
+            fn(*args, **kwargs)
+        raise _Crash("injected")
+
+    wrapper.fired = False
+    return wrapper
+
+
+def _boundaries():
+    import os
+
+    from billing_data_pipeline_spark.operators.ledger import FileLedger
+    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
+
+    raw_manifest = os.path.join("raw_billing", "_latest")
+    return {
+        "ledger_record": (FileLedger, "record", {}),
+        # the data dir is renamed into place; the manifest swap is next
+        "raw_manifest_publish": (
+            os, "replace", {"when": lambda src, dst: str(dst).endswith(raw_manifest)}
+        ),
+        "after_ingest": (BillingPipeline, "ingest", {"after": True}),
+        # daily_aggs has committed, user_aggs has not
+        "between_aggregate_commits": (
+            SnapshotTable, "commit", {"when": lambda st, *a, **k: st.path.endswith("user_aggs")}
+        ),
+        "before_insights": (BillingPipeline, "insights", {}),
+    }
+
+
+@pytest.fixture(scope="module")
+def crash_warehouse(spark, tmp_path_factory):
+    """The lake, a warehouse holding day 22 (the state each crash run
+    starts from), and the uninterrupted day-23 run's results."""
+    import shutil
+
+    tmp = tmp_path_factory.mktemp("crash")
+    root = _crash_lake(tmp)
+    base = str(tmp / "base")
+    BillingPipeline(spark, base).run(root, to_date=date(2025, 4, 22))
+    shutil.copytree(base, str(tmp / "clean"))
+    clean = BillingPipeline(spark, str(tmp / "clean"))
+    report = clean.run(root)["report_markdown"]
+    expected = {
+        "raw": clean.read("raw_billing").count(),
+        "ledger": _ledger_counts(clean),
+        "report": report,
+    }
+    # 3 rows of day 22, then day 23's new row and NULL-key row; the
+    # cross-file duplicate is dropped
+    assert expected["raw"] == 5
+    assert expected["ledger"] == {"day=22": 3, "day=23": 2}
+    return root, base, expected
+
+
+@pytest.mark.parametrize("boundary", list(_boundaries()))
+def test_run_is_exactly_once_under_a_crash_at_each_boundary(
+    spark, tmp_path, monkeypatch, crash_warehouse, boundary
+):
+    """A run() that dies at a stage boundary and is retried leaves the
+    warehouse exactly as one uninterrupted run: no row appended twice
+    (NULL-key rows included), one ledger row per file with its own
+    record_count, the same report."""
+    import shutil
+
+    root, base, expected = crash_warehouse
+    wh = str(tmp_path / "wh")
+    shutil.copytree(base, wh)
+    owner, name, opts = _boundaries()[boundary]
+    fault = _fail_once(getattr(owner, name), **opts)
+    monkeypatch.setattr(owner, name, fault)
+    pipe = BillingPipeline(spark, wh)
+    with pytest.raises(_Crash):
+        pipe.run(root)
+    assert fault.fired
+    m = pipe.run(root)
+    assert pipe.read("raw_billing").count() == expected["raw"]
+    assert _ledger_counts(pipe) == expected["ledger"]
+    assert m["report_markdown"] == expected["report"]
+
+
+# -- the raw_billing layout ------------------------------------------------
+
+
+def test_ingest_fails_closed_on_plain_parquet_raw_billing(spark, tmp_path):
+    """raw_billing written as plain parquet (before it became a snapshot
+    table, or by the stream command) carries no ledger; the first commit
+    would hide its rows and re-append them. Ingest refuses and names the
+    remedy; reads still fall back to the plain parquet. Snapshot-protocol
+    debris from a crashed first commit is not such data."""
+    import os
+
+    root, n_rows = _write_lake(tmp_path)
+    wh = tmp_path / "wh"
+    orphan = wh / "raw_billing" / "v=0"
+    orphan.mkdir(parents=True)
+    (orphan / "part-0.parquet").write_bytes(b"torn")
+    (wh / "raw_billing" / "_staging_dead").mkdir()
+    pipe = BillingPipeline(spark, str(wh))
+    assert pipe.ingest(root)["rows_appended"] == n_rows
+    assert pipe.read("raw_billing").count() == n_rows
+
+    legacy = BillingPipeline(spark, str(tmp_path / "legacy"))
+    pipe.read("raw_billing").write.parquet(legacy.table_path("raw_billing"))
+    with pytest.raises(RuntimeError, match="fresh warehouse"):
+        legacy.run(root)
+    assert not os.path.exists(os.path.join(legacy.table_path("raw_billing"), "_latest"))
+    assert legacy.read("raw_billing").count() == n_rows
+
+
+# -- zero-row commits ----------------------------------------------------------
+
+
+def test_header_only_lake_is_recorded_and_reports_empty(spark, tmp_path):
+    p = tmp_path / "lake" / "year=2025" / "month=04" / "day=22"
+    p.mkdir(parents=True)
+    (p / "billing.csv").write_text(CSV_HEADER)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+
+    m = pipe.run(str(tmp_path / "lake"))
+    assert m["aggregates"] == {} and m["report_markdown"] == ""
+    assert _ledger_counts(pipe) == {"day=22": 0}
+    raw = pipe.read("raw_billing")
+    assert raw.count() == 0 and "invoice_id" in raw.columns
+
+    assert pipe.run(str(tmp_path / "lake"))["ingest"]["files_new_or_changed"] == 0
+
+
+def test_rewritten_file_with_known_rows_records_zero(spark, tmp_path):
+    """A file rewritten in place (new hash) whose rows are all already
+    present is recorded with record_count 0 and then skipped."""
+    import pathlib
+
+    root, n_rows = _write_lake(tmp_path)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+    pipe.run(root)
+    columns = pipe.read("raw_billing").columns
+
+    f = pathlib.Path(root) / "year=2025" / "month=04" / "day=23" / "billing.csv"
+    header, *rows = f.read_text().splitlines(keepends=True)
+    f.write_text(header + "".join(reversed(rows)))
+    m = pipe.run(root)
+    assert m["ingest"]["files_new_or_changed"] == 1
+    assert m["ingest"]["rows_appended"] == 0
+    assert _ledger_counts(pipe) == {"day=22": 6, "day=23": 0}
+
+    assert pipe.run(root)["ingest"]["files_new_or_changed"] == 0
+    raw = pipe.read("raw_billing")
+    assert raw.count() == n_rows and raw.columns == columns

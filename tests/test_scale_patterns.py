@@ -328,6 +328,34 @@ def test_grouped_profile_one_shuffle_and_alias_shadow(spark):
     assert out["A"]["transaction_count"] == 2
 
 
+def test_grouped_profile_helper_columns_never_shadow_inputs(spark):
+    """The k >= 2 tier adds helper columns (_gp_m, _gp_c{i}) beside the
+    input's; an input that already carries those names must keep its own
+    columns and still aggregate the declared measure and conditions."""
+    from billing_data_pipeline_spark.operators.aggregates import (
+        grouped_profile,
+    )
+
+    src = spark.createDataFrame(
+        [("a", 1.0, "x", 100.0, 0), ("a", 2.0, "y", 200.0, 0), ("b", 4.0, "x", 400.0, 0)],
+        ["g", "v", "d", "_gp_m", "_gp_c0"],
+    )
+    out = {
+        r["g"]: r
+        for r in grouped_profile(
+            src,
+            ["g"],
+            "v",
+            distinct_cols={"nd": "d", "nm": "_gp_m"},
+            conditions={"big": F.col("v") > 1.5, "helper_set": F.col("_gp_c0") == 0},
+        ).collect()
+    }
+    assert out["a"]["total_usage"] == 3.0 and out["b"]["total_usage"] == 4.0
+    assert (out["a"]["nd"], out["a"]["nm"]) == (2, 2)
+    assert (out["a"]["big"], out["a"]["helper_set"]) == (1, 2)
+    assert (out["b"]["big"], out["b"]["helper_set"]) == (1, 1)
+
+
 def test_widen_scan_tier_equivalent_and_round_robin(spark):
     """r11 widen_scan opt-in (single-distinct tier, low group
     cardinality): (1) results are bit-identical to the plain tier — the
