@@ -192,7 +192,10 @@ def append_new_rows_per_file(
     if table.latest_version() is None:
         new_rows = dedup_within_batch(batch, keys)
     else:
-        new_rows = dedup_append(batch, table.read(), keys, existing_filter)
+        # the table holds what this appends: read it with the batch's
+        # schema instead of merging one parquet footer per commit
+        existing = table.read(schema=batch.drop(file_col).schema)
+        new_rows = dedup_append(batch, existing, keys, existing_filter)
     new_rows = new_rows.persist()
     try:
         per_file = {

@@ -41,6 +41,7 @@ from .operators.ledger import FileLedger, hash_files, ledger_key
 from .operators.reports import billing_insights
 from .sources.csv_source import (
     RAW_BILLING_KEYS,
+    RAW_BILLING_TABLE_SCHEMA,
     parse_hive_partition_keys,
     read_partition_root,
 )
@@ -68,15 +69,18 @@ class BillingPipeline:
     def ledger(self) -> FileLedger:
         return FileLedger(self.spark, self.table_path("raw_billing"))
 
-    def read(self, name: str) -> DataFrame:
-        if name == "processed_files":
-            return self.ledger().load()
+    def read(self, name: str, schema=None) -> DataFrame:
+        """Table ``name``; a known ``schema`` skips reading it from the
+        parquet footers (raw_billing holds one directory per commit)."""
         st = self._table(name)
         if st.latest_version() is not None:
-            return st.read()
+            return st.read(schema=schema)
         # a table written as plain parquet (before snapshots, or by the
         # stream CLI) still reads
-        return self.spark.read.parquet(self.table_path(name))
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self.table_path(name))
 
     # -- stage 1: ingest ----------------------------------------------------
 
@@ -120,7 +124,16 @@ class BillingPipeline:
 
             files = [p for p in files if _in_window(p)]
         ledger = self.ledger()
-        _refuse_plain_parquet(ledger.table)
+        foreign = ledger.table.foreign_entries()
+        if foreign:
+            # another writer's rows carry no ledger and no manifest entry:
+            # reads would miss them, or the first commit re-append them
+            raise RuntimeError(
+                f"{ledger.table.path} holds data outside its snapshot"
+                f" manifest ({', '.join(foreign[:3])}), written before"
+                " raw_billing became a snapshot table or by the stream"
+                " command: backfill into a fresh warehouse directory."
+            )
         metrics = {
             "files_discovered": len(files),
             "files_new_or_changed": 0,
@@ -152,7 +165,7 @@ class BillingPipeline:
     # -- stage 2: aggregates (full refresh, OPT4/OPT5) ----------------------
 
     def build_aggregates(self) -> dict:
-        raw = self.read("raw_billing")
+        raw = self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA)
         succ = F.col("success")
         tables = {
             # reference: aggregates.py:34-48
@@ -230,10 +243,10 @@ class BillingPipeline:
 
     def insights(self) -> tuple[str, dict]:
         return billing_insights(
-            self.read("raw_billing"),
+            self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA),
             self.read("user_aggs"),
             self.read("region_aggs"),
-            ledger=self.read("processed_files"),
+            ledger=self.ledger().load(),
             # exact integer counts already materialized by build_aggregates
             # — folds the op-frequency/tier-rate sections without two more
             # full raw scans (review r6)
@@ -267,28 +280,3 @@ class BillingPipeline:
         metrics["report_markdown"] = report
         return metrics
 
-
-def _refuse_plain_parquet(table) -> None:
-    """Fail closed when ``raw_billing`` holds data but no snapshot
-    manifest: a warehouse written before raw_billing became a snapshot
-    table, or by the ``stream`` CLI. Its rows carry no ledger, and the
-    first commit would hide them and then re-append them. Entries of the
-    snapshot protocol itself (``v=N`` crash orphans, ``_staging_*``,
-    ``_lock``) are not data."""
-    if table.latest_version() is not None:
-        return
-    try:
-        names = os.listdir(table.path)
-    except FileNotFoundError:
-        return
-    if any(
-        not n.startswith(("_", ".")) and not (n[:2] == "v=" and n[2:].isdigit())
-        for n in names
-    ):
-        raise RuntimeError(
-            f"{table.path} holds plain parquet data but no snapshot"
-            " manifest (_latest): it was written before raw_billing became"
-            " a snapshot table, or by the stream command. Backfill into a"
-            " fresh warehouse: run the pipeline with a new warehouse"
-            " directory over the same lake."
-        )

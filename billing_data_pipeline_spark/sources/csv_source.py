@@ -70,6 +70,11 @@ def _with_partition_cols(schema: T.StructType) -> T.StructType:
     )
 
 
+#: raw_billing as the pipeline stores it: the fact columns plus the lake's
+#: year/month/day partition columns.
+RAW_BILLING_TABLE_SCHEMA = _with_partition_cols(RAW_BILLING_SCHEMA)
+
+
 def read_partition_root(
     spark: SparkSession,
     root: str,

@@ -254,8 +254,10 @@ class ObjectStoreSnapshotTable:
         readers — the multi-process sweep reads them with pyarrow)."""
         return self._resolve(version)
 
-    def read(self, version: int | None = None):
+    def read(self, version: int | None = None, schema=None):
         urls = self._resolve(version)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(*urls)
         if len(urls) == 1:
             return self.spark.read.parquet(urls[0])
         return self.spark.read.option("mergeSchema", True).parquet(*urls)

@@ -188,18 +188,30 @@ class SnapshotTable:
         none)."""
         return self._load()["commits"]
 
+    def _listdir(self) -> list[str]:
+        try:
+            return os.listdir(self.path)
+        except FileNotFoundError:
+            return []  # never-built table (init no longer mkdirs)
+
     def versions(self) -> list[int]:
         """Version directories present on disk (may include unpublished
         crash orphans — the manifest, not the listing, is the truth)."""
-        out = []
-        try:
-            names = os.listdir(self.path)
-        except FileNotFoundError:
-            return []  # never-built table (init no longer mkdirs)
-        for name in names:
-            if name.startswith("v=") and name[2:].isdigit():
-                out.append(int(name[2:]))
-        return sorted(out)
+        return sorted(
+            int(n[2:]) for n in self._listdir() if _is_version_dir(n)
+        )
+
+    def foreign_entries(self) -> list[str]:
+        """Top-level entries this protocol did not write: anything but a
+        ``v=N`` version directory or a ``_``/``.``-prefixed metadata entry
+        (``_latest``, ``_lock``, ``_staging_*``). Another writer's plain
+        parquet shows up here — a directory reader would see it, the
+        manifest never lists it."""
+        return sorted(
+            n
+            for n in self._listdir()
+            if not _is_version_dir(n) and not n.startswith(("_", "."))
+        )
 
     def _vdir(self, version: int) -> str:
         return os.path.join(self.path, f"v={version}")
@@ -371,10 +383,14 @@ class SnapshotTable:
             if base <= c["v"] <= v
         ]
 
-    def read(self, version: int | None = None) -> DataFrame:
+    def read(self, version: int | None = None, schema=None) -> DataFrame:
         """Latest snapshot, or time travel to an explicit ``version``
-        (see resolve_dirs for the resolution rule)."""
+        (see resolve_dirs for the resolution rule). A known ``schema`` is
+        applied as given instead of being read from the parquet footers —
+        no footer job, whatever the number of directories."""
         dirs = self.resolve_dirs(version)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(*dirs)
         if len(dirs) == 1:
             return self.spark.read.parquet(dirs[0])
         # append chains may span additive schema evolution
@@ -493,3 +509,7 @@ class SnapshotTable:
         except OSError:
             return False
         return True
+
+
+def _is_version_dir(name: str) -> bool:
+    return name.startswith("v=") and name[2:].isdigit()

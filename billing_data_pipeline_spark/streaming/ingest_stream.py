@@ -30,6 +30,27 @@ from ..operators.ingest import append_new_rows
 from ..sources.csv_source import RAW_BILLING_KEYS, RAW_BILLING_SCHEMA
 
 
+def refuse_snapshot_table(spark: SparkSession, table_path: str) -> None:
+    """Fail closed when ``table_path`` is a snapshot table (``run``'s
+    ``raw_billing``): its readers see only the manifest's versions, so
+    plain parquet streamed into it would never be read. Snapshot tables
+    live on local paths only."""
+    from ..sources.os_snapshot import local_fs_path
+    from ..sources.versioned_sink import SnapshotTable
+
+    try:
+        path = local_fs_path(table_path)
+    except NotImplementedError:
+        return
+    if SnapshotTable(spark, path).latest_version() is not None:
+        raise RuntimeError(
+            f"{table_path} is a snapshot table (it has a _latest manifest,"
+            " written by the run command): rows streamed into it as plain"
+            " parquet would never be read. Stream into a separate"
+            " warehouse directory."
+        )
+
+
 def replay_safe_append(batch: DataFrame, table_path: str, keys: list[str]) -> None:
     """Idempotent-even-under-replay append (the foreachBatch sink body).
 
@@ -43,6 +64,7 @@ def replay_safe_append(batch: DataFrame, table_path: str, keys: list[str]) -> No
     rows (documented divergence from batch mode; the reference's UNIQUE
     constraint never applied to NULL keys either).
     """
+    refuse_snapshot_table(batch.sparkSession, table_path)
     key_cols = [F.col(k) for k in keys]
     has_null_key = reduce(or_, (c.isNull() for c in key_cols))
     append_new_rows(batch.filter(~has_null_key), table_path, keys)
@@ -135,8 +157,10 @@ def stream_ingest_csv(
     Returns the started StreamingQuery; callers ``awaitTermination()`` it
     (AvailableNow drains what exists and stops — the backfill/catch-up mode)
     or leave it running on a processing-time trigger (the sensor mode,
-    interval mirroring the reference's 300 s poll floor).
+    interval mirroring the reference's 300 s poll floor). Refuses a
+    ``table_path`` that is a snapshot table (``refuse_snapshot_table``).
     """
+    refuse_snapshot_table(spark, table_path)
     stream = (
         spark.readStream.schema(schema)
         .option("header", True)

@@ -416,6 +416,22 @@ def test_spark_round_trip(spark, make_store):
     assert sorted(r["n"] for r in t.read(1).collect()) == list(range(8))
 
 
+def test_read_with_a_known_schema_on_both_duals(spark, make_store, tmp_path):
+    """read(schema=...) applies the given schema across an append chain
+    instead of reading it from the footers, on both factory duals."""
+    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
+
+    for t in (
+        ObjectStoreSnapshotTable(spark, make_store()),
+        SnapshotTable(spark, str(tmp_path / "posix")),
+    ):
+        t.commit(spark.range(3).toDF("n"), mode="append")
+        t.commit(spark.range(3, 5).toDF("n"), mode="append")
+        df = t.read(schema="n long")
+        assert df.schema == t.read().schema
+        assert sorted(r["n"] for r in df.collect()) == list(range(5))
+
+
 def test_snapshot_table_factory_dispatch(tmp_path):
     from billing_data_pipeline_spark.sources.os_snapshot import (
         snapshot_table_for,

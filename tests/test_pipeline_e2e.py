@@ -40,7 +40,7 @@ def test_pipeline_end_to_end_idempotent(spark, tmp_path):
     assert pipe.read("raw_billing").count() == n_rows
     assert m1["aggregates"]["daily_aggs_rows"] == 2
     assert pipe.read("user_aggs").count() == 4
-    assert pipe.read("processed_files").count() == 2
+    assert pipe.ledger().load().count() == 2
 
     report = m1["report_markdown"]
     assert "# Billing Insights Report" in report
@@ -51,7 +51,7 @@ def test_pipeline_end_to_end_idempotent(spark, tmp_path):
     # Per-file record counts (reference ingest.py:262-265): each ledger row
     # carries ITS file's appended rows, not the batch total.
     counts = sorted(
-        r["record_count"] for r in pipe.read("processed_files").collect()
+        r["record_count"] for r in pipe.ledger().load().collect()
     )
     assert counts == [6, 8]
 
@@ -78,7 +78,7 @@ def test_pipeline_end_to_end_idempotent(spark, tmp_path):
     m3 = pipe.run(root)
     assert m3["ingest"]["files_new_or_changed"] == 1
     assert m3["ingest"]["rows_appended"] == 1
-    assert pipe.read("processed_files").count() == 3
+    assert pipe.ledger().load().count() == 3
 
     m4 = pipe.run(root)
     assert m4["ingest"]["files_new_or_changed"] == 0
@@ -235,7 +235,7 @@ def _crash_lake(tmp_path):
 def _ledger_counts(pipe):
     return {
         r["filename"].rsplit("/", 2)[-2]: r["record_count"]
-        for r in pipe.read("processed_files").collect()
+        for r in pipe.ledger().load().collect()
     }
 
 
@@ -355,6 +355,39 @@ def test_ingest_fails_closed_on_plain_parquet_raw_billing(spark, tmp_path):
         legacy.run(root)
     assert not os.path.exists(os.path.join(legacy.table_path("raw_billing"), "_latest"))
     assert legacy.read("raw_billing").count() == n_rows
+
+    # plain parquet beside a published manifest is refused just the same
+    pipe.read("raw_billing").write.mode("append").parquet(pipe.table_path("raw_billing"))
+    with pytest.raises(RuntimeError, match="fresh warehouse"):
+        pipe.ingest(root)
+
+
+def test_stream_refuses_a_warehouse_written_by_run(spark, tmp_path):
+    """run() then the stream command on one warehouse: the streamed plain
+    parquet would be invisible behind raw_billing's manifest, so the
+    stream refuses before it starts, and so does its sink."""
+    from billing_data_pipeline_spark.sources.csv_source import RAW_BILLING_KEYS
+    from billing_data_pipeline_spark.streaming.ingest_stream import (
+        replay_safe_append,
+        stream_ingest_csv,
+    )
+
+    root, n_rows = _write_lake(tmp_path)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+    pipe.run(root)
+    raw = pipe.table_path("raw_billing")
+    with pytest.raises(RuntimeError, match="separate warehouse"):
+        stream_ingest_csv(
+            spark, f"{root}/year=*/month=*/day=*", raw, str(tmp_path / "ckpt")
+        )
+    with pytest.raises(RuntimeError, match="separate warehouse"):
+        replay_safe_append(
+            pipe.read("raw_billing").drop("year", "month", "day"),
+            raw,
+            list(RAW_BILLING_KEYS),
+        )
+    assert pipe.read("raw_billing").count() == n_rows
+    assert pipe.ledger().table.foreign_entries() == []
 
 
 # -- zero-row commits ----------------------------------------------------------
