@@ -29,6 +29,10 @@ from .sampling import MIX_PRIME, mix_rank, mix_rank_sql
 from .text import JAVA_WS_SPLIT_SQL as WS
 from .text import chunk_tokens, chunk_tokens_oracle_sql
 
+#: Gram windows per chunk in ``decontaminate``'s kernel: bounds its peak
+#: memory whatever a batch's gram count (tests shrink it to force chunks).
+_WINDOW_CHUNK = 1 << 20
+
 # ---------------------------------------------------------------------------
 # PII scrubbing
 # ---------------------------------------------------------------------------
@@ -439,8 +443,8 @@ def decontaminate(
     # C-side on the explicit class [\t\n\x0b\f\r ]+, PROVEN equal to
     # _ws_re's re.ASCII \s+ (both are exactly ASCII whitespace; the
     # equivalence — including \v, NBSP, U+2000.. non-splits — is pinned
-    # by test_decontaminate_kernel_matches_naive). Gram strings build as
-    # n shifted slices of the flat token array joined in C
+    # by test_decontaminate_vectorized_kernel_matches_naive). Gram strings
+    # build as n shifted slices of the flat token array joined in C
     # (binary_join_element_wise), windows that straddle a doc boundary
     # are masked via the token->doc index, and membership is ONE C-level
     # hash probe (pc.is_in) against the broadcast eval grams instead of
@@ -448,7 +452,7 @@ def decontaminate(
     # touches the (rare) surviving hits. Window slices are processed in
     # bounded chunks so peak memory is independent of batch gram count
     # (the portable_dedup ADVICE pattern).
-    _WINDOW_CHUNK = 1 << 20
+    window_chunk = _WINDOW_CHUNK
 
     def kernel(batches: Iterator) -> Iterator:
         import numpy as np
@@ -479,8 +483,8 @@ def decontaminate(
                 n_win = total - n + 1
                 hit_docs: list[np.ndarray] = []
                 hit_grams: list = []
-                for a in range(0, max(n_win, 0), _WINDOW_CHUNK):
-                    b = min(a + _WINDOW_CHUNK, n_win)
+                for a in range(0, max(n_win, 0), window_chunk):
+                    b = min(a + window_chunk, n_win)
                     parts = [flat.slice(a + o, b - a) for o in range(n)]
                     grams = pc.binary_join_element_wise(*parts, " ")
                     ok = pc.is_in(grams, value_set=ev_arr).to_numpy(

@@ -7,15 +7,18 @@ recorded, reprocessing when the hash changed (ingest.py:217-231).
 
 Here the ledger is not a table of its own: its rows ride in the ``meta``
 of ``raw_billing``'s append commits (``FileLedger``), so a file and the
-rows it contributed publish together. File hashes are computed
-*distributed*: executors stream each file through md5 in bounded chunks
-(pyarrow filesystem streams inside a mapInPandas kernel), the driver only
-sees (path, hash) pairs — so hashing scales with the cluster instead of
-looping on one node like the reference's hashlib loop (ingest.py:218-220),
-and, unlike a ``binaryFile`` + ``md5(content)`` scan, never materializes a
-whole file as one row value (review r5: binaryFile caps a column at
-Int.MaxValue bytes, so one >=2 GiB input failed the whole ingest — the
-reference's streamed loop handled it fine).
+rows it contributed publish together. Every file is content-hashed on
+every run, streamed through md5 in bounded 8 MiB chunks, in one of two
+tiers. A small local lake (summed size below ``DRIVER_HASH_MAX_BYTES``)
+is hashed on the driver, like the reference's hashlib loop
+(ingest.py:218-220): starting a Python worker for a handful of files cost
+more than the md5 itself. Anything larger, or on a remote scheme, is
+hashed *distributed*: executors stream each file through pyarrow's
+filesystem layer inside a mapInPandas kernel and the driver only sees
+(path, hash) pairs — so hashing scales with the cluster and, unlike a
+``binaryFile`` + ``md5(content)`` scan, never materializes a whole file as
+one row value (binaryFile caps a column at Int.MaxValue bytes, so one
+>=2 GiB input would fail the whole ingest).
 
 In Structured Streaming mode the checkpointed file index subsumes
 name-based skipping; this ledger remains the *content*-hash layer for
@@ -43,6 +46,11 @@ LEDGER_SCHEMA = T.StructType(
 
 _SCHEME_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
 
+#: Summed input size below which local files are hashed on the driver
+#: (about 0.4 s of md5 on one core); larger or remote inputs hash on the
+#: executors.
+DRIVER_HASH_MAX_BYTES = 256 << 20
+
 
 def ledger_key(path):
     """Scheme-normalized FULL path — the ledger key.
@@ -61,21 +69,21 @@ def ledger_key(path):
 
 
 def hash_files(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """(filename, file_hash) for every input file, hashed on executors in
-    STREAMED chunks — O(8 MB) memory per task regardless of file size.
+    """(filename, file_hash) for every input file, hashed in STREAMED
+    chunks — O(8 MB) memory per file regardless of its size.
 
     ``filename`` is the partition-qualified ``ledger_key`` of the path,
     not the basename (see ``ledger_key``). Globs are expanded driver-side
-    (one listing, same as binaryFile's); the hash work distributes one
-    file per row across the cluster via pyarrow's filesystem layer
-    (local + s3/gcs where pyarrow has credentials).
+    (one listing, same as binaryFile's). Local inputs summing to less
+    than ``DRIVER_HASH_MAX_BYTES`` are hashed on the driver; otherwise the
+    hash work distributes one file per row across the cluster via
+    pyarrow's filesystem layer (local + s3/gcs where pyarrow has
+    credentials). Both tiers return the same rows.
     """
     import glob as _glob
     import re
 
     from collections.abc import Iterator
-
-    import pandas as pd
 
     expanded: list[str] = []
     for p in paths:
@@ -106,34 +114,44 @@ def hash_files(spark: SparkSession, paths: list[str]) -> DataFrame:
         ]
     )
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def md5_of(p: str) -> str:
         import hashlib
 
         from pyarrow import fs as pafs
 
+        # Hadoop spells S3 "s3a://" (the only scheme Spark's reader
+        # accepts) but pyarrow's filesystem layer only knows "s3://" —
+        # map it or every remote ingest dies at the ledger-hash step with
+        # ArrowInvalid. abfss:// -> abfs:// is the same vendor-spelling
+        # split.
+        uri = re.sub("^s3a://", "s3://", p)
+        uri = re.sub("^abfss://", "abfs://", uri)
+        filesystem, rel = pafs.FileSystem.from_uri(
+            uri if re.match(_SCHEME_RE, uri) else os.path.abspath(uri)
+        )
+        h = hashlib.md5()
+        with filesystem.open_input_stream(rel) as f:
+            while chunk := f.read(8 << 20):
+                h.update(chunk)
+        return h.hexdigest()
+
+    def hashed(ps) -> list[tuple[str, str]]:
+        return [(re.sub(_SCHEME_RE, "/", p), md5_of(p)) for p in ps]
+
+    # driver tier: starting a Python worker costs more than the md5 of a
+    # small local lake
+    if not any(re.match(_SCHEME_RE, p) for p in expanded) and (
+        sum(os.stat(p).st_size for p in expanded) < DRIVER_HASH_MAX_BYTES
+    ):
+        return spark.createDataFrame(hashed(expanded), schema)
+
+    def kernel(it: Iterator) -> Iterator:
+        import pandas as pd
+
         for pdf in it:
-            names, hashes = [], []
-            for p in pdf["path"]:
-                # Hadoop spells S3 "s3a://" (the only scheme Spark's
-                # reader accepts) but pyarrow's filesystem layer only
-                # knows "s3://" — map it or every remote ingest dies at
-                # the ledger-hash step with ArrowInvalid (review r6).
-                # abfss:// -> abfs:// is the same vendor-spelling split.
-                uri = re.sub("^s3a://", "s3://", p)
-                uri = re.sub("^abfss://", "abfs://", uri)
-                filesystem, rel = pafs.FileSystem.from_uri(
-                    uri if re.match(_SCHEME_RE, uri) else os.path.abspath(uri)
-                )
-                h = hashlib.md5()
-                with filesystem.open_input_stream(rel) as f:
-                    while True:
-                        chunk = f.read(8 << 20)
-                        if not chunk:
-                            break
-                        h.update(chunk)
-                names.append(re.sub(_SCHEME_RE, "/", p))
-                hashes.append(h.hexdigest())
-            yield pd.DataFrame({"filename": names, "file_hash": hashes})
+            yield pd.DataFrame(
+                hashed(list(pdf["path"])), columns=["filename", "file_hash"]
+            )
 
     n = max(1, len(expanded))
     return (
@@ -168,17 +186,20 @@ class FileLedger:
         # object-store binding is passed here)
         self.table = os_snapshot.snapshot_table_for(spark, table_path)
 
-    def entries(self) -> list[dict]:
+    def entries(self, version: int | None = None) -> list[dict]:
         """Every ledger row in the retained log, oldest commit first —
-        driver-side, no Spark job."""
+        driver-side, no Spark job. A ``version`` stops the fold at that
+        commit, so the ledger matches a snapshot read at it."""
         return [
             e
             for c in self.table.commits()
+            if version is None or c["v"] <= version
             for e in ((c.get("meta") or {}).get("files") or ())
         ]
 
-    def _latest(self) -> dict[str, dict]:
-        return {e["filename"]: e for e in self.entries()}
+    def latest(self, version: int | None = None) -> dict[str, dict]:
+        """The latest entry per filename, as of ``version``."""
+        return {e["filename"]: e for e in self.entries(version)}
 
     def load(self) -> DataFrame:
         """Latest entry per filename as a ``LEDGER_SCHEMA`` frame."""
@@ -190,7 +211,7 @@ class FileLedger:
                     datetime.fromisoformat(e["processed_at"]),
                     e["record_count"],
                 )
-                for e in self._latest().values()
+                for e in self.latest().values()
             ],
             LEDGER_SCHEMA,
         )
@@ -205,7 +226,7 @@ class FileLedger:
         a join (the hex hash has no newline, so the pair key is
         unambiguous).
         """
-        done = [f"{f}\n{e['file_hash']}" for f, e in self._latest().items()]
+        done = [f"{f}\n{e['file_hash']}" for f, e in self.latest().items()]
         return candidates.filter(
             ~F.concat_ws("\n", "filename", "file_hash").isin(done)
         )

@@ -30,7 +30,7 @@ def billing_insights(
     raw: DataFrame,
     user_aggs: DataFrame,
     region_aggs: DataFrame,
-    ledger: DataFrame | None = None,
+    ledger: list[dict] | None = None,
     service_aggs: DataFrame | None = None,
 ) -> tuple[str, dict]:
     """The reference's five insight queries + markdown assembly
@@ -45,7 +45,11 @@ def billing_insights(
     raw passes this report cost (review r6; pipeline.insights already
     passed user/region_aggs for exactly this reason). The one remaining
     raw scan is the exact-decimal global total, which double-summing
-    per-region totals cannot reproduce bit-for-bit."""
+    per-region totals cannot reproduce bit-for-bit.
+
+    ``ledger`` is the processed-files ledger as driver-side rows, one per
+    file with its ``record_count`` (``FileLedger.latest``); its section
+    folds in Python, with no Spark job."""
     # None-guard (review r8; the r4 fix covered region totals only): an
     # empty or all-NULL-measure raw table makes SUM NULL, and
     # None.__format__ crashed the whole report at the f-string below.
@@ -140,15 +144,12 @@ def billing_insights(
         "n_tiers": len(rates),
     }
     if ledger is not None:
-        led = ledger.agg(
-            F.count(F.lit(1)).alias("files"),
-            F.coalesce(F.sum("record_count"), F.lit(0)).alias("records"),
-        ).first()
+        records = sum(e["record_count"] for e in ledger)
         lines += [
             "",
             "## Processing Ledger",
             "",
-            f"Files processed: {led['files']}; records ingested: {led['records']}",
+            f"Files processed: {len(ledger)}; records ingested: {records}",
         ]
-        metrics["files_processed"] = led["files"]
+        metrics["files_processed"] = len(ledger)
     return "\n".join(lines), metrics

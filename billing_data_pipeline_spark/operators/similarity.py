@@ -1734,11 +1734,13 @@ def pq_topk(
     # dispatch site).
     cproj = corpus.select(id_col, vec_col)
     qproj = queries.select(id_col, vec_col)
+    # one Catalyst stats pass for the query side serves both dispatches
+    q_small = _proj_est(qproj) < _SEED_SMALL_BYTES
     seed_rows = None
     q_rows: list | None = None
     if (
-        _proj_est(cproj) < _SEED_SMALL_BYTES
-        and _proj_est(qproj) < _SEED_SMALL_BYTES
+        q_small
+        and _proj_est(cproj) < _SEED_SMALL_BYTES
         and [f.dataType for f in cproj.schema.fields]
         == [f.dataType for f in qproj.schema.fields]
     ):
@@ -1865,7 +1867,7 @@ def pq_topk(
     # when the fold was not taken, re-check the query side alone (the
     # independent pre-r12 dispatch: corpus big / queries small still
     # builds the tables driver-side).
-    if q_rows is None and _proj_est(qproj) < _SEED_SMALL_BYTES:
+    if q_rows is None and q_small:
         q_rows = [r for r in qproj.collect() if r[1] is not None]
     if q_rows is not None:
         if q_rows:

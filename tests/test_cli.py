@@ -17,6 +17,7 @@ def test_cli_run_and_insights(spark, tmp_path, capsys):
     metrics = json.loads(out)
     assert metrics["ingest"]["rows_appended"] > 0
     assert "daily_aggs_rows" in metrics["aggregates"]
+    assert metrics["raw_version"] == 0  # the raw_billing version reported on
     assert "Billing Insights" in err or "##" in err  # report on stderr
 
     rc = main(["insights", "--warehouse", wh])

@@ -183,6 +183,35 @@ def test_decontaminate_vectorized_kernel_matches_naive(spark):
     assert got[3] == (2, True)  # distinct, not per-occurrence
 
 
+def test_decontaminate_chunked_pass_identical(spark, monkeypatch):
+    """The kernel's bounded window chunks must not change the result. A
+    4-window chunk splits every batch into several chunks. All ten of
+    doc 1's 3-grams are eval grams, so wherever the doc lands in its
+    batch, hits include windows whose tokens straddle a chunk
+    boundary; "c d t0" only forms across a document boundary."""
+    n = 3
+    doc1 = " ".join(f"t{i}" for i in range(12))
+    train = spark.createDataFrame(
+        [(1, doc1), (2, "a b c d"), (3, "t3 t4 t5 t6 z"), (4, "x y")],
+        "doc_id long, text string",
+    )
+    ev = spark.createDataFrame(
+        [(100, doc1), (101, "c d t0")], "doc_id long, text string"
+    )
+
+    def run():
+        return {
+            r["doc_id"]: (r["n_hit_ngrams"], r["contaminated"])
+            for r in C.decontaminate(train, ev, "doc_id", "text", n=n).collect()
+        }
+
+    baseline = run()  # production chunk: one chunk per batch
+    monkeypatch.setattr(C, "_WINDOW_CHUNK", 4)
+    chunked = run()
+    assert chunked == baseline
+    assert baseline == {1: (10, True), 2: (0, False), 3: (2, True), 4: (0, False)}
+
+
 def test_mix_to_budget_coarse_form_identical(spark):
     # Two-level prefix sum (coarse buckets) must produce the identical
     # keep-set/summary as the row-level cumsum, across sources whose

@@ -257,6 +257,41 @@ def test_hash_files_relative_path_records_absolute_key(spark, tmp_path, monkeypa
     assert [r["filename"] for r in rows_g] == [str(f)]
 
 
+def test_hash_files_driver_and_distributed_tiers_agree(spark, tmp_path, monkeypatch):
+    """Small local lakes hash on the driver; with the tier's threshold at
+    0 the same inputs hash in the distributed kernel. Both must return
+    the same (filename, file_hash) rows: for a concrete filename with
+    glob metachars, a relative path, and a file spanning several 8 MiB
+    md5 chunks."""
+    import hashlib
+    import random
+
+    from billing_data_pipeline_spark.operators import ledger
+
+    odd = tmp_path / "billing[v2].csv"
+    odd.write_text("a,b\n1,2\n")
+    (tmp_path / "rel-billing.csv").write_text("a,b\n3,4\n")
+    big = tmp_path / "big.csv"
+    big.write_bytes(random.Random(0).randbytes((8 << 20) + 12345))
+    monkeypatch.chdir(tmp_path)
+    paths = [str(odd), "rel-billing.csv", str(big)]
+
+    def run():
+        df = ledger.hash_files(spark, paths)
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return sorted((r["filename"], r["file_hash"]) for r in df.collect()), plan
+
+    driver, driver_plan = run()
+    monkeypatch.setattr(ledger, "DRIVER_HASH_MAX_BYTES", 0)
+    distributed, distributed_plan = run()
+    assert "MapInPandas" not in driver_plan and "MapInPandas" in distributed_plan
+    assert driver == distributed
+    assert driver == sorted(
+        (str(p), hashlib.md5(p.read_bytes()).hexdigest())
+        for p in (odd, tmp_path / "rel-billing.csv", big)
+    )
+
+
 def test_fs_mutex_heartbeat_prevents_steal_and_breaks_stale(tmp_path, monkeypatch):
     """Advice r5 (ledger lock): a LIVE holder whose critical section
     outlives the stale lease must not have its lock stolen — the holder

@@ -274,6 +274,12 @@ def _boundaries():
             SnapshotTable, "commit", {"when": lambda st, *a, **k: st.path.endswith("user_aggs")}
         ),
         "before_insights": (BillingPipeline, "insights", {}),
+        # the four aggregate tables have committed, the report has not
+        "before_report_commit": (
+            SnapshotTable,
+            "commit_files",
+            {"when": lambda st, *a, **k: st.path.endswith("billing_insights")},
+        ),
     }
 
 
@@ -410,7 +416,10 @@ def test_header_only_lake_is_recorded_and_reports_empty(spark, tmp_path):
 
 def test_rewritten_file_with_known_rows_records_zero(spark, tmp_path):
     """A file rewritten in place (new hash) whose rows are all already
-    present is recorded with record_count 0 and then skipped."""
+    present is recorded with record_count 0 and then skipped. The
+    rewrite keeps the file's size and mtime: only its content hash
+    tells it apart."""
+    import os
     import pathlib
 
     root, n_rows = _write_lake(tmp_path)
@@ -420,7 +429,10 @@ def test_rewritten_file_with_known_rows_records_zero(spark, tmp_path):
 
     f = pathlib.Path(root) / "year=2025" / "month=04" / "day=23" / "billing.csv"
     header, *rows = f.read_text().splitlines(keepends=True)
+    st = f.stat()
     f.write_text(header + "".join(reversed(rows)))
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert (f.stat().st_size, f.stat().st_mtime_ns) == (st.st_size, st.st_mtime_ns)
     m = pipe.run(root)
     assert m["ingest"]["files_new_or_changed"] == 1
     assert m["ingest"]["rows_appended"] == 0
@@ -429,3 +441,134 @@ def test_rewritten_file_with_known_rows_records_zero(spark, tmp_path):
     assert pipe.run(root)["ingest"]["files_new_or_changed"] == 0
     raw = pipe.read("raw_billing")
     assert raw.count() == n_rows and raw.columns == columns
+
+
+# -- reuse while raw_billing's version has not moved ---------------------------
+
+DERIVED = ("daily_aggs", "user_aggs", "service_aggs", "region_aggs", "billing_insights")
+
+
+def _derived_versions(spark, pipe):
+    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
+
+    return {
+        name: SnapshotTable(spark, pipe.table_path(name)).latest_version()
+        for name in DERIVED
+    }
+
+
+def _typed(d):
+    return {k: (type(v), v) for k, v in d.items()}
+
+
+def _no_rebuild(monkeypatch):
+    def rebuilt(*a, **k):
+        raise AssertionError("rebuilt while raw_billing's version was unchanged")
+
+    monkeypatch.setattr(BillingPipeline, "build_aggregates", rebuilt)
+    monkeypatch.setattr(BillingPipeline, "insights", rebuilt)
+
+
+def test_unchanged_lake_reuses_the_published_results(spark, tmp_path, monkeypatch):
+    """A run over an unchanged lake commits nothing and recomputes
+    nothing: it returns the stored aggregates, insights and report,
+    equal in value and type to the run that built them."""
+    root, _ = _write_lake(tmp_path)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+    m1 = pipe.run(root)
+    assert m1["raw_version"] == pipe.raw_version() == 0
+    before = _derived_versions(spark, pipe)
+    assert None not in before.values()
+
+    with monkeypatch.context() as mp:
+        _no_rebuild(mp)
+        m2 = pipe.run(root)
+    assert _derived_versions(spark, pipe) == before
+    assert m2["raw_version"] == m1["raw_version"]
+    assert _typed(m2["aggregates"]) == _typed(m1["aggregates"])
+    assert _typed(m2["insights"]) == _typed(m1["insights"])
+    assert m2["report_markdown"] == m1["report_markdown"]
+
+
+def test_header_only_file_moves_the_version_and_rebuilds(spark, tmp_path):
+    """A new header-only file appends no row, but its ledger commit moves
+    raw_billing's version, so the run rebuilds and the report counts
+    it."""
+    import pathlib
+
+    root, _ = _write_lake(tmp_path)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+    m1 = pipe.run(root)
+    assert "Files processed: 2;" in m1["report_markdown"]
+    before = _derived_versions(spark, pipe)
+
+    p = pathlib.Path(root) / "year=2025" / "month=04" / "day=24"
+    p.mkdir(parents=True)
+    (p / "billing.csv").write_text(CSV_HEADER)
+    m2 = pipe.run(root)
+    assert m2["ingest"]["rows_appended"] == 0
+    assert m2["raw_version"] == m1["raw_version"] + 1
+    after = _derived_versions(spark, pipe)
+    assert all(after[t] == before[t] + 1 for t in DERIVED)
+    assert "Files processed: 3;" in m2["report_markdown"]
+    assert m2["aggregates"] == m1["aggregates"]
+
+
+def test_unstamped_warehouse_rebuilds_once_then_reuses(spark, tmp_path, monkeypatch):
+    """Aggregate commits with no raw_version stamp and no billing_insights
+    table (a warehouse written before the stamps) rebuild on the next
+    run, which stamps them; the run after that reuses."""
+    import json
+    import os
+    import shutil
+
+    root, _ = _write_lake(tmp_path)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+    m1 = pipe.run(root)
+    for name in DERIVED[:4]:
+        manifest = os.path.join(pipe.table_path(name), "_latest")
+        with open(manifest) as f:
+            man = json.load(f)
+        for c in man["commits"]:
+            c["meta"] = None
+        with open(manifest, "w") as f:
+            json.dump(man, f)
+    shutil.rmtree(pipe.table_path("billing_insights"))
+
+    m2 = pipe.run(root)
+    rebuilt = _derived_versions(spark, pipe)
+    assert rebuilt == {**{t: 1 for t in DERIVED[:4]}, "billing_insights": 0}
+    assert m2["report_markdown"] == m1["report_markdown"]
+
+    with monkeypatch.context() as mp:
+        _no_rebuild(mp)
+        m3 = pipe.run(root)
+    assert _derived_versions(spark, pipe) == rebuilt
+    assert m3["report_markdown"] == m1["report_markdown"]
+
+
+def test_insights_pinned_to_a_raw_version_ignores_later_ingests(spark, tmp_path):
+    """insights(v) reads raw_billing and folds the ledger as of version
+    v, so an ingest that commits after v cannot leak into a report
+    stamped v."""
+    import pathlib
+
+    root, _ = _write_lake(tmp_path)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+    m1 = pipe.run(root)
+    p = pathlib.Path(root) / "year=2025" / "month=04" / "day=24"
+    p.mkdir(parents=True)
+    (p / "billing.csv").write_text(
+        CSV_HEADER
+        + "2025-04-24 10:00:00,res-9,user-9,2.5,us,pro,inference,true,gpu,inv-24-0,USD\n"
+    )
+    assert pipe.ingest(root)["rows_appended"] == 1
+    assert pipe.raw_version() == m1["raw_version"] + 1
+
+    pinned, pinned_metrics = pipe.insights(m1["raw_version"])
+    assert pinned == m1["report_markdown"]
+    assert pinned_metrics == m1["insights"]
+    latest, latest_metrics = pipe.insights()
+    assert "Files processed: 3;" in latest
+    total = m1["insights"]["total_credit_usage"]
+    assert latest_metrics["total_credit_usage"] == total + 2.5
