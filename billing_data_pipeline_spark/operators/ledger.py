@@ -46,10 +46,16 @@ LEDGER_SCHEMA = T.StructType(
 
 _SCHEME_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
 
-#: Summed input size below which local files are hashed on the driver
-#: (about 0.4 s of md5 on one core); larger or remote inputs hash on the
-#: executors.
-DRIVER_HASH_MAX_BYTES = 256 << 20
+#: Summed input size below which local files are hashed on the driver;
+#: larger or remote inputs hash on the executors. Measured on 4 cores
+#: (``local[4]``, 8 page-cached files per size, wall seconds): the driver
+#: took 0.9 s at 256 MiB, 2.5 s at 1 GiB, 4.3 s at 2 GiB and 9.3 s at
+#: 4 GiB; the executors 3.7 / 4.4 / 4.8 / 7.1 s when the hash job is the
+#: process's first Python-worker job (a fresh process per poll), and
+#: 1.0 / 1.5 / 2.1 / 3.9 s with workers already running. The crossover is
+#: about 2 GiB cold and 256 MiB to 1 GiB warm; 1 GiB bounds the loss either
+#: way to about 1-2 s. The driver used less CPU at every size.
+DRIVER_HASH_MAX_BYTES = 1 << 30
 
 
 def ledger_key(path):

@@ -19,13 +19,17 @@ Stage semantics preserved:
   metrics in the commit's ``meta``.
 
 Reuse rule: every commit of the four aggregate tables and of
-``billing_insights`` is stamped with the ``raw_billing`` version it read.
-When all five latest commits carry the version ``raw_billing`` is at after
-ingest, ``run()`` returns the stored aggregates, insights and report: no
-commit, no Spark job. Anything else rebuilds all five: a new or changed
-file (a header-only one too: its ledger commit moves the version), a crash
-between the commits, a warehouse written before the stamps. Reuse only
-returns what the last full rebuild published.
+``billing_insights`` is stamped with the ``raw_billing`` version it read
+and with ``DERIVATION``, a hash of the source of the code that derives
+them (this module, ``operators.aggregates``, ``operators.reports``,
+``operators.ledger``). When all five latest commits carry the version
+``raw_billing`` is at after ingest and the running code's ``DERIVATION``,
+``run()`` returns the stored aggregates, insights and report: no commit,
+no Spark job. Anything else rebuilds all five: a new or changed file (a
+header-only one too: its ledger commit moves the version), a deploy that
+changed any of those modules, a crash between the commits, a warehouse
+written before the stamps. Reuse only returns what the last full rebuild
+published.
 
 Every warehouse table publishes through one protocol,
 ``os_snapshot.snapshot_table_for``. The reference keeps its rows and its
@@ -41,7 +45,10 @@ Every stage returns an O2-style metrics dict.
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import os
+import sys
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +64,26 @@ from .sources.csv_source import (
     parse_hive_partition_keys,
     read_partition_root,
 )
+
+
+def _derivation() -> str:
+    """md5 over the source of every module that turns raw_billing into the
+    stamped tables, so a deploy that changes how they are computed
+    rebuilds them on its first run."""
+    from .operators import aggregates, ledger, reports
+
+    h = hashlib.md5()
+    for mod in (sys.modules[__name__], aggregates, ledger, reports):
+        h.update(inspect.getsource(mod).encode())
+    return h.hexdigest()
+
+
+DERIVATION = _derivation()
+
+def _stamp(raw_version: int | None) -> dict:
+    """The meta every derived commit carries: what it was built from, and
+    by which code."""
+    return {"raw_version": raw_version, "derivation": DERIVATION}
 
 
 def _report_file(version_dir: str) -> str:
@@ -189,7 +216,8 @@ class BillingPipeline:
 
     def build_aggregates(self, raw_version: int | None = None) -> dict:
         """Rebuild the four tables from raw_billing at ``raw_version``
-        (latest when None); each commit is stamped with that version."""
+        (latest when None); each commit is stamped with that version and
+        ``DERIVATION``."""
         if raw_version is None:
             raw_version = self.raw_version()
         raw = self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA, raw_version)
@@ -255,7 +283,7 @@ class BillingPipeline:
             st = self._table(name)
             st.commit(
                 df.observe(obs, F.count(F.lit(1)).alias("rows")),
-                meta={"raw_version": raw_version},
+                meta=_stamp(raw_version),
             )
             st.vacuum(keep=2)
             try:
@@ -302,7 +330,7 @@ class BillingPipeline:
         st.commit_files(
             write,
             meta={
-                "raw_version": raw_version,
+                **_stamp(raw_version),
                 "aggregates": aggregates,
                 "insights": insights,
             },
@@ -311,24 +339,34 @@ class BillingPipeline:
 
     def _published(self, raw_version: int) -> tuple[dict, dict, str] | None:
         """(aggregates, insights, report) of the last full rebuild, when it
-        and every aggregate table's latest commit are stamped
-        ``raw_version``; None otherwise. Manifest reads only."""
+        and every aggregate table's latest commit carry ``_stamp(
+        raw_version)``; None otherwise. Manifest reads and one file read,
+        no Spark job."""
+        stamp = _stamp(raw_version)
 
-        def stamped(st) -> dict | None:
-            commits = st.commits()
-            meta = (commits[-1].get("meta") or {}) if commits else {}
-            return meta if meta.get("raw_version") == raw_version else None
+        def latest(name: str) -> dict:
+            commits = self._table(name).commits()
+            return commits[-1] if commits else {}
 
-        report_table = self._table("billing_insights")
-        meta = stamped(report_table)
-        if meta is None or not all(
-            stamped(self._table(name))
+        def stamped(commit: dict) -> bool:
+            meta = commit.get("meta") or {}
+            return all(meta.get(k) == x for k, x in stamp.items())
+
+        report = latest("billing_insights")
+        if not stamped(report) or not all(
+            stamped(latest(name))
             for name in ("daily_aggs", "user_aggs", "service_aggs", "region_aggs")
         ):
             return None
-        path = _report_file(report_table.resolve_dirs()[0])
-        with open(path, encoding="utf-8", newline="") as f:
-            return meta["aggregates"], meta["insights"], f.read()
+        try:
+            # the file of the commit just checked: a concurrent rebuild
+            # may have published a newer one since
+            (d,) = self._table("billing_insights").resolve_dirs(report["v"])
+            with open(_report_file(d), encoding="utf-8", newline="") as f:
+                markdown = f.read()
+        except FileNotFoundError:
+            return None  # vacuumed by two newer rebuilds meanwhile
+        return report["meta"]["aggregates"], report["meta"]["insights"], markdown
 
     # -- the DAG ------------------------------------------------------------
 

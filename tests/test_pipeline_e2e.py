@@ -572,3 +572,78 @@ def test_insights_pinned_to_a_raw_version_ignores_later_ingests(spark, tmp_path)
     assert "Files processed: 3;" in latest
     total = m1["insights"]["total_credit_usage"]
     assert latest_metrics["total_credit_usage"] == total + 2.5
+
+
+def test_a_changed_derivation_rebuilds_once_then_reuses(spark, tmp_path, monkeypatch):
+    """Results stored by other code (a deploy that changed how the tables
+    are derived) rebuild on the next run although raw_billing has not
+    moved; the run after that reuses."""
+    from billing_data_pipeline_spark import pipeline
+
+    root, _ = _write_lake(tmp_path)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+    m1 = pipe.run(root)
+    before = _derived_versions(spark, pipe)
+
+    monkeypatch.setattr(pipeline, "DERIVATION", "a later deploy")
+    m2 = pipe.run(root)
+    after = _derived_versions(spark, pipe)
+    assert m2["raw_version"] == m1["raw_version"]
+    assert all(after[t] == before[t] + 1 for t in DERIVED)
+    assert m2["report_markdown"] == m1["report_markdown"]
+
+    with monkeypatch.context() as mp:
+        _no_rebuild(mp)
+        pipe.run(root)
+    assert _derived_versions(spark, pipe) == after
+
+
+def test_derivation_hashes_the_source_of_each_deriving_module(monkeypatch):
+    """An edit to any module that derives the stamped tables changes
+    DERIVATION."""
+    import inspect
+
+    from billing_data_pipeline_spark import pipeline
+    from billing_data_pipeline_spark.operators import aggregates, ledger, reports
+
+    assert pipeline._derivation() == pipeline.DERIVATION
+    real = inspect.getsource
+    for mod in (pipeline, aggregates, ledger, reports):
+        monkeypatch.setattr(
+            inspect, "getsource", lambda m, mod=mod: real(m) + ("#" if m is mod else "")
+        )
+        assert pipeline._derivation() != pipeline.DERIVATION
+
+
+@pytest.mark.parametrize("concurrent", [1, 2])
+def test_reuse_returns_the_report_of_the_commit_it_checked(
+    spark, tmp_path, monkeypatch, concurrent
+):
+    """Rebuilds that publish between run()'s stamp check and its read of
+    report.md do not change what run() returns: it reads the report of
+    the commit it checked, or rebuilds once two newer commits have
+    vacuumed that one."""
+    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
+
+    root, _ = _write_lake(tmp_path)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+    m1 = pipe.run(root)
+
+    real = SnapshotTable.commits
+    pending = [concurrent]
+
+    def commits(self):
+        out = real(self)
+        if pending[0] and self.path.endswith("billing_insights"):
+            n, pending[0] = pending[0], 0
+            for i in range(n):
+                pipe._publish_report(1000 + i, {}, {}, f"a newer report {i}")
+        return out
+
+    monkeypatch.setattr(SnapshotTable, "commits", commits)
+    m2 = pipe.run(root)
+    assert pending == [0]
+    assert m2["report_markdown"] == m1["report_markdown"]
+    assert _typed(m2["insights"]) == _typed(m1["insights"])
+    rebuilt = concurrent == 2
+    assert _derived_versions(spark, pipe)["billing_insights"] == concurrent + rebuilt
