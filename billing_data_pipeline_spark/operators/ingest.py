@@ -104,7 +104,11 @@ def dedup_append(
         if strict
         else (dedup_within_batch(batch, keys) if dedup_batch else batch)
     )
-    return clean.join(existing_keys, on=keys, how="left_anti")
+    # a USING join moves the key columns first: restore the batch's
+    # order, or appends to one table land in two column orders
+    return clean.join(existing_keys, on=keys, how="left_anti").select(
+        *batch.columns
+    )
 
 
 def append_new_rows(

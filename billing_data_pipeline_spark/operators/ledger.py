@@ -188,8 +188,7 @@ class FileLedger:
 
         self.spark = spark
         # the factory is the closed-world path gate: a local path or
-        # file:/// gets the POSIX table, any other scheme raises (no
-        # object-store binding is passed here)
+        # file:/// gets the POSIX table, any other scheme raises
         self.table = os_snapshot.snapshot_table_for(spark, table_path)
 
     def entries(self, version: int | None = None) -> list[dict]:

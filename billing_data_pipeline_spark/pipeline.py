@@ -31,8 +31,9 @@ changed any of those modules, a crash between the commits, a warehouse
 written before the stamps. Reuse only returns what the last full rebuild
 published.
 
-Every warehouse table publishes through one protocol,
-``os_snapshot.snapshot_table_for``. The reference keeps its rows and its
+Every warehouse table publishes through one protocol, the POSIX
+``SnapshotTable`` opened by ``os_snapshot.snapshot_table_for``, so
+warehouses are local paths only. The reference keeps its rows and its
 ``processed_files`` ledger in one database; here the ledger is the fold
 over ``raw_billing``'s retained commit log — each ingest is ONE append
 commit whose log entry also carries the ingested files' ledger rows

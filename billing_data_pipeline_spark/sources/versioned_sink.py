@@ -10,9 +10,7 @@ without requiring a table format:
 
 - every commit writes a fresh immutable ``v=N`` directory, then publishes
   it by atomically renaming a manifest tempfile over ``_latest`` (POSIX
-  rename; the object-store twin — same semantics on conditional PUT
-  instead of rename/O_EXCL — is ``os_snapshot.ObjectStoreSnapshotTable``)
-  — readers always resolve fully-written data;
+  rename) — readers always resolve fully-written data;
 - commits are either ``overwrite`` (the directory IS the snapshot) or
   ``append`` (log-structured: a snapshot at version v = the last overwrite
   at or before v plus every append after it — the same add-file idea as a
@@ -52,10 +50,8 @@ lock is never unlinked by the old holder. Residual window, documented
 rather than hidden: a holder paused LONGER than ``stale_lock_secs``
 inside the millisecond critical section (a 10-minute GC pause) could be
 broken mid-mutation — the same assumption every mtime-lease lock makes.
-On an object store use ``os_snapshot.ObjectStoreSnapshotTable`` instead:
-it replaces the lock + rename with a lock-free conditional-PUT commit log
-(exactly as Delta/Iceberg take an object-store conditional write) and is
-fault-injection-tested against simulated object-store semantics.
+Rename and O_EXCL are atomic only on a local filesystem, so warehouses are
+POSIX-only: ``os_snapshot.snapshot_table_for`` refuses every other scheme.
 """
 
 from __future__ import annotations

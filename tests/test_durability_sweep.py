@@ -10,16 +10,14 @@ invariants the kit promises:
   the final manifest (minus those vacuumed by retention) and its data
   reads back bit-complete;
 - no swept in-flight staging: a commit in flight during a concurrent
-  vacuum either completes intact or (object-store table, frozen past the
-  lease) aborts cleanly — never publishes dangling references;
+  vacuum completes intact, never publishes dangling references;
 - crash containment: a worker killed with os._exit mid-commit leaves
   only unreferenced orphans that a later stale-threshold vacuum removes.
 
-Runs the SAME randomized storm against both duals of the kit: the POSIX
-``SnapshotTable`` (rename + fs_mutex) and the ``ObjectStoreSnapshotTable``
-(conditional-PUT log) over a process-shared LocalObjectStore. Workers are
-plain-Python (pyarrow writers through the commit_files/writer seams) — a
-JVM per process would test Spark's launcher, not the protocol.
+Runs against the POSIX ``SnapshotTable`` (rename + fs_mutex), the one
+snapshot protocol every warehouse uses. Workers are plain-Python (pyarrow
+writers through the commit_files seam) — a JVM per process would test
+Spark's launcher, not the protocol.
 """
 
 from __future__ import annotations
@@ -32,30 +30,10 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from billing_data_pipeline_spark.sources.objectstore import (
-    LocalObjectStore,
-    SimulatedObjectStore,
-)
-from billing_data_pipeline_spark.sources.os_snapshot import (
-    CommitAborted,
-    ObjectStoreSnapshotTable,
-)
 from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
 
 N_WORKERS = 4
 OPS_PER_WORKER = 10
-
-#: Store constructors the object-store storm runs over, keyed by the
-#: string each spawn-context worker receives (factories must be
-#: importable, not closures). A future S3/GCS ObjectStore subclass drops
-#: in here — and into test_os_snapshot.make_store — to inherit the whole
-#: contract + storm suite (VERDICT r7 #8). SimulatedObjectStore runs with
-#: its benign defaults: its per-process lag/hook state cannot span spawn
-#: workers, but the CONTRACT methods it overrides still execute.
-OBJECT_STORES = {
-    "object-local": LocalObjectStore,
-    "object-sim": SimulatedObjectStore,
-}
 
 
 def _writer(uid: str, count: int, crash: bool = False):
@@ -97,87 +75,65 @@ def _validate_snapshot(dirs: list[str]) -> None:
         )
 
 
-def _table(kind: str, path: str, heartbeat: float = 0.05):
-    if kind == "posix":
-        return SnapshotTable(None, path)
-    t = ObjectStoreSnapshotTable(None, OBJECT_STORES[kind](path))
-    t._HEARTBEAT_SECS = heartbeat
-    return t
-
-
-def _commit(table, kind, write_fn, mode):
-    if kind == "posix":
-        return table.commit_files(write_fn, mode=mode)
-    return table.commit(writer=write_fn, mode=mode)
-
-
-def _resolve(table, kind, version=None):
-    return (table.resolve_dirs(version) if kind == "posix"
-            else table.resolve_urls(version))
-
-
-def _storm_worker(kind: str, path: str, seed: int, q) -> None:
+def _storm_worker(path: str, seed: int, q) -> None:
     rng = random.Random(seed)
-    table = _table(kind, path)
+    table = SnapshotTable(None, path)
     committed = []  # (version, uid, count)
     for _ in range(OPS_PER_WORKER):
         op = rng.choices(["overwrite", "append", "vacuum", "read"],
                          weights=[3, 3, 1, 3])[0]
-        try:
-            if op in ("overwrite", "append"):
-                uid = uuid.uuid4().hex
-                count = rng.randrange(2, 40)
-                v = _commit(table, kind, _writer(uid, count), op)
-                committed.append((v, uid, count))
-            elif op == "vacuum":
-                table.vacuum(keep=3, stale_staging_secs=3600.0)
-            else:
-                # resolve and validate in SEPARATE try blocks (review r7):
-                # a FileNotFoundError from _validate_snapshot is the
-                # primary symptom of a dangling publish and must hit the
-                # retained-or-pruned oracle, not the empty-table pass;
-                # and `dirs` must be bound before the oracle uses it.
+        if op in ("overwrite", "append"):
+            uid = uuid.uuid4().hex
+            count = rng.randrange(2, 40)
+            v = table.commit_files(_writer(uid, count), mode=op)
+            committed.append((v, uid, count))
+        elif op == "vacuum":
+            table.vacuum(keep=3, stale_staging_secs=3600.0)
+        else:
+            # resolve and validate in SEPARATE try blocks:
+            # a FileNotFoundError from _validate_snapshot is the
+            # primary symptom of a dangling publish and must hit the
+            # retained-or-pruned oracle, not the empty-table pass;
+            # and `dirs` must be bound before the oracle uses it.
+            try:
+                dirs = table.resolve_dirs()
+            except FileNotFoundError:
+                continue  # empty table: legal
+            try:
+                _validate_snapshot(dirs)
+            except (FileNotFoundError, OSError,
+                    pa.ArrowInvalid, AssertionError) as exc:
+                if isinstance(exc, AssertionError) and \
+                        "torn read of a RETAINED" in str(exc):
+                    raise
+                # legal ONLY if retention pruned the version mid-read
+                still = set()
                 try:
-                    dirs = _resolve(table, kind)
+                    still = set(table.resolve_dirs())
                 except FileNotFoundError:
-                    continue  # empty table: legal
-                try:
-                    _validate_snapshot(dirs)
-                except (FileNotFoundError, OSError,
-                        pa.ArrowInvalid, AssertionError) as exc:
-                    if isinstance(exc, AssertionError) and \
-                            "torn read of a RETAINED" in str(exc):
-                        raise
-                    # legal ONLY if retention pruned the version mid-read
-                    still = set()
-                    try:
-                        still = set(_resolve(table, kind))
-                    except FileNotFoundError:
-                        pass
-                    if any(d in still for d in dirs):
-                        raise AssertionError(
-                            f"torn read of a RETAINED snapshot: {exc}"
-                        )
-        except CommitAborted:
-            pass  # clean abort is a legal outcome, dangling publish is not
+                    pass
+                if any(d in still for d in dirs):
+                    raise AssertionError(
+                        f"torn read of a RETAINED snapshot: {exc}"
+                    )
     q.put(("ok", committed))
 
 
-def _crash_worker(kind: str, path: str) -> None:
-    table = _table(kind, path)
+def _crash_worker(path: str) -> None:
+    table = SnapshotTable(None, path)
     # dies inside the data write via os._exit — no cleanup runs at all
-    _commit(table, kind, _writer(uuid.uuid4().hex, 10, crash=True),
-            "append")
+    table.commit_files(_writer(uuid.uuid4().hex, 10, crash=True),
+                       mode="append")
 
 
-def _run_storm(kind: str, warehouse: str):
+def _run_storm(warehouse: str):
     ctx = mp.get_context("spawn")  # no inherited JVM/session state
     q = ctx.Queue()
     procs = [
-        ctx.Process(target=_storm_worker, args=(kind, warehouse, 1000 + i, q))
+        ctx.Process(target=_storm_worker, args=(warehouse, 1000 + i, q))
         for i in range(N_WORKERS)
     ]
-    crashers = [ctx.Process(target=_crash_worker, args=(kind, warehouse))
+    crashers = [ctx.Process(target=_crash_worker, args=(warehouse,))
                 for _ in range(2)]
     for p in procs + crashers:
         p.start()
@@ -194,45 +150,25 @@ def _run_storm(kind: str, warehouse: str):
     versions = [v for v, _, _ in committed]
     assert len(versions) == len(set(versions)), "two commits shared a version"
 
-    table = _table(kind, warehouse)
+    table = SnapshotTable(None, warehouse)
     # every commit still in the final manifest reads back bit-complete
-    if kind == "posix":
-        man = table._load()
-    else:
-        man = table._head()[1]
-    final_commits = {c["v"] for c in man["commits"]}
+    final_commits = {c["v"] for c in table._load()["commits"]}
     by_version = {v: (u, n) for v, u, n in committed}
     assert final_commits <= set(by_version), (
         "manifest references a version no worker successfully committed"
     )
     for v in sorted(final_commits):
-        _validate_snapshot(_resolve(table, kind, v))
+        _validate_snapshot(table.resolve_dirs(v))
     # full-history validation of the final snapshot
-    _validate_snapshot(_resolve(table, kind))
+    _validate_snapshot(table.resolve_dirs())
 
     # crash orphans: invisible now, swept by a stale-threshold vacuum
     table.vacuum(keep=1, stale_staging_secs=0.0)
-    if kind == "posix":
-        strays = [n for n in os.listdir(warehouse)
-                  if n.startswith("_staging_")]
-        assert strays == [], f"unswept staging orphans: {strays}"
-        # and the retained snapshot still reads clean after the sweep
-    else:
-        store = OBJECT_STORES[kind](warehouse)
-        live = {c["dir"] for c in table._head()[1]["commits"]}
-        on_disk = {k.split("/", 1)[1].split("/", 1)[0].removesuffix(".begin")
-                   for k in store.list("data/")}
-        assert on_disk == live, f"unswept orphans: {on_disk - live}"
-    _validate_snapshot(_resolve(table, kind))
+    strays = [n for n in os.listdir(warehouse) if n.startswith("_staging_")]
+    assert strays == [], f"unswept staging orphans: {strays}"
+    # and the retained snapshot still reads clean after the sweep
+    _validate_snapshot(table.resolve_dirs())
 
 
 def test_posix_snapshot_multiprocess_storm(tmp_path):
-    _run_storm("posix", str(tmp_path / "warehouse"))
-
-
-import pytest
-
-
-@pytest.mark.parametrize("kind", sorted(OBJECT_STORES))
-def test_objectstore_snapshot_multiprocess_storm(tmp_path, kind):
-    _run_storm(kind, str(tmp_path / "warehouse"))
+    _run_storm(str(tmp_path / "warehouse"))

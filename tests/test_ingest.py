@@ -36,6 +36,20 @@ def test_dedup_append_drops_existing_keys(spark):
     ]
 
 
+def test_dedup_append_keeps_the_batch_column_order(spark):
+    """The anti-join must not move the key columns first: every append to
+    a table has to land in the batch's column order, the order its first
+    append (``dedup_within_batch``) wrote."""
+    batch = _df(spark, [_row(i) for i in range(3, 8)]).select(
+        "credit_usage", "invoice_id", "timestamp", "user_id", "resource_id"
+    )
+    existing = _df(spark, [_row(i) for i in range(5)])
+    for kwargs in ({}, {"dedup_batch": False}, {"strict": True}):
+        out = dedup_append(batch, existing, KEYS, **kwargs)
+        assert out.columns == batch.columns, kwargs
+    assert dedup_within_batch(batch, KEYS).columns == batch.columns
+
+
 def test_null_keys_always_append(spark):
     """SQL join semantics: a NULL key column never matches, so NULL-key rows
     pass the anti-join even when an identical NULL-key row already exists —

@@ -3,6 +3,9 @@ a local replica of the driver's correctness gate."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 
 from billing_data_pipeline_spark.registry import load_catalog
@@ -933,3 +936,28 @@ def test_array_matrix_empty_embedding_matches_oracle(spark, tmp_path):
     pq.write_table(emb, str(d / "embeddings.parquet"))
     spec = CATALOG["array_function_matrix"]
     assert_matches_oracle(spec.fn(spark, str(d)), spec.oracle, str(d))
+
+
+TESTDATA_SFS = sorted(
+    glob.glob(os.path.join(os.path.dirname(SF_CORRECTNESS), "sf*"))
+)
+
+
+@pytest.mark.parametrize("sf_dir", TESTDATA_SFS, ids=os.path.basename)
+def test_lineitem_shipdate_has_no_time_of_day(sf_dir):
+    """Data contract behind ``daily_aggregates`` and
+    ``daily_aggregates_hll``: both group by the raw ``l_shipdate``, a
+    TIMESTAMP, and split it into year/month/day after the aggregate. That
+    equals grouping by the calendar day only while every value is a
+    midnight; a time of day would split one day into several groups.
+    Pinned on every shipped scale factor, DuckDB-side."""
+    import duckdb
+
+    path = os.path.join(sf_dir, "lineitem.parquet")
+    rows, off_midnight = duckdb.connect().execute(
+        "SELECT count(*), count(*) FILTER "
+        "(WHERE l_shipdate <> date_trunc('day', l_shipdate)) "
+        f"FROM read_parquet('{path}')"
+    ).fetchone()
+    assert rows > 0
+    assert off_midnight == 0, f"{off_midnight} of {rows} rows carry a time"

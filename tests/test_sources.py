@@ -592,6 +592,82 @@ def test_snapshot_table_commit_time_travel_vacuum(spark, tmp_path):
         t.read(version=0)  # vacuumed away
 
 
+def _write_x(vals):
+    """commit_files writer producing a one-column parquet file of ``vals``."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(target):
+        os.makedirs(target, exist_ok=True)
+        pq.write_table(pa.table({"x": pa.array(vals, pa.int64())}),
+                       os.path.join(target, "part-0.parquet"))
+
+    return write
+
+
+def test_snapshot_commit_meta_rides_in_the_log(tmp_path):
+    """A commit's JSON ``meta`` is published in its manifest entry and read
+    back, oldest first, through ``commits()``; a commit without one reads
+    None."""
+    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
+
+    t = SnapshotTable(None, str(tmp_path / "snap_meta"))
+    assert t.commits() == []
+    t.commit_files(_write_x([1]), mode="append",
+                   meta={"files": [{"filename": "a"}]})
+    t.commit_files(_write_x([2]), mode="append")
+    assert [(c["v"], c["meta"]) for c in t.commits()] == [
+        (0, {"files": [{"filename": "a"}]}),
+        (1, None),
+    ]
+
+
+def test_snapshot_read_with_a_known_schema(spark, tmp_path):
+    """read(schema=...) applies the given schema across an append chain
+    instead of reading it from the footers."""
+    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
+
+    t = SnapshotTable(spark, str(tmp_path / "snap_schema"))
+    t.commit(spark.range(3).toDF("n"), mode="append")
+    t.commit(spark.range(3, 5).toDF("n"), mode="append")
+    df = t.read(schema="n long")
+    assert df.schema == t.read().schema
+    assert sorted(r["n"] for r in df.collect()) == list(range(5))
+
+
+def test_snapshot_table_factory_dispatch(tmp_path):
+    import pytest
+
+    from billing_data_pipeline_spark.sources.os_snapshot import (
+        snapshot_table_for,
+    )
+    from billing_data_pipeline_spark.sources.versioned_sink import (
+        SnapshotTable,
+    )
+
+    t = snapshot_table_for(None, str(tmp_path / "w"))
+    assert isinstance(t, SnapshotTable)
+    t2 = snapshot_table_for(None, f"file://{tmp_path}/w2")
+    assert isinstance(t2, SnapshotTable) and t2.path == f"{tmp_path}/w2"
+    # closed-world dispatch: EVERY non-local scheme fails closed, not
+    # just a hardcoded object-store allowlist (hdfs:// and uppercase
+    # S3A:// once fell through to the POSIX rename protocol)
+    for url in (
+        "s3a://bucket/warehouse/t",
+        "S3A://bucket/warehouse/t",
+        "hdfs://nn/warehouse/t",
+        "dbfs://x/t",
+        "gs://b/t",
+    ):
+        with pytest.raises(NotImplementedError, match="file:///"):
+            snapshot_table_for(None, url)
+    # file URL with a remote authority must not resolve CWD-relative
+    with pytest.raises(ValueError, match="authority"):
+        snapshot_table_for(None, "file://host/share")
+
+
 def test_diff_snapshots_classifies_changes(spark):
     """diff_snapshots: insert/delete/update classification with null-safe
     column comparison (a NULL -> value transition is an update, value ->
