@@ -176,21 +176,24 @@ def append_new_rows_per_file(
     ledger,
     keys: Sequence[str],
     file_col: str,
-    file_hashes: dict[str, str],
+    files: dict[str, dict],
     existing_filter: Column | None = None,
+    refreshed: Sequence[dict] = (),
 ) -> tuple[int, dict[str, int]]:
     """Idempotent append that also reports rows-added PER source file.
 
     ``ledger`` is the target table's ``operators.ledger.FileLedger``.
     ``file_col`` names a column in ``batch`` carrying the source-file key
-    (it is dropped before the write); ``file_hashes`` maps every file of
-    the batch to its content hash. Mirrors the reference's per-file
-    new_record_count bookkeeping (ingest.py:262-265) without appending one
-    file at a time: one anti-join against ``ledger.table``, a cheap
-    groupBy on the surviving rows for the per-file split, then ONE
-    ``ledger.record`` commit that publishes the rows and every file's
-    ledger entry together — a file whose rows were all already present
-    records 0, and a crash anywhere before the commit leaves neither.
+    (it is dropped before the write); ``files`` maps every file of the
+    batch to its ledger entry's fields (``file_hash``, ``stat``). Mirrors
+    the reference's per-file new_record_count bookkeeping
+    (ingest.py:262-265) without appending one file at a time: one
+    anti-join against ``ledger.table``, a cheap groupBy on the surviving
+    rows for the per-file split, then ONE ``ledger.record`` commit that
+    publishes the rows and every file's ledger entry together — a file
+    whose rows were all already present records 0, and a crash anywhere
+    before the commit leaves neither. ``refreshed`` are whole ledger
+    entries of other files that ride along in the same commit.
     """
     table = ledger.table
     if table.latest_version() is None:
@@ -208,10 +211,11 @@ def append_new_rows_per_file(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        ledger.record(
-            [(f, h, per_file.get(f, 0)) for f, h in file_hashes.items()],
-            new_rows.drop(file_col),
-        )
+        entries = [
+            {**e, "filename": f, "record_count": per_file.get(f, 0)}
+            for f, e in files.items()
+        ]
+        ledger.record(entries + list(refreshed), new_rows.drop(file_col))
     finally:
         new_rows.unpersist()
     return sum(per_file.values()), per_file

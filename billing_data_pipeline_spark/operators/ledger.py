@@ -7,14 +7,32 @@ recorded, reprocessing when the hash changed (ingest.py:217-231).
 
 Here the ledger is not a table of its own: its rows ride in the ``meta``
 of ``raw_billing``'s append commits (``FileLedger``), so a file and the
-rows it contributed publish together. Every file is content-hashed on
-every run, streamed through md5 in bounded 8 MiB chunks, in one of two
-tiers. A small local lake (summed size below ``DRIVER_HASH_MAX_BYTES``)
-is hashed on the driver, like the reference's hashlib loop
+rows it contributed publish together.
+
+The whole discovery path — list, stat gate, hash, ledger diff — runs on
+the driver, so a poll that finds nothing new launches no Spark job (but
+for the lake listing, which Spark runs as a job past 32 directories). Each
+entry carries ``stat = [st_size, st_mtime_ns, st_ctime_ns, st_ino]``,
+from one ``os.stat`` taken before the file is read (``file_stat``). A
+local file whose stat still equals its latest entry's is trusted
+unchanged and not hashed. Every other file is content-hashed: a new one,
+one whose stat moved, one whose entry has a null stat (a racy stat, see
+``RACY_WINDOW_NS``, or an entry written before stats were recorded), and
+every file on a remote scheme, which has no ctime. ctime is what makes
+the gate safe without a full re-hash option: a rewrite that keeps the
+size and puts the mtime back with ``os.utime`` still moves it. A file
+hashed and found unchanged (a ``touch``) is hashed again on every poll
+until an ingest commit carries its refreshed stat; no commit is made for
+a stat alone, because it would move ``raw_billing``'s version and
+rebuild every derived table.
+
+Hashing streams each file through md5 in bounded 8 MiB chunks, in one of
+two tiers. Files summing to less than ``DRIVER_HASH_MAX_BYTES`` on local
+disk are hashed on the driver, like the reference's hashlib loop
 (ingest.py:218-220): starting a Python worker for a handful of files cost
 more than the md5 itself. Anything larger, or on a remote scheme, is
 hashed *distributed*: executors stream each file through pyarrow's
-filesystem layer inside a mapInPandas kernel and the driver only sees
+filesystem layer inside a mapInPandas kernel and the driver collects only
 (path, hash) pairs — so hashing scales with the cluster and, unlike a
 ``binaryFile`` + ``md5(content)`` scan, never materializes a whole file as
 one row value (binaryFile caps a column at Int.MaxValue bytes, so one
@@ -29,9 +47,12 @@ modified-in-place redetection, which Spark's file source does not do
 from __future__ import annotations
 
 import os
+import re
+import time
 from datetime import datetime, timezone
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,6 +78,15 @@ _SCHEME_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
 #: way to about 1-2 s. The driver used less CPU at every size.
 DRIVER_HASH_MAX_BYTES = 1 << 30
 
+#: A stat whose mtime or ctime lies within this many nanoseconds of the
+#: moment it was taken is recorded as null, so the next poll hashes the
+#: file. File timestamps come from a coarse clock (a kernel tick, or a
+#: whole second on some filesystems): a write landing in the same tick
+#: just after the stat would leave size, mtime and ctime all unchanged,
+#: and the gate would trust content it never hashed. git's index has the
+#: same "racily clean" problem.
+RACY_WINDOW_NS = 1_000_000_000
+
 
 def ledger_key(path):
     """Scheme-normalized FULL path — the ledger key.
@@ -74,44 +104,77 @@ def ledger_key(path):
     return F.regexp_replace(path, _SCHEME_RE, "/")
 
 
-def hash_files(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """(filename, file_hash) for every input file, hashed in STREAMED
+def _local(path: str) -> str | None:
+    """The absolute local path to open for a bare path or a ``file:`` URI
+    (percent-decoded: Spark lists ``bill%20ing.csv`` for ``bill ing.csv``);
+    None on a remote scheme."""
+    if path.startswith("file:"):
+        return unquote(re.sub(_SCHEME_RE, "/", path))
+    return None if re.match(_SCHEME_RE, path) else os.path.abspath(path)
+
+
+def file_key(path: str) -> str:
+    """The ledger filename of one input path: a URI without its scheme,
+    still percent-encoded as ``ledger_key(input_file_name())`` renders it,
+    or a bare path made ABSOLUTE — a relative one would never match those
+    keys, silently defeating hash-skip (advice r5)."""
+    if re.match(_SCHEME_RE, path):
+        return re.sub(_SCHEME_RE, "/", path)
+    return os.path.abspath(path)
+
+
+def file_stat(path: str) -> list[int] | None:
+    """``[st_size, st_mtime_ns, st_ctime_ns, st_ino]`` of a local file, the
+    stat the gate compares with its ledger entry's. Take it before the
+    file is read, so a write after it moves the next poll's stat.
+
+    None when it cannot be trusted: a remote scheme (no ctime) or a racy
+    stat (``RACY_WINDOW_NS``); the file is then hashed on every poll.
+    Raises ``FileNotFoundError`` for a file removed since it was listed.
+    """
+    local = _local(path)
+    if local is None:
+        return None
+    now = time.time_ns()
+    st = os.stat(local)
+    if any(abs(now - t) < RACY_WINDOW_NS for t in (st.st_mtime_ns, st.st_ctime_ns)):
+        return None
+    return [st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino]
+
+
+def hash_files(spark: SparkSession, paths: list[str]) -> list[Row]:
+    """Row(filename, file_hash) for every input file, hashed in STREAMED
     chunks — O(8 MB) memory per file regardless of its size.
 
-    ``filename`` is the partition-qualified ``ledger_key`` of the path,
+    ``filename`` is the partition-qualified ``file_key`` of the path,
     not the basename (see ``ledger_key``). Globs are expanded driver-side
     (one listing, same as binaryFile's). Local inputs summing to less
     than ``DRIVER_HASH_MAX_BYTES`` are hashed on the driver; otherwise the
     hash work distributes one file per row across the cluster via
     pyarrow's filesystem layer (local + s3/gcs where pyarrow has
-    credentials). Both tiers return the same rows.
+    credentials) and the driver collects the pairs. Both tiers return the
+    same rows. A file removed since it was listed gets no row, as the
+    lake read (``ignoreMissingFiles``) skips it too.
     """
     import glob as _glob
-    import re
 
     from collections.abc import Iterator
 
-    expanded: list[str] = []
+    # (ledger filename, path to open) per input file
+    targets: list[tuple[str, str]] = []
     for p in paths:
-        bare = re.sub(_SCHEME_RE, "/", p) if p.startswith("file:") else p
-        if re.match(_SCHEME_RE, bare):
-            expanded.append(bare)  # remote scheme: no local glob
+        local = _local(p)
+        if local is None:
+            targets.append((file_key(p), p))  # remote scheme: no local glob
+        # existence-first (review r7): a CONCRETE filename containing glob
+        # metachars — 'billing[v2].csv' — must not be expanded as a
+        # character class (glob returned [] and the file was silently
+        # never ingested); only a non-existent path with metachars is a
+        # pattern.
+        elif any(c in local for c in "*?[") and not os.path.exists(local):
+            targets.extend((h, h) for h in sorted(_glob.glob(local)))
         else:
-            # existence-first (review r7): a CONCRETE filename containing
-            # glob metachars — 'billing[v2].csv' from lake.inputFiles() —
-            # must not be expanded as a character class (glob returned []
-            # and the file was silently never ingested); only a
-            # non-existent path with metachars is a pattern.
-            if any(c in bare for c in "*?[") and not os.path.exists(bare):
-                hits = sorted(_glob.glob(bare))
-            else:
-                hits = [bare]
-            # abspath here, not just at open time (advice r5): the hit is
-            # recorded verbatim as the ledger filename, and a RELATIVE
-            # local path would yield a relative ledger key that can never
-            # match ingest's absolute ledger_key(input_file_name()) keys —
-            # silently defeating hash-skip.
-            expanded.extend(os.path.abspath(h) for h in hits)
+            targets.append((file_key(p), local))
 
     schema = T.StructType(
         [
@@ -132,38 +195,50 @@ def hash_files(spark: SparkSession, paths: list[str]) -> DataFrame:
         # split.
         uri = re.sub("^s3a://", "s3://", p)
         uri = re.sub("^abfss://", "abfs://", uri)
-        filesystem, rel = pafs.FileSystem.from_uri(
-            uri if re.match(_SCHEME_RE, uri) else os.path.abspath(uri)
-        )
+        filesystem, rel = pafs.FileSystem.from_uri(uri)
         h = hashlib.md5()
         with filesystem.open_input_stream(rel) as f:
             while chunk := f.read(8 << 20):
                 h.update(chunk)
         return h.hexdigest()
 
-    def hashed(ps) -> list[tuple[str, str]]:
-        return [(re.sub(_SCHEME_RE, "/", p), md5_of(p)) for p in ps]
+    def hashed(pairs) -> list[tuple[str, str]]:
+        out = []
+        for name, p in pairs:
+            try:
+                out.append((name, md5_of(p)))
+            except FileNotFoundError:
+                pass  # removed since it was listed
+        return out
+
+    def size(p: str) -> int:
+        try:
+            return os.stat(p).st_size
+        except FileNotFoundError:
+            return 0
 
     # driver tier: starting a Python worker costs more than the md5 of a
     # small local lake
-    if not any(re.match(_SCHEME_RE, p) for p in expanded) and (
-        sum(os.stat(p).st_size for p in expanded) < DRIVER_HASH_MAX_BYTES
+    if not any(re.match(_SCHEME_RE, p) for _, p in targets) and (
+        sum(size(p) for _, p in targets) < DRIVER_HASH_MAX_BYTES
     ):
-        return spark.createDataFrame(hashed(expanded), schema)
+        return [Row(filename=f, file_hash=h) for f, h in hashed(targets)]
 
     def kernel(it: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in it:
             yield pd.DataFrame(
-                hashed(list(pdf["path"])), columns=["filename", "file_hash"]
+                hashed(zip(pdf["filename"], pdf["path"])),
+                columns=["filename", "file_hash"],
             )
 
-    n = max(1, len(expanded))
+    n = max(1, len(targets))
     return (
-        spark.createDataFrame([(p,) for p in expanded], "path string")
+        spark.createDataFrame(targets, "filename string, path string")
         .repartition(min(n, spark.sparkContext.defaultParallelism))
         .mapInPandas(kernel, schema)
+        .collect()
     )
 
 
@@ -221,30 +296,26 @@ class FileLedger:
             LEDGER_SCHEMA,
         )
 
-    def filter_unprocessed(self, candidates: DataFrame) -> DataFrame:
+    def filter_unprocessed(self, candidates: list[Row]) -> list[Row]:
         """Candidates (filename, file_hash) the ledger does not hold.
 
         A file re-appears for processing when its name is new OR its hash
         changed — i.e. skip only exact (filename, file_hash) matches,
         matching the reference's skip/reprocess split (ingest.py:223-231).
-        The ledger is already on the driver, so this is a set filter, not
-        a join (the hex hash has no newline, so the pair key is
-        unambiguous).
+        The ledger is already on the driver, so this is a set difference,
+        not a join.
         """
-        done = [f"{f}\n{e['file_hash']}" for f, e in self.latest().items()]
-        return candidates.filter(
-            ~F.concat_ws("\n", "filename", "file_hash").isin(done)
-        )
+        done = {(f, e["file_hash"]) for f, e in self.latest().items()}
+        return [r for r in candidates if (r["filename"], r["file_hash"]) not in done]
 
-    def record(self, processed: list[tuple[str, str, int]], rows: DataFrame) -> int:
-        """Append ``rows`` and record (filename, file_hash, record_count)
-        for ``processed`` in ONE commit; latest entry per filename wins on
-        load. A zero-row ``rows`` still commits (an empty, schema-carrying
-        version) so the files are recorded. Returns the published
-        version."""
+    def record(self, processed: list[dict], rows: DataFrame) -> int:
+        """Append ``rows`` and, in ONE commit, the ledger entries
+        ``processed``: each gives ``filename``, ``file_hash`` and
+        ``record_count``, and may give ``stat`` (null when absent) and
+        ``processed_at`` (now when absent; a refreshed entry keeps its
+        own). The latest entry per filename wins on load. A zero-row
+        ``rows`` still commits (an empty, schema-carrying version) so the
+        files are recorded. Returns the published version."""
         now = datetime.now(timezone.utc).replace(tzinfo=None).isoformat()
-        files = [
-            {"filename": f, "file_hash": h, "record_count": n, "processed_at": now}
-            for f, h, n in processed
-        ]
+        files = [{"processed_at": now, "stat": None, **e} for e in processed]
         return self.table.commit(rows, mode="append", meta={"files": files})

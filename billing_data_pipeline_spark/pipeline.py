@@ -10,7 +10,11 @@ external scheduler calls ``run()`` (the reference's cron entry, ST3).
 Stage semantics preserved:
 - ingest: Hive-partitioned CSV lake -> idempotent anti-join append into
   ``raw_billing`` (J1) with a content-hash file ledger (ST5) and a
-  partition-pruned backfill window (ST6/OPT1).
+  partition-pruned backfill window (ST6/OPT1). Finding the new files runs
+  on the driver and hashes only files whose stat moved
+  (``operators.ledger``), so a poll that finds none launches no Spark job
+  while the lake has at most 32 day directories (past that, Spark lists
+  them with one parallel job).
 - aggregates: four FULL-REFRESH tables (the reference's DELETE + INSERT,
   S8/OPT5) as atomic snapshot overwrites.
 - insights: the five report queries -> markdown at the collect edge (S10),
@@ -57,7 +61,13 @@ from pyspark.sql import functions as F
 
 from .operators.aggregates import grouped_profile
 from .operators.ingest import append_new_rows_per_file
-from .operators.ledger import FileLedger, hash_files, ledger_key
+from .operators.ledger import (
+    FileLedger,
+    file_key,
+    file_stat,
+    hash_files,
+    ledger_key,
+)
 from .operators.reports import billing_insights
 from .sources.csv_source import (
     RAW_BILLING_KEYS,
@@ -187,28 +197,58 @@ class BillingPipeline:
             )
         metrics = {
             "files_discovered": len(files),
+            "files_hashed": 0,
             "files_new_or_changed": 0,
             "rows_appended": 0,
         }
         if not files:
             return metrics
-        candidates = hash_files(self.spark, files)
-        todo = ledger.filter_unprocessed(candidates).collect()
-        todo_hashes = {r["filename"]: r["file_hash"] for r in todo}
-        metrics["files_new_or_changed"] = len(todo_hashes)
-        if not todo_hashes:
+        # Discovery runs on the driver: stat gate, hash, ledger diff. Each
+        # stat is taken before the file is hashed or read; a file that
+        # vanished since the listing is skipped, as the read skips it.
+        known = ledger.latest()
+        stats = {}
+        for p in files:
+            try:
+                stats[file_key(p)] = (p, file_stat(p))
+            except FileNotFoundError:
+                pass
+        to_hash = [
+            p
+            for k, (p, st) in stats.items()
+            if st is None or st != known.get(k, {}).get("stat")
+        ]
+        hashed = hash_files(self.spark, to_hash)
+        todo = {r["filename"]: r["file_hash"] for r in ledger.filter_unprocessed(hashed)}
+        metrics["files_hashed"] = len(to_hash)
+        metrics["files_new_or_changed"] = len(todo)
+        if not todo:
             return metrics
+        # Files hashed and found unchanged ride the commit that happens
+        # anyway, with a trusted stat: a copy of their entry with only the
+        # stat replaced. A commit of its own would move raw_billing's
+        # version and rebuild every derived table.
+        refreshed = [
+            {**known[r["filename"]], "stat": stats[r["filename"]][1]}
+            for r in hashed
+            if r["filename"] not in todo and stats[r["filename"]][1] is not None
+        ]
 
         # Filter the lake to new/changed files using the SAME partition-
         # qualified key the ledger uses (basenames collide across Hive
         # partitions — every partition's file is 'billing.csv').
         batch = lake.withColumn("_lk", ledger_key(F.input_file_name())).filter(
-            F.col("_lk").isin(list(todo_hashes))
+            F.col("_lk").isin(list(todo))
         )
         # one append commit: the new rows plus each file's ledger entry
         # with its own new-row count (reference ingest.py:262-265)
         n, _ = append_new_rows_per_file(
-            batch, ledger, list(RAW_BILLING_KEYS), "_lk", todo_hashes
+            batch,
+            ledger,
+            list(RAW_BILLING_KEYS),
+            "_lk",
+            {f: {"file_hash": h, "stat": stats[f][1]} for f, h in todo.items()},
+            refreshed=refreshed,
         )
         metrics["rows_appended"] = n
         return metrics

@@ -27,6 +27,10 @@ def _row(i, usage=1.0):
     return (datetime(2025, 4, 23, 10, 0, i % 60), f"r-{i}", f"u-{i}", f"inv-{i}", usage)
 
 
+def _entry(filename, file_hash, record_count=1):
+    return {"filename": filename, "file_hash": file_hash, "record_count": record_count}
+
+
 def test_dedup_append_drops_existing_keys(spark):
     existing = _df(spark, [_row(i) for i in range(5)])
     batch = _df(spark, [_row(i) for i in range(3, 8)])
@@ -95,7 +99,7 @@ def test_hash_files_concrete_path_with_glob_metachars(spark, tmp_path):
     class that matches nothing — the file silently never ingested."""
     p = tmp_path / "billing[v2].csv"
     p.write_text("a,b\n1,2\n")
-    got = hash_files(spark, [str(p)]).collect()
+    got = hash_files(spark, [str(p)])
     assert len(got) == 1 and got[0]["filename"].endswith("billing[v2].csv")
 
 
@@ -142,23 +146,21 @@ def test_ledger_skips_unchanged_reprocesses_changed(spark, tmp_path):
     ledger = FileLedger(spark, str(tmp_path / "ledger"))
     cands = hash_files(spark, [str(f1), str(f2)])
     todo = ledger.filter_unprocessed(cands)
-    assert todo.count() == 2
+    assert len(todo) == 2
 
-    hashes = {r["filename"]: r["file_hash"] for r in cands.collect()}
-    ledger.record([(n, h, 1) for n, h in hashes.items()], spark.range(0))
-    assert ledger.filter_unprocessed(hash_files(spark, [str(f1), str(f2)])).count() == 0
+    hashes = {r["filename"]: r["file_hash"] for r in cands}
+    ledger.record([_entry(n, h) for n, h in hashes.items()], spark.range(0))
+    assert len(ledger.filter_unprocessed(hash_files(spark, [str(f1), str(f2)]))) == 0
 
     # Modify f2 in place: name matches, hash differs -> reprocess only f2.
     # Ledger keys are partition-qualified full paths, not basenames.
     f2.write_text("a,b\n3,5\n")
     redo = ledger.filter_unprocessed(hash_files(spark, [str(f1), str(f2)]))
-    assert [r["filename"] for r in redo.collect()] == [str(f2)]
+    assert [r["filename"] for r in redo] == [str(f2)]
 
     # Ledger upsert keeps one row per filename (latest hash wins).
-    new_hash = {
-        r["filename"]: r["file_hash"] for r in hash_files(spark, [str(f2)]).collect()
-    }
-    ledger.record([(str(f2), new_hash[str(f2)], 1)], spark.range(0))
+    new_hash = {r["filename"]: r["file_hash"] for r in hash_files(spark, [str(f2)])}
+    ledger.record([_entry(str(f2), new_hash[str(f2)])], spark.range(0))
     led = ledger.load()
     assert led.count() == 2
     assert (
@@ -184,17 +186,17 @@ def test_ledger_keys_distinguish_hive_partitions(spark, tmp_path):
     # Day 1 arrives first, days 2-3 on a later run (separate record calls,
     # like the pipeline's successive ingests).
     c1 = hash_files(spark, paths[:1])
-    todo1 = ledger.filter_unprocessed(c1).collect()
+    todo1 = ledger.filter_unprocessed(c1)
     assert len(todo1) == 1
-    ledger.record([(r["filename"], r["file_hash"], 1) for r in todo1], spark.range(0))
+    ledger.record([_entry(*r) for r in todo1], spark.range(0))
 
     c23 = hash_files(spark, paths)
-    todo2 = ledger.filter_unprocessed(c23).collect()
+    todo2 = ledger.filter_unprocessed(c23)
     assert sorted(r["filename"] for r in todo2) == sorted(paths[1:])
-    ledger.record([(r["filename"], r["file_hash"], 1) for r in todo2], spark.range(0))
+    ledger.record([_entry(*r) for r in todo2], spark.range(0))
 
     # Third run: NOTHING is re-processed and no entry was evicted.
-    assert ledger.filter_unprocessed(hash_files(spark, paths)).count() == 0
+    assert len(ledger.filter_unprocessed(hash_files(spark, paths))) == 0
     assert ledger.load().count() == 3
 
 
@@ -262,21 +264,23 @@ def test_hash_files_relative_path_records_absolute_key(spark, tmp_path, monkeypa
     f = tmp_path / "rel-billing.csv"
     f.write_text("a,b\n1,2\n")
     monkeypatch.chdir(tmp_path)
-    rows = hash_files(spark, ["rel-billing.csv"]).collect()
+    rows = hash_files(spark, ["rel-billing.csv"])
     assert len(rows) == 1
     assert rows[0]["filename"] == str(f)
     assert os.path.isabs(rows[0]["filename"])
     # glob expansion normalizes too
-    rows_g = hash_files(spark, ["rel-*.csv"]).collect()
+    rows_g = hash_files(spark, ["rel-*.csv"])
     assert [r["filename"] for r in rows_g] == [str(f)]
 
 
-def test_hash_files_driver_and_distributed_tiers_agree(spark, tmp_path, monkeypatch):
-    """Small local lakes hash on the driver; with the tier's threshold at
-    0 the same inputs hash in the distributed kernel. Both must return
-    the same (filename, file_hash) rows: for a concrete filename with
-    glob metachars, a relative path, and a file spanning several 8 MiB
-    md5 chunks."""
+def test_hash_files_driver_and_distributed_tiers_agree(
+    spark, spark_jobs, tmp_path, monkeypatch
+):
+    """Small local lakes hash on the driver, with no Spark job; with the
+    tier's threshold at 0 the same inputs hash in the distributed kernel.
+    Both must return the same (filename, file_hash) rows: for a concrete
+    filename with glob metachars, a relative path, and a file spanning
+    several 8 MiB md5 chunks."""
     import hashlib
     import random
 
@@ -291,14 +295,13 @@ def test_hash_files_driver_and_distributed_tiers_agree(spark, tmp_path, monkeypa
     paths = [str(odd), "rel-billing.csv", str(big)]
 
     def run():
-        df = ledger.hash_files(spark, paths)
-        plan = df._jdf.queryExecution().analyzed().toString()
-        return sorted((r["filename"], r["file_hash"]) for r in df.collect()), plan
+        rows, jobs = spark_jobs(lambda: ledger.hash_files(spark, paths))
+        return sorted((r["filename"], r["file_hash"]) for r in rows), jobs
 
-    driver, driver_plan = run()
+    driver, driver_jobs = run()
     monkeypatch.setattr(ledger, "DRIVER_HASH_MAX_BYTES", 0)
-    distributed, distributed_plan = run()
-    assert "MapInPandas" not in driver_plan and "MapInPandas" in distributed_plan
+    distributed, distributed_jobs = run()
+    assert driver_jobs == 0 and distributed_jobs >= 1
     assert driver == distributed
     assert driver == sorted(
         (str(p), hashlib.md5(p.read_bytes()).hexdigest())
