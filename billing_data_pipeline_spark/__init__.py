@@ -7,7 +7,7 @@ DuckDB-backed incremental billing ETL), re-expressed Spark-first:
 - DataFrame / SQL logical plans, Catalyst/Tungsten physical execution
 - idempotent incremental ingest (anti-join dedup + content-hash ledger)
 - materialized group-by aggregate tables + top-k insight reports
-- Structured Streaming for the reference's sensor-driven micro-batching
+- Structured Streaming operators for event-time windows and stateful rollups
 - [EXT] LLM-data-pipeline operators: dedup (exact/MinHash/SimHash),
   similarity search, text analysis, multimodal binary columns
 
@@ -18,7 +18,7 @@ Layout:
     operators/    aggregates, ingest/dedup, top-k, windows, text, similarity
     functions/    scalar column helpers (hashing, dates, JSON)
     plans/        the registered query catalog (billing + extensions)
-    streaming/    Structured Streaming surface (file source, event windows)
+    streaming/    Structured Streaming surface (event windows, stateful rollups)
 """
 
 __version__ = "0.1.0"

@@ -8,16 +8,12 @@ MIGRATION.md).
 
     python -m billing_data_pipeline_spark insights --warehouse /warehouse
 
-    python -m billing_data_pipeline_spark stream \
-        --source /lake/root --warehouse /warehouse --checkpoint /ckpt
-
 `run` executes the full asset DAG (ingest -> aggregates -> insights) over
 the Hive-partitioned CSV lake, with the backfill window as partition
-predicates; `insights` re-renders the report from existing tables;
-`stream` starts the checkpointed file-source ingest (AvailableNow
-catch-up, the sensors' replacement). Scheduling stays external (cron /
-Airflow calling `run`), exactly as the reference leaves it to the Dagster
-daemon.
+predicates; `insights` re-renders the report from existing tables.
+Scheduling is cron calling `run`, the replacement for the reference's
+polling sensors: each call ingests only files whose stat or content moved,
+and a call that finds none returns the stored report without rebuilding.
 """
 
 from __future__ import annotations
@@ -44,11 +40,6 @@ def main(argv: list[str] | None = None) -> int:
 
     ins = sub.add_parser("insights", help="re-render the report from existing tables")
     ins.add_argument("--warehouse", required=True)
-
-    st = sub.add_parser("stream", help="checkpointed streaming ingest (AvailableNow)")
-    st.add_argument("--source", required=True)
-    st.add_argument("--warehouse", required=True)
-    st.add_argument("--checkpoint", required=True)
 
     cu = sub.add_parser(
         "curate", help="training-corpus curation: scrub -> filter -> chunk -> dedup -> shards"
@@ -101,20 +92,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         json.dump(metrics, sys.stdout, default=str)
         print()
-        return 0
-
-    if args.cmd == "stream":
-        from .streaming.ingest_stream import stream_ingest_csv
-
-        query = stream_ingest_csv(
-            spark,
-            source_glob=f"{args.source}/year=*/month=*/day=*",
-            table_path=f"{args.warehouse}/raw_billing",
-            checkpoint_dir=args.checkpoint,
-            available_now=True,
-        )
-        query.awaitTermination()
-        print(json.dumps({"stream": "drained", "id": str(query.id)}))
         return 0
 
     return 2

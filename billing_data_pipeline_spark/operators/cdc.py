@@ -23,8 +23,7 @@ Plan shape: ONE full-outer sort-merge/shuffle join on the key — the only
 data-sized exchange; per-column null-safe comparisons happen in the join's
 projection, no row hashing (hashing would be engine-private and would also
 false-positive on float formatting). At 100 TB both sides shuffle once on
-the same key; if snapshots are written bucketed by the key
-(sources/bucketing), the exchange disappears entirely.
+the same key.
 """
 
 from __future__ import annotations

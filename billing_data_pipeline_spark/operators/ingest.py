@@ -111,45 +111,6 @@ def dedup_append(
     )
 
 
-def append_new_rows(
-    batch: DataFrame,
-    table_path: str,
-    keys: Sequence[str],
-    existing_filter: Column | None = None,
-) -> int:
-    """Idempotent append of a batch into a parquet table; returns rows added."""
-    from pyspark.errors import AnalysisException
-
-    spark = batch.sparkSession
-    try:
-        existing = spark.read.parquet(table_path)
-    except AnalysisException as exc:
-        # ONLY a genuinely-absent table means "first batch". A transient
-        # read failure (S3 503, EACCES, EIO) must PROPAGATE: swallowing it
-        # skipped the anti-join and blindly re-appended a replayed batch —
-        # silent duplicates, the exact bug class the r5 NULL-key-path fix
-        # removed from the streaming caller, which still routed all
-        # non-NULL-key rows through this bare except (review r6).
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-            existing = None
-        else:
-            raise
-    if existing is None:
-        new_rows = dedup_within_batch(batch, keys)
-    else:
-        new_rows = dedup_append(batch, existing, keys, existing_filter)
-    # Two passes over `batch` (count + write); cache only the deduped rows.
-    new_rows = new_rows.persist()
-    try:
-        n = new_rows.count()
-        if n:
-            new_rows.write.mode("append").parquet(table_path)
-    finally:
-        new_rows.unpersist()
-    return n
-
-
 def upsert_latest_wins(
     existing: DataFrame, updates: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
@@ -243,7 +204,7 @@ def bloom_prefiltered_new_rows(
     n_probes: int = 5,
 ) -> DataFrame:
     """EXACT incremental dedup with a bloom-pruned join probe — the 100 TB
-    ingest accelerator for the ``append_new_rows`` anti-join shape.
+    ingest accelerator for the ``dedup_append`` anti-join shape.
 
     Build: each scan partition of the existing side folds its keys into a
     local ``num_bits`` bitmap (numpy, mapInPandas); the driver ORs the

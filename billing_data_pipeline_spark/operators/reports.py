@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .aggregates import frequency_count, global_sum, success_rate, top_k
+from .aggregates import global_sum, top_k
 
 
 def preview_markdown(df: DataFrame, n: int = 5) -> str:
@@ -30,21 +30,18 @@ def billing_insights(
     raw: DataFrame,
     user_aggs: DataFrame,
     region_aggs: DataFrame,
+    service_aggs: DataFrame,
     ledger: list[dict] | None = None,
-    service_aggs: DataFrame | None = None,
 ) -> tuple[str, dict]:
     """The reference's five insight queries + markdown assembly
     (reference: pipeline/assets/reports.py:21-135). Returns (markdown,
     metrics); all floats formatted exactly like the reference ("{:.2f}",
     "{:.2%}" — reports.py:74,94,118).
 
-    Pass ``service_aggs`` (grouped by tier/resource_type/operation_type
-    with transaction/success counts) and the op-frequency and tier-rate
-    sections fold from its EXACT integer counts instead of re-scanning
-    raw — at the 100 TB design point that removes two of the three full
-    raw passes this report cost (review r6; pipeline.insights already
-    passed user/region_aggs for exactly this reason). The one remaining
-    raw scan is the exact-decimal global total, which double-summing
+    The op-frequency and tier-rate sections fold from ``service_aggs``
+    (grouped by tier/resource_type/operation_type with transaction/success
+    counts): its EXACT integer counts, not a re-scan of raw. The one raw
+    scan is the exact-decimal global total, which double-summing
     per-region totals cannot reproduce bit-for-bit.
 
     ``ledger`` is the processed-files ledger as driver-side rows, one per
@@ -65,33 +62,25 @@ def billing_insights(
         region_aggs.select("region", "total_usage"),
         "total_usage", 5, tiebreak=["region"],
     ).collect()
-    if service_aggs is not None:
-        op_freq = (
-            service_aggs.groupBy("operation_type")
-            .agg(F.sum("transaction_count").alias("count"))
-            .orderBy(F.col("count").desc(), F.col("operation_type").asc())
-            .collect()
+    op_freq = (
+        service_aggs.groupBy("operation_type")
+        .agg(F.sum("transaction_count").alias("count"))
+        .orderBy(F.col("count").desc(), F.col("operation_type").asc())
+        .collect()
+    )
+    rates = (
+        service_aggs.groupBy("service_tier")
+        .agg(
+            F.sum("success_count").alias("success_count"),
+            F.sum("transaction_count").alias("total_count"),
         )
-        rates = (
-            service_aggs.groupBy("service_tier")
-            .agg(
-                F.sum("success_count").alias("success_count"),
-                F.sum("transaction_count").alias("total_count"),
-            )
-            .withColumn(
-                "success_rate",
-                F.col("success_count").cast("double") / F.col("total_count"),
-            )
-            .orderBy(F.col("success_rate").desc(), F.col("service_tier"))
-            .collect()
+        .withColumn(
+            "success_rate",
+            F.col("success_count").cast("double") / F.col("total_count"),
         )
-    else:
-        op_freq = frequency_count(raw, "operation_type").collect()
-        rates = (
-            success_rate(raw, "service_tier", F.col("success"))
-            .orderBy(F.col("success_rate").desc(), F.col("service_tier"))
-            .collect()
-        )
+        .orderBy(F.col("success_rate").desc(), F.col("service_tier"))
+        .collect()
+    )
 
     lines = [
         "# Billing Insights Report",

@@ -136,8 +136,9 @@ class BillingPipeline:
         st = self._table(name)
         if version is not None or st.latest_version() is not None:
             return st.read(version=version, schema=schema)
-        # a table written as plain parquet (before snapshots, or by the
-        # stream CLI) still reads
+        # a table written as plain parquet still reads: warehouses from
+        # before snapshots, and perfbench's --tamper check, which rewrites
+        # raw_billing that way to prove its checks fail
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
@@ -192,8 +193,8 @@ class BillingPipeline:
             raise RuntimeError(
                 f"{ledger.table.path} holds data outside its snapshot"
                 f" manifest ({', '.join(foreign[:3])}), written before"
-                " raw_billing became a snapshot table or by the stream"
-                " command: backfill into a fresh warehouse directory."
+                " raw_billing became a snapshot table: backfill into a"
+                " fresh warehouse directory."
             )
         metrics = {
             "files_discovered": len(files),

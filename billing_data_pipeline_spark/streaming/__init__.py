@@ -1,19 +1,15 @@
 """Structured Streaming layer (SURVEY.md §2.9).
 
-The reference does micro-batch incremental processing with polling sensors
-and cursors (reference: pipeline/pipeline.py:41-161); here the same
-capabilities are native Structured Streaming:
+The reference polls its lake with sensors and cursors (reference:
+pipeline/pipeline.py:41-161); here that is a scheduled
+``BillingPipeline.run()``, the only writer of ``raw_billing``. This layer
+holds the catalog's event-time streaming operators:
 
-- ``ingest_stream``   — checkpointed file-source ingestion with idempotent
-                        anti-join append per micro-batch (sensors ST1/ST2 +
-                        run-key idempotency ST4, subsumed).
 - ``event_windows``   — watermarked tumbling/sliding/session event-time
                         aggregates, stream-stream interval joins, OHLC
                         bars, enrichment + dropDuplicatesWithinWatermark,
                         and the ``run_to_memory`` finite-drain helper.
 - ``stateful``        — applyInPandasWithState custom stateful operator.
-- ``typed_state``     — transformWithStateInPandas twin (env-gated on
-                        protobuf; the memory-sink test lights up with it).
 - ``rollup_stream``   — incremental materialized rollup via foreachBatch
                         (mergeable partials, versioned atomic publish).
 - ``snapshot_sink``   — foreachBatch -> exactly-once versioned snapshot
@@ -31,7 +27,6 @@ from .event_windows import (  # noqa: F401
     streaming_dedup,
     tumbling_counts_stream,
 )
-from .ingest_stream import stream_ingest_csv  # noqa: F401
 from .rollup_stream import StreamingRollup  # noqa: F401
 from .snapshot_sink import stream_to_snapshots  # noqa: F401
 from .stateful import stateful_user_totals  # noqa: F401

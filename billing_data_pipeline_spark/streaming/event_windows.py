@@ -156,9 +156,8 @@ def streaming_dedup(
     makes the operator's bounded-state claim unconditional; route undated
     rows through the batch dedup (operators/dedup.py) instead.
 
-    NULL KEY values dedup on a FULL-ROW hash (r8, NULL-key sweep) — the
-    same contract as the batch ingest's replay_safe_append: a row with a
-    NULL key has no key identity, and dropDuplicatesWithinWatermark's
+    NULL KEY values dedup on a FULL-ROW hash (r8, NULL-key sweep): a row
+    with a NULL key has no key identity, and dropDuplicatesWithinWatermark's
     NULL = NULL equality silently collapsed EVERY such row into one
     (data loss — the exact class the r7 ingest fix removed batch-side).
     Under the hash key, replays of the same row still collapse while

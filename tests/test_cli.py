@@ -66,20 +66,3 @@ def test_curate_corpus_survives_everything_filtered(spark, tmp_path):
     assert m["docs_kept"] == 0
     assert m["chunks_written"] == 0 and m["tokens_written"] == 0
     assert m["shards"] == {} and m["splits"] == {}
-
-
-def test_cli_stream_drains_lake(spark, tmp_path, capsys):
-    lake, n = _write_lake(tmp_path)
-    wh = str(tmp_path / "swh")
-    rc = main(
-        [
-            "stream",
-            "--source", lake,
-            "--warehouse", wh,
-            "--checkpoint", str(tmp_path / "ckpt"),
-        ]
-    )
-    assert rc == 0
-    out, _ = capsys.readouterr()
-    assert json.loads(out)["stream"] == "drained"
-    assert spark.read.parquet(f"{wh}/raw_billing").count() == n

@@ -8,7 +8,6 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from billing_data_pipeline_spark.operators.ingest import (
-    append_new_rows,
     assert_unique,
     dedup_append,
     dedup_within_batch,
@@ -113,17 +112,6 @@ def test_file_ledger_rejects_remote_scheme_normalizes_file_url(spark, tmp_path):
         FileLedger(spark, "s3a://bucket/wh/processed_files")
     led = FileLedger(spark, f"file://{tmp_path}/processed_files")
     assert led.table.path == f"{tmp_path}/processed_files"
-
-
-def test_append_new_rows_idempotent(spark, tmp_path):
-    """Running the same load twice leaves the table unchanged (the
-    reference's core invariant, README.md:363-370)."""
-    table = str(tmp_path / "t")
-    batch = _df(spark, [_row(i) for i in range(10)])
-    assert append_new_rows(batch, table, KEYS) == 10
-    assert append_new_rows(batch, table, KEYS) == 0
-    assert spark.read.parquet(table).count() == 10
-    assert_unique(spark.read.parquet(table), KEYS)
 
 
 def test_assert_unique_raises_on_dupes(spark):

@@ -185,16 +185,23 @@ def test_billing_insights_renders_on_empty_and_all_null_input(spark):
     )
     user_aggs = spark.createDataFrame([], "user_id string, transaction_count long")
     region_aggs = spark.createDataFrame([], "region string, total_usage double")
-    md, metrics = billing_insights(raw, user_aggs, region_aggs)
+    service_aggs_schema = (
+        "service_tier string, resource_type string, operation_type string,"
+        " transaction_count long, success_count long"
+    )
+    md, metrics = billing_insights(
+        raw,
+        user_aggs,
+        region_aggs,
+        service_aggs=spark.createDataFrame([], service_aggs_schema),
+    )
     assert "**Total credit usage:** 0.00" in md
     assert metrics["total_credit_usage"] == 0.0
 
-    # the service_aggs fold path: a tier whose success_count is NULL
-    # (all successes unknown) has NULL success_rate -> n/a, not a crash
+    # a tier whose success_count is NULL (all successes unknown) has NULL
+    # success_rate -> n/a, not a crash
     service_aggs = spark.createDataFrame(
-        [("free", "gpu", "inference", 3, None)],
-        "service_tier string, resource_type string, operation_type string,"
-        " transaction_count long, success_count long",
+        [("free", "gpu", "inference", 3, None)], service_aggs_schema
     )
     md2, _ = billing_insights(
         raw, user_aggs, region_aggs, service_aggs=service_aggs
@@ -339,10 +346,10 @@ def test_run_is_exactly_once_under_a_crash_at_each_boundary(
 
 def test_ingest_fails_closed_on_plain_parquet_raw_billing(spark, tmp_path):
     """raw_billing written as plain parquet (before it became a snapshot
-    table, or by the stream command) carries no ledger; the first commit
-    would hide its rows and re-append them. Ingest refuses and names the
-    remedy; reads still fall back to the plain parquet. Snapshot-protocol
-    debris from a crashed first commit is not such data."""
+    table) carries no ledger; the first commit would hide its rows and
+    re-append them. Ingest refuses and names the remedy; reads still fall
+    back to the plain parquet. Snapshot-protocol debris from a crashed
+    first commit is not such data."""
     import os
 
     root, n_rows = _write_lake(tmp_path)
@@ -366,34 +373,6 @@ def test_ingest_fails_closed_on_plain_parquet_raw_billing(spark, tmp_path):
     pipe.read("raw_billing").write.mode("append").parquet(pipe.table_path("raw_billing"))
     with pytest.raises(RuntimeError, match="fresh warehouse"):
         pipe.ingest(root)
-
-
-def test_stream_refuses_a_warehouse_written_by_run(spark, tmp_path):
-    """run() then the stream command on one warehouse: the streamed plain
-    parquet would be invisible behind raw_billing's manifest, so the
-    stream refuses before it starts, and so does its sink."""
-    from billing_data_pipeline_spark.sources.csv_source import RAW_BILLING_KEYS
-    from billing_data_pipeline_spark.streaming.ingest_stream import (
-        replay_safe_append,
-        stream_ingest_csv,
-    )
-
-    root, n_rows = _write_lake(tmp_path)
-    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
-    pipe.run(root)
-    raw = pipe.table_path("raw_billing")
-    with pytest.raises(RuntimeError, match="separate warehouse"):
-        stream_ingest_csv(
-            spark, f"{root}/year=*/month=*/day=*", raw, str(tmp_path / "ckpt")
-        )
-    with pytest.raises(RuntimeError, match="separate warehouse"):
-        replay_safe_append(
-            pipe.read("raw_billing").drop("year", "month", "day"),
-            raw,
-            list(RAW_BILLING_KEYS),
-        )
-    assert pipe.read("raw_billing").count() == n_rows
-    assert pipe.ledger().table.foreign_entries() == []
 
 
 # -- zero-row commits ----------------------------------------------------------

@@ -1,5 +1,5 @@
-"""Scale-pattern tests: bucketed co-located joins (no Exchange in the plan)
-and mergeable incremental aggregation (batch folds == full recompute)."""
+"""Scale-pattern tests: mergeable incremental aggregation (batch folds ==
+full recompute) and the plan shapes the catalog's scale claims rest on."""
 
 from __future__ import annotations
 
@@ -7,10 +7,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from billing_data_pipeline_spark.operators.bucketing import (
-    bucketed_join,
-    write_bucketed,
-)
 from billing_data_pipeline_spark.operators.incremental import (
     finalize_profile,
     merge_partials,
@@ -19,34 +15,6 @@ from billing_data_pipeline_spark.operators.incremental import (
 from billing_data_pipeline_spark.sources.tables import load_table
 
 from .conftest import SF_SMOKE
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key: the sort-merge join must read
-    co-located buckets — zero Exchange (shuffle) operators in the plan —
-    and still produce exactly the plain-join result."""
-    orders = load_table(spark, SF_SMOKE, "orders")
-    lineitem = load_table(spark, SF_SMOKE, "lineitem")
-    try:
-        write_bucketed(
-            orders, "b_orders", ["o_orderkey"], 4, path=str(tmp_path / "bo")
-        )
-        write_bucketed(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "b_lineitem", ["o_orderkey"], 4, path=str(tmp_path / "bl"),
-        )
-        joined = bucketed_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-
-        plain = orders.join(
-            lineitem, orders.o_orderkey == lineitem.l_orderkey
-        ).count()
-        assert joined.count() == plain
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_incremental_merge_equals_recompute(spark):
@@ -115,21 +83,6 @@ def test_incremental_avg_matches_exact_twin_under_null_measures(spark):
         for r in df.groupBy("g").agg(F.avg("v").alias("avg")).collect()
     }
     assert out["a"]["avg_usage"] == exact["a"] and exact["b"] is None
-
-
-@pytest.mark.parametrize("how", ["inner", "left"])
-def test_bucketed_join_modes(spark, tmp_path, how):
-    ev = load_table(spark, SF_SMOKE, "events").limit(500)
-    agg = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    try:
-        write_bucketed(ev, "b_ev", ["user_id"], 4, path=str(tmp_path / "e"))
-        write_bucketed(agg, "b_agg", ["user_id"], 4, path=str(tmp_path / "a"))
-        j = bucketed_join(spark, "b_ev", "b_agg", ["user_id"], how=how)
-        assert "Exchange" not in j._jdf.queryExecution().executedPlan().toString()
-        assert j.count() == ev.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_ev")
-        spark.sql("DROP TABLE IF EXISTS b_agg")
 
 
 def test_streaming_rollup_matches_batch_recompute(spark, tmp_path):
@@ -225,45 +178,6 @@ def test_new_query_plan_properties(spark):
     # plus the final single-partition fold of per-user rows
     p = plan_of("conversion_funnel")
     assert p.count("Exchange hashpartitioning") == 1
-
-
-def test_zorder_write_narrows_per_file_ranges_on_both_columns(spark, tmp_path):
-    """Z-order clustering on (l_partkey, l_suppkey): every written file must
-    cover a narrow slice of BOTH columns (=> parquet min-max stats prune
-    scans filtered on either), where the unclustered layout leaves each
-    file spanning nearly the full range."""
-    import pyarrow.parquet as pq
-
-    from billing_data_pipeline_spark.sources.zorder import zorder_write
-
-    li = load_table(spark, SF_SMOKE, "lineitem").select("l_partkey", "l_suppkey")
-    plain_dir, z_dir = str(tmp_path / "plain"), str(tmp_path / "zorder")
-    li.repartition(8).write.parquet(plain_dir)
-    zorder_write(li, z_dir, ["l_partkey", "l_suppkey"], n_files=8)
-
-    import glob
-
-    def avg_span_fraction(path, col):
-        lo = min(r[0] for r in _file_ranges(path, col))
-        hi = max(r[1] for r in _file_ranges(path, col))
-        spans = [(mx - mn) / (hi - lo) for mn, mx in _file_ranges(path, col)]
-        return sum(spans) / len(spans)
-
-    def _file_ranges(path, col):
-        out = []
-        for f in glob.glob(path + "/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(col)
-            mn = min(md.row_group(g).column(idx).statistics.min for g in range(md.num_row_groups))
-            mx = max(md.row_group(g).column(idx).statistics.max for g in range(md.num_row_groups))
-            out.append((mn, mx))
-        return out
-
-    for col in ("l_partkey", "l_suppkey"):
-        assert avg_span_fraction(plain_dir, col) > 0.8   # round-robin: full span
-        assert avg_span_fraction(z_dir, col) < 0.6       # clustered: compact
-    # clustering must not lose or duplicate rows
-    assert spark.read.parquet(z_dir).count() == li.count()
 
 
 def test_cosine_topk_vectorized_bit_identical_to_hof(spark):

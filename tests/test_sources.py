@@ -243,44 +243,6 @@ def test_compaction_merges_microbatch_files(spark, tmp_path):
     assert len(glob.glob(f"{path}/year=2025/month=1/*.parquet")) == 1
 
 
-def test_jsonl_gz_roundtrip_with_corrupt_containment(spark, tmp_path):
-    """JSONL(.gz) read: explicit schema, clean rows parse, torn lines land
-    in _corrupt_record instead of failing the scan (OPT7 row-level
-    analogue), and gzip transparently decodes."""
-    import gzip
-
-    from pyspark.sql import types as T
-
-    from billing_data_pipeline_spark.sources.jsonl_source import (
-        read_jsonl,
-        split_clean_corrupt,
-    )
-
-    lines = [
-        '{"doc_id": 1, "text": "hello world", "lang": "en"}',
-        '{"doc_id": 2, "text": "bonjour", "lang": "fr"}',
-        '{"doc_id": 3, "text": "truncated...',  # torn mid-record
-        "not json at all",
-        '{"doc_id": 4, "text": "ok", "lang": "en"}',
-    ]
-    gz = tmp_path / "shard-00000.jsonl.gz"
-    with gzip.open(gz, "wt", encoding="utf-8") as f:
-        f.write("\n".join(lines))
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    df = read_jsonl(spark, str(gz), schema)
-    clean, quarantine, cached = split_clean_corrupt(df)
-    assert sorted(r["doc_id"] for r in clean.collect()) == [1, 2, 4]
-    assert quarantine.count() == 2  # both torn lines contained, not fatal
-    cached.unpersist()  # caller-owned cache (review r7)
-
-
 def test_orc_roundtrip_preserves_schema_and_rows(spark, tmp_path):
     """ORC sink/source round-trip (the second columnar format Spark ships
     natively): schema and contents survive, predicates push down."""
@@ -988,19 +950,6 @@ def test_strict_read_missing_root_raises_permissive_returns_empty(
     assert empty.count() == 0 and "day" in empty.columns
     with pytest.raises(Exception, match="PATH_NOT_FOUND"):
         read_partition_root(spark, missing, permissive=False)
-
-
-def test_zorder_rejects_string_cluster_key(spark, tmp_path):
-    """Review r7: _bucket min-max scales through a double cast — a string
-    cluster key raises under ANSI or silently contributes NOTHING to the
-    layout with ANSI off. Fail at plan time instead."""
-    import pytest
-
-    from billing_data_pipeline_spark.sources.zorder import zorder_write
-
-    df = spark.createDataFrame([(1, "eu")], "k long, region string")
-    with pytest.raises(TypeError, match="region"):
-        zorder_write(df, str(tmp_path / "z"), ["k", "region"], n_files=1)
 
 
 def test_s3a_conf_anonymous_provider_seam(monkeypatch):

@@ -1,7 +1,7 @@
 """Structured Streaming tests: file-source streams drained with
 Trigger.AvailableNow into memory sinks, compared against the batch twins
 (the expressions are shared, so stream == batch on finite input), plus
-checkpointed incremental ingest and stateful processing."""
+stateful processing and exactly-once snapshot sinks."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from billing_data_pipeline_spark.streaming import (
     sliding_volume_stream,
     stateful_user_totals,
     streaming_dedup,
-    stream_ingest_csv,
     tumbling_counts_stream,
 )
 
@@ -221,54 +220,6 @@ def test_streaming_dedup_null_keys_hash_identity_and_stateful_null_group(
     assert by_user[1] == 2
 
 
-def test_stream_ingest_idempotent_and_incremental(spark, tmp_path):
-    """Checkpointed CSV ingest: catch-up run loads what exists; re-running
-    with no new files adds nothing; a new file adds only its novel rows
-    (re-delivered rows anti-joined away)."""
-    import csv as csvmod
-
-    src = tmp_path / "lake"
-    src.mkdir()
-    table = str(tmp_path / "raw_billing")
-    ckpt = str(tmp_path / "ckpt")
-
-    header = [
-        "timestamp", "resource_id", "user_id", "credit_usage", "region",
-        "service_tier", "operation_type", "success", "resource_type",
-        "invoice_id", "currency",
-    ]
-
-    def write_csv(name, rows):
-        with open(src / name, "w", newline="") as f:
-            w = csvmod.writer(f)
-            w.writerow(header)
-            w.writerows(rows)
-
-    def row(i):
-        return [
-            f"2025-04-23 10:00:{i % 60:02d}", f"res-{i}", f"u-{i % 7}", 1.5 * i,
-            "eu-west", "pro", "inference", "true", "gpu", f"inv-{i}", "USD",
-        ]
-
-    write_csv("billing-1.csv", [row(i) for i in range(10)])
-    stream_ingest_csv(spark, str(src), table, ckpt).awaitTermination()
-    assert spark.read.parquet(table).count() == 10
-
-    # No new files: checkpoint skips everything.
-    stream_ingest_csv(spark, str(src), table, ckpt).awaitTermination()
-    assert spark.read.parquet(table).count() == 10
-
-    # Two new files, re-delivering rows 5..9 and overlapping each other on
-    # 15..19: novel rows are 15..24 only, each appended exactly once (anti-
-    # join vs table + intra-batch dropDuplicates).
-    write_csv("billing-2.csv", [row(i) for i in [5, 6, 7, 8, 9, 15, 16, 17, 18, 19]])
-    write_csv("billing-3.csv", [row(i) for i in range(15, 25)])
-    stream_ingest_csv(spark, str(src), table, ckpt).awaitTermination()
-    final = spark.read.parquet(table)
-    assert final.count() == 20  # 0..9 + 15..24, each exactly once
-    assert final.select("invoice_id").distinct().count() == 20
-
-
 def test_stateful_user_totals_accumulates_across_batches(spark, tmp_path):
     """applyInPandasWithState: state persists across micro-batches — totals
     after two single-file batches equal the batch aggregate over both."""
@@ -293,63 +244,6 @@ def test_stateful_user_totals_accumulates_across_batches(spark, tmp_path):
     # Memory sink in update mode appends one row per (batch, user) update;
     # the final state per user is the max n_events (totals only grow).
     sink = spark.table("t_stateful")
-    last = (
-        sink.toPandas()
-        .groupby("user_id", as_index=False)["n_events"]
-        .max()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    expected = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .toPandas()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    assert list(last["user_id"]) == list(expected["user_id"])
-    assert list(last["n_events"]) == list(expected["n_events"])
-
-
-def test_typed_stateful_user_totals_twin(spark, tmp_path):
-    """transformWithStateInPandas twin of the applyInPandasWithState test —
-    skipped until the environment provides google.protobuf (the typed-state
-    Python worker's transport dependency; LIMITATIONS.md env-gated APIs).
-    When available, both APIs must produce identical final totals."""
-    import pytest as _pytest
-
-    from billing_data_pipeline_spark.streaming.typed_state import (
-        TYPED_STATE_AVAILABLE,
-        typed_stateful_user_totals,
-    )
-
-    if not TYPED_STATE_AVAILABLE:
-        with _pytest.raises(RuntimeError, match="google.protobuf"):
-            typed_stateful_user_totals(
-                read_event_stream(spark, str(tmp_path) + "/*")
-            )
-        _pytest.skip("google.protobuf unavailable in this container")
-
-    src = tmp_path / "ev_tws"
-    src.mkdir()
-    ev = load_table(spark, SF_SMOKE, "events").limit(300)
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "f1"))
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src / "f2"))
-    stream = read_event_stream(spark, str(src) + "/*", max_files_per_trigger=1)
-    q = (
-        typed_stateful_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("t_typed_stateful")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = spark.table("t_typed_stateful")
     last = (
         sink.toPandas()
         .groupby("user_id", as_index=False)["n_events"]
@@ -451,39 +345,6 @@ def test_left_outer_interval_join_emits_unmatched_after_watermark(spark, tmp_pat
         (2, None, None),
         (3, None, None),
     ]
-
-
-def test_replay_safe_append_null_keys_idempotent(spark, tmp_path):
-    """ADVICE r1: NULL-key rows never match the key anti-join, so a naive
-    sink re-appends them on every foreachBatch replay. replay_safe_append
-    dedups the NULL-key subset on a full-row hash: replaying the same batch
-    must be a complete no-op, while distinct NULL-key rows still land."""
-    from billing_data_pipeline_spark.streaming.ingest_stream import (
-        replay_safe_append,
-    )
-
-    table = str(tmp_path / "t")
-    batch = spark.createDataFrame(
-        [
-            (1, "a", 1.0),          # normal keyed row
-            (None, "n1", 2.0),      # NULL key, distinct payloads
-            (None, "n2", 3.0),
-            (None, "n2", 3.0),      # identical NULL-key dup inside the batch
-        ],
-        "k int, name string, v double",
-    )
-    replay_safe_append(batch, table, ["k"])
-    first = spark.read.parquet(table)
-    assert first.count() == 3  # 1 keyed + 2 distinct NULL-key rows
-
-    # Replay the exact same batch (simulated foreachBatch retry): no-op.
-    replay_safe_append(batch, table, ["k"])
-    assert spark.read.parquet(table).count() == 3
-
-    # A later batch with a NEW NULL-key row still appends it.
-    batch2 = spark.createDataFrame([(None, "n3", 4.0)], "k int, name string, v double")
-    replay_safe_append(batch2, table, ["k"])
-    assert spark.read.parquet(table).count() == 4
 
 
 def test_stream_to_snapshots_exactly_once_and_cdc_log(spark, tmp_path):
@@ -652,25 +513,3 @@ def test_rollup_pointer_corruption_raises_not_resets(spark, tmp_path):
     # and read-side state loads fail loudly too, not as empty
     with pytest.raises(OSError, match="corrupt rollup pointer"):
         r.read_finalized()
-
-
-def test_replay_safe_append_first_write_tolerates_empty_table_dir(
-    spark, tmp_path
-):
-    """Review r7: a table dir that exists WITHOUT readable parquet (crashed
-    first write's debris, ops-precreated mount point) is first-write for
-    the NULL-key dedup path too — the stream must not crash-loop on
-    UNABLE_TO_INFER_SCHEMA (parity with append_new_rows)."""
-    from billing_data_pipeline_spark.streaming.ingest_stream import (
-        replay_safe_append,
-    )
-
-    table = tmp_path / "t"
-    table.mkdir()  # exists, no data files
-    batch = spark.createDataFrame(
-        [(None, "n1", 2.0)], "k int, name string, v double"
-    )
-    replay_safe_append(batch, str(table), ["k"])
-    assert spark.read.parquet(str(table)).count() == 1
-    replay_safe_append(batch, str(table), ["k"])  # replay: no-op
-    assert spark.read.parquet(str(table)).count() == 1
