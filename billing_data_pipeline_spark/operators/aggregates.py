@@ -325,8 +325,11 @@ def frequency_count(df: DataFrame, col: str) -> DataFrame:
     )
 
 
+def exact_total(measure: Column | str) -> Column:
+    """Exact-decimal SUM as a double, NULL -> 0.0 (reference: reports.py:21-26)."""
+    return F.coalesce(exact_sum(measure).cast("double"), F.lit(0.0))
+
+
 def global_sum(df: DataFrame, measure: Column | str, alias: str) -> DataFrame:
-    """Ungrouped SUM with NULL->0.0 (reference: reports.py:21-26)."""
-    return df.agg(
-        F.coalesce(exact_sum(measure).cast("double"), F.lit(0.0)).alias(alias)
-    )
+    """Ungrouped ``exact_total``."""
+    return df.agg(exact_total(measure).alias(alias))

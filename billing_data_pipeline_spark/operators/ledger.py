@@ -9,11 +9,11 @@ Here the ledger is not a table of its own: its rows ride in the ``meta``
 of ``raw_billing``'s append commits (``FileLedger``), so a file and the
 rows it contributed publish together.
 
-The whole discovery path — list, stat gate, hash, ledger diff — runs on
-the driver, so a poll that finds nothing new launches no Spark job (but
-for the lake listing, which Spark runs as a job past 32 directories). Each
-entry carries ``stat = [st_size, st_mtime_ns, st_ctime_ns, st_ino]``,
-from one ``os.stat`` taken before the file is read (``file_stat``). A
+The whole discovery path — list (``csv_source.list_partition_files``),
+stat gate, hash, ledger diff — runs on the driver, so a poll that finds
+nothing new launches no Spark job. Each entry carries ``stat =
+[st_size, st_mtime_ns, st_ctime_ns, st_ino]``, from one ``os.stat``
+taken before the file is read (``file_stat``). A
 local file whose stat still equals its latest entry's is trusted
 unchanged and not hashed. Every other file is content-hashed: a new one,
 one whose stat moved, one whose entry has a null stat (a racy stat, see
@@ -37,11 +37,6 @@ filesystem layer inside a mapInPandas kernel and the driver collects only
 ``binaryFile`` + ``md5(content)`` scan, never materializes a whole file as
 one row value (binaryFile caps a column at Int.MaxValue bytes, so one
 >=2 GiB input would fail the whole ingest).
-
-In Structured Streaming mode the checkpointed file index subsumes
-name-based skipping; this ledger remains the *content*-hash layer for
-modified-in-place redetection, which Spark's file source does not do
-(SURVEY.md §2.9 ST2 divergence note).
 """
 
 from __future__ import annotations

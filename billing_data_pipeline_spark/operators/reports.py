@@ -2,32 +2,33 @@
 S10, §2.4 A5-A8, §2.6 T1-T2, §2.11 O2).
 
 The reference renders a markdown report from five read queries over the
-aggregate tables + raw data (reference: pipeline/assets/reports.py:13-141)
-and previews tables via a LIMIT-n helper (reference: pipeline/utils.py:6-25).
-Rows surface driver-side only here, at the presentation edge — every number
-in the report is computed as a DataFrame aggregate first.
+aggregate tables + raw data (reference: pipeline/assets/reports.py:13-141).
+Here the report reads only what the aggregate pass produced: the exact raw
+total (observed while daily_aggs scanned raw), two top-5 queries over
+user_aggs and region_aggs, and one collect of service_aggs whose exact
+integer counts the operation and tier sections fold on the driver.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .aggregates import global_sum, top_k
+from .aggregates import top_k
 
 
-def preview_markdown(df: DataFrame, n: int = 5) -> str:
-    """LIMIT-n markdown table preview (reference: pipeline/utils.py:6-25)."""
-    cols = df.columns
-    rows = df.limit(n).collect()
-    out = ["| " + " | ".join(cols) + " |", "|" + "---|" * len(cols)]
-    for r in rows:
-        out.append("| " + " | ".join(str(v) for v in r) + " |")
-    return "\n".join(out)
+def _sum(a, b):
+    """Spark's SUM step: NULLs skipped, NULL while nothing was added."""
+    return b if a is None else a if b is None else a + b
+
+
+def _desc_nulls_last(value, key):
+    """Sort key of ``ORDER BY value DESC, key ASC`` in Spark's default null
+    orders: DESC puts NULLs last, ASC puts them first."""
+    return value is None, -(value or 0), key is not None, key or ""
 
 
 def billing_insights(
-    raw: DataFrame,
+    total: float,
     user_aggs: DataFrame,
     region_aggs: DataFrame,
     service_aggs: DataFrame,
@@ -38,22 +39,17 @@ def billing_insights(
     metrics); all floats formatted exactly like the reference ("{:.2f}",
     "{:.2%}" — reports.py:74,94,118).
 
-    The op-frequency and tier-rate sections fold from ``service_aggs``
-    (grouped by tier/resource_type/operation_type with transaction/success
-    counts): its EXACT integer counts, not a re-scan of raw. The one raw
-    scan is the exact-decimal global total, which double-summing
-    per-region totals cannot reproduce bit-for-bit.
+    ``total`` is raw's exact credit_usage total (``aggregates.global_sum``;
+    the per-region doubles cannot sum to it bit for bit). The top-5
+    sections are one ``top_k`` job each. The op-frequency and tier-rate
+    sections fold on the driver from ONE collect of ``service_aggs``
+    (grouped by tier/resource_type/operation_type with exact integer
+    counts; its size is tiers x resource types x operations, not users or
+    days), in the order Spark's ``groupBy/orderBy`` would give.
 
     ``ledger`` is the processed-files ledger as driver-side rows, one per
     file with its ``record_count`` (``FileLedger.latest``); its section
     folds in Python, with no Spark job."""
-    # None-guard (review r8; the r4 fix covered region totals only): an
-    # empty or all-NULL-measure raw table makes SUM NULL, and
-    # None.__format__ crashed the whole report at the f-string below.
-    total = global_sum(raw, "credit_usage", "total").first()["total"]
-    if total is None:
-        total = 0.0
-
     top_users = top_k(
         user_aggs.select("user_id", "transaction_count"),
         "transaction_count", 5, tiebreak=["user_id"],
@@ -62,24 +58,26 @@ def billing_insights(
         region_aggs.select("region", "total_usage"),
         "total_usage", 5, tiebreak=["region"],
     ).collect()
-    op_freq = (
-        service_aggs.groupBy("operation_type")
-        .agg(F.sum("transaction_count").alias("count"))
-        .orderBy(F.col("count").desc(), F.col("operation_type").asc())
-        .collect()
-    )
-    rates = (
-        service_aggs.groupBy("service_tier")
-        .agg(
-            F.sum("success_count").alias("success_count"),
-            F.sum("transaction_count").alias("total_count"),
-        )
-        .withColumn(
-            "success_rate",
-            F.col("success_count").cast("double") / F.col("total_count"),
-        )
-        .orderBy(F.col("success_rate").desc(), F.col("service_tier"))
-        .collect()
+    # GROUP BY operation_type / service_tier over one collect
+    ops: dict = {}
+    tiers: dict = {}
+    for r in service_aggs.select(
+        "service_tier", "operation_type", "transaction_count", "success_count"
+    ).collect():
+        n = r["transaction_count"]
+        ops[r["operation_type"]] = _sum(ops.get(r["operation_type"]), n)
+        ok, count = tiers.get(r["service_tier"], (None, None))
+        tiers[r["service_tier"]] = (_sum(ok, r["success_count"]), _sum(count, n))
+    # SUM(transaction_count) AS count ORDER BY count DESC, operation_type
+    op_freq = sorted(ops.items(), key=lambda t: _desc_nulls_last(t[1], t[0]))
+    # CAST(SUM(success_count) AS DOUBLE) / SUM(transaction_count) AS rate
+    # ORDER BY rate DESC, service_tier; NULL for a NULL sum or a 0 count
+    rates = sorted(
+        (
+            (tier, float(ok) / float(count) if ok is not None and count else None)
+            for tier, (ok, count) in tiers.items()
+        ),
+        key=lambda t: _desc_nulls_last(t[1], t[0]),
     )
 
     lines = [
@@ -109,7 +107,7 @@ def billing_insights(
         "",
         "| operation_type | count |",
         "|---|---|",
-        *[f"| {r['operation_type']} | {r['count']} |" for r in op_freq],
+        *[f"| {op} | {count} |" for op, count in op_freq],
         "",
         "## Success Rate by Service Tier",
         "",
@@ -119,12 +117,8 @@ def billing_insights(
         # NULL) has NULL success_rate — render n/a, not None.__format__
         # (review r8, the global-total guard's sibling)
         *[
-            (
-                f"| {r['service_tier']} | {r['success_rate']:.2%} |"
-                if r["success_rate"] is not None
-                else f"| {r['service_tier']} | n/a |"
-            )
-            for r in rates
+            f"| {tier} | {rate:.2%} |" if rate is not None else f"| {tier} | n/a |"
+            for tier, rate in rates
         ],
     ]
     metrics = {

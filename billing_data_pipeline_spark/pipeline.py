@@ -10,17 +10,21 @@ external scheduler calls ``run()`` (the reference's cron entry, ST3).
 Stage semantics preserved:
 - ingest: Hive-partitioned CSV lake -> idempotent anti-join append into
   ``raw_billing`` (J1) with a content-hash file ledger (ST5) and a
-  partition-pruned backfill window (ST6/OPT1). Finding the new files runs
-  on the driver and hashes only files whose stat moved
-  (``operators.ledger``), so a poll that finds none launches no Spark job
-  while the lake has at most 32 day directories (past that, Spark lists
-  them with one parallel job).
+  backfill window (ST6/OPT1). Discovery runs on the driver: the lake is
+  listed pruned to the window (``csv_source.list_partition_files``) and
+  only files whose stat moved are hashed (``operators.ledger``), so a poll
+  that finds nothing launches no Spark job at any lake size. The batch
+  reads only the new or changed files.
 - aggregates: four FULL-REFRESH tables (the reference's DELETE + INSERT,
-  S8/OPT5) as atomic snapshot overwrites.
-- insights: the five report queries -> markdown at the collect edge (S10),
-  stored as the fifth snapshot table ``billing_insights`` (the reference's
-  7th asset): one overwrite commit holding ``report.md``, with the run's
-  metrics in the commit's ``meta``.
+  S8/OPT5) as atomic snapshot overwrites; the daily_aggs commit also
+  observes raw's exact credit_usage total.
+- insights: markdown at the collect edge (S10) from what the aggregate
+  pass produced: the total from that observation, top-5 users and regions
+  from user_aggs and region_aggs (one job each), the operation and tier
+  sections from one collect of service_aggs, the ledger section from
+  raw_billing's commit log (no job). Stored as the fifth snapshot table
+  ``billing_insights`` (the reference's 7th asset): one overwrite commit
+  holding ``report.md``, with the run's metrics in the commit's ``meta``.
 
 Reuse rule: every commit of the four aggregate tables and of
 ``billing_insights`` is stamped with the ``raw_billing`` version it read
@@ -50,16 +54,17 @@ Every stage returns an O2-style metrics dict.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import inspect
 import os
 import sys
 from datetime import date
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.aggregates import grouped_profile
+from .operators.aggregates import exact_total, global_sum, grouped_profile
 from .operators.ingest import append_new_rows_per_file
 from .operators.ledger import (
     FileLedger,
@@ -72,8 +77,8 @@ from .operators.reports import billing_insights
 from .sources.csv_source import (
     RAW_BILLING_KEYS,
     RAW_BILLING_TABLE_SCHEMA,
-    parse_hive_partition_keys,
-    read_partition_root,
+    list_partition_files,
+    read_partition_files,
 )
 
 
@@ -95,6 +100,62 @@ def _stamp(raw_version: int | None) -> dict:
     """The meta every derived commit carries: what it was built from, and
     by which code."""
     return {"raw_version": raw_version, "derivation": DERIVATION}
+
+
+def aggregate_frames(raw: DataFrame, total: Observation | None = None) -> dict:
+    """The four aggregate tables over ``raw``, by name. With ``total``, the
+    daily_aggs scan also observes into it raw's exact credit_usage total,
+    ``global_sum``'s expression (the report's total)."""
+    succ = F.col("success")
+    flags = {"success_count": succ, "failure_count": ~succ}
+    daily_raw = raw if total is None else raw.observe(
+        total, exact_total("credit_usage").alias("total")
+    )
+    return {
+        # reference: aggregates.py:34-48
+        "daily_aggs": grouped_profile(
+            daily_raw,
+            ["year", "month", "day"],
+            "credit_usage",
+            distinct_cols={
+                "unique_users": "user_id",
+                "unique_resources": "resource_id",
+            },
+            conditions=flags,
+        ),
+        # reference: aggregates.py:99-115
+        "user_aggs": grouped_profile(
+            raw,
+            ["user_id"],
+            "credit_usage",
+            distinct_cols={
+                "unique_resources": "resource_id",
+                "resource_types_used": "resource_type",
+                "operation_types_used": "operation_type",
+                "regions_used": "region",
+            },
+            time_col="timestamp",
+        ),
+        # reference: aggregates.py:166-181
+        "service_aggs": grouped_profile(
+            raw,
+            ["service_tier", "resource_type", "operation_type"],
+            "credit_usage",
+            distinct_cols={"unique_users": "user_id"},
+            conditions=flags,
+        ),
+        # reference: aggregates.py:229-242
+        "region_aggs": grouped_profile(
+            raw,
+            ["region"],
+            "credit_usage",
+            distinct_cols={
+                "unique_users": "user_id",
+                "resource_types_used": "resource_type",
+                "operation_types_used": "operation_type",
+            },
+        ),
+    }
 
 
 def _report_file(version_dir: str) -> str:
@@ -153,38 +214,12 @@ class BillingPipeline:
         to_date: date | None = None,
     ) -> dict:
         """billing_files + billing_db (reference: pipeline/assets/ingest.py):
-        partition-pruned lake read, file-hash ledger skip, anti-join append."""
-        lake = read_partition_root(
-            self.spark, source_root, from_date=from_date, to_date=to_date
-        )
-        # Ledger: skip files whose (name, md5) is already recorded (ST5).
-        # O(files-in-window) driver memory — filenames only, bounded by the
-        # partition-pruned backfill window, never by data volume; matches
-        # the reference's own per-file driver loop (ingest.py:214-272).
-        # inputFiles() lists from the file index — metadata only. The
-        # previous input_file_name().distinct().collect() scanned and
-        # shuffled the window's DATA to learn its paths, and a header-only
-        # (0-row) file never surfaced, so it was re-hashed every run
-        # (review r3). inputFiles() is NOT window-pruned, though (review
-        # r5, verified live): the backfill filter prunes at PLAN time
-        # while inputFiles() reads the unpruned index — without the
-        # explicit path filter below, out-of-window files were hashed,
-        # ledger-recorded with 0 ingested rows, and PERMANENTLY skipped
-        # by every later backfill that actually covered them (silent data
-        # loss), while every run re-hashed the whole lake.
-        files = sorted(lake.inputFiles())
-        if from_date is not None or to_date is not None:
-            def _in_window(p: str) -> bool:
-                ks = parse_hive_partition_keys(p)
-                try:
-                    d = date(int(ks["year"]), int(ks["month"]), int(ks["day"]))
-                except (KeyError, ValueError):
-                    return True  # unpartitioned path: keep; the read decides
-                return (from_date is None or d >= from_date) and (
-                    to_date is None or d <= to_date
-                )
-
-            files = [p for p in files if _in_window(p)]
+        driver-side listing pruned to the window, file-hash ledger skip, a
+        read of only the new or changed files, anti-join append."""
+        try:
+            files = list_partition_files(self.spark, source_root, from_date, to_date)
+        except FileNotFoundError:
+            files = []  # no lake yet: continue on empty (reference sensors)
         ledger = self.ledger()
         foreign = ledger.table.foreign_entries()
         if foreign:
@@ -206,7 +241,7 @@ class BillingPipeline:
             return metrics
         # Discovery runs on the driver: stat gate, hash, ledger diff. Each
         # stat is taken before the file is hashed or read; a file that
-        # vanished since the listing is skipped, as the read skips it.
+        # vanished since the listing is skipped.
         known = ledger.latest()
         stats = {}
         for p in files:
@@ -235,12 +270,13 @@ class BillingPipeline:
             if r["filename"] not in todo and stats[r["filename"]][1] is not None
         ]
 
-        # Filter the lake to new/changed files using the SAME partition-
-        # qualified key the ledger uses (basenames collide across Hive
-        # partitions — every partition's file is 'billing.csv').
-        batch = lake.withColumn("_lk", ledger_key(F.input_file_name())).filter(
-            F.col("_lk").isin(list(todo))
-        )
+        # read only the new or changed files; the SAME partition-qualified
+        # key the ledger uses attributes each row to its file (basenames
+        # collide across Hive partitions — every partition's file is
+        # 'billing.csv')
+        batch = read_partition_files(
+            self.spark, source_root, [stats[f][0] for f in todo]
+        ).withColumn("_lk", ledger_key(F.input_file_name()))
         # one append commit: the new rows plus each file's ledger entry
         # with its own new-row count (reference ingest.py:262-265)
         n, _ = append_new_rows_per_file(
@@ -263,58 +299,15 @@ class BillingPipeline:
         if raw_version is None:
             raw_version = self.raw_version()
         raw = self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA, raw_version)
-        succ = F.col("success")
-        tables = {
-            # reference: aggregates.py:34-48
-            "daily_aggs": grouped_profile(
-                raw,
-                ["year", "month", "day"],
-                "credit_usage",
-                distinct_cols={
-                    "unique_users": "user_id",
-                    "unique_resources": "resource_id",
-                },
-                conditions={"success_count": succ, "failure_count": ~succ},
-            ),
-            # reference: aggregates.py:99-115
-            "user_aggs": grouped_profile(
-                raw,
-                ["user_id"],
-                "credit_usage",
-                distinct_cols={
-                    "unique_resources": "resource_id",
-                    "resource_types_used": "resource_type",
-                    "operation_types_used": "operation_type",
-                    "regions_used": "region",
-                },
-                time_col="timestamp",
-            ),
-            # reference: aggregates.py:166-181
-            "service_aggs": grouped_profile(
-                raw,
-                ["service_tier", "resource_type", "operation_type"],
-                "credit_usage",
-                distinct_cols={"unique_users": "user_id"},
-                conditions={"success_count": succ, "failure_count": ~succ},
-            ),
-            # reference: aggregates.py:229-242
-            "region_aggs": grouped_profile(
-                raw,
-                ["region"],
-                "credit_usage",
-                distinct_cols={
-                    "unique_users": "user_id",
-                    "resource_types_used": "resource_type",
-                    "operation_types_used": "operation_type",
-                },
-            ),
-        }
+        # the report's exact total rides the daily_aggs scan of raw
+        total = Observation("raw_total_obs")
+        tables = aggregate_frames(raw, total)
+        # insights reads the tables back with the schemas they are written with
+        self._aggregate_schemas = {name: df.schema for name, df in tables.items()}
         # O2 metrics via the Observation API: row counts are collected from
         # the SAME job that writes each table — no read-back count scan.
         # At 100 TB the old pattern (write, then re-scan to count) doubled
         # the I/O of every aggregate refresh.
-        from pyspark.sql import Observation
-
         metrics = {}
         for name, df in tables.items():
             obs = Observation(f"{name}_obs")
@@ -337,25 +330,44 @@ class BillingPipeline:
                 # curate._obs_n). The write above still succeeded; read the
                 # count back from the published table.
                 metrics[f"{name}_rows"] = self.read(name).count()
+        try:
+            metrics["total_credit_usage"] = total.get["total"]
+        except Exception:  # the same carve-out: raw has no rows
+            metrics["total_credit_usage"] = (
+                global_sum(raw, "credit_usage", "total").first()["total"]
+            )
         return metrics
 
     # -- stage 3: insights --------------------------------------------------
 
-    def insights(self, raw_version: int | None = None) -> tuple[str, dict]:
-        """The report over raw_billing and the ledger as of
-        ``raw_version`` (latest when None) and the current aggregates."""
+    def insights(
+        self, raw_version: int | None = None, total: float | None = None
+    ) -> tuple[str, dict]:
+        """The report as of raw_billing at ``raw_version`` (latest when
+        None): the current aggregate tables, the ledger folded to that
+        version, and ``total``, raw's exact credit_usage total: ``run()``
+        passes the one ``build_aggregates`` observed; without it (the
+        ``insights`` CLI) raw at the version is scanned. The tables are
+        read with declared schemas (``_aggregate_schemas``): no footer job."""
         if raw_version is None:
             raw_version = self.raw_version()
-        return billing_insights(
-            self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA, raw_version),
-            self.read("user_aggs"),
-            self.read("region_aggs"),
-            ledger=list(self.ledger().latest(raw_version).values()),
-            # exact integer counts already materialized by build_aggregates
-            # — folds the op-frequency/tier-rate sections without two more
-            # full raw scans (review r6)
-            service_aggs=self.read("service_aggs"),
+        if total is None:
+            raw = self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA, raw_version)
+            total = global_sum(raw, "credit_usage", "total").first()["total"]
+        user, region, service = (
+            self.read(t, self._aggregate_schemas[t])
+            for t in ("user_aggs", "region_aggs", "service_aggs")
         )
+        ledger = list(self.ledger().latest(raw_version).values())
+        return billing_insights(total, user, region, service, ledger=ledger)
+
+    @functools.cached_property
+    def _aggregate_schemas(self) -> dict:
+        """The aggregate tables' schemas: those ``build_aggregates`` wrote,
+        or else the builders analysed over an empty raw frame. No Spark
+        job, and no copy of them to drift."""
+        empty = self.spark.createDataFrame([], RAW_BILLING_TABLE_SCHEMA)
+        return {name: df.schema for name, df in aggregate_frames(empty).items()}
 
     def _publish_report(
         self, raw_version: int, aggregates: dict, insights: dict, report: str
@@ -437,7 +449,7 @@ class BillingPipeline:
         published = self._published(v)
         if published is None:
             aggregates = self.build_aggregates(v)
-            report, insights = self.insights(v)
+            report, insights = self.insights(v, aggregates["total_credit_usage"])
             self._publish_report(v, aggregates, insights, report)
         else:
             aggregates, insights, report = published

@@ -8,11 +8,11 @@ machinery: executors read s3a/file paths directly and Hive-style partition
 discovery types the year/month/day columns automatically.
 
 Two read strategies, mirroring the reference's two listing strategies:
-- ``read_partition_root``: read the root once, push the backfill window as
-  *filters on partition columns* -> Catalyst partition pruning lists only
-  matching directories (the declarative form of the reference's
-  "generate paths instead of listing the bucket" optimization, OPT1,
-  reference: ingest.py:95-98).
+- ``read_partition_root``: list the root's ``year=/month=/day=`` tree on
+  the driver, pruned to the backfill window as the walk descends
+  (``list_partition_files``: the reference's "generate paths instead of
+  listing the bucket" optimization, OPT1, reference: ingest.py:95-98),
+  then read exactly the listed files (``read_partition_files``).
 - ``generate_partition_paths``: listing-free explicit path enumeration for
   sources without a listable root (kept for parity with
   s3_utils.py:329-410 and its unit-test contract).
@@ -25,11 +25,15 @@ declared schema is applied at read so the positional-cast hazard is gone
 
 from __future__ import annotations
 
+import os
+import re
+import string
+import unicodedata
 from dataclasses import dataclass
 from datetime import date, timedelta
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # The reference fact-table schema (reference: pipeline/assets/ingest.py:174-192;
@@ -74,26 +78,133 @@ def _with_partition_cols(schema: T.StructType) -> T.StructType:
 #: year/month/day partition columns.
 RAW_BILLING_TABLE_SCHEMA = _with_partition_cols(RAW_BILLING_SCHEMA)
 
+_SCHEME_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
+_URI_SAFE = frozenset(string.ascii_letters + string.digits + "-_.!~*'();:@&=+$,/")
 
-def read_partition_root(
+
+def _uri_path(path: str) -> str:
+    """``path`` quoted as Hadoop's ``Path.toUri().toString()`` quotes it,
+    so keys made from it equal ``input_file_name()``'s: java.net.URI keeps
+    ``_URI_SAFE`` and non-ASCII characters that are neither controls nor
+    spaces, and percent-encodes the UTF-8 bytes of the rest, ``%`` too."""
+    return "".join(
+        c
+        if c in _URI_SAFE
+        or (ord(c) > 0x9F and unicodedata.category(c) not in ("Zs", "Zl", "Zp"))
+        else "".join(f"%{b:02X}" for b in c.encode("utf-8", "surrogateescape"))
+        for c in path
+    )
+
+
+def _local_fs(root: str):
+    """``(top, ls, uri)``: ``ls(dir)`` lists ``(name, child, is_dir)``,
+    ``uri(child)`` is the URI Spark's file index gives the file."""
+    top = os.path.abspath(re.sub(_SCHEME_RE, "/", root))
+    if not os.path.isdir(top):
+        raise FileNotFoundError
+
+    def ls(d: str):
+        with os.scandir(d) as it:
+            return [(e.name, e.path, e.is_dir()) for e in it]
+
+    return top, ls, lambda p: "file://" + _uri_path(p)
+
+
+def _hadoop_fs(spark: SparkSession, root: str):
+    """``_local_fs`` for any scheme, via Hadoop's ``FileSystem`` in the
+    driver's JVM: metadata calls, no Spark job."""
+    top = spark._jvm.org.apache.hadoop.fs.Path(root)
+    fs = top.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.isDirectory(top):
+        raise FileNotFoundError
+
+    def ls(d):
+        return [
+            (s.getPath().getName(), s.getPath(), s.isDirectory())
+            for s in fs.listStatus(d)
+        ]
+
+    return top, ls, lambda p: p.toUri().toString()
+
+
+def list_partition_files(
     spark: SparkSession,
     root: str,
-    schema: T.StructType = RAW_BILLING_SCHEMA,
     from_date: date | None = None,
     to_date: date | None = None,
+) -> list[str]:
+    """The data files directly in ``root``'s ``year=/month=/day=``
+    directories within the window, sorted, as the URIs Spark's file index
+    lists (so ``operators.ledger.file_key`` of each is its ledger key).
+
+    Runs on the driver with no Spark job at any lake size: ``os.scandir``
+    for a local root, Hadoop's ``FileSystem`` for any other scheme. The
+    window prunes years, months and days as the walk descends; under a
+    window a directory whose value is not an integer is skipped. Files Spark
+    never reads as data (``_SUCCESS``, ``.crc``) are left out. A missing
+    root raises ``FileNotFoundError`` in Spark's ``PATH_NOT_FOUND`` words."""
+    remote = re.match(_SCHEME_RE, root) and not root.startswith("file:")
+    try:
+        top, ls, uri = _hadoop_fs(spark, root) if remote else _local_fs(root)
+    except FileNotFoundError:
+        msg = f"[PATH_NOT_FOUND] Path does not exist: {root}."
+        raise FileNotFoundError(msg) from None
+    lo = (from_date.year, from_date.month, from_date.day) if from_date else None
+    hi = (to_date.year, to_date.month, to_date.day) if to_date else None
+
+    def kept(parts: tuple, value: str) -> tuple | None:
+        # parts + this level's value while (year, month, day) can still be
+        # in the window; None prunes the directory
+        if lo is None and hi is None:
+            return ()
+        try:
+            t = (*parts, int(value))
+        except ValueError:
+            return None
+        return None if (lo and t < lo[: len(t)]) or (hi and t > hi[: len(t)]) else t
+
+    dirs = [(top, ())]
+    for key in ("year=", "month=", "day="):
+        dirs = [
+            (child, t)
+            for d, parts in dirs
+            for name, child, is_dir in ls(d)
+            if is_dir and name.startswith(key)
+            for t in [kept(parts, name[len(key):])]
+            if t is not None
+        ]
+    return sorted(
+        uri(p)
+        for d, _ in dirs
+        for name, p, is_dir in ls(d)
+        if not is_dir and _data(name)
+    )
+
+
+def _data(name: str) -> bool:
+    """Spark's file-index filter (``shouldFilterOutPathName``): False for
+    names it never reads as data."""
+    hidden = name[:1] == "." or name.endswith("._COPYING_")
+    hidden |= name[:1] == "_" and "=" not in name
+    return not hidden or name.startswith(("_common_metadata", "_metadata"))
+
+
+def read_partition_files(
+    spark: SparkSession,
+    root: str,
+    files: list[str],
+    schema: T.StructType = RAW_BILLING_SCHEMA,
     permissive: bool = True,
 ) -> DataFrame:
-    """Read a Hive-partitioned CSV lake with partition-pruned backfill window.
-
-    year/month/day arrive as typed partition columns from directory names;
-    the date-range filter compiles to partition pruning (directories outside
-    the window are never listed into the scan).
-    """
-    reader = (
-        spark.read.option("header", True)
-        .option("basePath", root)
-        .schema(_with_partition_cols(schema))
-    )
+    """Read exactly ``files``, URIs under the lake ``root`` as
+    ``list_partition_files`` gives them; year/month/day are typed partition
+    columns from the directory names. Spark opens a path string unquoted
+    and expands glob characters in it, so each URI is decoded and its
+    ``{}[]*?\`` escaped. No files: an empty frame of the declared schema."""
+    cols = _with_partition_cols(schema)
+    if not files:
+        return spark.createDataFrame([], cols)
+    reader = spark.read.option("header", True).option("basePath", root).schema(cols)
     if permissive:
         # Per-file/row error containment (reference: ingest.py:131-135 —
         # continue past bad partitions). Both as PER-READ datasource
@@ -108,40 +219,37 @@ def read_partition_root(
         # (review r5): the validation caller got exactly the containment
         # it asked to turn off.
         reader = reader.option("mode", "FAILFAST")
+    return reader.csv([re.sub(r"([{}\[\]*?\\])", r"\\\1", unquote(f)) for f in files])
+
+
+def read_partition_root(
+    spark: SparkSession,
+    root: str,
+    schema: T.StructType = RAW_BILLING_SCHEMA,
+    from_date: date | None = None,
+    to_date: date | None = None,
+    permissive: bool = True,
+) -> DataFrame:
+    """The lake's files within the backfill window: ``list_partition_files``
+    then ``read_partition_files``. A missing root reads as an empty frame
+    (continue-on-empty), except under FAILFAST: a validation read of a
+    mistyped root must fail, not report "validated 0 rows" (review r7)."""
     try:
-        df = reader.csv(f"{root}/year=*/month=*/day=*")
-    except Exception as exc:  # AnalysisException lacks a stable subclass path
-        if "PATH_NOT_FOUND" not in str(exc) or not permissive:
-            # The empty-frame fallback is a PERMISSIVE containment
-            # behavior (review r7): a FAILFAST validation read of a
-            # mistyped/missing root must fail, not report "validated 0
-            # rows" — the caller explicitly turned containment off.
+        files = list_partition_files(spark, root, from_date, to_date)
+    except FileNotFoundError:
+        if not permissive:
             raise
-        # A lake with no year=*/ partitions yet (first run before the
-        # producer writes one): the glob itself raises PATH_NOT_FOUND
-        # before any downstream empty-guard can run (review r4) — the
-        # continue-on-empty contract (pipeline.run, latest_partition_date
-        # -> None) needs an empty frame with the declared schema instead.
-        return spark.createDataFrame([], _with_partition_cols(schema))
-    if from_date or to_date:
-        d = F.make_date("year", "month", "day")
-        if from_date:
-            df = df.filter(d >= F.lit(from_date))
-        if to_date:
-            df = df.filter(d <= F.lit(to_date))
-    return df
+        files = []
+    return read_partition_files(spark, root, files, schema, permissive)
 
 
 def latest_partition_date(spark: SparkSession, root: str) -> date | None:
-    """Max (year, month, day) across discovered partitions (parity: S6).
-
-    GENUINELY metadata-only: the max comes from the file index's paths
-    (``inputFiles`` — the same listing the scan planner does), parsed as
-    ``key=value`` segments. The previous ``max()`` over the partition
-    columns executed a full scan of every CSV in the lake — CSV has no
-    row-group stats and Spark's metadata-only aggregate rule is off by
-    default, so "read a date" cost O(lake) (review r3)."""
-    files = read_partition_root(spark, root).inputFiles()
+    """Max (year, month, day) over the lake's files (parity: S6), from the
+    driver-side listing: no file read, no Spark job. None when empty."""
+    try:
+        files = list_partition_files(spark, root)
+    except FileNotFoundError:
+        return None
     latest: date | None = None
     for path in files:
         keys = parse_hive_partition_keys(path)
@@ -227,7 +335,7 @@ def read_partition_paths(
 ) -> DataFrame:
     """Declarative union-all over enumerated partition files (replaces the
     reference's per-file Python append loop, SURVEY.md §2.7): one multi-path
-    read, partition values projected from the path.
+    read, partition values from the path (``read_partition_files``).
 
     Missing enumerated files are SKIPPED (review r5): the generated range
     routinely includes partitions not yet written — the default
@@ -240,7 +348,6 @@ def read_partition_paths(
     paths whose filesystem cannot be probed are kept so the read surfaces
     the real error. An all-missing range returns an empty, fully-typed
     frame."""
-    paths = [f for p in partitions for f in p["files"]]
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
 
@@ -251,23 +358,6 @@ def read_partition_paths(
         except Exception:
             return True  # unprobeable scheme: let the read raise the truth
 
-    paths = [p for p in paths if _exists(p)]
-    if not paths:
-        return spark.createDataFrame([], _with_partition_cols(schema))
-    df = (
-        spark.read.option("header", True)
-        .schema(schema)
-        .option("mode", "PERMISSIVE")
-        .csv(paths)
-        .withColumn("_path", F.input_file_name())
-    )
-    return (
-        df.withColumn(
-            "year", F.regexp_extract("_path", r"year=(\d+)", 1).cast("int")
-        )
-        .withColumn(
-            "month", F.regexp_extract("_path", r"month=(\d+)", 1).cast("int")
-        )
-        .withColumn("day", F.regexp_extract("_path", r"day=(\d+)", 1).cast("int"))
-        .drop("_path")
-    )
+    files = [_uri_path(f) for p in partitions for f in p["files"] if _exists(f)]
+    base = partitions[0]["path"].rsplit("/year=", 1)[0] if partitions else ""
+    return read_partition_files(spark, base, files, schema)

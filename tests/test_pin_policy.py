@@ -10,11 +10,15 @@ green): `python -m tools.plan_fingerprints`.
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
 from billing_data_pipeline_spark.registry import load_catalog
-from tools.plan_fingerprints import MANIFEST, SF_DIR, plan_fingerprint
+from tools.plan_fingerprints import MANIFEST
 
 CATALOG = load_catalog()
 SAMPLE = set(list(CATALOG)[:50])
@@ -27,10 +31,33 @@ def manifest():
     return json.loads(MANIFEST.read_text())
 
 
+@pytest.fixture(scope="module")
+def fingerprints(manifest):
+    """Every query's fingerprint now, at the parallelism the manifest was
+    recorded at, whatever this host's core count: one subprocess with
+    ``SPARK_GRAFT_CPUS`` pinned."""
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import json; from tools.plan_fingerprints import current;"
+            " print(json.dumps(current()))",
+        ],
+        cwd=Path(__file__).resolve().parent.parent,
+        env={**os.environ, "SPARK_GRAFT_CPUS": str(manifest["parallelism"])},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    now = json.loads(out.stdout.strip().splitlines()[-1])
+    assert now["parallelism"] == manifest["parallelism"]
+    return now["fingerprints"]
+
+
 @pytest.mark.parametrize("name", sorted(CATALOG))
-def test_changed_plan_rides_the_driver_sample(spark, manifest, name):
-    fp = plan_fingerprint(CATALOG[name].fn(spark, SF_DIR))
-    recorded = manifest.get(name)
+def test_changed_plan_rides_the_driver_sample(manifest, fingerprints, name):
+    fp = fingerprints[name]
+    recorded = manifest["fingerprints"].get(name)
     if recorded is None:
         assert name in SAMPLE, (
             f"{name} is new since the manifest was recorded but is not in "

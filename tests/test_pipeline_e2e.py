@@ -176,6 +176,7 @@ def test_billing_insights_renders_on_empty_and_all_null_input(spark):
     global SUM — and a zero-count tier's success rate — NULL; the report
     must render 0.00 / n/a instead of crashing on None.__format__ (the r4
     fix covered only the per-region totals)."""
+    from billing_data_pipeline_spark.operators.aggregates import global_sum
     from billing_data_pipeline_spark.operators.reports import billing_insights
 
     raw = spark.createDataFrame(
@@ -189,8 +190,9 @@ def test_billing_insights_renders_on_empty_and_all_null_input(spark):
         "service_tier string, resource_type string, operation_type string,"
         " transaction_count long, success_count long"
     )
+    total = global_sum(raw, "credit_usage", "total").first()["total"]
     md, metrics = billing_insights(
-        raw,
+        total,
         user_aggs,
         region_aggs,
         service_aggs=spark.createDataFrame([], service_aggs_schema),
@@ -204,7 +206,7 @@ def test_billing_insights_renders_on_empty_and_all_null_input(spark):
         [("free", "gpu", "inference", 3, None)], service_aggs_schema
     )
     md2, _ = billing_insights(
-        raw, user_aggs, region_aggs, service_aggs=service_aggs
+        total, user_aggs, region_aggs, service_aggs=service_aggs
     )
     assert "| free | n/a |" in md2  # NULL success rate renders, not crashes
 

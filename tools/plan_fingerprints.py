@@ -10,8 +10,11 @@ sample. Discipline alone missed `heavy_hitter_terms` (r6) and
   plan text otherwise captures the full operator tree, including changes
   that arrive through shared helpers the query's own source never shows);
 - `tools/plan_fingerprints.json` records the fingerprints as of the last
-  time each query rode an external sample;
-- tests/test_pin_policy.py recomputes them and FAILS when a fingerprint
+  time each query rode an external sample, and the session parallelism
+  they were computed at: analyzed plans embed it (`Range(..., splits=N)`,
+  `session.fan_out`'s `Repartition N`);
+- tests/test_pin_policy.py recomputes them at that parallelism (one
+  subprocess with `SPARK_GRAFT_CPUS` pinned) and FAILS when a fingerprint
   drifted but the query is not in the current first-50 driver sample;
 - end of round (after CORRECTNESS_r{N} lands green) regenerate with
   `python -m tools.plan_fingerprints`.
@@ -98,12 +101,25 @@ def compute_all(spark) -> dict[str, str]:
     return dict(sorted(out.items()))
 
 
-def main() -> None:
+def current() -> dict:
+    """``{"parallelism", "fingerprints"}`` of this process's session
+    (``SPARK_GRAFT_CPUS`` sets its parallelism)."""
     from billing_data_pipeline_spark.session import get_spark
 
-    fps = compute_all(get_spark())
-    MANIFEST.write_text(json.dumps(fps, indent=1) + "\n")
-    print(f"wrote {len(fps)} fingerprints to {MANIFEST}")
+    spark = get_spark(shuffle_partitions=8)
+    return {
+        "parallelism": spark.sparkContext.defaultParallelism,
+        "fingerprints": compute_all(spark),
+    }
+
+
+def main() -> None:
+    manifest = current()
+    MANIFEST.write_text(json.dumps(manifest, indent=1) + "\n")
+    print(
+        f"wrote {len(manifest['fingerprints'])} fingerprints at parallelism"
+        f" {manifest['parallelism']} to {MANIFEST}"
+    )
 
 
 if __name__ == "__main__":
