@@ -292,15 +292,16 @@ class BillingPipeline:
 
     # -- stage 2: aggregates (full refresh, OPT4/OPT5) ----------------------
 
-    def build_aggregates(self, raw_version: int | None = None) -> dict:
+    def build_aggregates(
+        self, raw_version: int | None = None, total: Observation | None = None
+    ) -> dict:
         """Rebuild the four tables from raw_billing at ``raw_version``
         (latest when None); each commit is stamped with that version and
-        ``DERIVATION``."""
+        ``DERIVATION``. With ``total``, the daily_aggs commit observes into
+        it raw's exact credit_usage total (``aggregate_frames``)."""
         if raw_version is None:
             raw_version = self.raw_version()
         raw = self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA, raw_version)
-        # the report's exact total rides the daily_aggs scan of raw
-        total = Observation("raw_total_obs")
         tables = aggregate_frames(raw, total)
         # insights reads the tables back with the schemas they are written with
         self._aggregate_schemas = {name: df.schema for name, df in tables.items()}
@@ -330,12 +331,6 @@ class BillingPipeline:
                 # curate._obs_n). The write above still succeeded; read the
                 # count back from the published table.
                 metrics[f"{name}_rows"] = self.read(name).count()
-        try:
-            metrics["total_credit_usage"] = total.get["total"]
-        except Exception:  # the same carve-out: raw has no rows
-            metrics["total_credit_usage"] = (
-                global_sum(raw, "credit_usage", "total").first()["total"]
-            )
         return metrics
 
     # -- stage 3: insights --------------------------------------------------
@@ -448,8 +443,14 @@ class BillingPipeline:
             return metrics
         published = self._published(v)
         if published is None:
-            aggregates = self.build_aggregates(v)
-            report, insights = self.insights(v, aggregates["total_credit_usage"])
+            # the report's exact total rides the daily_aggs scan of raw
+            obs = Observation("raw_total_obs")
+            aggregates = self.build_aggregates(v, obs)
+            try:
+                total = obs.get["total"]
+            except Exception:  # build_aggregates' carve-out: insights scans raw
+                total = None
+            report, insights = self.insights(v, total)
             self._publish_report(v, aggregates, insights, report)
         else:
             aggregates, insights, report = published

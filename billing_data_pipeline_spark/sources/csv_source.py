@@ -25,10 +25,7 @@ declared schema is applied at read so the positional-cast hazard is gone
 
 from __future__ import annotations
 
-import os
 import re
-import string
-import unicodedata
 from dataclasses import dataclass
 from datetime import date, timedelta
 from urllib.parse import unquote
@@ -78,54 +75,6 @@ def _with_partition_cols(schema: T.StructType) -> T.StructType:
 #: year/month/day partition columns.
 RAW_BILLING_TABLE_SCHEMA = _with_partition_cols(RAW_BILLING_SCHEMA)
 
-_SCHEME_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
-_URI_SAFE = frozenset(string.ascii_letters + string.digits + "-_.!~*'();:@&=+$,/")
-
-
-def _uri_path(path: str) -> str:
-    """``path`` quoted as Hadoop's ``Path.toUri().toString()`` quotes it,
-    so keys made from it equal ``input_file_name()``'s: java.net.URI keeps
-    ``_URI_SAFE`` and non-ASCII characters that are neither controls nor
-    spaces, and percent-encodes the UTF-8 bytes of the rest, ``%`` too."""
-    return "".join(
-        c
-        if c in _URI_SAFE
-        or (ord(c) > 0x9F and unicodedata.category(c) not in ("Zs", "Zl", "Zp"))
-        else "".join(f"%{b:02X}" for b in c.encode("utf-8", "surrogateescape"))
-        for c in path
-    )
-
-
-def _local_fs(root: str):
-    """``(top, ls, uri)``: ``ls(dir)`` lists ``(name, child, is_dir)``,
-    ``uri(child)`` is the URI Spark's file index gives the file."""
-    top = os.path.abspath(re.sub(_SCHEME_RE, "/", root))
-    if not os.path.isdir(top):
-        raise FileNotFoundError
-
-    def ls(d: str):
-        with os.scandir(d) as it:
-            return [(e.name, e.path, e.is_dir()) for e in it]
-
-    return top, ls, lambda p: "file://" + _uri_path(p)
-
-
-def _hadoop_fs(spark: SparkSession, root: str):
-    """``_local_fs`` for any scheme, via Hadoop's ``FileSystem`` in the
-    driver's JVM: metadata calls, no Spark job."""
-    top = spark._jvm.org.apache.hadoop.fs.Path(root)
-    fs = top.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.isDirectory(top):
-        raise FileNotFoundError
-
-    def ls(d):
-        return [
-            (s.getPath().getName(), s.getPath(), s.isDirectory())
-            for s in fs.listStatus(d)
-        ]
-
-    return top, ls, lambda p: p.toUri().toString()
-
 
 def list_partition_files(
     spark: SparkSession,
@@ -137,20 +86,28 @@ def list_partition_files(
     directories within the window, sorted, as the URIs Spark's file index
     lists (so ``operators.ledger.file_key`` of each is its ledger key).
 
-    Runs on the driver with no Spark job at any lake size: ``os.scandir``
-    for a local root, Hadoop's ``FileSystem`` for any other scheme. The
+    Runs on the driver through Hadoop's ``FileSystem`` in the driver's JVM:
+    metadata calls, no Spark job at any lake size. The root resolves as
+    Spark's reads resolve it, a bare path against ``fs.defaultFS``. The
     window prunes years, months and days as the walk descends; under a
     window a directory whose value is not an integer is skipped. Files Spark
     never reads as data (``_SUCCESS``, ``.crc``) are left out. A missing
     root raises ``FileNotFoundError`` in Spark's ``PATH_NOT_FOUND`` words."""
-    remote = re.match(_SCHEME_RE, root) and not root.startswith("file:")
-    try:
-        top, ls, uri = _hadoop_fs(spark, root) if remote else _local_fs(root)
-    except FileNotFoundError:
-        msg = f"[PATH_NOT_FOUND] Path does not exist: {root}."
-        raise FileNotFoundError(msg) from None
+    top = spark._jvm.org.apache.hadoop.fs.Path(root)
+    fs = top.getFileSystem(spark._jsc.hadoopConfiguration())
+    top = fs.makeQualified(top)
+    if not fs.isDirectory(top):
+        raise FileNotFoundError(f"[PATH_NOT_FOUND] Path does not exist: {root}.")
     lo = (from_date.year, from_date.month, from_date.day) if from_date else None
     hi = (to_date.year, to_date.month, to_date.day) if to_date else None
+
+    def ls(d):
+        # (name, path, is_dir) of each entry of directory d
+        return [
+            (p.getName(), p, s.isDirectory())
+            for s in fs.listStatus(d)
+            for p in [s.getPath()]
+        ]
 
     def kept(parts: tuple, value: str) -> tuple | None:
         # parts + this level's value while (year, month, day) can still be
@@ -174,7 +131,7 @@ def list_partition_files(
             if t is not None
         ]
     return sorted(
-        uri(p)
+        p.toUri().toString()
         for d, _ in dirs
         for name, p, is_dir in ls(d)
         if not is_dir and _data(name)
@@ -351,13 +308,13 @@ def read_partition_paths(
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
 
-    def _exists(p: str) -> bool:
+    def _exists(jpath) -> bool:
         try:
-            jpath = jvm.org.apache.hadoop.fs.Path(p)
             return jpath.getFileSystem(hconf).exists(jpath)
         except Exception:
             return True  # unprobeable scheme: let the read raise the truth
 
-    files = [_uri_path(f) for p in partitions for f in p["files"] if _exists(f)]
+    paths = (jvm.org.apache.hadoop.fs.Path(f) for p in partitions for f in p["files"])
+    files = [jp.toUri().toString() for jp in paths if _exists(jp)]
     base = partitions[0]["path"].rsplit("/year=", 1)[0] if partitions else ""
     return read_partition_files(spark, base, files, schema)

@@ -18,11 +18,12 @@ from billing_data_pipeline_spark.operators.ledger import (
     ledger_key,
 )
 from billing_data_pipeline_spark.pipeline import BillingPipeline
-from billing_data_pipeline_spark.sources import csv_source
 from billing_data_pipeline_spark.sources.csv_source import (
     RAW_BILLING_KEYS,
     RAW_BILLING_TABLE_SCHEMA,
+    latest_partition_date,
     list_partition_files,
+    read_partition_root,
 )
 from tests.test_pipeline_e2e import CSV_HEADER
 
@@ -123,17 +124,41 @@ def _glob_read(spark, root):
     )
 
 
-def test_listing_keys_equal_the_glob_reads_keys(spark, tmp_path, monkeypatch):
+def test_listing_keys_equal_the_glob_reads_keys(spark, tmp_path):
     root = _odd_lake(tmp_path)
     want = sorted(file_key(f) for f in _glob_read(spark, root).inputFiles())
     assert len(want) == len(ODD_NAMES)
-    assert [file_key(f) for f in list_partition_files(spark, root)] == want
+    for r in (root, "file://" + root):
+        assert [file_key(f) for f in list_partition_files(spark, r)] == want
 
-    # the Hadoop listing, which serves every non-local scheme, agrees
-    monkeypatch.setattr(
-        csv_source, "_local_fs", lambda r: csv_source._hadoop_fs(spark, "file://" + r)
-    )
-    assert [file_key(f) for f in list_partition_files(spark, root)] == want
+
+def test_bare_root_resolves_against_the_default_filesystem(spark, tmp_path):
+    """A root without a scheme is listed and read where Spark resolves it,
+    on ``fs.defaultFS``, not on the local disk. Here the default is a
+    viewfs mount table that maps /billing-lake-mnt onto tmp_path."""
+    _lake(tmp_path, 3)
+    conf = spark._jsc.hadoopConfiguration()
+    saved = {k: conf.get(k) for k in ("fs.defaultFS", "fs.viewfs.impl.disable.cache")}
+    link = "fs.viewfs.mounttable.billing-test.link./billing-lake-mnt"
+    conf.set(link, tmp_path.as_uri())
+    conf.set("fs.viewfs.impl.disable.cache", "true")
+    conf.set("fs.defaultFS", "viewfs://billing-test/")
+    try:
+        assert not pathlib.Path("/billing-lake-mnt").exists()
+        files = list_partition_files(spark, "/billing-lake-mnt/lake")
+        assert [f.split("/")[-4:-1] for f in files] == [
+            ["year=2025", "month=03", f"day={d:02d}"] for d in (1, 2, 3)
+        ]
+        assert all(f.startswith("viewfs://billing-test/") for f in files)
+        assert read_partition_root(spark, "/billing-lake-mnt/lake").count() == 3
+        assert latest_partition_date(spark, "/billing-lake-mnt/lake") == date(2025, 3, 3)
+    finally:
+        conf.unset(link)
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
 
 
 def test_warehouse_ledgered_by_the_glob_read_appends_nothing(spark, tmp_path):
