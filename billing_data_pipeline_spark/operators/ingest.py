@@ -16,10 +16,6 @@ Scale notes:
 - The anti-join prunes the *existing* side to key columns only before the
   join (column pruning reaches the parquet scan), so the shuffle carries
   4 narrow key columns, not 14-column rows.
-- With a date-partitioned table, pass ``existing_filter`` (e.g. only the
-  partitions the batch can overlap) so partition pruning bounds the
-  existing-side scan — at 100 TB you never anti-join against the full
-  history, only the re-deliverable window.
 - For true upserts at scale, a Delta/Iceberg MERGE subsumes this pattern;
   plain parquet + anti-join append keeps the engine storage-agnostic.
 """
@@ -61,7 +57,6 @@ def dedup_append(
     batch: DataFrame,
     existing: DataFrame,
     keys: Sequence[str],
-    existing_filter: Column | None = None,
     dedup_batch: bool = True,
     strict: bool = False,
 ) -> DataFrame:
@@ -83,8 +78,6 @@ def dedup_append(
     """
     keys = list(keys)
     existing_keys = existing.select(*keys)
-    if existing_filter is not None:
-        existing_keys = existing_keys.filter(existing_filter)
     if strict:
         non_null = batch.na.drop(subset=keys)
         dupes = (
@@ -138,7 +131,6 @@ def append_new_rows_per_file(
     keys: Sequence[str],
     file_col: str,
     files: dict[str, dict],
-    existing_filter: Column | None = None,
     refreshed: Sequence[dict] = (),
 ) -> tuple[int, dict[str, int]]:
     """Idempotent append that also reports rows-added PER source file.
@@ -163,7 +155,7 @@ def append_new_rows_per_file(
         # the table holds what this appends: read it with the batch's
         # schema instead of merging one parquet footer per commit
         existing = table.read(schema=batch.drop(file_col).schema)
-        new_rows = dedup_append(batch, existing, keys, existing_filter)
+        new_rows = dedup_append(batch, existing, keys)
     new_rows = new_rows.persist()
     try:
         per_file = {

@@ -142,8 +142,8 @@ def hash_files(spark: SparkSession, paths: list[str]) -> list[Row]:
     chunks — O(8 MB) memory per file regardless of its size.
 
     ``filename`` is the partition-qualified ``file_key`` of the path,
-    not the basename (see ``ledger_key``). Globs are expanded driver-side
-    (one listing, same as binaryFile's). Local inputs summing to less
+    not the basename (see ``ledger_key``). Each path is a concrete file,
+    opened as named: no glob expansion. Local inputs summing to less
     than ``DRIVER_HASH_MAX_BYTES`` are hashed on the driver; otherwise the
     hash work distributes one file per row across the cluster via
     pyarrow's filesystem layer (local + s3/gcs where pyarrow has
@@ -151,25 +151,10 @@ def hash_files(spark: SparkSession, paths: list[str]) -> list[Row]:
     same rows. A file removed since it was listed gets no row, as the
     lake read (``ignoreMissingFiles``) skips it too.
     """
-    import glob as _glob
-
     from collections.abc import Iterator
 
     # (ledger filename, path to open) per input file
-    targets: list[tuple[str, str]] = []
-    for p in paths:
-        local = _local(p)
-        if local is None:
-            targets.append((file_key(p), p))  # remote scheme: no local glob
-        # existence-first (review r7): a CONCRETE filename containing glob
-        # metachars — 'billing[v2].csv' — must not be expanded as a
-        # character class (glob returned [] and the file was silently
-        # never ingested); only a non-existent path with metachars is a
-        # pattern.
-        elif any(c in local for c in "*?[") and not os.path.exists(local):
-            targets.extend((h, h) for h in sorted(_glob.glob(local)))
-        else:
-            targets.append((file_key(p), local))
+    targets = [(file_key(p), _local(p) or p) for p in paths]
 
     schema = T.StructType(
         [

@@ -1,7 +1,7 @@
 """Shared POSIX file mutex with stale-break and holder heartbeat.
 
-One implementation for every metadata lock in the repo (SnapshotTable's
-manifest lock). Semantics:
+The repo's one metadata lock: SnapshotTable's manifest lock, the single
+commit log every warehouse table goes through. Semantics:
 
 - acquire = ``O_CREAT|O_EXCL`` on the lock path (the portable POSIX
   mutex), writing a per-acquisition token;

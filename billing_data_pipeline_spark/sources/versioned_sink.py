@@ -19,11 +19,6 @@ without requiring a table format:
   metadata published atomically with the data (the pipeline's file ledger
   rides on ``raw_billing``'s append commits this way, as a table format
   keeps commit info in its log);
-- an optional ``epoch`` id makes commits idempotent: re-committing an
-  already-recorded epoch is a no-op. That is exactly the foreachBatch
-  exactly-once contract — a replayed micro-batch (restart after crash,
-  before checkpoint advance) cannot double-append
-  (streaming/snapshot_sink.stream_to_snapshots);
 - a crashed commit leaves an unreferenced ``v=N`` directory, never a
   half-published table; ``vacuum(keep)`` prunes orphans and versions no
   retained read can need.
@@ -158,8 +153,7 @@ class SnapshotTable:
             # (EIO/EACCES — the transient failures the lock docs already
             # assume possible) must propagate: swallowing one inside
             # commit's locked section reset the table to version 0, whose
-            # self-heal then renamed the REAL v=0 aside and deleted it,
-            # and an epochs() misread defeated replay idempotence
+            # self-heal then renamed the REAL v=0 aside and deleted it
             # (review r5 — silent-data-loss class).
             return {"version": None, "commits": []}
         except ValueError as exc:
@@ -171,15 +165,9 @@ class SnapshotTable:
     def latest_version(self) -> int | None:
         return self._load()["version"]
 
-    def epochs(self) -> set:
-        return {
-            c["epoch"] for c in self._load()["commits"] if c.get("epoch") is not None
-        }
-
     def commits(self) -> list[dict]:
-        """The retained commit log, oldest first: ``{"v", "mode", "epoch",
-        "meta"}`` per commit (``meta`` is None when the commit carried
-        none)."""
+        """The retained commit log, oldest first: ``{"v", "mode", "meta"}``
+        per commit (``meta`` is None when the commit carried none)."""
         return self._load()["commits"]
 
     def _listdir(self) -> list[str]:
@@ -210,13 +198,10 @@ class SnapshotTable:
     def _vdir(self, version: int) -> str:
         return os.path.join(self.path, f"v={version}")
 
-    def commit(
-        self, df: DataFrame, mode: str = "overwrite", epoch=None, meta=None
-    ) -> int:
+    def commit(self, df: DataFrame, mode: str = "overwrite", meta=None) -> int:
         """Write ``df`` as the next version and publish it atomically.
         ``mode='append'`` adds to the current snapshot instead of replacing
-        it. A non-None ``epoch`` already in the log makes this a no-op
-        (idempotent replay). ``meta`` (JSON-serializable) is stored in the
+        it. ``meta`` (JSON-serializable) is stored in the
         commit's log entry, published by the same manifest swap as the
         data. Returns the published version number.
 
@@ -231,13 +216,10 @@ class SnapshotTable:
         return self.commit_files(
             lambda staging: df.write.mode("errorifexists").parquet(staging),
             mode=mode,
-            epoch=epoch,
             meta=meta,
         )
 
-    def commit_files(
-        self, write_fn, mode: str = "overwrite", epoch=None, meta=None
-    ) -> int:
+    def commit_files(self, write_fn, mode: str = "overwrite", meta=None) -> int:
         """``commit`` with the data write abstracted: ``write_fn(staging)``
         materializes the version's files under the (not-yet-existing)
         staging directory. This is the engine-agnostic seam the
@@ -250,32 +232,22 @@ class SnapshotTable:
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
         self._ensure_dir()
-        if epoch is not None:
-            # dirty pre-check: epochs only ever grow, so a hit is final —
-            # skip the staging write entirely on replay
-            replay = self._replay_version(self._load(), epoch)
-            if replay is not None:
-                return replay
         staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
         trash = None
         try:
             with self._inprogress(staging):
                 write_fn(staging)
-                published = self._publish_staging(staging, mode, epoch, meta)
-                if isinstance(published, int):
-                    return published  # replay raced us: already in
-                version, trash = published
+                version, trash = self._publish_staging(staging, mode, meta)
                 return version
         finally:
-            if os.path.exists(staging):  # replay-raced or failed commit
+            if os.path.exists(staging):  # failed commit
                 shutil.rmtree(staging, ignore_errors=True)
             if trash is not None:
                 shutil.rmtree(trash, ignore_errors=True)
 
-    def _publish_staging(self, staging: str, mode: str, epoch, meta):
+    def _publish_staging(self, staging: str, mode: str, meta):
         """Locked metadata region of commit(): allocate a version, rename
-        the staged data into place, publish the manifest. Returns the
-        replayed version (int) when the epoch raced in concurrently, else
+        the staged data into place, publish the manifest. Returns
         ``(published_version, trash_dir_or_None)`` — the trash dir is a
         shunted crash orphan the caller deletes after lock release."""
         import uuid
@@ -283,10 +255,6 @@ class SnapshotTable:
         trash = None
         with self._mutate_lock():
             man = self._load()
-            if epoch is not None:
-                replay = self._replay_version(man, epoch)
-                if replay is not None:
-                    return replay
             version = 0 if man["version"] is None else man["version"] + 1
             # Self-heal a crash between rename and publish: an existing
             # v=N dir the manifest does not reference is an unpublished
@@ -304,48 +272,12 @@ class SnapshotTable:
                 os.rename(vdir, trash)
             os.rename(staging, vdir)
             man["version"] = version
-            man["commits"].append(
-                {"v": version, "mode": mode, "epoch": epoch, "meta": meta}
-            )
+            man["commits"].append({"v": version, "mode": mode, "meta": meta})
             fd, tmp = tempfile.mkstemp(dir=self.path, prefix="_manifest_")
             with os.fdopen(fd, "w") as f:
                 json.dump(man, f)
             os.replace(tmp, self._manifest)  # the atomic publish
             return (version, trash)
-
-    @staticmethod
-    def _replay_version(man: dict, epoch) -> int | None:
-        """Version already recorded for ``epoch``, or None when the epoch
-        is genuinely new. Raises when the epoch ordering proves the
-        WRITER was reset rather than replayed (review r5, mirroring
-        rollup_stream): foreachBatch re-delivers only the LAST
-        uncommitted batch, so an integer epoch BELOW the log's high-water
-        mark means a reset/relocated stream checkpoint (or a second
-        stream) re-counting from 0 — treating those as replays silently
-        discarded every new batch until the counter caught up.
-        Non-integer epochs (opaque run keys) keep the plain
-        already-recorded no-op; they carry no order to check."""
-        int_epochs = [
-            c["epoch"]
-            for c in man["commits"]
-            if isinstance(c.get("epoch"), int) and not isinstance(c["epoch"], bool)
-        ]
-        if (
-            isinstance(epoch, int)
-            and not isinstance(epoch, bool)
-            and int_epochs
-            and epoch < max(int_epochs)
-        ):
-            raise RuntimeError(
-                f"snapshot table already committed epoch {max(int_epochs)}"
-                f" but the writer delivered epoch {epoch}: the stream"
-                f" checkpoint was reset. Point the stream at a fresh table"
-                f" (or vacuum+delete this one) to reprocess."
-            )
-        for c in man["commits"]:
-            if c.get("epoch") == epoch:
-                return c["v"]
-        return None
 
     def _base_of(self, version: int, man: dict | None = None) -> int:
         """Last overwrite commit at or before ``version`` (0 if the log

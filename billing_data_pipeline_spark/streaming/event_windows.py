@@ -30,35 +30,6 @@ from pyspark.sql import types as T
 
 from ..operators.aggregates import exact_sum
 
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-
-def read_event_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType = EVENTS_SCHEMA,
-    fmt: str = "parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Checkpoint-tracked file-source stream (replaces the reference's
-    polling sensors ST1/ST2: new files are discovered per micro-batch and
-    tracked in the checkpoint's file index — the cursor, subsumed)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    return reader.format(fmt).load(source_dir)
-
 
 def tumbling_counts_stream(
     events: DataFrame, window: str = "10 minutes", watermark: str = "30 minutes"

@@ -256,9 +256,6 @@ def test_hash_files_relative_path_records_absolute_key(spark, tmp_path, monkeypa
     assert len(rows) == 1
     assert rows[0]["filename"] == str(f)
     assert os.path.isabs(rows[0]["filename"])
-    # glob expansion normalizes too
-    rows_g = hash_files(spark, ["rel-*.csv"])
-    assert [r["filename"] for r in rows_g] == [str(f)]
 
 
 def test_hash_files_driver_and_distributed_tiers_agree(

@@ -3,6 +3,12 @@ full recompute) and the plan shapes the catalog's scale claims rest on."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -83,62 +89,6 @@ def test_incremental_avg_matches_exact_twin_under_null_measures(spark):
         for r in df.groupBy("g").agg(F.avg("v").alias("avg")).collect()
     }
     assert out["a"]["avg_usage"] == exact["a"] and exact["b"] is None
-
-
-def test_streaming_rollup_matches_batch_recompute(spark, tmp_path):
-    """Stream events file-by-file into an incremental rollup; after the
-    catch-up drain, finalized counts/sums equal a batch recompute over all
-    data, and HLL estimates equal direct sketching (lossless merge)."""
-    from billing_data_pipeline_spark.streaming.event_windows import read_event_stream
-    from billing_data_pipeline_spark.streaming.rollup_stream import StreamingRollup
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    ev = load_table(spark, SF_SMOKE, "events")
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(src / f"f{i}"))
-
-    rollup = StreamingRollup(
-        spark,
-        str(tmp_path / "rollup"),
-        group_cols=["event_type"],
-        measure="value",
-        distinct_cols={"unique_users": "user_id"},
-    )
-    stream = read_event_stream(spark, str(src) + "/*", max_files_per_trigger=1)
-    rollup.attach(stream, str(tmp_path / "ckpt")).awaitTermination()
-
-    got = {r["event_type"]: r for r in rollup.read_finalized().collect()}
-    expected = {
-        r["event_type"]: r
-        for r in finalize_profile(
-            merge_partials(
-                partial_profile(ev, ["event_type"], "value", {"unique_users": "user_id"}),
-                ["event_type"],
-                {"unique_users": "user_id"},
-            ),
-            {"unique_users": "user_id"},
-        ).collect()
-    }
-    assert set(got) == set(expected)
-    for k in expected:
-        assert got[k]["transaction_count"] == expected[k]["transaction_count"]
-        assert got[k]["total_usage"] == expected[k]["total_usage"]
-        assert got[k]["unique_users"] == expected[k]["unique_users"]
-
-    # Replay safety: re-delivering the LAST batch id (the only shape a
-    # restart from an intact checkpoint produces) is a no-op; an OLDER id
-    # means the checkpoint was reset and must fail loudly instead of
-    # silently freezing the rollup (review r5).
-    import pytest
-
-    before = sorted(map(tuple, rollup.read_finalized().collect()))
-    rollup.merge_batch(ev.limit(50), batch_id=2)
-    assert sorted(map(tuple, rollup.read_finalized().collect())) == before
-    with pytest.raises(RuntimeError, match="checkpoint was reset"):
-        rollup.merge_batch(ev.limit(50), batch_id=0)
 
 
 def test_new_query_plan_properties(spark):
@@ -270,35 +220,60 @@ def test_grouped_profile_helper_columns_never_shadow_inputs(spark):
     assert (out["b"]["big"], out["b"]["helper_set"]) == (1, 1)
 
 
-def test_widen_scan_tier_equivalent_and_round_robin(spark):
-    """r11 widen_scan opt-in (single-distinct tier, low group
-    cardinality): (1) results are bit-identical to the plain tier — the
-    fan_out is a pure physical rewrite; (2) the widened plan actually
-    carries the round-robin exchange on a narrow scan; (3) the plain
-    tier keeps its exchange-free-scan shape (no accidental default
-    flip)."""
+def _widen_scan_tiers() -> dict:
+    """Both tiers of a single-distinct ``grouped_profile`` in this
+    process's session: their sorted rows (``repr`` keeps every double's
+    bits) and executed plans."""
     from billing_data_pipeline_spark.operators.aggregates import (
         grouped_profile,
     )
-    from billing_data_pipeline_spark.sources.tables import load_table
+    from billing_data_pipeline_spark.session import get_spark
 
+    spark = get_spark(shuffle_partitions=8)
     li = load_table(spark, SF_SMOKE, "lineitem")
     kwargs = dict(
         group_cols=["l_returnflag", "l_linestatus"],
         measure="l_extendedprice",
         distinct_cols={"unique_suppliers": "l_suppkey"},
     )
-    plain = grouped_profile(li, **kwargs)
-    wide = grouped_profile(li, widen_scan=True, **kwargs)
+    out = {}
+    for tier, df in (
+        ("plain", grouped_profile(li, **kwargs)),
+        ("wide", grouped_profile(li, widen_scan=True, **kwargs)),
+    ):
+        rows = sorted(map(tuple, df.collect()), key=lambda t: t[:2])
+        out[tier] = [repr(t) for t in rows]
+        out[f"{tier}_plan"] = df._jdf.queryExecution().executedPlan().toString()
+    return out
 
-    assert sorted(map(tuple, plain.collect()), key=lambda t: t[:2]) == sorted(
-        map(tuple, wide.collect()), key=lambda t: t[:2]
-    )  # exact equality incl. double bits (decimal sums are associative)
 
-    wide_plan = wide._jdf.queryExecution().executedPlan().toString()
-    plain_plan = plain._jdf.queryExecution().executedPlan().toString()
-    assert "RoundRobinPartitioning" in wide_plan
-    assert "RoundRobinPartitioning" not in plain_plan
+def test_widen_scan_tier_equivalent_and_round_robin():
+    """r11 widen_scan opt-in (single-distinct tier, low group
+    cardinality): (1) results are bit-identical to the plain tier — the
+    fan_out is a pure physical rewrite; (2) the widened plan actually
+    carries the round-robin exchange on a narrow scan; (3) the plain
+    tier keeps its exchange-free-scan shape (no accidental default
+    flip). ``session.fan_out`` targets ``defaultParallelism // 4``
+    partitions, which no scan undercuts below 8 cores, so the tiers run
+    in one subprocess with ``SPARK_GRAFT_CPUS`` pinned to 8."""
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import json; from tests.test_scale_patterns import"
+            " _widen_scan_tiers; print(json.dumps(_widen_scan_tiers()))",
+        ],
+        cwd=Path(__file__).resolve().parent.parent,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "8"},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+
+    assert got["plain"] == got["wide"]  # exact, incl. double bits
+    assert "RoundRobinPartitioning" in got["wide_plan"]
+    assert "RoundRobinPartitioning" not in got["plain_plan"]
 
 
 def test_round2_plan_properties(spark):

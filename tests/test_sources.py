@@ -140,109 +140,6 @@ def test_corrupt_rows_contained_permissive(spark, tmp_path):
     assert rows["inv-3"]["success"] is False
 
 
-def test_partitioned_sink_dynamic_overwrite_and_pruning(spark, tmp_path):
-    """Dynamic partition overwrite rewrites only touched partitions (the
-    incremental-backfill semantic); static mode truncates the table (the
-    reference's full-refresh). Read-back prunes on partition predicates."""
-    from pyspark.sql import functions as F
-
-    from billing_data_pipeline_spark.sources.partitioned_sink import (
-        read_hive_partitioned,
-        write_hive_partitioned,
-    )
-
-    path = str(tmp_path / "lake")
-    base = spark.createDataFrame(
-        [(1, 2025, 1), (2, 2025, 1), (3, 2025, 2), (4, 2025, 3)],
-        "id long, year int, month int",
-    )
-    write_hive_partitioned(base, path, ["year", "month"])
-    assert read_hive_partitioned(spark, path).count() == 4
-
-    # backfill month=2 only: months 1 and 3 must survive
-    fix = spark.createDataFrame([(30, 2025, 2), (31, 2025, 2)], "id long, year int, month int")
-    write_hive_partitioned(fix, path, ["year", "month"], dynamic=True)
-    after = read_hive_partitioned(spark, path)
-    assert after.count() == 5
-    assert sorted(
-        r["id"] for r in after.filter("month = 2").collect()
-    ) == [30, 31]
-
-    # partition predicate shows up as PartitionFilters, not a data filter
-    pruned = after.filter(F.col("month") == 1)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(month" in plan
-
-    # static mode: the same fix write truncates everything else
-    write_hive_partitioned(fix, path, ["year", "month"], dynamic=False)
-    assert read_hive_partitioned(spark, path).count() == 2
-
-    # small-files control: month=2 holds exactly one parquet file
-    import glob
-
-    files = glob.glob(f"{path}/year=2025/month=2/*.parquet")
-    assert len(files) == 1
-
-
-def test_sorted_write_clusters_row_groups(spark, tmp_path):
-    """sortWithinPartitions must produce parquet files whose row-group
-    min-max ranges on the sort key are disjoint-ish (clustered), enabling
-    row-group skipping for range predicates."""
-    import pyarrow.parquet as pq
-    import glob
-
-    from billing_data_pipeline_spark.sources.partitioned_sink import (
-        write_hive_partitioned_sorted,
-    )
-
-    df = (
-        spark.range(0, 100_000)
-        .selectExpr("id", "cast(id % 7 as int) AS grp", "(99999 - id) AS k")
-    )
-    path = str(tmp_path / "sorted_lake")
-    write_hive_partitioned_sorted(df, path, ["grp"], ["k"])
-
-    f = glob.glob(f"{path}/grp=0/*.parquet")[0]
-    md = pq.ParquetFile(f).metadata
-    kidx = next(
-        i for i in range(len(md.schema)) if md.schema.column(i).name == "k"
-    )
-    mins = [md.row_group(rg).column(kidx).statistics.min for rg in range(md.num_row_groups)]
-    assert mins == sorted(mins)  # clustered: monotonically increasing row groups
-
-    # file-level min-max covers the partition's k range exactly
-    stats = md.row_group(0).column(kidx).statistics
-    assert stats.has_min_max
-
-
-def test_compaction_merges_microbatch_files(spark, tmp_path):
-    """Append-heavy trees compact to one file per partition with identical
-    data (count + sum invariants)."""
-    import glob
-
-    from billing_data_pipeline_spark.sources.partitioned_sink import (
-        compact_partitions,
-        read_hive_partitioned,
-    )
-
-    path = str(tmp_path / "appendy")
-    for batch in range(4):  # simulate 4 micro-batch appends
-        spark.createDataFrame(
-            [(batch * 10 + i, 2025, 1 + (i % 2)) for i in range(10)],
-            "id long, year int, month int",
-        ).write.mode("append").partitionBy("year", "month").parquet(path)
-
-    before = read_hive_partitioned(spark, path)
-    n_before, sum_before = before.count(), before.agg({"id": "sum"}).first()[0]
-    assert len(glob.glob(f"{path}/year=2025/month=1/*.parquet")) >= 4
-
-    compact_partitions(spark, path, ["year", "month"], sort_cols=["id"])
-    after = read_hive_partitioned(spark, path)
-    assert after.count() == n_before
-    assert after.agg({"id": "sum"}).first()[0] == sum_before
-    assert len(glob.glob(f"{path}/year=2025/month=1/*.parquet")) == 1
-
-
 def test_orc_roundtrip_preserves_schema_and_rows(spark, tmp_path):
     """ORC sink/source round-trip (the second columnar format Spark ships
     natively): schema and contents survive, predicates push down."""
@@ -284,7 +181,7 @@ def test_snapshot_table_concurrent_commits_lose_nothing(spark, tmp_path):
                     spark.range(tag * 100 + i, tag * 100 + i + 1)
                     .withColumnRenamed("id", "k"),
                     mode="append",
-                    epoch=f"w{tag}-{i}",
+                    meta={"tag": f"w{tag}-{i}"},
                 )
         except Exception as exc:  # pragma: no cover - failure detail
             errors.append(exc)
@@ -295,8 +192,8 @@ def test_snapshot_table_concurrent_commits_lose_nothing(spark, tmp_path):
     for th in threads:
         th.join()
     assert not errors, errors
-    man_epochs = t.epochs()
-    assert man_epochs == {f"w{tag}-{i}" for tag in (1, 2) for i in range(per_thread)}
+    tags = {c["meta"]["tag"] for c in t.commits() if c["meta"]}
+    assert tags == {f"w{tag}-{i}" for tag in (1, 2) for i in range(per_thread)}
     assert t.latest_version() == 2 * per_thread  # base + 8 appends, none lost
     # every appended row is readable from the latest snapshot
     got = sorted(r["k"] for r in t.read().collect())
@@ -819,8 +716,8 @@ def test_snapshot_cdc_drives_incremental_rollup(spark):
 
 def test_snapshot_commit_self_heals_orphan_dir(spark, tmp_path):
     """A crash between the v=N data write and the manifest publish leaves
-    an unpublished orphan dir; the next commit (e.g. a replayed epoch)
-    must overwrite it instead of failing errorifexists forever
+    an unpublished orphan dir; the next commit (e.g. a rerun after the
+    crash) must overwrite it instead of failing errorifexists forever
     (review r3)."""
     from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
 
@@ -834,72 +731,6 @@ def test_snapshot_commit_self_heals_orphan_dir(spark, tmp_path):
     assert v == 1
     assert {r["k"] for r in t.read().collect()} == {2}
     assert {r["k"] for r in t.read(version=0).collect()} == {1}
-
-
-def test_streaming_rollup_survives_torn_state_attempt(spark, tmp_path):
-    """Rollup state is versioned + pointer-published: a junk/partial v-dir
-    from a crashed merge attempt must not break or reset the rollup on
-    replay (review r3: the old overwrite-in-place design lost all history
-    on a torn live dir)."""
-    from billing_data_pipeline_spark.streaming.rollup_stream import StreamingRollup
-
-    ev = spark.createDataFrame(
-        [("a", 1.0, 1), ("a", 2.0, 2), ("b", 3.0, 3)],
-        "event_type string, value double, user_id long",
-    )
-    r = StreamingRollup(
-        spark, str(tmp_path / "roll"), ["event_type"], "value",
-        {"unique_users": "user_id"},
-    )
-    r.merge_batch(ev, 0)
-    before = {row["event_type"]: row["total_usage"]
-              for row in r.read_finalized().collect()}
-    # crashed attempt at batch 1: unpublished garbage dir
-    (tmp_path / "roll" / "v=1").mkdir()
-    (tmp_path / "roll" / "v=1" / "part-junk.parquet").write_bytes(b"torn")
-    # state still reads fine (pointer is the truth)
-    assert {row["event_type"]: row["total_usage"]
-            for row in r.read_finalized().collect()} == before
-    r.merge_batch(ev, 1)  # replaces the orphan, merges on top of batch 0
-    after = {row["event_type"]: row["total_usage"]
-             for row in r.read_finalized().collect()}
-    assert after == {k: v * 2 for k, v in before.items()}
-    # replayed batch id: no-op
-    r.merge_batch(ev, 1)
-    assert {row["event_type"]: row["total_usage"]
-            for row in r.read_finalized().collect()} == after
-
-
-def test_streaming_rollup_keep_versions_and_reset_guard(spark, tmp_path):
-    """keep_versions must be honored beyond 2 (review r5: the old prune
-    kept a hardcoded {current, prior} pair), and a batch id BELOW the
-    merged high-water mark — a reset/relocated checkpoint re-delivering
-    from 0 — must raise instead of silently freezing the rollup."""
-    import os
-
-    import pytest
-
-    from billing_data_pipeline_spark.streaming.rollup_stream import StreamingRollup
-
-    ev = spark.createDataFrame(
-        [("a", 1.0, 1)], "event_type string, value double, user_id long"
-    )
-    r = StreamingRollup(
-        spark, str(tmp_path / "roll"), ["event_type"], "value",
-        {"unique_users": "user_id"}, keep_versions=3,
-    )
-    for b in range(5):
-        r.merge_batch(ev, b)
-    vdirs = sorted(
-        int(n[2:]) for n in os.listdir(r.path) if n.startswith("v=")
-    )
-    assert vdirs == [2, 3, 4]  # newest keep_versions=3, not a pair
-    # replay of the LAST batch is the legitimate restart shape: no-op
-    r.merge_batch(ev, 4)
-    assert r.read_finalized().collect()[0]["transaction_count"] == 5
-    # a LOWER id means the checkpoint was reset: fail loudly
-    with pytest.raises(RuntimeError, match="checkpoint was reset"):
-        r.merge_batch(ev, 1)
 
 
 def test_strict_read_failfast_and_missing_partition_skip(spark, tmp_path):

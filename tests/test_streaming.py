@@ -1,7 +1,7 @@
 """Structured Streaming tests: file-source streams drained with
 Trigger.AvailableNow into memory sinks, compared against the batch twins
 (the expressions are shared, so stream == batch on finite input), plus
-stateful processing and exactly-once snapshot sinks."""
+stateful processing."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from billing_data_pipeline_spark.sources.tables import load_table
 from billing_data_pipeline_spark.streaming import (
-    read_event_stream,
     run_to_memory,
     session_stats_stream,
     sliding_volume_stream,
@@ -34,12 +33,26 @@ def events_dir(spark, tmp_path_factory):
     return path
 
 
+EVENTS_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string,"
+    " value double, props string"
+)
+
+
+def _event_stream(spark, source_dir, max_files_per_trigger=None):
+    """Checkpoint-tracked parquet file-source stream of events."""
+    reader = spark.readStream.schema(EVENTS_DDL)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(source_dir)
+
+
 def _rows(df, *cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
 def test_tumbling_stream_matches_batch(spark, events_dir):
-    stream = read_event_stream(spark, events_dir)
+    stream = _event_stream(spark, events_dir)
     got = run_to_memory(tumbling_counts_stream(stream), "t_tumbling", "complete")
     batch = (
         spark.read.parquet(events_dir)
@@ -57,7 +70,7 @@ def test_tumbling_stream_matches_batch(spark, events_dir):
 
 
 def test_sliding_stream_matches_batch(spark, events_dir):
-    stream = read_event_stream(spark, events_dir)
+    stream = _event_stream(spark, events_dir)
     got = run_to_memory(sliding_volume_stream(stream), "t_sliding", "complete")
     batch = (
         spark.read.parquet(events_dir)
@@ -71,7 +84,7 @@ def test_sliding_stream_matches_batch(spark, events_dir):
 
 
 def test_session_stream_matches_batch(spark, events_dir):
-    stream = read_event_stream(spark, events_dir)
+    stream = _event_stream(spark, events_dir)
     got = run_to_memory(session_stats_stream(stream), "t_session", "complete")
     batch = (
         spark.read.parquet(events_dir)
@@ -108,7 +121,7 @@ def test_append_mode_emits_only_watermark_closed_windows(spark, tmp_path):
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     ).coalesce(1).write.mode("overwrite").parquet(str(src))
 
-    stream = read_event_stream(spark, str(src))
+    stream = _event_stream(spark, str(src))
     got = run_to_memory(
         tumbling_counts_stream(stream, window="10 minutes", watermark="30 minutes"),
         "t_wm_append",
@@ -129,7 +142,7 @@ def test_streaming_dedup_collapses_redelivery(spark, tmp_path):
     ev.coalesce(1).write.mode("overwrite").parquet(str(src / "a"))
     ev.coalesce(1).write.mode("overwrite").parquet(str(src / "b"))
 
-    stream = read_event_stream(spark, str(src) + "/*")
+    stream = _event_stream(spark, str(src) + "/*")
     got = run_to_memory(
         streaming_dedup(stream, ["event_id"], watermark="2 days"), "t_dedup"
     )
@@ -161,7 +174,7 @@ def test_streaming_dedup_excludes_null_event_times_by_contract(spark, tmp_path):
     ev.coalesce(1).write.mode("overwrite").parquet(str(src / "a"))
     ev.coalesce(1).write.mode("overwrite").parquet(str(src / "b"))
 
-    stream = read_event_stream(spark, str(src) + "/*")
+    stream = _event_stream(spark, str(src) + "/*")
     got = run_to_memory(
         streaming_dedup(stream, ["event_id"], watermark="2 days"),
         "t_dedup_nullts",
@@ -202,7 +215,7 @@ def test_streaming_dedup_null_keys_hash_identity_and_stateful_null_group(
     ev.coalesce(1).write.mode("overwrite").parquet(str(src / "a"))
     ev.coalesce(1).write.mode("overwrite").parquet(str(src / "b"))  # replay
 
-    stream = read_event_stream(spark, str(src) + "/*")
+    stream = _event_stream(spark, str(src) + "/*")
     got = run_to_memory(
         streaming_dedup(stream, ["event_id"], watermark="2 days"),
         "t_dedup_nullkey",
@@ -211,7 +224,7 @@ def test_streaming_dedup_null_keys_hash_identity_and_stateful_null_group(
     # both distinct NULL-key rows survive exactly once; replay collapsed
     assert vals == [1.0, 2.0, 3.0, 4.0]
 
-    stream2 = read_event_stream(spark, str(src / "a"))
+    stream2 = _event_stream(spark, str(src / "a"))
     totals = run_to_memory(
         stateful_user_totals(stream2), "t_state_nullkey", "update"
     )
@@ -231,7 +244,7 @@ def test_stateful_user_totals_accumulates_across_batches(spark, tmp_path):
     half1.coalesce(1).write.mode("overwrite").parquet(str(src / "f1"))
     half2.coalesce(1).write.mode("overwrite").parquet(str(src / "f2"))
 
-    stream = read_event_stream(spark, str(src) + "/*", max_files_per_trigger=1)
+    stream = _event_stream(spark, str(src) + "/*", max_files_per_trigger=1)
     q = (
         stateful_user_totals(stream)
         .writeStream.format("memory")
@@ -291,7 +304,7 @@ def test_interval_join_matches_across_micro_batches(spark, tmp_path):
     spark.createDataFrame(clicks, schema).coalesce(1).write.parquet(str(src / "a"))
     spark.createDataFrame(purchases, schema).coalesce(1).write.parquet(str(src / "b"))
 
-    stream = read_event_stream(spark, str(src) + "/*", max_files_per_trigger=1)
+    stream = _event_stream(spark, str(src) + "/*", max_files_per_trigger=1)
     got = run_to_memory(interval_join_stream(stream), "t_ssjoin", "append")
     assert _rows(got, "left_id", "right_id", "lag_us") == [
         (1, 11, 5 * 60 * 1_000_000),
@@ -336,7 +349,7 @@ def test_left_outer_interval_join_emits_unmatched_after_watermark(spark, tmp_pat
     spark.createDataFrame(flush1, schema).coalesce(1).write.parquet(str(src / "b"))
     spark.createDataFrame(flush2, schema).coalesce(1).write.parquet(str(src / "c"))
 
-    stream = read_event_stream(spark, str(src) + "/*", max_files_per_trigger=1)
+    stream = _event_stream(spark, str(src) + "/*", max_files_per_trigger=1)
     got = run_to_memory(
         interval_join_stream(stream, how="leftOuter"), "t_ssloj", "append"
     ).filter(F.col("user_id") >= 0)
@@ -345,88 +358,6 @@ def test_left_outer_interval_join_emits_unmatched_after_watermark(spark, tmp_pat
         (2, None, None),
         (3, None, None),
     ]
-
-
-def test_stream_to_snapshots_exactly_once_and_cdc_log(spark, tmp_path):
-    """Streaming appends into a SnapshotTable: each micro-batch is one
-    epoch-keyed append commit, so (a) the final table equals the batch
-    read, (b) every batch boundary is a time-travel point, (c) a REPLAYED
-    epoch commits nothing — foreachBatch at-least-once becomes an
-    exactly-once table, and (d) diff_snapshots between consecutive
-    versions recovers exactly the replayed-safe batch rows (a free CDC
-    log)."""
-    from billing_data_pipeline_spark.operators.cdc import diff_snapshots
-    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
-    from billing_data_pipeline_spark.streaming.snapshot_sink import (
-        stream_to_snapshots,
-    )
-
-    schema = "event_id long, user_id long, value double"
-    src = tmp_path / "src"
-    src.mkdir()
-    batches = [
-        [(1, 100, 1.0), (2, 200, 2.0)],
-        [(3, 100, 3.0)],
-        [(4, 300, 4.0), (5, 100, 5.0)],
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / f"b{i}")
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    table = SnapshotTable(spark, str(tmp_path / "snap"))
-    q = stream_to_snapshots(stream, table, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-
-    all_ids = {r["event_id"] for r in table.read().collect()}
-    assert all_ids == {1, 2, 3, 4, 5}
-    assert table.latest_version() == 2  # one commit per micro-batch
-
-    # time travel to the first batch boundary
-    assert len(table.read(version=0).collect()) in (1, 2)
-
-    # replay the LAST committed epoch (the genuine foreachBatch replay
-    # shape): no new version, no duplicate rows
-    seen_epochs = table.epochs()
-    table.commit(
-        spark.createDataFrame(batches[0], schema),
-        mode="append",
-        epoch=max(seen_epochs),
-    )
-    assert table.latest_version() == 2
-    assert len(table.read().collect()) == 5
-
-    # an epoch BELOW the high-water mark is a reset/relocated checkpoint
-    # re-counting from 0, not a replay — it must fail loudly instead of
-    # silently discarding new batches (review r5, mirrors StreamingRollup)
-    import pytest
-
-    with pytest.raises(RuntimeError, match="checkpoint was reset"):
-        table.commit(
-            spark.createDataFrame(batches[0], schema),
-            mode="append",
-            epoch=min(seen_epochs),
-        )
-
-    # CDC log: the diff between consecutive versions is exactly one batch
-    v1_minus_v0 = diff_snapshots(
-        table.read(version=0), table.read(version=1), ["event_id"]
-    )
-    assert {r["change"] for r in v1_minus_v0.collect()} == {"insert"}
-    total = sum(
-        len(
-            diff_snapshots(
-                table.read(version=v), table.read(version=v + 1), ["event_id"]
-            ).collect()
-        )
-        for v in (0, 1)
-    )
-    assert total + len(table.read(version=0).collect()) == 5
 
 
 def test_run_to_memory_keeps_recent_drains_concurrently(spark, events_dir):
@@ -440,12 +371,12 @@ def test_run_to_memory_keeps_recent_drains_concurrently(spark, events_dir):
     )
 
     a = run_to_memory(
-        tumbling_counts_stream(read_event_stream(spark, events_dir)),
+        tumbling_counts_stream(_event_stream(spark, events_dir)),
         "t_lru_a",
         "complete",
     )
     b = run_to_memory(
-        tumbling_counts_stream(read_event_stream(spark, events_dir)),
+        tumbling_counts_stream(_event_stream(spark, events_dir)),
         "t_lru_b",
         "complete",
     )
@@ -453,7 +384,7 @@ def test_run_to_memory_keeps_recent_drains_concurrently(spark, events_dir):
     assert a.count() == b.count() > 0
     # re-draining the same name must not leave a stale LRU duplicate
     b2 = run_to_memory(
-        tumbling_counts_stream(read_event_stream(spark, events_dir)),
+        tumbling_counts_stream(_event_stream(spark, events_dir)),
         "t_lru_b",
         "complete",
     )
@@ -476,40 +407,16 @@ def test_run_to_memory_failed_drain_evicts_nothing(spark, events_dir):
     )
 
     held = run_to_memory(
-        tumbling_counts_stream(read_event_stream(spark, events_dir)),
+        tumbling_counts_stream(_event_stream(spark, events_dir)),
         "t_keep_on_fail",
         "complete",
     )
     before = list(_SINK_TABLES)
     with pytest.raises(Exception):
         run_to_memory(
-            tumbling_counts_stream(read_event_stream(spark, events_dir)),
+            tumbling_counts_stream(_event_stream(spark, events_dir)),
             "t_bad_mode",
             "no_such_mode",
         )
     assert _SINK_TABLES == before  # nothing evicted, nothing appended
     assert held.count() > 0  # the held result's view survived
-
-
-def test_rollup_pointer_corruption_raises_not_resets(spark, tmp_path):
-    """Review r7: a corrupt rollup pointer must RAISE — reading it as
-    'no state' would disarm the reset guard and publish the next batch
-    as the entire history (silent total state loss)."""
-    import pytest
-
-    from billing_data_pipeline_spark.streaming.rollup_stream import (
-        StreamingRollup,
-    )
-
-    path = str(tmp_path / "roll")
-    r = StreamingRollup(spark, path, ["user_id"], "value")
-    batch = spark.createDataFrame([(1, 2.0)], "user_id int, value double")
-    r.merge_batch(batch, 0)
-    assert r._last_batch_id() == 0
-    with open(r._pointer, "w") as f:
-        f.write("{torn")
-    with pytest.raises(OSError, match="corrupt rollup pointer"):
-        r.merge_batch(batch, 1)
-    # and read-side state loads fail loudly too, not as empty
-    with pytest.raises(OSError, match="corrupt rollup pointer"):
-        r.read_finalized()
