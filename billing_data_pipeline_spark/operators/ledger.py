@@ -51,15 +51,6 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-LEDGER_SCHEMA = T.StructType(
-    [
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("file_hash", T.StringType(), False),
-        T.StructField("processed_at", T.TimestampType(), False),
-        T.StructField("record_count", T.LongType(), False),
-    ]
-)
-
 _SCHEME_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
 
 #: Summed input size below which local files are hashed on the driver;
@@ -261,21 +252,6 @@ class FileLedger:
         """The latest entry per filename, as of ``version``."""
         return {e["filename"]: e for e in self.entries(version)}
 
-    def load(self) -> DataFrame:
-        """Latest entry per filename as a ``LEDGER_SCHEMA`` frame."""
-        return self.spark.createDataFrame(
-            [
-                (
-                    e["filename"],
-                    e["file_hash"],
-                    datetime.fromisoformat(e["processed_at"]),
-                    e["record_count"],
-                )
-                for e in self.latest().values()
-            ],
-            LEDGER_SCHEMA,
-        )
-
     def filter_unprocessed(self, candidates: list[Row]) -> list[Row]:
         """Candidates (filename, file_hash) the ledger does not hold.
 
@@ -293,7 +269,7 @@ class FileLedger:
         ``processed``: each gives ``filename``, ``file_hash`` and
         ``record_count``, and may give ``stat`` (null when absent) and
         ``processed_at`` (now when absent; a refreshed entry keeps its
-        own). The latest entry per filename wins on load. A zero-row
+        own). The latest entry per filename wins in ``latest``. A zero-row
         ``rows`` still commits (an empty, schema-carrying version) so the
         files are recorded. Returns the published version."""
         now = datetime.now(timezone.utc).replace(tzinfo=None).isoformat()

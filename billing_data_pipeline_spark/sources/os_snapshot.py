@@ -3,8 +3,8 @@
 the POSIX ``SnapshotTable`` (versioned_sink.py) and refuses any other
 scheme.
 
-Warehouses are POSIX-only. ``SnapshotTable`` commits by rename and an
-O_EXCL lock file, which are atomic only on a local filesystem; run on an
+Warehouses are POSIX-only. ``SnapshotTable`` commits by rename under
+``flock``, which are exact only on a local filesystem; run on an
 object store or HDFS they would silently split or tear a table, so the
 gate fails closed instead. An object-store commit log (conditional-PUT
 manifests, the Delta Lake design) lived here until commit ``d12c338``;
@@ -16,11 +16,11 @@ from __future__ import annotations
 
 def local_fs_path(url: str) -> str:
     """Normalize a bare path or ``file:///`` URL to a plain filesystem
-    path; RAISE for any other scheme. The shared closed-world gate for
-    every os-level protocol in the kit (SnapshotTable's rename/O_EXCL,
-    fs_mutex): running one against 's3a://...' as a
-    literal string silently splits state between a cwd-relative
-    's3a:' junk tree and the real store (review r7)."""
+    path; RAISE for any other scheme. The closed-world gate for
+    SnapshotTable's rename and ``flock`` protocol: running it against
+    's3a://...' as a literal string silently splits state between a
+    cwd-relative 's3a:' junk tree and the real store (review r7), and a
+    ``flock`` on a network mount may be local to one host."""
     from urllib.parse import urlparse
 
     parsed = urlparse(url)
@@ -42,7 +42,7 @@ def local_fs_path(url: str) -> str:
     raise NotImplementedError(
         f"{url!r} (scheme {scheme!r}) is not a local filesystem path: "
         "warehouses must be a local path or a file:/// URL, because the "
-        "POSIX rename/O_EXCL commit protocol is only safe on local storage"
+        "POSIX rename/flock commit protocol is only safe on local storage"
     )
 
 

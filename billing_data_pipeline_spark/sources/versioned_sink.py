@@ -27,31 +27,34 @@ At 100 TB the commit cost is the data write itself — the publish step is
 one metadata rename regardless of table size, and readers pay one
 small-file read to resolve the version.
 
-Concurrency contract (r4): **multi-writer safe on a shared POSIX path**.
-Commit and vacuum take an exclusive ``_lock`` file (O_CREAT|O_EXCL — the
-portable POSIX mutex) around their read-modify-write of the manifest, so
-concurrent mutators serialize instead of losing commit records. The
-critical section is METADATA-ONLY and data-size-independent (review r4):
-the data write lands in an unreferenced ``_staging_*`` directory BEFORE
-the lock is taken, and the locked region is just rename-into-place +
-manifest append + publish (vacuum likewise publishes the pruned manifest
-under the lock and deletes the newly-unreferenced directories after
-releasing it). Because the lock is held for milliseconds regardless of
-table size, a lock older than ``stale_lock_secs`` (600 s) really is a
-crashed holder; breaking is single-winner (rename-then-unlink — a
-concurrent breaker's rename fails, it just retries) and release verifies
-the lock still carries this holder's token so a broken-then-reacquired
-lock is never unlinked by the old holder. Residual window, documented
-rather than hidden: a holder paused LONGER than ``stale_lock_secs``
-inside the millisecond critical section (a 10-minute GC pause) could be
-broken mid-mutation — the same assumption every mtime-lease lock makes.
-Rename and O_EXCL are atomic only on a local filesystem, so warehouses are
-POSIX-only: ``os_snapshot.snapshot_table_for`` refuses every other scheme.
+Concurrency contract: **multi-writer safe on a shared POSIX path**, held
+by two ``flock`` files per table. The kernel releases a ``flock`` when
+its holder's process dies and never takes it from a live holder, so a
+crashed writer blocks nobody and no lock needs an expiry time.
+
+- ``_lock``: commit and vacuum hold it exclusively around their
+  read-modify-write of the manifest, so concurrent mutators serialize
+  instead of losing commit records. The locked region is metadata-only:
+  the data write lands in an unreferenced ``_staging_*`` directory before
+  it, and vacuum deletes the directories it unreferenced after it. A
+  waiter that cannot get the lock within ``LOCK_TIMEOUT_SECS`` raises
+  ``TimeoutError``.
+- ``_writers``: a commit holds it shared from before its ``_staging_*``
+  directory exists until that directory is renamed into place or
+  removed. Vacuum sweeps ``_staging_*`` entries only when it can take
+  ``_writers`` exclusively without waiting; every entry it lists then
+  belongs to a dead commit. With a commit in flight it skips the sweep,
+  and a later vacuum does it.
+
+Rename and ``flock`` are exact only on a local filesystem, so warehouses
+are POSIX-only: ``os_snapshot.snapshot_table_for`` refuses every other
+scheme.
 """
 
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import tempfile
@@ -59,16 +62,36 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: Seconds a commit or vacuum waits for a lock held by a live process
+#: before raising ``TimeoutError``.
+LOCK_TIMEOUT_SECS = 120.0
+
+
+@contextlib.contextmanager
+def _flock(path: str, op: int, wait: bool = True):
+    """Hold ``flock(op)`` on ``path``, creating the file if missing. Polls
+    ``LOCK_NB`` until ``LOCK_TIMEOUT_SECS`` have passed, or tries once when
+    ``wait`` is false; either way a failure raises ``TimeoutError``. The
+    file is never unlinked, or a waiter locking the unlinked inode and a
+    newcomer locking a recreated file would both hold it."""
+    fd = os.open(path, os.O_RDONLY | os.O_CREAT, 0o644)
+    try:
+        deadline = time.monotonic() + (LOCK_TIMEOUT_SECS if wait else 0.0)
+        while True:
+            try:
+                fcntl.flock(fd, op | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                if time.monotonic() >= deadline:
+                    raise TimeoutError(f"could not lock {path}") from None
+                time.sleep(0.02)
+        yield
+    finally:
+        os.close(fd)  # releases the lock
+
 
 class SnapshotTable:
     """Plain-parquet table with atomically-published, immutable versions."""
-
-    #: Interval at which an in-flight commit refreshes its staging
-    #: ``.inprogress`` marker. Must be far below any plausible
-    #: ``vacuum(stale_staging_secs=...)`` so a live commit is never
-    #: mistaken for an abandoned one (tests shrink it to exercise the
-    #: race directly).
-    _HEARTBEAT_SECS = 30.0
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -80,69 +103,18 @@ class SnapshotTable:
     def _ensure_dir(self) -> None:
         os.makedirs(self.path, exist_ok=True)
 
-    @contextlib.contextmanager
-    def _inprogress(self, staging: str):
-        """Liveness marker for an in-flight commit (review r5: the
-        tree-idle check alone cannot distinguish 'crashed writer' from
-        'write finished, commit waiting on the lock' — a staging tree
-        goes quiet the moment the parquet job completes, and a vacuum
-        racing that window could rmtree it before the locked rename,
-        failing the commit or worse publishing a version missing part
-        files that a concurrent rmtree already removed).
-
-        Creates ``<staging>.inprogress`` NEXT TO the staging dir (it
-        cannot live inside: ``errorifexists`` requires the dir not to
-        pre-exist) and touches it from a daemon thread every
-        ``_HEARTBEAT_SECS`` for as long as the commit is in flight —
-        through the data write, the lock wait, and the rename. Vacuum
-        treats a staging dir with a fresh marker as live no matter how
-        idle its tree is; a crashed holder stops touching and both dir
-        and marker age into sweepability together."""
-        import threading
-
-        marker = staging + ".inprogress"
-        with open(marker, "w") as f:
-            f.write(str(os.getpid()))
-        stop = threading.Event()
-
-        def _beat():
-            while not stop.wait(self._HEARTBEAT_SECS):
-                try:
-                    os.utime(marker, None)
-                except OSError:
-                    return  # marker gone (vacuumed a crashed twin) — stop
-        t = threading.Thread(target=_beat, daemon=True, name="snapshot-heartbeat")
-        t.start()
-        try:
-            yield
-        finally:
-            stop.set()
-            t.join(timeout=5.0)
-            try:
-                os.unlink(marker)
-            except OSError:
-                pass
-
     @property
     def _manifest(self) -> str:
         return os.path.join(self.path, "_latest")
 
-    def _mutate_lock(self, timeout_secs: float = 120.0, stale_lock_secs: float = 600.0):
-        """Exclusive writer lock on ``_lock`` — the shared ``fs_mutex``
-        (O_CREAT|O_EXCL acquire, single-winner stale break, token-verified
-        release, holder heartbeat; see sources/fslock.py). Guards every
-        manifest read-modify-write (VERDICT r3 #5). The guarded region
-        must stay metadata-sized — commit/vacuum keep their data I/O
-        outside (see module docstring); the heartbeat additionally keeps
-        even a pathologically-paused-but-alive holder from being broken
-        mid-mutation (advice r5)."""
-        from .fslock import fs_mutex
+    @property
+    def _writers(self) -> str:
+        return os.path.join(self.path, "_writers")
 
-        return fs_mutex(
-            os.path.join(self.path, "_lock"),
-            timeout_secs=timeout_secs,
-            stale_secs=stale_lock_secs,
-        )
+    def _mutate_lock(self):
+        """Exclusive ``flock`` on ``_lock``, held around every manifest
+        read-modify-write (see module docstring)."""
+        return _flock(os.path.join(self.path, "_lock"), fcntl.LOCK_EX)
 
     def _load(self) -> dict:
         try:
@@ -186,9 +158,9 @@ class SnapshotTable:
     def foreign_entries(self) -> list[str]:
         """Top-level entries this protocol did not write: anything but a
         ``v=N`` version directory or a ``_``/``.``-prefixed metadata entry
-        (``_latest``, ``_lock``, ``_staging_*``). Another writer's plain
-        parquet shows up here — a directory reader would see it, the
-        manifest never lists it."""
+        (``_latest``, ``_lock``, ``_writers``, ``_staging_*``). Another
+        writer's plain parquet shows up here — a directory reader would
+        see it, the manifest never lists it."""
         return sorted(
             n
             for n in self._listdir()
@@ -205,14 +177,13 @@ class SnapshotTable:
         commit's log entry, published by the same manifest swap as the
         data. Returns the published version number.
 
-        The data write happens OUTSIDE the lock into an unreferenced
-        ``_staging_*`` directory (review r4: holding the lock across a
-        long parquet write outlives any stale-lock lease and invites a
-        concurrent writer to break it mid-write); the locked region is
-        version allocation + one directory rename + manifest publish —
-        milliseconds at any table size. A crash before the rename leaves
-        only a staging orphan (swept by vacuum); after the rename but
-        before publish, an unreferenced v=N orphan (self-healed below)."""
+        The data write happens OUTSIDE ``_lock`` into an unreferenced
+        ``_staging_*`` directory, so concurrent commits write in parallel;
+        the locked region is version allocation + one directory rename +
+        manifest publish — milliseconds at any table size. A crash before
+        the rename leaves only a staging orphan (swept by vacuum); after
+        the rename but before publish, an unreferenced v=N orphan
+        (self-healed below)."""
         return self.commit_files(
             lambda staging: df.write.mode("errorifexists").parquet(staging),
             mode=mode,
@@ -232,18 +203,19 @@ class SnapshotTable:
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
         self._ensure_dir()
-        staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
-        trash = None
-        try:
-            with self._inprogress(staging):
+        # shared: tells vacuum this commit's staging and trash are live
+        with _flock(self._writers, fcntl.LOCK_SH):
+            staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
+            trash = None
+            try:
                 write_fn(staging)
                 version, trash = self._publish_staging(staging, mode, meta)
                 return version
-        finally:
-            if os.path.exists(staging):  # failed commit
-                shutil.rmtree(staging, ignore_errors=True)
-            if trash is not None:
-                shutil.rmtree(trash, ignore_errors=True)
+            finally:
+                if os.path.exists(staging):  # failed commit
+                    shutil.rmtree(staging, ignore_errors=True)
+                if trash is not None:
+                    shutil.rmtree(trash, ignore_errors=True)
 
     def _publish_staging(self, staging: str, mode: str, meta):
         """Locked metadata region of commit(): allocate a version, rename
@@ -259,9 +231,8 @@ class SnapshotTable:
             # Self-heal a crash between rename and publish: an existing
             # v=N dir the manifest does not reference is an unpublished
             # orphan — shunt it aside or this version number wedges
-            # forever. The shunt is a RENAME (metadata-sized, keeps
-            # the lock lease honest); the actual delete happens after
-            # release (review r4).
+            # forever. The shunt is a RENAME (metadata-sized); the
+            # actual delete happens after release (review r4).
             vdir = self._vdir(version)
             if os.path.exists(vdir) and not any(
                 c["v"] == version for c in man["commits"]
@@ -322,26 +293,15 @@ class SnapshotTable:
         # append chains may span additive schema evolution
         return self.spark.read.option("mergeSchema", True).parquet(*dirs)
 
-    def vacuum(
-        self, keep: int = 1, stale_staging_secs: float = 3600.0
-    ) -> list[int]:
+    def vacuum(self, keep: int = 1) -> list[int]:
         """Delete every version directory no retained read can need: reads
         of the newest ``keep`` versions resolve to their base overwrite +
         later appends, so anything older than the oldest retained base —
         and any unpublished crash orphan — goes. Returns versions
         removed.
 
-        ``stale_staging_secs`` bounds the staging-orphan sweep: a
-        ``_staging_*`` directory counts as abandoned only when NOTHING in
-        its tree (not just the top-level dir — an in-flight Spark write
-        lands task files under ``_temporary/`` without touching the
-        top-level mtime, advice r4) has been modified for this long AND
-        its ``.inprogress`` heartbeat marker is absent or equally stale
-        (review r5: a finished write waiting on the commit lock has an
-        idle tree; the live committer proves liveness by touching the
-        marker every ``_HEARTBEAT_SECS``). With the marker in place the
-        threshold no longer needs to exceed the longest commit write —
-        it just needs to comfortably exceed the heartbeat interval."""
+        Also sweeps the ``_staging_*`` entries of dead commits, unless a
+        commit is in flight (see the module docstring)."""
         import shutil
 
         self._ensure_dir()  # vacuum of a never-built table is a no-op
@@ -374,67 +334,32 @@ class SnapshotTable:
                 json.dump(man, f)
             os.replace(tmp, self._manifest)
         # Data deletion happens OUTSIDE the lock (review r4: rmtree of a
-        # large version is data-sized work and must not extend the lease).
+        # large version is data-sized work and must not hold up commits).
         # Every removed dir is already unreferenced by the published
         # manifest: invisible to readers, and no collision with concurrent
         # commits (version numbers only grow past `latest`).
         for v in removed:
             shutil.rmtree(self._vdir(v), ignore_errors=True)
-        # Staging orphans from crashed commits are unreferenced by
-        # construction — but an IN-FLIGHT commit's staging dir looks
-        # identical from the top (its activity is task files appearing
-        # under _temporary/, which never touches the top-level mtime).
-        # Sweep only trees with zero write activity for
-        # `stale_staging_secs` anywhere inside (advice r4: the old
-        # top-level-mtime check could rmtree a live long write, failing
-        # the commit — or worse, racing between job success and the
-        # locked rename, publishing a version with missing part files).
-        # An in-flight commit additionally holds a heartbeat-touched
-        # ``<staging>.inprogress`` marker (review r5: a finished write
-        # waiting on the commit lock has an IDLE tree — tree-idleness
-        # alone cannot prove abandonment). A staging dir is sweepable
-        # only when its tree is idle AND its marker is absent or stale.
-        now = time.time()
-        cutoff = now - stale_staging_secs
-        for name in os.listdir(self.path):
-            p = os.path.join(self.path, name)
-            if name.startswith("_staging_") and not name.endswith(".inprogress"):
-                try:
-                    live_marker = os.path.getmtime(p + ".inprogress") > cutoff
-                except OSError:
-                    live_marker = False  # no marker (pre-r6 crash / trash dir)
-                if not live_marker and self._tree_idle_since(p, cutoff):
-                    shutil.rmtree(p, ignore_errors=True)
-                    with contextlib.suppress(OSError):
-                        os.unlink(p + ".inprogress")
-            elif name.startswith("_staging_") and name.endswith(".inprogress"):
-                # orphan marker whose staging dir is already gone
-                try:
-                    dir_gone = not os.path.exists(p[: -len(".inprogress")])
-                    if dir_gone and os.path.getmtime(p) < cutoff:
-                        os.unlink(p)
-                except OSError:
-                    pass
-        return sorted(removed)
-
-    @staticmethod
-    def _tree_idle_since(root: str, cutoff: float) -> bool:
-        """True iff no file or directory under ``root`` has an mtime newer
-        than ``cutoff``. Walks with early exit on the first fresh entry,
-        so for a live write the scan stops almost immediately; a genuinely
-        abandoned tree is walked once before its one-time delete. Any
-        OSError (entry vanished mid-walk = concurrent activity) counts as
-        fresh — never sweep on ambiguity."""
+        # No live commit holds _writers when the exclusive try succeeds,
+        # so every staging entry listed under it is a dead commit's (or an
+        # old-format ``.inprogress`` marker file); new commits stage under
+        # fresh names, so the deletes can run after release.
         try:
-            if os.path.getmtime(root) > cutoff:
-                return False
-            for dirpath, dirnames, filenames in os.walk(root):
-                for entry in dirnames + filenames:
-                    if os.path.getmtime(os.path.join(dirpath, entry)) > cutoff:
-                        return False
-        except OSError:
-            return False
-        return True
+            with _flock(self._writers, fcntl.LOCK_EX, wait=False):
+                orphans = [
+                    os.path.join(self.path, n)
+                    for n in os.listdir(self.path)
+                    if n.startswith("_staging_")
+                ]
+        except TimeoutError:
+            orphans = []  # a commit is in flight; a later vacuum sweeps
+        for p in orphans:
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                with contextlib.suppress(OSError):
+                    os.unlink(p)
+        return sorted(removed)
 
 
 def _is_version_dir(name: str) -> bool:

@@ -12,9 +12,13 @@ invariants the kit promises:
 - no swept in-flight staging: a commit in flight during a concurrent
   vacuum completes intact, never publishes dangling references;
 - crash containment: a worker killed with os._exit mid-commit leaves
-  only unreferenced orphans that a later stale-threshold vacuum removes.
+  only unreferenced orphans that the next vacuum with no commit in
+  flight removes;
+- kernel-held locks: a process SIGKILLed while holding ``_lock`` blocks
+  no later commit, and a live commit's staging directory survives every
+  vacuum until its process dies.
 
-Runs against the POSIX ``SnapshotTable`` (rename + fs_mutex), the one
+Runs against the POSIX ``SnapshotTable`` (rename + flock), the one
 snapshot protocol every warehouse uses. Workers are plain-Python (pyarrow
 writers through the commit_files seam) — a JVM per process would test
 Spark's launcher, not the protocol.
@@ -22,13 +26,17 @@ Spark's launcher, not the protocol.
 
 from __future__ import annotations
 
+import fcntl
 import multiprocessing as mp
 import os
 import random
+import signal
+import time
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
 
@@ -88,7 +96,7 @@ def _storm_worker(path: str, seed: int, q) -> None:
             v = table.commit_files(_writer(uid, count), mode=op)
             committed.append((v, uid, count))
         elif op == "vacuum":
-            table.vacuum(keep=3, stale_staging_secs=3600.0)
+            table.vacuum(keep=3)
         else:
             # resolve and validate in SEPARATE try blocks:
             # a FileNotFoundError from _validate_snapshot is the
@@ -162,8 +170,9 @@ def _run_storm(warehouse: str):
     # full-history validation of the final snapshot
     _validate_snapshot(table.resolve_dirs())
 
-    # crash orphans: invisible now, swept by a stale-threshold vacuum
-    table.vacuum(keep=1, stale_staging_secs=0.0)
+    # crash orphans: invisible now, swept by the first vacuum that runs
+    # with no commit in flight
+    table.vacuum(keep=1)
     strays = [n for n in os.listdir(warehouse) if n.startswith("_staging_")]
     assert strays == [], f"unswept staging orphans: {strays}"
     # and the retained snapshot still reads clean after the sweep
@@ -172,3 +181,93 @@ def _run_storm(warehouse: str):
 
 def test_posix_snapshot_multiprocess_storm(tmp_path):
     _run_storm(str(tmp_path / "warehouse"))
+
+
+def _lock_holder(path: str, held) -> None:
+    table = SnapshotTable(None, path)
+    table._ensure_dir()
+    with table._mutate_lock():
+        held.set()
+        time.sleep(600)  # inside the manifest lock until SIGKILLed
+
+
+def _stalled_committer(path: str, entered) -> None:
+    def write(target: str) -> None:
+        _writer(uuid.uuid4().hex, 4)(target)
+        entered.set()
+        time.sleep(600)  # inside the data write until SIGKILLed
+
+    SnapshotTable(None, path).commit_files(write, mode="append")
+
+
+def _kill(p) -> None:
+    p.kill()
+    p.join(60)
+    assert p.exitcode == -signal.SIGKILL
+
+
+def test_killed_lock_holder_blocks_no_commit(tmp_path):
+    """A process SIGKILLed inside ``_lock`` leaves the file on disk but
+    holds nothing: the next commit goes through at once instead of
+    waiting out ``LOCK_TIMEOUT_SECS``."""
+    path = str(tmp_path / "warehouse")
+    ctx = mp.get_context("spawn")
+    held = ctx.Event()
+    p = ctx.Process(target=_lock_holder, args=(path, held))
+    p.start()
+    try:
+        assert held.wait(60)
+        # the lock is really held until the kill
+        fd = os.open(os.path.join(path, "_lock"), os.O_RDONLY)
+        try:
+            with pytest.raises(BlockingIOError):
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        finally:
+            os.close(fd)
+    finally:
+        _kill(p)
+    assert os.path.exists(os.path.join(path, "_lock"))
+
+    table = SnapshotTable(None, path)
+    t0 = time.monotonic()
+    v = table.commit_files(_writer(uuid.uuid4().hex, 4))
+    assert time.monotonic() - t0 < 10, "commit waited on a dead holder"
+    assert v == 0
+    _validate_snapshot(table.resolve_dirs())
+
+
+def test_live_staging_survives_vacuum_until_its_writer_dies(tmp_path):
+    """A commit stalled inside its data write keeps its staging directory
+    through any number of vacuums; once its process is SIGKILLed, the
+    next vacuum removes it, and an old-format ``.inprogress`` marker file
+    with it."""
+    path = str(tmp_path / "warehouse")
+    table = SnapshotTable(None, path)
+    table.commit_files(_writer(uuid.uuid4().hex, 4))
+    marker = os.path.join(path, "_staging_0123abcd.inprogress")
+    with open(marker, "w") as f:
+        f.write("123")
+
+    ctx = mp.get_context("spawn")
+    entered = ctx.Event()
+    p = ctx.Process(target=_stalled_committer, args=(path, entered))
+    p.start()
+    try:
+        assert entered.wait(60)
+        (live,) = [
+            os.path.join(path, n)
+            for n in os.listdir(path)
+            if n.startswith("_staging_") and not n.endswith(".inprogress")
+        ]
+        for _ in range(2):
+            table.vacuum(keep=1)
+            assert sorted(os.listdir(live)) == ["part-0.parquet", "part-1.parquet"]
+        assert os.path.exists(marker)  # no sweep at all while a commit runs
+    finally:
+        _kill(p)
+
+    table.vacuum(keep=1)
+    strays = [n for n in os.listdir(path) if n.startswith("_staging_")]
+    assert strays == [], f"unswept staging entries: {strays}"
+    assert table.latest_version() == 0
+    _validate_snapshot(table.resolve_dirs())

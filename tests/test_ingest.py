@@ -149,12 +149,9 @@ def test_ledger_skips_unchanged_reprocesses_changed(spark, tmp_path):
     # Ledger upsert keeps one row per filename (latest hash wins).
     new_hash = {r["filename"]: r["file_hash"] for r in hash_files(spark, [str(f2)])}
     ledger.record([_entry(str(f2), new_hash[str(f2)])], spark.range(0))
-    led = ledger.load()
-    assert led.count() == 2
-    assert (
-        led.filter(F.col("filename") == str(f2)).first()["file_hash"]
-        == new_hash[str(f2)]
-    )
+    led = ledger.latest()
+    assert len(led) == 2
+    assert led[str(f2)]["file_hash"] == new_hash[str(f2)]
 
 
 def test_ledger_keys_distinguish_hive_partitions(spark, tmp_path):
@@ -185,7 +182,7 @@ def test_ledger_keys_distinguish_hive_partitions(spark, tmp_path):
 
     # Third run: NOTHING is re-processed and no entry was evicted.
     assert len(ledger.filter_unprocessed(hash_files(spark, paths))) == 0
-    assert ledger.load().count() == 3
+    assert len(ledger.latest()) == 3
 
 
 def test_strict_dedup_append_replicates_unique_violation(spark):
@@ -292,89 +289,3 @@ def test_hash_files_driver_and_distributed_tiers_agree(
         (str(p), hashlib.md5(p.read_bytes()).hexdigest())
         for p in (odd, tmp_path / "rel-billing.csv", big)
     )
-
-
-def test_fs_mutex_heartbeat_prevents_steal_and_breaks_stale(tmp_path, monkeypatch):
-    """Advice r5 (ledger lock): a LIVE holder whose critical section
-    outlives the stale lease must not have its lock stolen — the holder
-    heart-beats the lock mtime. A genuinely dead holder's lock (no
-    heartbeat) is still broken."""
-    import threading
-    import time as _time
-
-    from billing_data_pipeline_spark.sources.fslock import fs_mutex
-
-    lock = str(tmp_path / "_lock")
-
-    held = threading.Event()
-    release = threading.Event()
-
-    def holder():
-        with fs_mutex(lock, stale_secs=0.3, heartbeat_secs=0.05):
-            held.set()
-            release.wait(5.0)
-
-    t = threading.Thread(target=holder)
-    t.start()
-    assert held.wait(5.0)
-    _time.sleep(0.5)  # well past stale_secs: only the heartbeat saves us
-    try:
-        with fs_mutex(lock, timeout_secs=0.4, stale_secs=0.3, heartbeat_secs=0.05):
-            raise AssertionError("stole a live holder's lock")
-    except TimeoutError:
-        pass
-    finally:
-        release.set()
-        t.join()
-    # dead holder: stale lock with no heartbeat is broken and reacquired
-    with open(lock, "w") as f:
-        f.write("dead-holder")
-    old = _time.time() - 100
-    import os
-
-    os.utime(lock, (old, old))
-    with fs_mutex(lock, timeout_secs=2.0, stale_secs=0.3):
-        pass
-    assert not os.path.exists(lock)
-
-
-def test_fs_mutex_heartbeat_stops_when_token_changes(tmp_path):
-    """Advice r6: a holder whose lock was stale-broken and re-acquired by
-    a NEW holder must NOT keep refreshing the new holder's lock mtime —
-    otherwise a crashed new holder's lock stays eternally fresh and can
-    never be stale-broken while the old process lives. The heartbeat
-    verifies the token before touching and stops when it isn't ours."""
-    import os
-    import threading
-    import time as _time
-
-    from billing_data_pipeline_spark.sources.fslock import fs_mutex
-
-    lock = str(tmp_path / "_lock")
-    held = threading.Event()
-    release = threading.Event()
-
-    def holder():
-        with fs_mutex(lock, stale_secs=600, heartbeat_secs=0.05):
-            held.set()
-            release.wait(5.0)
-
-    t = threading.Thread(target=holder)
-    t.start()
-    assert held.wait(5.0)
-    try:
-        # Simulate a stale-break + re-acquisition by a different process:
-        # replace the lock content with a foreign token and age its mtime.
-        with open(lock, "w") as f:
-            f.write("9999:someone-else")
-        old = _time.time() - 100
-        os.utime(lock, (old, old))
-        _time.sleep(0.3)  # several heartbeat periods
-        # the original holder's heartbeat must NOT have refreshed it
-        assert _time.time() - os.path.getmtime(lock) > 50
-    finally:
-        release.set()
-        t.join()
-    # and release must not have unlinked the foreign lock either
-    assert os.path.exists(lock)
-    assert open(lock).read() == "9999:someone-else"

@@ -40,7 +40,7 @@ def test_pipeline_end_to_end_idempotent(spark, tmp_path):
     assert pipe.read("raw_billing").count() == n_rows
     assert m1["aggregates"]["daily_aggs_rows"] == 2
     assert pipe.read("user_aggs").count() == 4
-    assert pipe.ledger().load().count() == 2
+    assert len(pipe.ledger().latest()) == 2
 
     report = m1["report_markdown"]
     assert "# Billing Insights Report" in report
@@ -51,7 +51,7 @@ def test_pipeline_end_to_end_idempotent(spark, tmp_path):
     # Per-file record counts (reference ingest.py:262-265): each ledger row
     # carries ITS file's appended rows, not the batch total.
     counts = sorted(
-        r["record_count"] for r in pipe.ledger().load().collect()
+        e["record_count"] for e in pipe.ledger().latest().values()
     )
     assert counts == [6, 8]
 
@@ -78,7 +78,7 @@ def test_pipeline_end_to_end_idempotent(spark, tmp_path):
     m3 = pipe.run(root)
     assert m3["ingest"]["files_new_or_changed"] == 1
     assert m3["ingest"]["rows_appended"] == 1
-    assert pipe.ledger().load().count() == 3
+    assert len(pipe.ledger().latest()) == 3
 
     m4 = pipe.run(root)
     assert m4["ingest"]["files_new_or_changed"] == 0
@@ -243,8 +243,8 @@ def _crash_lake(tmp_path):
 
 def _ledger_counts(pipe):
     return {
-        r["filename"].rsplit("/", 2)[-2]: r["record_count"]
-        for r in pipe.ledger().load().collect()
+        f.rsplit("/", 2)[-2]: e["record_count"]
+        for f, e in pipe.ledger().latest().items()
     }
 
 

@@ -206,8 +206,9 @@ def test_snapshot_table_concurrent_commits_lose_nothing(spark, tmp_path):
 
 
 def test_snapshot_table_stale_lock_is_broken(spark, tmp_path):
-    """A lock file left by a crashed writer (old mtime) must be broken
-    rather than deadlocking every future commit."""
+    """A leftover ``_lock`` file of any age, fresh or old, with an old
+    writer's token in it, does not block a commit: only a held ``flock``
+    does, and the kernel drops that when its holder dies."""
     import os
     import time as _time
 
@@ -218,143 +219,27 @@ def test_snapshot_table_stale_lock_is_broken(spark, tmp_path):
     lock = os.path.join(t.path, "_lock")
     with open(lock, "w") as f:
         f.write("99999")
-    old = _time.time() - 10_000
-    os.utime(lock, (old, old))
-    v = t.commit(spark.range(2).withColumnRenamed("id", "k"))
-    assert v == 0 and not os.path.exists(lock)
-
-
-def test_snapshot_table_release_respects_other_holders_lock(spark, tmp_path):
-    """A holder whose lock was broken (stale lease) and re-acquired by a
-    NEWER writer must not unlink the new holder's lock on release — the
-    release path verifies the acquisition token (review r4: a bare
-    finally-unlink sheared whoever held the lock at exit time)."""
-    import os
-
-    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
-
-    t = SnapshotTable(spark, str(tmp_path / "snap_tok"))
-    t._ensure_dir()  # init no longer mkdirs (review r7: read purity)
-    lock = os.path.join(t.path, "_lock")
-    with t._mutate_lock():
-        # simulate a break + re-acquire happening while we hold the lock
-        os.unlink(lock)
-        with open(lock, "w") as f:
-            f.write("someone-else's-token")
-    # our release must have left the new holder's lock in place
-    with open(lock) as f:
-        assert f.read() == "someone-else's-token"
-    os.unlink(lock)
-
-
-def test_snapshot_table_vacuum_sweeps_stale_staging_orphans(spark, tmp_path):
-    """A _staging_* dir from a crashed commit (older than the lock lease)
-    is unreferenced by construction and must be swept by vacuum; a FRESH
-    staging dir (possible in-flight commit) must be left alone."""
-    import os
-    import time as _time
-
-    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
-
-    t = SnapshotTable(spark, str(tmp_path / "snap_stage"))
-    t.commit(spark.range(1).withColumnRenamed("id", "k"))
-    stale = os.path.join(t.path, "_staging_deadbeef")
-    fresh = os.path.join(t.path, "_staging_cafebabe")
-    # in-flight long write: the top-level dir mtime went stale long ago,
-    # but Spark tasks keep landing files under _temporary/ (advice r4 —
-    # the old top-level-only check swept exactly this shape mid-commit)
-    inflight = os.path.join(t.path, "_staging_12345678")
-    os.makedirs(stale)
-    os.makedirs(fresh)
-    os.makedirs(os.path.join(inflight, "_temporary", "0"))
-    old = _time.time() - 10_000
-    with open(os.path.join(stale, "part-0.parquet"), "w") as f:
-        f.write("x")
-    task_file = os.path.join(inflight, "_temporary", "0", "part-0.parquet")
-    with open(task_file, "w") as f:
-        f.write("x")
-    for p in (
-        stale,
-        os.path.join(stale, "part-0.parquet"),
-        inflight,
-        os.path.join(inflight, "_temporary"),
-        os.path.join(inflight, "_temporary", "0"),
-    ):
-        os.utime(p, (old, old))
-    # task_file keeps its fresh mtime: ONE fresh entry anywhere in the
-    # tree must protect the whole staging dir
-    t.vacuum(keep=1)
-    assert not os.path.exists(stale)
-    assert os.path.exists(fresh)
-    assert os.path.exists(inflight)
-    # once the write truly dies (everything idle past the threshold) the
-    # orphan goes — with the threshold now a parameter, not the lock lease
-    os.utime(task_file, (old, old))
-    t.vacuum(keep=1, stale_staging_secs=5_000)
-    assert not os.path.exists(inflight)
-    assert os.path.exists(fresh)
-
-
-def test_snapshot_inprogress_marker_protects_idle_staging(spark, tmp_path):
-    """The tree-idle check alone cannot tell 'crashed writer' from 'write
-    finished, commit waiting on the lock' (review r5): a staging tree goes
-    quiet the moment the parquet job completes. A fresh ``.inprogress``
-    marker must protect a fully-idle staging dir; a STALE marker (crashed
-    holder stopped heart-beating) must not, and the marker is swept with
-    the dir."""
-    import os
-    import time as _time
-
-    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
-
-    t = SnapshotTable(spark, str(tmp_path / "snap_marker"))
-    t.commit(spark.range(1).withColumnRenamed("id", "k"))
-    old = _time.time() - 10_000
-
-    protected = os.path.join(t.path, "_staging_aaaa0001")
-    os.makedirs(protected)
-    with open(os.path.join(protected, "part-0.parquet"), "w") as f:
-        f.write("x")
-    for p in (protected, os.path.join(protected, "part-0.parquet")):
-        os.utime(p, (old, old))  # entire tree idle — write finished
-    with open(protected + ".inprogress", "w") as f:
-        f.write("123")  # fresh marker: commit alive, waiting on the lock
-
-    crashed = os.path.join(t.path, "_staging_aaaa0002")
-    os.makedirs(crashed)
-    os.utime(crashed, (old, old))
-    with open(crashed + ".inprogress", "w") as f:
-        f.write("456")
-    os.utime(crashed + ".inprogress", (old, old))  # heartbeat died long ago
-
-    t.vacuum(keep=1)
-    assert os.path.exists(protected), "live marker must protect idle staging"
-    assert os.path.exists(protected + ".inprogress")
-    assert not os.path.exists(crashed), "stale marker does not protect"
-    assert not os.path.exists(crashed + ".inprogress"), "marker swept with dir"
-
-    # orphan marker whose dir is already gone ages out too
-    orphan_marker = os.path.join(t.path, "_staging_aaaa0003.inprogress")
-    with open(orphan_marker, "w") as f:
-        f.write("789")
-    os.utime(orphan_marker, (old, old))
-    t.vacuum(keep=1)
-    assert not os.path.exists(orphan_marker)
+    for age in (0, 10_000):
+        then = _time.time() - age
+        os.utime(lock, (then, then))
+        t0 = _time.monotonic()
+        v = t.commit(spark.range(2).withColumnRenamed("id", "k"))
+        assert _time.monotonic() - t0 < 60, "commit waited on a dead lock"
+    assert v == 1 and t.latest_version() == 1
 
 
 def test_snapshot_vacuum_racing_slow_commit_loses_nothing(spark, tmp_path, monkeypatch):
     """THE r5 verdict race, run for real: a commit whose parquet write is
-    slow (sleeping Arrow batches) while an aggressive vacuum loop sweeps
-    with a tiny stale_staging_secs. The heartbeat marker must keep the
-    staging dir alive through the write AND the lock wait; the commit must
-    publish every row."""
+    slow (sleeping Arrow batches) while a vacuum loop runs every 0.1 s.
+    The commit's shared ``_writers`` lock must keep its staging dir alive
+    through the write AND the ``_lock`` wait; the commit must publish
+    every row."""
     import os
     import threading
     import time as _time
 
     from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
 
-    monkeypatch.setattr(SnapshotTable, "_HEARTBEAT_SECS", 0.05)
     t = SnapshotTable(spark, str(tmp_path / "snap_race"))
     t.commit(spark.range(1).withColumnRenamed("id", "k"))
 
@@ -362,7 +247,7 @@ def test_snapshot_vacuum_racing_slow_commit_loses_nothing(spark, tmp_path, monke
         import time as _t
 
         for pdf in it:
-            _t.sleep(1.5)  # >> stale_staging_secs below
+            _t.sleep(1.5)  # >> the vacuum loop's period below
             yield pdf
 
     slow_df = (
@@ -373,9 +258,10 @@ def test_snapshot_vacuum_racing_slow_commit_loses_nothing(spark, tmp_path, monke
     )
 
     stop = threading.Event()
-    # Record every rmtree on a staging path: with the heartbeat marker the
-    # vacuum loop must never touch the live staging dir (commit's own
-    # cleanup is guarded by os.path.exists and fires only on failure).
+    # Record every rmtree on a staging path: with the commit holding
+    # _writers the vacuum loop must never touch the live staging dir
+    # (commit's own cleanup is guarded by os.path.exists and fires only
+    # on failure).
     import shutil as _shutil
 
     real_rmtree = _shutil.rmtree
@@ -390,7 +276,7 @@ def test_snapshot_vacuum_racing_slow_commit_loses_nothing(spark, tmp_path, monke
 
     def vacuum_loop():
         while not stop.is_set():
-            t.vacuum(keep=10, stale_staging_secs=0.3)
+            t.vacuum(keep=10)
             _time.sleep(0.1)
 
     v = threading.Thread(target=vacuum_loop)
@@ -404,7 +290,7 @@ def test_snapshot_vacuum_racing_slow_commit_loses_nothing(spark, tmp_path, monke
     assert not swept, f"a staging dir was rmtree'd mid-commit: {swept}"
     got = sorted(r["k"] for r in t.read().collect())
     assert got == [0, 1, 2, 3]
-    # no staging debris or markers left behind
+    # no staging debris left behind
     leftovers = [n for n in os.listdir(t.path) if n.startswith("_staging_")]
     assert leftovers == []
 
