@@ -10,7 +10,9 @@ MIGRATION.md).
 
 `run` executes the full asset DAG (ingest -> aggregates -> insights) over
 the Hive-partitioned CSV lake, with the backfill window as partition
-predicates; `insights` re-renders the report from existing tables.
+predicates; `insights` prints the report the last `run` stored, and exits
+nonzero when that report is not current (raw_billing has moved since, or
+the code that derives it changed), without starting Spark.
 Scheduling is cron calling `run`, the replacement for the reference's
 polling sensors: each call ingests only files whose stat or content moved,
 and a call that finds none returns the stored report without rebuilding.
@@ -38,7 +40,7 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument("--from", dest="from_date", help="backfill start YYYY-MM-DD")
     run.add_argument("--to", dest="to_date", help="backfill end YYYY-MM-DD")
 
-    ins = sub.add_parser("insights", help="re-render the report from existing tables")
+    ins = sub.add_parser("insights", help="print the report the last run stored")
     ins.add_argument("--warehouse", required=True)
 
     cu = sub.add_parser(
@@ -51,6 +53,26 @@ def main(argv: list[str] | None = None) -> int:
     cu.add_argument("--shards", type=int, default=8)
 
     args = ap.parse_args(argv)
+
+    if args.cmd == "insights":
+        from .pipeline import BillingPipeline
+
+        # manifest and file reads only: no Spark session
+        pipe = BillingPipeline(None, args.warehouse)
+        stored = pipe.published(pipe.raw_version())
+        if stored is None:
+            print(
+                f"{args.warehouse} holds no report of raw_billing's latest"
+                " version built by this code: run"
+                " `python -m billing_data_pipeline_spark run` first",
+                file=sys.stderr,
+            )
+            return 1
+        _, metrics, report = stored
+        json.dump(metrics, sys.stdout, default=str)
+        print()
+        print(report, file=sys.stderr)
+        return 0
 
     from .session import get_spark
 
@@ -65,15 +87,6 @@ def main(argv: list[str] | None = None) -> int:
             to_date=_parse_date(args.to_date),
         )
         report = metrics.pop("report_markdown", "")
-        json.dump(metrics, sys.stdout, default=str)
-        print()
-        print(report, file=sys.stderr)
-        return 0
-
-    if args.cmd == "insights":
-        from .pipeline import BillingPipeline
-
-        report, metrics = BillingPipeline(spark, args.warehouse).insights()
         json.dump(metrics, sys.stdout, default=str)
         print()
         print(report, file=sys.stderr)

@@ -33,24 +33,32 @@ def dedup_within_batch(batch: DataFrame, keys: Sequence[str]) -> DataFrame:
 
     The reference lets intra-batch dupes trip the UNIQUE constraint and fail
     the load (ingest.py:190); idempotency being the stated intent, this
-    engine dedups within the batch instead (first-wins is arbitrary —
-    dropDuplicates keeps an arbitrary row per key, which matches the
-    reference's "any one row per key" end state).
+    engine dedups within the batch instead, keeping one arbitrary row per
+    key, which matches the reference's "any one row per key" end state.
+    One ``first()`` of a struct of the other columns keeps the partial
+    aggregate at the keys plus two fields; ``dropDuplicates``' one
+    ``first()`` per column passed Spark's 25-field limit for plan strings,
+    and every ``persist()`` of the batch logged a truncation WARN.
 
-    NULL-keyed rows pass through UNTOUCHED (review r7): dropDuplicates
-    treats NULL == NULL, but SQL UNIQUE (the reference's constraint) and
-    this module's own contract say NULL-key rows are never duplicates of
-    each other — two distinct transactions sharing a NULL invoice_id
-    were silently collapsed to one.
+    NULL-keyed rows pass through UNTOUCHED (review r7): grouping treats
+    NULL == NULL, but SQL UNIQUE (the reference's constraint) and this
+    module's own contract say NULL-key rows are never duplicates of each
+    other — two distinct transactions sharing a NULL invoice_id were
+    silently collapsed to one.
     """
     from functools import reduce
     from operator import or_
 
     keys = list(keys)
+    rest = [c for c in batch.columns if c not in keys]
     has_null = reduce(or_, (F.col(k).isNull() for k in keys))
-    return batch.filter(~has_null).dropDuplicates(keys).unionByName(
-        batch.filter(has_null)
+    one_per_key = (
+        batch.filter(~has_null)
+        .groupBy(*keys)
+        .agg(F.first(F.struct(*rest)).alias("_row"))
+        .select(*keys, "_row.*")
     )
+    return one_per_key.select(*batch.columns).unionByName(batch.filter(has_null))
 
 
 def dedup_append(
@@ -66,7 +74,7 @@ def dedup_append(
     (ingest.py:248-257). NULL keys never match => always kept, matching SQL
     semantics on both engines.
 
-    ``dedup_batch=False`` skips the intra-batch dropDuplicates (a full
+    ``dedup_batch=False`` skips the intra-batch dedup (a full
     shuffle of the batch): use it when the batch is known key-unique — the
     anti-join itself then needs no batch-side shuffle at all (broadcast
     existing keys).

@@ -16,28 +16,33 @@ Stage semantics preserved:
   that finds nothing launches no Spark job at any lake size. The batch
   reads only the new or changed files.
 - aggregates: four FULL-REFRESH tables (the reference's DELETE + INSERT,
-  S8/OPT5) as atomic snapshot overwrites; the daily_aggs commit also
-  observes raw's exact credit_usage total.
+  S8/OPT5), one Spark write each; the daily_aggs write also observes
+  raw's exact credit_usage total.
 - insights: markdown at the collect edge (S10) from what the aggregate
   pass produced: the total from that observation, top-5 users and regions
   from user_aggs and region_aggs (one job each), the operation and tier
   sections from one collect of service_aggs, the ledger section from
-  raw_billing's commit log (no job). Stored as the fifth snapshot table
-  ``billing_insights`` (the reference's 7th asset): one overwrite commit
-  holding ``report.md``, with the run's metrics in the commit's ``meta``.
+  raw_billing's commit log (no job).
 
-Reuse rule: every commit of the four aggregate tables and of
-``billing_insights`` is stamped with the ``raw_billing`` version it read
-and with ``DERIVATION``, a hash of the source of the code that derives
-them (this module, ``operators.aggregates``, ``operators.reports``,
-``operators.ledger``). When all five latest commits carry the version
-``raw_billing`` is at after ingest and the running code's ``DERIVATION``,
-``run()`` returns the stored aggregates, insights and report: no commit,
-no Spark job. Anything else rebuilds all five: a new or changed file (a
-header-only one too: its ledger commit moves the version), a deploy that
-changed any of those modules, a crash between the commits, a warehouse
-written before the stamps. Reuse only returns what the last full rebuild
-published.
+The four tables and the report publish together: each rebuild is ONE
+overwrite commit of the snapshot table ``billing_insights`` (the
+reference's 7th asset), whose version directory holds ``daily_aggs/``,
+``user_aggs/``, ``service_aggs/`` and ``region_aggs/`` (parquet) and
+``report.md``, with the run's metrics in the commit's ``meta``. A reader
+that pins one version sees all five built from one ``raw_billing``
+version; a crash before the commit leaves the previous version whole.
+``read(name)`` resolves an aggregate name to its subdirectory.
+
+Reuse rule: every derived commit is stamped with the ``raw_billing``
+version it read and with ``DERIVATION``, a hash of the source of the code
+that derives it (this module, ``operators.aggregates``,
+``operators.reports``, ``operators.ledger``). When the latest one carries
+the version ``raw_billing`` is at after ingest and the running code's
+``DERIVATION``, ``run()`` returns the stored aggregates, insights and
+report: no commit, no Spark job. Anything else rebuilds: a new or changed
+file (a header-only one too: its ledger commit moves the version), a
+deploy that changed any of those modules, a warehouse written before the
+stamps.
 
 Every warehouse table publishes through one protocol, the POSIX
 ``SnapshotTable`` opened by ``os_snapshot.snapshot_table_for``, so
@@ -54,7 +59,6 @@ Every stage returns an O2-style metrics dict.
 
 from __future__ import annotations
 
-import functools
 import hashlib
 import inspect
 import os
@@ -64,7 +68,7 @@ from datetime import date
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.aggregates import exact_total, global_sum, grouped_profile
+from .operators.aggregates import exact_total, grouped_profile
 from .operators.ingest import append_new_rows_per_file
 from .operators.ledger import (
     FileLedger,
@@ -96,21 +100,25 @@ def _derivation() -> str:
 
 DERIVATION = _derivation()
 
+#: The snapshot table every derived commit goes to, and the aggregate
+#: tables each of its versions holds as a subdirectory.
+DERIVED = "billing_insights"
+AGGREGATES = ("daily_aggs", "user_aggs", "service_aggs", "region_aggs")
+
+
 def _stamp(raw_version: int | None) -> dict:
-    """The meta every derived commit carries: what it was built from, and
-    by which code."""
+    """The stamp every derived commit's meta carries: what it was built
+    from, and by which code."""
     return {"raw_version": raw_version, "derivation": DERIVATION}
 
 
-def aggregate_frames(raw: DataFrame, total: Observation | None = None) -> dict:
-    """The four aggregate tables over ``raw``, by name. With ``total``, the
-    daily_aggs scan also observes into it raw's exact credit_usage total,
+def aggregate_frames(raw: DataFrame, total: Observation) -> dict:
+    """The four aggregate tables over ``raw``, by name. The daily_aggs scan
+    also observes into ``total`` raw's exact credit_usage total,
     ``global_sum``'s expression (the report's total)."""
     succ = F.col("success")
     flags = {"success_count": succ, "failure_count": ~succ}
-    daily_raw = raw if total is None else raw.observe(
-        total, exact_total("credit_usage").alias("total")
-    )
+    daily_raw = raw.observe(total, exact_total("credit_usage").alias("total"))
     return {
         # reference: aggregates.py:34-48
         "daily_aggs": grouped_profile(
@@ -163,9 +171,10 @@ def _report_file(version_dir: str) -> str:
 
 
 class BillingPipeline:
-    """One warehouse directory holding raw_billing, the four aggregate
-    tables and billing_insights, each a snapshot table; the processing
-    ledger lives in raw_billing's commit log."""
+    """One warehouse directory holding two snapshot tables: raw_billing,
+    whose commit log also holds the processing ledger, and
+    billing_insights, whose versions each hold the four aggregate tables
+    and the report."""
 
     def __init__(self, spark: SparkSession, warehouse_dir: str):
         self.spark = spark
@@ -187,23 +196,29 @@ class BillingPipeline:
 
     def raw_version(self) -> int | None:
         """raw_billing's latest published version: the stamp of every
-        table derived from it."""
+        derived commit built from it."""
         return self._table("raw_billing").latest_version()
 
     def read(self, name: str, schema=None, version: int | None = None) -> DataFrame:
         """Table ``name`` (at ``version``, latest when None); a known
         ``schema`` skips reading it from the parquet footers (raw_billing
-        holds one directory per commit)."""
-        st = self._table(name)
-        if version is not None or st.latest_version() is not None:
-            return st.read(version=version, schema=schema)
-        # a table written as plain parquet still reads: warehouses from
-        # before snapshots, and perfbench's --tamper check, which rewrites
-        # raw_billing that way to prove its checks fail
+        holds one directory per commit). An aggregate table is read from
+        its subdirectory of that billing_insights version."""
+        if name in AGGREGATES:
+            (d,) = self._table(DERIVED).resolve_dirs(version)
+            path = os.path.join(d, name)
+        else:
+            st = self._table(name)
+            if version is not None or st.latest_version() is not None:
+                return st.read(version=version, schema=schema)
+            # a table written as plain parquet still reads: warehouses from
+            # before snapshots, and perfbench's --tamper check, which
+            # rewrites raw_billing that way to prove its checks fail
+            path = self.table_path(name)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.parquet(self.table_path(name))
+        return reader.parquet(path)
 
     # -- stage 1: ingest ----------------------------------------------------
 
@@ -293,129 +308,87 @@ class BillingPipeline:
     # -- stage 2: aggregates (full refresh, OPT4/OPT5) ----------------------
 
     def build_aggregates(
-        self, raw_version: int | None = None, total: Observation | None = None
+        self, staging: str, raw_version: int, total: Observation
     ) -> dict:
-        """Rebuild the four tables from raw_billing at ``raw_version``
-        (latest when None); each commit is stamped with that version and
-        ``DERIVATION``. With ``total``, the daily_aggs commit observes into
-        it raw's exact credit_usage total (``aggregate_frames``)."""
-        if raw_version is None:
-            raw_version = self.raw_version()
+        """Write the four tables, built from raw_billing at
+        ``raw_version``, into ``staging/<name>``, one Spark write each. The
+        daily_aggs write also observes into ``total`` raw's exact
+        credit_usage total (``aggregate_frames``)."""
         raw = self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA, raw_version)
         tables = aggregate_frames(raw, total)
         # insights reads the tables back with the schemas they are written with
         self._aggregate_schemas = {name: df.schema for name, df in tables.items()}
         # O2 metrics via the Observation API: row counts are collected from
         # the SAME job that writes each table — no read-back count scan.
-        # At 100 TB the old pattern (write, then re-scan to count) doubled
-        # the I/O of every aggregate refresh.
+        # run() rebuilds only over a raw_billing that holds rows, so every
+        # table has a row and its observation materializes.
         metrics = {}
         for name, df in tables.items():
             obs = Observation(f"{name}_obs")
-            # atomic publish: stage, rename, manifest swap — a crash
-            # mid-refresh leaves the previous version readable, never a
-            # deleted/torn table (review r6); keep one prior version so
-            # in-flight readers of the old snapshot finish
-            st = self._table(name)
-            st.commit(
-                df.observe(obs, F.count(F.lit(1)).alias("rows")),
-                meta=_stamp(raw_version),
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.parquet(
+                os.path.join(staging, name)
             )
-            st.vacuum(keep=2)
-            try:
-                metrics[f"{name}_rows"] = obs.get["rows"]
-            except Exception:
-                # AQE empty-relation propagation can eliminate the
-                # CollectMetrics node when the input is zero rows, so the
-                # observation never materializes (same carve-out as
-                # curate._obs_n). The write above still succeeded; read the
-                # count back from the published table.
-                metrics[f"{name}_rows"] = self.read(name).count()
+            metrics[f"{name}_rows"] = obs.get["rows"]
         return metrics
 
     # -- stage 3: insights --------------------------------------------------
 
     def insights(
-        self, raw_version: int | None = None, total: float | None = None
+        self, staging: str, raw_version: int, total: float
     ) -> tuple[str, dict]:
-        """The report as of raw_billing at ``raw_version`` (latest when
-        None): the current aggregate tables, the ledger folded to that
-        version, and ``total``, raw's exact credit_usage total: ``run()``
-        passes the one ``build_aggregates`` observed; without it (the
-        ``insights`` CLI) raw at the version is scanned. The tables are
-        read with declared schemas (``_aggregate_schemas``): no footer job."""
-        if raw_version is None:
-            raw_version = self.raw_version()
-        if total is None:
-            raw = self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA, raw_version)
-            total = global_sum(raw, "credit_usage", "total").first()["total"]
+        """The report over the tables ``build_aggregates`` staged, read
+        with the schemas it wrote them with (no footer job), the ledger
+        folded to ``raw_version``, and ``total``, raw's exact credit_usage
+        total that the daily_aggs write observed."""
         user, region, service = (
-            self.read(t, self._aggregate_schemas[t])
+            self.spark.read.schema(self._aggregate_schemas[t]).parquet(
+                os.path.join(staging, t)
+            )
             for t in ("user_aggs", "region_aggs", "service_aggs")
         )
         ledger = list(self.ledger().latest(raw_version).values())
         return billing_insights(total, user, region, service, ledger=ledger)
 
-    @functools.cached_property
-    def _aggregate_schemas(self) -> dict:
-        """The aggregate tables' schemas: those ``build_aggregates`` wrote,
-        or else the builders analysed over an empty raw frame. No Spark
-        job, and no copy of them to drift."""
-        empty = self.spark.createDataFrame([], RAW_BILLING_TABLE_SCHEMA)
-        return {name: df.schema for name, df in aggregate_frames(empty).items()}
+    def _rebuild(self, raw_version: int) -> tuple[dict, dict, str]:
+        """One overwrite commit of billing_insights: the four tables and
+        ``report.md`` in the version directory, the stamp and the run's
+        metrics in the commit's meta. Returns (aggregates, insights,
+        report)."""
+        built = []
 
-    def _publish_report(
-        self, raw_version: int, aggregates: dict, insights: dict, report: str
-    ) -> None:
-        """One overwrite commit of billing_insights: ``report.md`` in the
-        version directory, the run's metrics in the commit's meta."""
-
-        def write(staging: str) -> None:
-            os.makedirs(staging)
+        def write(staging: str) -> dict:
+            total = Observation("raw_total_obs")
+            aggregates = self.build_aggregates(staging, raw_version, total)
+            report, insights = self.insights(staging, raw_version, total.get["total"])
             with open(_report_file(staging), "w", encoding="utf-8", newline="") as f:
                 f.write(report)
+            built.extend((aggregates, insights, report))
+            return {**_stamp(raw_version), "aggregates": aggregates, "insights": insights}
 
-        st = self._table("billing_insights")
-        st.commit_files(
-            write,
-            meta={
-                **_stamp(raw_version),
-                "aggregates": aggregates,
-                "insights": insights,
-            },
-        )
+        st = self._table(DERIVED)
+        st.commit_files(write)
+        # keep one prior version so in-flight readers of it finish
         st.vacuum(keep=2)
+        return tuple(built)
 
-    def _published(self, raw_version: int) -> tuple[dict, dict, str] | None:
-        """(aggregates, insights, report) of the last full rebuild, when it
-        and every aggregate table's latest commit carry ``_stamp(
-        raw_version)``; None otherwise. Manifest reads and one file read,
-        no Spark job."""
-        stamp = _stamp(raw_version)
-
-        def latest(name: str) -> dict:
-            commits = self._table(name).commits()
-            return commits[-1] if commits else {}
-
-        def stamped(commit: dict) -> bool:
-            meta = commit.get("meta") or {}
-            return all(meta.get(k) == x for k, x in stamp.items())
-
-        report = latest("billing_insights")
-        if not stamped(report) or not all(
-            stamped(latest(name))
-            for name in ("daily_aggs", "user_aggs", "service_aggs", "region_aggs")
-        ):
+    def published(self, raw_version: int | None) -> tuple[dict, dict, str] | None:
+        """(aggregates, insights, report) of the latest derived commit
+        when it carries ``_stamp(raw_version)``; None otherwise. One
+        manifest read and one file read, no Spark job."""
+        st = self._table(DERIVED)
+        commits = st.commits()
+        meta = (commits[-1].get("meta") if commits else None) or {}
+        if any(meta.get(k) != x for k, x in _stamp(raw_version).items()):
             return None
         try:
             # the file of the commit just checked: a concurrent rebuild
             # may have published a newer one since
-            (d,) = self._table("billing_insights").resolve_dirs(report["v"])
+            (d,) = st.resolve_dirs(commits[-1]["v"])
             with open(_report_file(d), encoding="utf-8", newline="") as f:
                 markdown = f.read()
         except FileNotFoundError:
             return None  # vacuumed by two newer rebuilds meanwhile
-        return report["meta"]["aggregates"], report["meta"]["insights"], markdown
+        return meta["aggregates"], meta["insights"], markdown
 
     # -- the DAG ------------------------------------------------------------
 
@@ -426,7 +399,7 @@ class BillingPipeline:
         to_date: date | None = None,
     ) -> dict:
         """Topological materialization of the whole asset graph. While
-        raw_billing's version has not moved since the last full rebuild,
+        raw_billing's version has not moved since the last rebuild,
         returns that rebuild's stored results instead."""
         metrics = {"ingest": self.ingest(source_root, from_date, to_date)}
         v = metrics["raw_version"] = self.raw_version()
@@ -441,19 +414,7 @@ class BillingPipeline:
             metrics["insights"] = {}
             metrics["report_markdown"] = ""
             return metrics
-        published = self._published(v)
-        if published is None:
-            # the report's exact total rides the daily_aggs scan of raw
-            obs = Observation("raw_total_obs")
-            aggregates = self.build_aggregates(v, obs)
-            try:
-                total = obs.get["total"]
-            except Exception:  # build_aggregates' carve-out: insights scans raw
-                total = None
-            report, insights = self.insights(v, total)
-            self._publish_report(v, aggregates, insights, report)
-        else:
-            aggregates, insights, report = published
+        aggregates, insights, report = self.published(v) or self._rebuild(v)
         metrics["aggregates"] = aggregates
         metrics["insights"] = insights
         metrics["report_markdown"] = report

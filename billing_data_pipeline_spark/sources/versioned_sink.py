@@ -193,10 +193,12 @@ class SnapshotTable:
     def commit_files(self, write_fn, mode: str = "overwrite", meta=None) -> int:
         """``commit`` with the data write abstracted: ``write_fn(staging)``
         materializes the version's files under the (not-yet-existing)
-        staging directory. This is the engine-agnostic seam the
-        multi-process durability sweep uses (pyarrow writers in plain
-        Python workers — a JVM per process would test the JVM, not the
-        protocol); the Spark path above is one-line sugar over it."""
+        staging directory. A ``write_fn`` that returns something other
+        than None returns the commit's ``meta``: metadata the write itself
+        computes. This is the engine-agnostic seam the multi-process
+        durability sweep uses (pyarrow writers in plain Python workers — a
+        JVM per process would test the JVM, not the protocol); the Spark
+        path above is one-line sugar over it."""
         import shutil
         import uuid
 
@@ -208,7 +210,9 @@ class SnapshotTable:
             staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
             trash = None
             try:
-                write_fn(staging)
+                written = write_fn(staging)
+                if written is not None:
+                    meta = written
                 version, trash = self._publish_staging(staging, mode, meta)
                 return version
             finally:

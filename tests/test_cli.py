@@ -8,6 +8,14 @@ from .test_pipeline_e2e import _write_lake
 
 
 def test_cli_run_and_insights(spark, tmp_path, capsys):
+    """`insights` prints the report the last `run` stored, and exits
+    nonzero, naming `run`, once raw_billing has moved past it."""
+    import pathlib
+
+    from billing_data_pipeline_spark.pipeline import BillingPipeline
+
+    from .test_pipeline_e2e import CSV_HEADER
+
     lake, _n = _write_lake(tmp_path)
     wh = str(tmp_path / "wh")
 
@@ -20,10 +28,25 @@ def test_cli_run_and_insights(spark, tmp_path, capsys):
     assert metrics["raw_version"] == 0  # the raw_billing version reported on
     assert "Billing Insights" in err or "##" in err  # report on stderr
 
+    report = err
     rc = main(["insights", "--warehouse", wh])
     assert rc == 0
     out, err = capsys.readouterr()
-    assert json.loads(out)  # metrics dict
+    assert json.loads(out) == metrics["insights"]
+    assert err == report
+
+    # an ingest without a rebuild makes the stored report stale
+    p = pathlib.Path(lake) / "year=2025" / "month=04" / "day=24"
+    p.mkdir(parents=True)
+    (p / "billing.csv").write_text(
+        CSV_HEADER
+        + "2025-04-24 10:00:00,res-9,user-9,2.5,us,pro,inference,true,gpu,inv-24-0,USD\n"
+    )
+    assert BillingPipeline(spark, wh).ingest(lake)["rows_appended"] == 1
+    rc = main(["insights", "--warehouse", wh])
+    assert rc != 0
+    out, err = capsys.readouterr()
+    assert out == "" and " run`" in err
 
 
 def test_cli_curate_writes_deterministic_shards(spark, tmp_path, capsys):

@@ -22,6 +22,11 @@ Runs against the POSIX ``SnapshotTable`` (rename + flock), the one
 snapshot protocol every warehouse uses. Workers are plain-Python (pyarrow
 writers through the commit_files seam) — a JVM per process would test
 Spark's launcher, not the protocol.
+
+One more test runs the pipeline itself: a plain-Python reader process
+pins one ``billing_insights`` version per read while ``run()`` rebuilds
+it over and over, and every read must see the four aggregate tables and
+``report.md`` built from that version's one ``raw_billing`` version.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ import fcntl
 import multiprocessing as mp
 import os
 import random
+import re
 import signal
 import time
 import uuid
@@ -271,3 +277,80 @@ def test_live_staging_survives_vacuum_until_its_writer_dies(tmp_path):
     assert strays == [], f"unswept staging entries: {strays}"
     assert table.latest_version() == 0
     _validate_snapshot(table.resolve_dirs())
+
+
+# -- the pipeline's derived commit under a concurrent reader -----------------
+
+AGGREGATES = ("daily_aggs", "user_aggs", "service_aggs", "region_aggs")
+
+
+def _pinned_reader(warehouse: str, ready, stop, q) -> None:
+    """Until ``stop``: pin the latest billing_insights version and read it
+    whole. Puts one ``(raw_version, [sum of transaction_count per
+    table], records in report.md)`` per read, or ``("error", detail)``."""
+    table = SnapshotTable(None, os.path.join(warehouse, "billing_insights"))
+    reads = []
+    ready.set()
+    try:
+        while not stop.is_set():
+            time.sleep(0.005)
+            commits = table.commits()
+            if not commits:
+                continue
+            pinned = commits[-1]
+            try:
+                (d,) = table.resolve_dirs(pinned["v"])
+                sums = [
+                    sum(pq.read_table(os.path.join(d, t), columns=["transaction_count"])
+                        ["transaction_count"].to_pylist())
+                    for t in AGGREGATES
+                ]
+                with open(os.path.join(d, "report.md"), encoding="utf-8") as f:
+                    report = f.read()
+            except (OSError, pa.ArrowInvalid):
+                if any(c["v"] == pinned["v"] for c in table.commits()):
+                    raise
+                continue  # vacuumed by two newer rebuilds mid-read: legal
+            records = int(re.search(r"records ingested: (\d+)", report).group(1))
+            reads.append((pinned["meta"]["raw_version"], sums, records))
+        q.put(reads)
+    except Exception as exc:  # the failed read is the finding
+        q.put(("error", repr(exc)))
+
+
+def test_a_reader_pinning_one_derived_version_sees_one_raw_version(spark, tmp_path):
+    """While run() rebuilds the derived commit five times, each over one
+    more landed day, every read that pins one billing_insights version
+    sees all four tables and report.md at that version's raw_version."""
+    from billing_data_pipeline_spark.pipeline import BillingPipeline
+    from tests.test_pipeline_e2e import CSV_HEADER
+
+    lake, wh = tmp_path / "lake", str(tmp_path / "wh")
+    pipe = BillingPipeline(spark, wh)
+    ctx = mp.get_context("spawn")
+    ready, stop, q = ctx.Event(), ctx.Event(), ctx.Queue()
+    reader = ctx.Process(target=_pinned_reader, args=(wh, ready, stop, q))
+    reader.start()
+    expected, total = {}, 0
+    try:
+        assert ready.wait(60)
+        for day in range(1, 6):
+            p = lake / "year=2025" / "month=04" / f"day={day:02d}"
+            p.mkdir(parents=True)
+            rows = [
+                f"2025-04-{day:02d} 10:00:{i:02d},res-{i % 3},user-{i % 4},{1.5 * i},"
+                f"{'eu' if i % 2 else 'us'},pro,inference,true,gpu,inv-{day}-{i},USD\n"
+                for i in range(day + 2)
+            ]
+            (p / "billing.csv").write_text(CSV_HEADER + "".join(rows))
+            total += len(rows)
+            expected[pipe.run(str(lake))["raw_version"]] = total
+        time.sleep(0.5)  # the reader sees the last version too
+    finally:
+        stop.set()
+        reads = q.get(timeout=60)
+        reader.join(60)
+    assert reader.exitcode == 0 and isinstance(reads, list), reads
+    for raw_version, sums, records in reads:
+        assert sums == [expected[raw_version]] * 4 == [records] * 4, (raw_version, sums, records)
+    assert len({r[0] for r in reads}) >= 3, "the reader saw too few rebuilds"

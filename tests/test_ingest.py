@@ -71,6 +71,24 @@ def test_intra_batch_duplicates_collapse(spark):
     assert out.count() == 2
 
 
+def test_persisted_dedup_plan_fits_the_plan_string_limit(spark):
+    """The pipeline persists the deduplicated batch (the raw columns plus
+    the file key). Its aggregate must stay under Spark's 25-field limit
+    for plan strings, or each persist logs a truncation WARN."""
+    from billing_data_pipeline_spark.sources.csv_source import (
+        RAW_BILLING_KEYS,
+        RAW_BILLING_TABLE_SCHEMA,
+    )
+
+    batch = spark.createDataFrame([], RAW_BILLING_TABLE_SCHEMA).withColumn("_lk", F.lit("f"))
+    out = dedup_within_batch(batch, list(RAW_BILLING_KEYS)).persist()
+    try:
+        plan = out._jdf.queryExecution().optimizedPlan().treeString()
+        assert "InMemoryRelation" in plan and "more fields" not in plan
+    finally:
+        out.unpersist()
+
+
 def test_intra_batch_null_key_rows_never_collapse(spark):
     """Review r7: dropDuplicates treats NULL == NULL, but SQL UNIQUE (the
     reference's constraint, and this module's stated contract) says

@@ -128,47 +128,51 @@ def test_ingest_backfill_window_does_not_ledger_out_of_window_files(spark, tmp_p
     assert pipe.read("raw_billing").count() == 3
 
 
-def test_aggregates_publish_atomically_via_snapshots(spark, tmp_path):
-    """Review r6: plain overwrite deleted the old aggregate table before
-    the new job committed — a crash mid-refresh left a torn warehouse.
-    Local warehouses now publish aggregates through SnapshotTable: each
-    refresh is a new version behind an atomic manifest swap, the previous
-    version stays readable for in-flight readers (keep=2), and a pre-r6
-    plain-parquet table still reads through the fallback."""
+def test_aggregates_publish_atomically_via_snapshots(spark, tmp_path, monkeypatch):
+    """A rebuild publishes the four aggregate tables and the report as ONE
+    overwrite commit of billing_insights, followed by one vacuum: its
+    version directory holds one parquet subdirectory per table plus
+    report.md, and the previous version stays readable for in-flight
+    readers (keep=2)."""
+    import collections
     import os
 
+    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
+
+    calls = collections.Counter()
+
+    def counted(op):
+        real = getattr(SnapshotTable, op)
+
+        def wrapper(self, *args, **kwargs):
+            calls[op, os.path.basename(self.path)] += 1
+            return real(self, *args, **kwargs)
+
+        return wrapper
+
+    for op in ("commit_files", "vacuum"):
+        monkeypatch.setattr(SnapshotTable, op, counted(op))
     root, n_rows = _write_lake(tmp_path)
     wh = str(tmp_path / "wh_atomic")
     pipe = BillingPipeline(spark, wh)
     pipe.run(root)
-
-    daily = os.path.join(wh, "daily_aggs")
-    assert os.path.exists(os.path.join(daily, "_latest"))
-    assert os.path.isdir(os.path.join(daily, "v=0"))
+    derived = {k: n for k, n in calls.items() if k[1] != "raw_billing"}
+    assert derived == {("commit_files", "billing_insights"): 1, ("vacuum", "billing_insights"): 1}
+    assert sorted(os.listdir(wh)) == ["billing_insights", "raw_billing"]
+    (v0,) = pipe._table("billing_insights").resolve_dirs()
+    assert sorted(n for n in os.listdir(v0) if not n.startswith(".")) == [
+        "daily_aggs", "region_aggs", "report.md", "service_aggs", "user_aggs",
+    ]
     assert pipe.read("daily_aggs").count() == 2
 
-    # second refresh publishes v=1; keep=2 retains v=0 for readers
-    pipe.build_aggregates()
-    versions = sorted(d for d in os.listdir(daily) if d.startswith("v="))
+    # a second rebuild publishes v=1; keep=2 retains v=0 for readers
+    pipe._rebuild(pipe.raw_version())
+    versions = sorted(
+        d for d in os.listdir(pipe.table_path("billing_insights")) if d.startswith("v=")
+    )
     assert versions == ["v=0", "v=1"]
-    assert pipe.read("daily_aggs").count() == 2
-
-    # an empty-window third refresh is a no-op for correctness: reads
-    # still resolve to a complete table at every point
-    pipe.build_aggregates()
-    assert pipe.read("daily_aggs").count() == 2
-
-    # pre-r6 compatibility: a table written as plain parquet (no
-    # manifest) reads through the fallback path
-    legacy = BillingPipeline(spark, str(tmp_path / "wh_legacy"))
-    pipe.read("daily_aggs").write.mode("overwrite").parquet(
-        legacy.table_path("daily_aggs")
-    )
-    # remove any manifest the write never created; read must fall through
-    assert not os.path.exists(
-        os.path.join(legacy.table_path("daily_aggs"), "_latest")
-    )
-    assert legacy.read("daily_aggs").count() == 2
+    assert pipe.read("daily_aggs", version=0).count() == 2
+    assert pipe.read("user_aggs").count() == 4
 
 
 def test_billing_insights_renders_on_empty_and_all_null_input(spark):
@@ -267,8 +271,9 @@ def _fail_once(fn, when=lambda *a, **k: True, after=False):
 def _boundaries():
     import os
 
+    from pyspark.sql import DataFrameWriter
+
     from billing_data_pipeline_spark.operators.ledger import FileLedger
-    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
 
     raw_manifest = os.path.join("raw_billing", "_latest")
     return {
@@ -278,17 +283,15 @@ def _boundaries():
             os, "replace", {"when": lambda src, dst: str(dst).endswith(raw_manifest)}
         ),
         "after_ingest": (BillingPipeline, "ingest", {"after": True}),
-        # daily_aggs has committed, user_aggs has not
-        "between_aggregate_commits": (
-            SnapshotTable, "commit", {"when": lambda st, *a, **k: st.path.endswith("user_aggs")}
+        # inside the derived commit's staging: daily_aggs is written,
+        # user_aggs is not
+        "between_writes": (
+            DataFrameWriter,
+            "parquet",
+            {"when": lambda w, path, *a, **k: str(path).endswith("user_aggs")},
         ),
+        # the four tables are staged, the report is not
         "before_insights": (BillingPipeline, "insights", {}),
-        # the four aggregate tables have committed, the report has not
-        "before_report_commit": (
-            SnapshotTable,
-            "commit_files",
-            {"when": lambda st, *a, **k: st.path.endswith("billing_insights")},
-        ),
     }
 
 
@@ -301,7 +304,7 @@ def crash_warehouse(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("crash")
     root = _crash_lake(tmp)
     base = str(tmp / "base")
-    BillingPipeline(spark, base).run(root, to_date=date(2025, 4, 22))
+    before = BillingPipeline(spark, base).run(root, to_date=date(2025, 4, 22))
     shutil.copytree(base, str(tmp / "clean"))
     clean = BillingPipeline(spark, str(tmp / "clean"))
     report = clean.run(root)["report_markdown"]
@@ -309,6 +312,7 @@ def crash_warehouse(spark, tmp_path_factory):
         "raw": clean.read("raw_billing").count(),
         "ledger": _ledger_counts(clean),
         "report": report,
+        "before": before,
     }
     # 3 rows of day 22, then day 23's new row and NULL-key row; the
     # cross-file duplicate is dropped
@@ -321,10 +325,12 @@ def crash_warehouse(spark, tmp_path_factory):
 def test_run_is_exactly_once_under_a_crash_at_each_boundary(
     spark, tmp_path, monkeypatch, crash_warehouse, boundary
 ):
-    """A run() that dies at a stage boundary and is retried leaves the
+    """A run() that dies at a stage boundary leaves the previous derived
+    version whole and readable; retried, it rebuilds once and leaves the
     warehouse exactly as one uninterrupted run: no row appended twice
     (NULL-key rows included), one ledger row per file with its own
     record_count, the same report."""
+    import os
     import shutil
 
     root, base, expected = crash_warehouse
@@ -337,7 +343,15 @@ def test_run_is_exactly_once_under_a_crash_at_each_boundary(
     with pytest.raises(_Crash):
         pipe.run(root)
     assert fault.fired
+    before = expected["before"]
+    assert _derived_version(pipe) == 0
+    derived = os.listdir(pipe.table_path("billing_insights"))
+    assert not [n for n in derived if n.startswith("_staging_")]  # the staging is gone
+    aggregates, _, report = pipe.published(before["raw_version"])
+    assert (aggregates, report) == (before["aggregates"], before["report_markdown"])
+    assert pipe.read("daily_aggs").count() == before["aggregates"]["daily_aggs_rows"]
     m = pipe.run(root)
+    assert _derived_version(pipe) == 1
     assert pipe.read("raw_billing").count() == expected["raw"]
     assert _ledger_counts(pipe) == expected["ledger"]
     assert m["report_markdown"] == expected["report"]
@@ -426,16 +440,8 @@ def test_rewritten_file_with_known_rows_records_zero(spark, tmp_path):
 
 # -- reuse while raw_billing's version has not moved ---------------------------
 
-DERIVED = ("daily_aggs", "user_aggs", "service_aggs", "region_aggs", "billing_insights")
-
-
-def _derived_versions(spark, pipe):
-    from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
-
-    return {
-        name: SnapshotTable(spark, pipe.table_path(name)).latest_version()
-        for name in DERIVED
-    }
+def _derived_version(pipe):
+    return pipe._table("billing_insights").latest_version()
 
 
 def _typed(d):
@@ -458,13 +464,13 @@ def test_unchanged_lake_reuses_the_published_results(spark, tmp_path, monkeypatc
     pipe = BillingPipeline(spark, str(tmp_path / "wh"))
     m1 = pipe.run(root)
     assert m1["raw_version"] == pipe.raw_version() == 0
-    before = _derived_versions(spark, pipe)
-    assert None not in before.values()
+    before = _derived_version(pipe)
+    assert before is not None
 
     with monkeypatch.context() as mp:
         _no_rebuild(mp)
         m2 = pipe.run(root)
-    assert _derived_versions(spark, pipe) == before
+    assert _derived_version(pipe) == before
     assert m2["raw_version"] == m1["raw_version"]
     assert _typed(m2["aggregates"]) == _typed(m1["aggregates"])
     assert _typed(m2["insights"]) == _typed(m1["insights"])
@@ -481,7 +487,7 @@ def test_header_only_file_moves_the_version_and_rebuilds(spark, tmp_path):
     pipe = BillingPipeline(spark, str(tmp_path / "wh"))
     m1 = pipe.run(root)
     assert "Files processed: 2;" in m1["report_markdown"]
-    before = _derived_versions(spark, pipe)
+    before = _derived_version(pipe)
 
     p = pathlib.Path(root) / "year=2025" / "month=04" / "day=24"
     p.mkdir(parents=True)
@@ -489,49 +495,48 @@ def test_header_only_file_moves_the_version_and_rebuilds(spark, tmp_path):
     m2 = pipe.run(root)
     assert m2["ingest"]["rows_appended"] == 0
     assert m2["raw_version"] == m1["raw_version"] + 1
-    after = _derived_versions(spark, pipe)
-    assert all(after[t] == before[t] + 1 for t in DERIVED)
+    assert _derived_version(pipe) == before + 1
     assert "Files processed: 3;" in m2["report_markdown"]
     assert m2["aggregates"] == m1["aggregates"]
 
 
 def test_unstamped_warehouse_rebuilds_once_then_reuses(spark, tmp_path, monkeypatch):
-    """Aggregate commits with no raw_version stamp and no billing_insights
-    table (a warehouse written before the stamps) rebuild on the next
-    run, which stamps them; the run after that reuses."""
+    """Derived commits with no stamp (a warehouse written before the
+    stamps) rebuild on the next run, which stamps its commit; the run
+    after that reuses. Directories of the old one-table-per-aggregate
+    layout are ignored."""
     import json
     import os
-    import shutil
 
     root, _ = _write_lake(tmp_path)
     pipe = BillingPipeline(spark, str(tmp_path / "wh"))
     m1 = pipe.run(root)
-    for name in DERIVED[:4]:
-        manifest = os.path.join(pipe.table_path(name), "_latest")
-        with open(manifest) as f:
-            man = json.load(f)
-        for c in man["commits"]:
-            c["meta"] = None
-        with open(manifest, "w") as f:
-            json.dump(man, f)
-    shutil.rmtree(pipe.table_path("billing_insights"))
+    manifest = os.path.join(pipe.table_path("billing_insights"), "_latest")
+    with open(manifest) as f:
+        man = json.load(f)
+    for c in man["commits"]:
+        c["meta"] = None
+    with open(manifest, "w") as f:
+        json.dump(man, f)
+    pipe.read("daily_aggs").write.parquet(os.path.join(pipe.table_path("daily_aggs"), "v=0"))
 
     m2 = pipe.run(root)
-    rebuilt = _derived_versions(spark, pipe)
-    assert rebuilt == {**{t: 1 for t in DERIVED[:4]}, "billing_insights": 0}
+    assert _derived_version(pipe) == 1
     assert m2["report_markdown"] == m1["report_markdown"]
 
     with monkeypatch.context() as mp:
         _no_rebuild(mp)
         m3 = pipe.run(root)
-    assert _derived_versions(spark, pipe) == rebuilt
+    assert _derived_version(pipe) == 1
     assert m3["report_markdown"] == m1["report_markdown"]
+    assert pipe.read("daily_aggs").count() == m1["aggregates"]["daily_aggs_rows"]
 
 
 def test_insights_pinned_to_a_raw_version_ignores_later_ingests(spark, tmp_path):
-    """insights(v) reads raw_billing and folds the ledger as of version
-    v, so an ingest that commits after v cannot leak into a report
-    stamped v."""
+    """An ingest that commits after a rebuild leaves the stored report and
+    tables at the raw_billing version they were built from: the stored
+    report is current only for that version, and the aggregate tables
+    still read as of it."""
     import pathlib
 
     root, _ = _write_lake(tmp_path)
@@ -546,13 +551,17 @@ def test_insights_pinned_to_a_raw_version_ignores_later_ingests(spark, tmp_path)
     assert pipe.ingest(root)["rows_appended"] == 1
     assert pipe.raw_version() == m1["raw_version"] + 1
 
-    pinned, pinned_metrics = pipe.insights(m1["raw_version"])
-    assert pinned == m1["report_markdown"]
-    assert pinned_metrics == m1["insights"]
-    latest, latest_metrics = pipe.insights()
-    assert "Files processed: 3;" in latest
-    total = m1["insights"]["total_credit_usage"]
-    assert latest_metrics["total_credit_usage"] == total + 2.5
+    assert pipe.published(pipe.raw_version()) is None
+    aggregates, insights, report = pipe.published(m1["raw_version"])
+    assert (aggregates, insights, report) == (
+        m1["aggregates"], m1["insights"], m1["report_markdown"]
+    )
+    assert pipe.read("user_aggs").count() == 4
+
+    m2 = pipe.run(root)
+    assert "Files processed: 3;" in m2["report_markdown"]
+    assert m2["insights"]["total_credit_usage"] == insights["total_credit_usage"] + 2.5
+    assert pipe.read("user_aggs").count() == 5
 
 
 def test_a_changed_derivation_rebuilds_once_then_reuses(spark, tmp_path, monkeypatch):
@@ -564,19 +573,18 @@ def test_a_changed_derivation_rebuilds_once_then_reuses(spark, tmp_path, monkeyp
     root, _ = _write_lake(tmp_path)
     pipe = BillingPipeline(spark, str(tmp_path / "wh"))
     m1 = pipe.run(root)
-    before = _derived_versions(spark, pipe)
+    before = _derived_version(pipe)
 
     monkeypatch.setattr(pipeline, "DERIVATION", "a later deploy")
     m2 = pipe.run(root)
-    after = _derived_versions(spark, pipe)
     assert m2["raw_version"] == m1["raw_version"]
-    assert all(after[t] == before[t] + 1 for t in DERIVED)
+    assert _derived_version(pipe) == before + 1
     assert m2["report_markdown"] == m1["report_markdown"]
 
     with monkeypatch.context() as mp:
         _no_rebuild(mp)
         pipe.run(root)
-    assert _derived_versions(spark, pipe) == after
+    assert _derived_version(pipe) == before + 1
 
 
 def test_derivation_hashes_the_source_of_each_deriving_module(monkeypatch):
@@ -604,11 +612,21 @@ def test_reuse_returns_the_report_of_the_commit_it_checked(
     report.md do not change what run() returns: it reads the report of
     the commit it checked, or rebuilds once two newer commits have
     vacuumed that one."""
+    import os
+
     from billing_data_pipeline_spark.sources.versioned_sink import SnapshotTable
 
     root, _ = _write_lake(tmp_path)
     pipe = BillingPipeline(spark, str(tmp_path / "wh"))
     m1 = pipe.run(root)
+
+    def newer_report(i):
+        def write(staging):
+            os.makedirs(staging)
+            with open(os.path.join(staging, "report.md"), "w") as f:
+                f.write(f"a newer report {i}")
+
+        return write
 
     real = SnapshotTable.commits
     pending = [concurrent]
@@ -618,7 +636,8 @@ def test_reuse_returns_the_report_of_the_commit_it_checked(
         if pending[0] and self.path.endswith("billing_insights"):
             n, pending[0] = pending[0], 0
             for i in range(n):
-                pipe._publish_report(1000 + i, {}, {}, f"a newer report {i}")
+                self.commit_files(newer_report(i), meta={"raw_version": 1000 + i})
+                self.vacuum(keep=2)
         return out
 
     monkeypatch.setattr(SnapshotTable, "commits", commits)
@@ -627,4 +646,26 @@ def test_reuse_returns_the_report_of_the_commit_it_checked(
     assert m2["report_markdown"] == m1["report_markdown"]
     assert _typed(m2["insights"]) == _typed(m1["insights"])
     rebuilt = concurrent == 2
-    assert _derived_versions(spark, pipe)["billing_insights"] == concurrent + rebuilt
+    assert _derived_version(pipe) == concurrent + rebuilt
+
+
+def test_rebuild_launches_no_more_spark_jobs_than_five_commits_did(
+    spark, spark_jobs, tmp_path
+):
+    """A backfill run() and a daily run() over a small lake launch 17 and
+    18 Spark jobs, the counts from when the four tables and the report
+    were five commits; a no-op run launches none."""
+    import pathlib
+
+    root, _ = _write_lake(tmp_path)
+    pipe = BillingPipeline(spark, str(tmp_path / "wh"))
+    _, backfill = spark_jobs(lambda: pipe.run(root))
+    p = pathlib.Path(root) / "year=2025" / "month=04" / "day=24"
+    p.mkdir(parents=True)
+    (p / "billing.csv").write_text(
+        CSV_HEADER
+        + "2025-04-24 10:00:00,res-9,user-9,2.5,us,pro,inference,true,gpu,inv-24-0,USD\n"
+    )
+    _, daily = spark_jobs(lambda: pipe.run(root))
+    _, noop = spark_jobs(lambda: pipe.run(root))
+    assert backfill <= 17 and daily <= 18 and noop == 0, (backfill, daily, noop)

@@ -1,12 +1,13 @@
 """The report is built from what the aggregate pass produced: the
 operation and tier sections fold on the driver from one collect of
 service_aggs, in the order Spark's groupBy/orderBy gives, and the total
-observed during the daily_aggs commit equals a scan of raw."""
+observed during the daily_aggs write equals a scan of raw."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from billing_data_pipeline_spark.operators.aggregates import global_sum
 from billing_data_pipeline_spark.operators.reports import billing_insights
 from billing_data_pipeline_spark.pipeline import BillingPipeline
 from tests.test_pipeline_e2e import CSV_HEADER, _write_lake
@@ -105,13 +106,20 @@ def _null_measure_lake(tmp_path):
 
 
 def test_run_report_equals_the_report_from_a_raw_scan(spark, tmp_path):
-    """run() passes the total observed during the daily_aggs commit;
-    insights(v) alone scans raw at v for it. The reports are the same
-    bytes, NULL measures included."""
+    """run() renders the report with the total observed during the
+    daily_aggs write; the same report over a scan of raw for the total is
+    the same bytes, NULL measures included."""
     root = _null_measure_lake(tmp_path)
     pipe = BillingPipeline(spark, str(tmp_path / "wh"))
     m = pipe.run(root)
-    report, metrics = pipe.insights(m["raw_version"])
+    v = m["raw_version"]
+    raw = pipe.read("raw_billing", version=v)
+    total = global_sum(raw, "credit_usage", "total").first()["total"]
+    report, metrics = billing_insights(
+        total,
+        *(pipe.read(t) for t in ("user_aggs", "region_aggs", "service_aggs")),
+        ledger=list(pipe.ledger().latest(v).values()),
+    )
     assert report == m["report_markdown"]
     assert metrics == m["insights"]
     # the total is reported once, with the insights
