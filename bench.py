@@ -153,11 +153,10 @@ def main() -> None:
     # every timed invocation to compute from the parquet inputs — pinning
     # base tables in the columnar cache outside the timed region (the old
     # "warm-warehouse posture", r4-r10) pre-materializes part of the
-    # queries' work. cache_dimension_tables remains a production API for
-    # pipeline deployments; the bench now scans dims per run like
-    # everything else (measured cost ~10-40 ms on the dim-join rows; the
-    # per-query warm-up still provides OS page-cache warmth, which is the
-    # same footing the DuckDB baseline gets from its own warm runs).
+    # queries' work. The bench scans dims per run like everything else
+    # (measured cost ~10-40 ms on the dim-join rows; the per-query warm-up
+    # still provides OS page-cache warmth, which is the same footing the
+    # DuckDB baseline gets from its own warm runs).
 
     # Start-of-run calibration probe (VERDICT r10 item 2): first of the
     # three start/middle/end samples. The min across all three is the

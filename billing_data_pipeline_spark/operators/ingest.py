@@ -182,20 +182,6 @@ def append_new_rows_per_file(
     return sum(per_file.values()), per_file
 
 
-def assert_unique(df: DataFrame, keys: Sequence[str]) -> None:
-    """Uniqueness assertion replacing the reference's UNIQUE constraint.
-
-    Cheap relative to the load (one aggregate over key columns); use in
-    tests / data-quality gates, not per-query.
-    """
-    dupes = (
-        df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") > 1)
-    )
-    sample = dupes.take(5)
-    if sample:
-        raise AssertionError(f"duplicate natural keys (showing <=5): {sample}")
-
-
 def bloom_prefiltered_new_rows(
     batch: DataFrame,
     existing: DataFrame,

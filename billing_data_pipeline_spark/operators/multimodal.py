@@ -1,9 +1,9 @@
 """[EXT] Multimodal binary columns (SURVEY.md §2.12).
 
 Images/audio/video ride through the engine as opaque ``binary`` columns
-with typed metadata structs; decode / feature-extract / resize / frame-
-sample run as Arrow-batched ``mapInPandas`` stages so bytes never leave the
-executors and Python sees whole record batches, not rows.
+with typed metadata structs; decode and frame sampling run as Arrow-batched
+``mapInPandas`` stages so bytes never leave the executors and Python sees
+whole record batches, not rows.
 
 Pixel/sample-level codecs (PIL/ffmpeg/torchaudio) are NOT in this
 container, so the kernels are tiered: ``decode_media(..., fake=True)``
@@ -61,12 +61,6 @@ DECODED_SCHEMA = T.StructType(
 
 MAGIC = b"MM01"
 HEADER_LEN = 16
-
-
-def encode_fake_media(media_id: int, kind: str, width: int, height: int, n_frames: int, payload: bytes = b"") -> tuple[int, str, bytes]:
-    """Build a synthetic media record (test fixture helper)."""
-    header = MAGIC + struct.pack(">III", width, height, n_frames)
-    return (media_id, kind, header + payload)
 
 
 def _decode_fake(batch: pd.DataFrame) -> pd.DataFrame:
@@ -142,23 +136,6 @@ def _parse_png(content: bytes) -> tuple[int, int, int] | None:
     if not w or not h or w > 0x7FFFFFFF or h > 0x7FFFFFFF:
         return None
     return w, h, 1
-
-
-def _wav_data_chunk(content: bytes) -> bytes | None:
-    """Payload of the WAV's data chunk — the LAST 'data' chunk, with the
-    declared length clamped to the real bytes, exactly matching
-    _parse_wav's n_frames accounting (review r5: extract_features carried
-    an inline copy of this walk that took the FIRST chunk unclamped, so a
-    two-data-chunk or length-lying WAV got n_frames from one chunk and
-    features from another)."""
-    pos, data = 12, None
-    while pos + 8 <= len(content):
-        cid = content[pos : pos + 4]
-        clen = struct.unpack_from("<I", content, pos + 4)[0]
-        if cid == b"data":
-            data = content[pos + 8 : pos + 8 + min(clen, len(content) - pos - 8)]
-        pos += 8 + clen + (clen & 1)
-    return data
 
 
 def _parse_wav(content: bytes) -> tuple[int, int, int] | None:
@@ -259,252 +236,3 @@ def sample_frames(df: DataFrame, every_n: int, fake: bool = True) -> DataFrame:
         )
         .select("media_id", "frame_idx", "width", "height")
     )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        # nullable ids/kinds: a NULL-id source row must flow through as a
-        # contained valid=false record, not an EXPRESSION_DECODING_FAILED
-        # crash (review r8 — same contract DECODED_SCHEMA already carries)
-        T.StructField("media_id", T.LongType(), True),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("valid", T.BooleanType(), False),
-    ]
-)
-
-
-def _bmp_pixels(content: bytes) -> "tuple | None":
-    """Decode an uncompressed 24-bpp BMP into (H, W, 3) uint8 (top-down row
-    order). Returns None for anything the pure-python decoder can't read."""
-    import numpy as np
-
-    parsed = _parse_bmp(content)
-    if parsed is None:
-        return None
-    w, h, _ = parsed
-    bpp = struct.unpack_from("<H", content, 28)[0]
-    compression = struct.unpack_from("<I", content, 30)[0]
-    if bpp != 24 or compression != 0:
-        return None
-    offset = struct.unpack_from("<I", content, 10)[0]
-    stride = (w * 3 + 3) & ~3
-    if len(content) < offset + stride * h:
-        return None
-    raw = np.frombuffer(content, dtype=np.uint8, count=stride * h, offset=offset)
-    rows = raw.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-    # positive stored height = bottom-up rows; negative = already top-down
-    raw_h = struct.unpack_from("<i", content, 22)[0]
-    return rows[::-1] if raw_h > 0 else rows
-
-
-def _bmp_encode(pixels) -> bytes:
-    """(H, W, 3) uint8 top-down -> uncompressed 24-bpp BMP bytes."""
-    import numpy as np
-
-    h, w, _ = pixels.shape
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : w * 3] = pixels[::-1].reshape(h, w * 3)
-    data = rows.tobytes()
-    dib = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
-    )
-    head = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(data), 0, 0, 14 + 40)
-    return head + dib + data
-
-
-def resize_media(df: DataFrame, max_w: int, max_h: int, fake: bool = True) -> DataFrame:
-    """Aspect-preserving downscale to fit (max_w, max_h): the scale factor
-    and target dims are computed per record in the Arrow batch.
-
-    ``fake=True``: rewrites the synthetic MM01 header with the new dims and
-    keeps the payload. ``fake=False``: REAL resize for uncompressed 24-bpp
-    BMP — decode the pixel grid (numpy), nearest-neighbor sample to the
-    target dims, re-encode a valid BMP. Records already small enough pass
-    through byte-identical, including decodable-but-not-resizable formats
-    (an in-bounds PNG; audio, which has no pixel grid to bound); ONLY a
-    required resize without a pixel codec (oversized PNG/JPEG/video — the
-    PIL/ffmpeg seam) or an undecodable blob yields NULL content with
-    valid=false (per-record containment, never a job failure)."""
-    import numpy as np
-
-    def fit(w: int, h: int) -> tuple[int, int] | None:
-        # zero/negative/u32-overflow dims are malformed, not 'scale 1.0':
-        # the old fallback passed a 5000x0 record through unscaled with
-        # valid=true, and >int32 dims crashed the Arrow cast (review r5)
-        if not (0 < w <= 0x7FFFFFFF and 0 < h <= 0x7FFFFFFF):
-            return None
-        scale = min(max_w / w, max_h / h)
-        return max(1, int(w * scale)), max(1, int(h * scale))
-
-    def real_record(r) -> dict:
-        # NULL blob -> empty -> valid=false, never a TypeError job kill
-        # (review r8; same guard as _decode_real/_decode_fake)
-        raw = r["content"]
-        content = bytes(raw) if raw is not None else b""
-        base = {"media_id": r["media_id"], "kind": r["kind"]}
-        pix = _bmp_pixels(content)
-        if pix is not None:
-            h, w, _ = pix.shape
-            if w <= max_w and h <= max_h:
-                return {**base, "content": content, "width": w, "height": h,
-                        "valid": True}
-            fitted = fit(w, h)
-            if fitted is None:  # unreachable for a decoded grid; contained
-                return {**base, "content": None, "width": None,
-                        "height": None, "valid": False}
-            w2, h2 = fitted
-            yi = (np.arange(h2) * h // h2).astype(np.int64)
-            xi = (np.arange(w2) * w // w2).astype(np.int64)
-            out = _bmp_encode(pix[yi][:, xi])
-            return {**base, "content": out, "width": w2, "height": h2,
-                    "valid": True}
-        # Decodable-but-not-resizable formats: pass through when no resize
-        # is needed (a BMP whose bpp the pixel decoder doesn't cover, a
-        # PNG within bounds; audio has no pixel grid to bound); only a
-        # REQUIRED resize without a pixel codec is a failure. The BMP
-        # header fallback mirrors the PNG branch (review r4: an in-bounds
-        # 32-bpp BMP was destroyed with valid=false although no resize
-        # was needed).
-        # one rule for every parseable-but-not-resizable image format
-        # (review r7: the BMP and PNG branches were identical copy-paste —
-        # the r4 32-bpp containment fix had to land twice)
-        for parse in (_parse_bmp, _parse_png):
-            parsed = parse(content)
-            if parsed is not None:
-                w, h, _ = parsed
-                if w <= max_w and h <= max_h:
-                    return {**base, "content": content, "width": w,
-                            "height": h, "valid": True}
-                return {**base, "content": None, "width": None,
-                        "height": None, "valid": False}
-        if _parse_wav(content) is not None:
-            return {**base, "content": content, "width": None, "height": None,
-                    "valid": True}
-        return {**base, "content": None, "width": None, "height": None,
-                "valid": False}
-
-    def fake_record(r) -> dict:
-        # same NULL-blob containment as real_record (review r8)
-        raw = r["content"]
-        content = bytes(raw) if raw is not None else b""
-        base = {"media_id": r["media_id"], "kind": r["kind"]}
-        ok = len(content) >= HEADER_LEN and content[:4] == MAGIC
-        if not ok:
-            return {**base, "content": None, "width": None, "height": None,
-                    "valid": False}
-        w, h, nf = struct.unpack(">III", content[4:HEADER_LEN])
-        if not (0 < w <= 0x7FFFFFFF and 0 < h <= 0x7FFFFFFF):
-            # malformed dims: contained as invalid, never passed through
-            # unscaled or crashed into the Arrow int32 cast (review r5)
-            return {**base, "content": None, "width": None, "height": None,
-                    "valid": False}
-        if w > max_w or h > max_h:
-            w, h = fit(w, h)
-            content = MAGIC + struct.pack(">III", w, h, nf) + content[HEADER_LEN:]
-        return {**base, "content": content, "width": w, "height": h,
-                "valid": True}
-
-    record = fake_record if fake else real_record
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if len(batch):
-                # column zip, not iterrows (review r7 — see _decode_fake)
-                yield pd.DataFrame(
-                    [
-                        record({"media_id": m, "kind": k, "content": c})
-                        for m, k, c in zip(
-                            batch["media_id"], batch["kind"], batch["content"]
-                        )
-                    ]
-                )
-
-    return df.mapInPandas(kernel, schema=RESIZED_SCHEMA)
-
-
-FEATURE_DIM = 64
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        # nullable ids/kinds: same NULL-row containment contract as
-        # DECODED_SCHEMA / RESIZED_SCHEMA (review r8)
-        T.StructField("media_id", T.LongType(), True),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("valid", T.BooleanType(), False),
-    ]
-)
-
-
-def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
-    """Feature extraction: binary content -> unit-norm float vector, one
-    numpy pass per record inside the Arrow batch. Output schema
-    array<float> matches the embeddings table, so decoded media feeds
-    straight into the similarity operators (cosine_topk /
-    lsh_neardup_pairs) — media dedup for free.
-
-    ``fake=True`` histograms the synthetic MM01 payload bytes.
-    ``fake=False`` extracts from REAL decoded content — BMP pixel values /
-    WAV sample bytes via the pure-python decoders — a deterministic
-    content-level descriptor (identical pixels => identical vector; a
-    learned model like CLIP/wav2vec drops into the same
-    (decoded content) -> (float[FEATURE_DIM]) seam). Undecodable blobs
-    yield valid=false, never a job failure."""
-    import numpy as np
-
-    def payload_of(content: bytes):
-        if fake:
-            if len(content) >= HEADER_LEN and content[:4] == MAGIC:
-                return np.frombuffer(content[HEADER_LEN:], dtype=np.uint8)
-            return None
-        pix = _bmp_pixels(content)
-        if pix is not None:
-            return pix.reshape(-1)
-        wav = _parse_wav(content)
-        if wav is not None:
-            data = _wav_data_chunk(content)
-            if data is not None:
-                return np.frombuffer(data, dtype=np.uint8)
-        return None
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if not len(batch):
-                continue
-            out = []
-            for mid, kind, raw in zip(
-                batch["media_id"], batch["kind"], batch["content"]
-            ):
-                # NULL blob -> empty -> valid=false (review r8; same
-                # guard as _decode_real)
-                payload = payload_of(bytes(raw) if raw is not None else b"")
-                if payload is None:
-                    out.append(
-                        {
-                            "media_id": mid,
-                            "kind": kind,
-                            "embedding": None,
-                            "valid": False,
-                        }
-                    )
-                    continue
-                hist = np.bincount(payload % FEATURE_DIM, minlength=FEATURE_DIM).astype(
-                    np.float64
-                )
-                hist += 1.0 / FEATURE_DIM  # never the zero vector
-                vec = hist / np.linalg.norm(hist)
-                out.append(
-                    {
-                        "media_id": mid,
-                        "kind": kind,
-                        "embedding": vec.astype(np.float32).tolist(),
-                        "valid": True,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(kernel, schema=FEATURES_SCHEMA)

@@ -98,14 +98,6 @@ def norm(a: Column, dim: int | None = None) -> Column:
     return F.sqrt(dot(a, a, dim))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    # try_divide: a zero-norm vector makes cosine 0/0 — ANSI Spark raises
-    # DIVIDE_BY_ZERO while DuckDB's x/0 is NULL; try_divide matches DuckDB
-    # exactly (NULL comparisons then exclude the row from thresholds and
-    # rankings on both engines).
-    return F.try_divide(dot(a, b, dim), norm(a, dim) * norm(b, dim))
-
-
 def _stride_pick(rows: list, n_seeds: int) -> list:
     """Driver-side stride pick over collected (id, vec) rows — the small
     tier's arithmetic, shared by stride_seed_rows and pq_topk's folded

@@ -119,41 +119,6 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# The TPC-H-ish dimension chain. These are the broadcast-build sides of
-# every star join in the catalog; orders/lineitem/events/documents/
-# embeddings are facts and deliberately NOT cacheable here.
-DIM_TABLES = ("region", "nation", "supplier", "part", "customer")
-
-
-def cache_dimension_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Pin the dimension tables in executor memory (deserialized columnar
-    cache) and materialize them.
-
-    Scale contract: dims are orders of magnitude smaller than facts —
-    at 100 TB of lineitem, region/nation are KBs, supplier/part GBs, and
-    customer (the largest) low-TBs, i.e. a few GB per node on a
-    1000-executor cluster. Caching them removes the repeated parquet scan
-    under every broadcast build while facts keep streaming from storage;
-    this is the standard warm-warehouse posture, not a benchmark trick —
-    the cache holds the build sides, never the probe sides.
-    """
-    for name in DIM_TABLES:
-        try:
-            df = load_table(spark, sf_dir, name).cache()
-            df.count()
-        except Exception:
-            # A custom sf_dir may carry only the tables its queries touch
-            # (e.g. a facts-only lake); caching is an optimization, never a
-            # prerequisite — skip what isn't there.
-            _HANDLES.pop((id(spark), sf_dir, name), None)
-            continue
-        _HANDLES[(id(spark), sf_dir, name)] = df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 FACT_TABLES = ("orders", "lineitem", "events", "documents", "embeddings")
 
 

@@ -8,7 +8,6 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from billing_data_pipeline_spark.operators.ingest import (
-    assert_unique,
     dedup_append,
     dedup_within_batch,
 )
@@ -130,16 +129,6 @@ def test_file_ledger_rejects_remote_scheme_normalizes_file_url(spark, tmp_path):
         FileLedger(spark, "s3a://bucket/wh/processed_files")
     led = FileLedger(spark, f"file://{tmp_path}/processed_files")
     assert led.table.path == f"{tmp_path}/processed_files"
-
-
-def test_assert_unique_raises_on_dupes(spark):
-    df = _df(spark, [_row(1), _row(1)])
-    try:
-        assert_unique(df, KEYS)
-    except AssertionError:
-        pass
-    else:
-        raise AssertionError("expected duplicate-key failure")
 
 
 def test_ledger_skips_unchanged_reprocesses_changed(spark, tmp_path):

@@ -4,14 +4,22 @@ the real-codec gate."""
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 
 from billing_data_pipeline_spark.operators.multimodal import (
+    MAGIC,
     MEDIA_SCHEMA,
     decode_media,
-    encode_fake_media,
     sample_frames,
 )
+
+
+def encode_fake_media(media_id, kind, width, height, n_frames, payload=b""):
+    """A synthetic media record: the MM01 header, then ``payload``."""
+    header = MAGIC + struct.pack(">III", width, height, n_frames)
+    return (media_id, kind, header + payload)
 
 
 @pytest.fixture(scope="module")
@@ -59,32 +67,6 @@ def test_null_blob_and_null_id_contained_not_fatal(spark):
     assert decode_media(df, fake=True).filter("media_id = 1").first()["valid"]
 
 
-def test_null_blob_and_null_id_contained_in_resize_and_features(spark):
-    """r9 (ADVICE): the r8 NULL containment landed only in decode_media —
-    resize_media and extract_features still called bytes(None) (TypeError,
-    job dead) and declared media_id/kind non-nullable (a NULL-id row hit
-    EXPRESSION_DECODING_FAILED). Same contract, all three kernels."""
-    from billing_data_pipeline_spark.operators.multimodal import (
-        extract_features,
-        resize_media,
-    )
-
-    rows = [
-        encode_fake_media(1, "image", 640, 480, 1),
-        (2, "image", None),       # NULL blob
-        (None, "image", b"BMx"),  # NULL id, junk blob
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    for fake in (True, False):
-        out = {r["media_id"]: r for r in resize_media(df, 320, 240, fake=fake).collect()}
-        assert out[2]["valid"] is False and out[2]["content"] is None
-        assert out[None]["valid"] is False  # NULL id emitted, job alive
-        feats = {r["media_id"]: r for r in extract_features(df, fake=fake).collect()}
-        assert feats[2]["valid"] is False and feats[2]["embedding"] is None
-        assert feats[None]["valid"] is False
-    assert resize_media(df, 320, 240, fake=True).filter("media_id = 1").first()["valid"]
-
-
 def test_sample_frames_every_n(spark, media):
     frames = sample_frames(media, every_n=30).collect()
     assert [r["frame_idx"] for r in frames] == [0, 30, 60]
@@ -95,8 +77,6 @@ def _real_bmp(w: int, h: int) -> bytes:
     """Hand-assembled 24-bit BMP: BITMAPFILEHEADER + BITMAPINFOHEADER +
     zeroed pixel rows padded to 4-byte boundaries — a file any image viewer
     opens."""
-    import struct
-
     row = (w * 3 + 3) & ~3
     pixels = b"\x00" * (row * h)
     dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixels), 2835, 2835, 0, 0)
@@ -106,8 +86,6 @@ def _real_bmp(w: int, h: int) -> bytes:
 
 def _real_wav(rate: int, channels: int, n_samples: int, bits: int = 16) -> bytes:
     """Hand-assembled PCM WAV (RIFF/fmt /data) with silent samples."""
-    import struct
-
     data = b"\x00" * (n_samples * channels * (bits // 8))
     fmt = struct.pack(
         "<HHIIHH", 1, channels, rate, rate * channels * bits // 8,
@@ -121,7 +99,6 @@ def _real_wav(rate: int, channels: int, n_samples: int, bits: int = 16) -> bytes
 def _real_png(w: int, h: int) -> bytes:
     """PNG signature + IHDR chunk (header-only; body truncated is fine for
     metadata decode)."""
-    import struct
     import zlib
 
     ihdr = struct.pack(">II", w, h) + bytes([8, 2, 0, 0, 0])
@@ -154,144 +131,23 @@ def test_real_decoder_parses_bmp_png_wav_end_to_end(spark):
     assert out[4]["valid"] is False and out[4]["width"] is None
 
 
-def test_resize_scales_and_passes_through(spark, media):
-    from billing_data_pipeline_spark.operators.multimodal import resize_media
-
-    out = {r["media_id"]: r for r in resize_media(media, 960, 540).collect()}
-    # 1920x1080 -> fits (960, 540) exactly at scale 0.5
-    assert (out[2]["width"], out[2]["height"]) == (960, 540)
-    # already small: byte-identical passthrough
-    assert out[1]["width"] == 640 and bytes(out[1]["content"])[:4] == b"MM01"
-    assert out[4]["valid"] is False and out[4]["content"] is None
-
-
-def test_extract_features_unit_norm_and_feeds_similarity(spark, media):
-    """Feature vectors are unit-norm array<float> — schema-compatible with
-    the embeddings table, so the similarity operators run on them as-is."""
-    import math
-
-    from billing_data_pipeline_spark.operators.multimodal import extract_features
-    from billing_data_pipeline_spark.operators.similarity import cosine_topk
-
-    feats = extract_features(media).filter("valid")
-    rows = feats.collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert len(r["embedding"]) == 64
-        assert math.isclose(
-            sum(x * x for x in r["embedding"]), 1.0, rel_tol=1e-5
-        )
-    vecs = feats.selectExpr("media_id as vec_id", "embedding")
-    knn = cosine_topk(vecs, vecs, "vec_id", "embedding", k=1).collect()
-    assert len(knn) == 3  # every media found a nearest neighbor
-
-
-def test_real_bmp_resize_nearest_neighbor(spark):
-    """resize_media(fake=False): a genuine 24-bpp BMP is pixel-decoded,
-    nearest-neighbor downscaled, and re-encoded as a valid BMP the real
-    decoder can read back; small-enough records pass through
-    byte-identical; non-BMP real formats are contained as valid=false."""
-    import numpy as np
-
-    from billing_data_pipeline_spark.operators.multimodal import (
-        _bmp_encode,
-        _bmp_pixels,
-        resize_media,
-    )
-
-    # 8x4 gradient: pixel value encodes its (x, y) so sampling is checkable
-    px = np.zeros((4, 8, 3), dtype=np.uint8)
-    for y in range(4):
-        for x in range(8):
-            px[y, x] = (x * 10, y * 10, 0)
-    big = _bmp_encode(px)
-    small = _bmp_encode(px[:2, :2])
-    rows = [
-        (1, "image", big),          # 8x4 -> fits in 4x4 => 4x2
-        (2, "image", small),        # already fits: byte-identical
-        (3, "audio", _real_wav(8000, 1, 10)),   # no pixel grid: pass-through
-        (4, "image", _real_png(2, 2)),          # in-bounds PNG: pass-through
-        (5, "image", _real_png(99, 99)),        # PNG NEEDS resize: no codec
-        (6, "image", b"junk"),                  # undecodable
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in resize_media(df, 4, 4, fake=False).collect()}
-
-    assert (out[1]["width"], out[1]["height"], out[1]["valid"]) == (4, 2, True)
-    resized = _bmp_pixels(bytes(out[1]["content"]))
-    assert resized.shape == (2, 4, 3)
-    # nearest-neighbor: output pixel (y,x) samples source pixel (y*2, x*2)
-    for y in range(2):
-        for x in range(4):
-            assert tuple(resized[y, x]) == (x * 2 * 10, y * 2 * 10, 0)
-
-    assert bytes(out[2]["content"]) == small and out[2]["valid"]
-    assert out[3]["valid"] and bytes(out[3]["content"]) == rows[2][2]
-    assert out[4]["valid"] and (out[4]["width"], out[4]["height"]) == (2, 2)
-    assert out[5]["valid"] is False and out[5]["content"] is None
-    assert out[6]["valid"] is False and out[6]["content"] is None
-
-
-def test_real_feature_extraction_content_level(spark):
-    """extract_features(fake=False): identical decoded content (same BMP
-    pixels) yields the IDENTICAL unit-norm vector even when the files
-    differ byte-wise (padding); different content differs; WAV features
-    come from the sample bytes; undecodable blobs contained."""
-    import math
-
-    import numpy as np
-
-    from billing_data_pipeline_spark.operators.multimodal import (
-        _bmp_encode,
-        extract_features,
-    )
-
-    px = np.arange(4 * 8 * 3, dtype=np.uint8).reshape(4, 8, 3)
-    bmp_a = _bmp_encode(px)
-    bmp_b = _bmp_encode(px) + b""  # same pixels, same bytes: sanity twin
-    other = _bmp_encode(px[::-1] ^ 255)
-    rows = [
-        (1, "image", bmp_a),
-        (2, "image", bmp_b),
-        (3, "image", other),
-        (4, "audio", _real_wav(8000, 1, 64)),
-        (5, "image", b"junk"),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in extract_features(df, fake=False).collect()}
-    assert out[1]["embedding"] == out[2]["embedding"]
-    assert out[1]["embedding"] != out[3]["embedding"]
-    for mid in (1, 3, 4):
-        assert math.isclose(
-            sum(x * x for x in out[mid]["embedding"]), 1.0, rel_tol=1e-5
-        )
-    assert out[5]["valid"] is False and out[5]["embedding"] is None
-
-
 def test_topdown_bmp_decodes_unflipped(spark):
-    """A legal top-down BMP (negative height) must decode to the same pixel
-    grid as its bottom-up twin — orientation comes from the height sign,
-    not an unconditional row flip (code-review r3 finding)."""
-    import struct
+    """A legal top-down BMP (negative height) decodes to its bottom-up
+    twin's dimensions: the height is the magnitude, the sign only the row
+    order (code-review r3 finding). A height of INT32_MIN has no int32
+    magnitude and is contained as valid=false, not an Arrow cast failure."""
+    bottom_up = _real_bmp(3, 2)
 
-    import numpy as np
+    def with_height(h):
+        return bottom_up[:22] + struct.pack("<i", h) + bottom_up[26:]
 
-    from billing_data_pipeline_spark.operators.multimodal import (
-        _bmp_encode,
-        _bmp_pixels,
-    )
-
-    px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
-    bottom_up = _bmp_encode(px)
-    # top-down twin: height := -h, pixel rows stored in display order
-    stride = (3 * 3 + 3) & ~3
-    rows = np.zeros((2, stride), dtype=np.uint8)
-    rows[:, : 3 * 3] = px.reshape(2, 9)
-    top_down = (
-        bottom_up[:22]
-        + struct.pack("<i", -2)
-        + bottom_up[26:54]
-        + rows.tobytes()
-    )
-    assert np.array_equal(_bmp_pixels(bottom_up), px)
-    assert np.array_equal(_bmp_pixels(top_down), px)
+    rows = [
+        (1, "image", bottom_up),
+        (2, "image", with_height(-2)),
+        (3, "image", with_height(-(1 << 31))),
+    ]
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    out = {r["media_id"]: r for r in decode_media(df, fake=False).collect()}
+    for mid in (1, 2):
+        assert (out[mid]["width"], out[mid]["height"], out[mid]["valid"]) == (3, 2, True)
+    assert out[3]["valid"] is False and out[3]["height"] is None

@@ -5,17 +5,13 @@ testing')."""
 
 from __future__ import annotations
 
-from datetime import date, datetime, timedelta
+from datetime import datetime, timedelta
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from billing_data_pipeline_spark.operators.asof import asof_join_backward
 from billing_data_pipeline_spark.operators.windows import sessionize
-from billing_data_pipeline_spark.sources.csv_source import (
-    generate_partition_paths,
-    parse_hive_partition_keys,
-)
 
 SLOW = settings(
     max_examples=12,
@@ -87,22 +83,6 @@ def test_sessionize_matches_naive_gap_split(spark, data, gap):
             if (b[0] - a[0]).total_seconds() > gap
         )
     assert n_sessions == expected
-
-
-@given(
-    start=st.dates(date(2020, 1, 1), date(2030, 12, 1)),
-    n_days=st.integers(0, 40),
-)
-@settings(max_examples=50, deadline=None)
-def test_partition_paths_roundtrip(start, n_days):
-    end = start + timedelta(days=n_days)
-    parts = generate_partition_paths("s3://b/x", start, end)
-    assert len(parts) == n_days + 1
-    for p, d in zip(parts, (start + timedelta(days=i) for i in range(n_days + 1))):
-        parsed = parse_hive_partition_keys(p["path"])
-        assert (int(parsed["year"]), int(parsed["month"]), int(parsed["day"])) == (
-            d.year, d.month, d.day,
-        )
 
 
 token_lists = st.lists(

@@ -1,64 +1,14 @@
-"""Source-layer tests: the reference's unit-test contract for URL/path
-helpers (reference: tests/pipeline/test_s3_utils.py:18-146, re-specified in
-FIXTURES.md §5) plus Hive-partitioned reads with pruning evidence."""
+"""Source-layer tests: Hive-partitioned reads of the lake, snapshot tables
+and their change feeds."""
 
 from __future__ import annotations
 
-from datetime import date, timedelta
+from datetime import date
 
 from billing_data_pipeline_spark.sources.csv_source import (
-    RAW_BILLING_SCHEMA,
-    generate_partition_paths,
-    latest_partition_date,
-    parse_hive_partition_keys,
-    parse_url,
-    read_partition_paths,
-    read_partition_root,
+    list_partition_files,
+    read_partition_files,
 )
-
-
-def test_parse_url_variants():
-    assert parse_url("https://example.com/bucket/path") == parse_url(
-        "https://example.com/bucket/path"
-    )
-    u = parse_url("s3://my-bucket/data")
-    assert (u.protocol, u.domain, u.path) == ("s3", "my-bucket", "data")
-    u = parse_url("example.com/x")
-    assert (u.protocol, u.domain, u.path) == ("https", "example.com", "x")
-    u = parse_url("")
-    assert (u.protocol, u.domain, u.path) == ("https", "", "")
-    u = parse_url("example.com")
-    assert (u.protocol, u.domain, u.path) == ("https", "example.com", "")
-
-
-def test_parse_hive_partition_keys():
-    assert parse_hive_partition_keys("year=2025/month=04/day=23") == {
-        "year": "2025", "month": "04", "day": "23"
-    }
-    assert parse_hive_partition_keys("") == {}
-    assert parse_hive_partition_keys("year=2025/raw/day=23") == {
-        "year": "2025", "day": "23"
-    }
-
-
-def test_generate_partition_paths_explicit_range():
-    parts = generate_partition_paths(
-        "s3://b/data", date(2025, 4, 22), date(2025, 4, 24)
-    )
-    assert [p["path"] for p in parts] == [
-        "s3://b/data/year=2025/month=04/day=22",
-        "s3://b/data/year=2025/month=04/day=23",
-        "s3://b/data/year=2025/month=04/day=24",
-    ]
-    assert parts[0]["files"] == ["s3://b/data/year=2025/month=04/day=22/billing.csv"]
-
-
-def test_generate_partition_paths_default_range():
-    parts = generate_partition_paths("s3://b/data")
-    today = date.today()
-    assert len(parts) == 2
-    assert parts[0]["year"] == str((today - timedelta(days=1)).year)
-    assert parts[-1]["day"] == f"{today.day:02d}"
 
 
 CSV_BODY = (
@@ -80,43 +30,31 @@ def _write_lake(tmp_path, days):
     return str(root)
 
 
+def _read_lake(spark, root, from_date=None, to_date=None):
+    return read_partition_files(
+        spark, root, list_partition_files(spark, root, from_date, to_date)
+    )
+
+
 def test_partition_root_read_types_partition_columns(spark, tmp_path):
     root = _write_lake(
         tmp_path, {date(2025, 4, 22): 3, date(2025, 4, 23): 4, date(2025, 4, 24): 5}
     )
-    df = read_partition_root(spark, root)
+    df = _read_lake(spark, root)
     assert df.count() == 12
     assert dict(df.dtypes)["year"] == "int"
     assert {r["day"] for r in df.select("day").distinct().collect()} == {22, 23, 24}
 
 
 def test_partition_window_prunes_scan(spark, tmp_path):
-    """The backfill window must reach the scan as partition filters —
-    pruning by construction (OPT1), visible in the physical plan."""
+    """The backfill window prunes the listing walk (OPT1), so the scan
+    opens only the window's files."""
     root = _write_lake(
         tmp_path, {date(2025, 4, 22): 3, date(2025, 4, 23): 4, date(2025, 4, 24): 5}
     )
-    df = read_partition_root(
-        spark, root, from_date=date(2025, 4, 23), to_date=date(2025, 4, 23)
-    )
+    df = _read_lake(spark, root, date(2025, 4, 23), date(2025, 4, 23))
     assert df.count() == 4
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-
-def test_read_partition_paths_unions_files(spark, tmp_path):
-    root = _write_lake(tmp_path, {date(2025, 4, 22): 3, date(2025, 4, 23): 4})
-    parts = generate_partition_paths(
-        f"file://{root}", date(2025, 4, 22), date(2025, 4, 23)
-    )
-    df = read_partition_paths(spark, parts, RAW_BILLING_SCHEMA)
-    assert df.count() == 7
-    assert {r["day"] for r in df.select("day").distinct().collect()} == {22, 23}
-
-
-def test_latest_partition_date(spark, tmp_path):
-    root = _write_lake(tmp_path, {date(2025, 4, 22): 1, date(2025, 4, 24): 1})
-    assert latest_partition_date(spark, root) == date(2025, 4, 24)
+    assert [f.split("/")[-2] for f in df.inputFiles()] == ["day=23"]
 
 
 def test_corrupt_rows_contained_permissive(spark, tmp_path):
@@ -131,7 +69,7 @@ def test_corrupt_rows_contained_permissive(spark, tmp_path):
         + "NOT_A_TIMESTAMP,r-2,u-2,NOT_A_DOUBLE,eu,pro,inf,NOT_A_BOOL,gpu,inv-2,USD\n"
         + "2025-04-23 11:00:00,r-3,u-3,2.5,eu,pro,inf,false,gpu,inv-3,USD\n"
     )
-    df = read_partition_root(spark, str(root))
+    df = _read_lake(spark, str(root))
     rows = {r["invoice_id"]: r for r in df.collect()}
     assert len(rows) == 3  # no row lost the whole read
     assert rows["inv-1"]["credit_usage"] == 1.5
@@ -619,54 +557,19 @@ def test_snapshot_commit_self_heals_orphan_dir(spark, tmp_path):
     assert {r["k"] for r in t.read(version=0).collect()} == {1}
 
 
-def test_strict_read_failfast_and_missing_partition_skip(spark, tmp_path):
-    """permissive=False must actually enforce FAILFAST (Spark's CSV
-    default is already permissive, so the old flag was a no-op — review
-    r5), and read_partition_paths must skip enumerated files that do not
-    exist yet (the default yesterday->today window always contains
-    today's still-open file) instead of failing the whole read."""
+def test_missing_lake_root_raises_and_ingest_continues_on_empty(spark, tmp_path):
+    """A missing lake root fails the listing in Spark's PATH_NOT_FOUND words;
+    ingest treats it as an empty lake (the reference's sensors continue on
+    empty) and reads nothing."""
     import pytest
 
-    from py4j.protocol import Py4JJavaError
-
-    root = _write_lake(tmp_path, {date(2025, 4, 22): 2})
-    bad = tmp_path / "lake" / "year=2025" / "month=04" / "day=23"
-    bad.mkdir(parents=True)
-    (bad / "billing.csv").write_text(
-        CSV_BODY + "NOT_A_TIMESTAMP,r-2,u-2,NOT_A_DOUBLE,eu,pro,inf,x,gpu,i,USD\n"
-    )
-    with pytest.raises((Py4JJavaError, Exception), match="(?i)malformed|FAILFAST"):
-        read_partition_root(spark, root, permissive=False).collect()
-
-    parts = generate_partition_paths(
-        f"file://{root}", date(2025, 4, 21), date(2025, 4, 22)
-    )  # day=21 was never written
-    df = read_partition_paths(spark, parts, RAW_BILLING_SCHEMA)
-    assert df.count() == 2
-    assert {r["day"] for r in df.select("day").distinct().collect()} == {22}
-
-    # an all-missing window returns an empty, fully-typed frame
-    none = generate_partition_paths(
-        f"file://{root}", date(2024, 1, 1), date(2024, 1, 2)
-    )
-    empty = read_partition_paths(spark, none, RAW_BILLING_SCHEMA)
-    assert empty.count() == 0
-    assert "day" in empty.columns
-
-
-def test_strict_read_missing_root_raises_permissive_returns_empty(
-    spark, tmp_path
-):
-    """Review r7: the empty-frame PATH_NOT_FOUND fallback is a PERMISSIVE
-    containment behavior — a FAILFAST validation read of a missing root
-    must fail, not report 'validated 0 rows'."""
-    import pytest
+    from billing_data_pipeline_spark.pipeline import BillingPipeline
 
     missing = str(tmp_path / "no_such_lake")
-    empty = read_partition_root(spark, missing, permissive=True)
-    assert empty.count() == 0 and "day" in empty.columns
-    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
-        read_partition_root(spark, missing, permissive=False)
+    with pytest.raises(FileNotFoundError, match="PATH_NOT_FOUND"):
+        list_partition_files(spark, missing)
+    m = BillingPipeline(spark, str(tmp_path / "wh")).ingest(missing)
+    assert m["files_discovered"] == 0 and m["rows_appended"] == 0
 
 
 def test_s3a_conf_anonymous_provider_seam(monkeypatch):
