@@ -30,15 +30,16 @@ from .operators import curation as C
 from .operators import sampling as SMP
 from .operators import text as X
 
+MIN_QUALITY = 0.05
+CHUNK = 32
+STRIDE = 24
+
 
 def curate_corpus(
     spark: SparkSession,
     docs: DataFrame,
     out_dir: str,
     lang: str | None = "en",
-    min_quality: float = 0.05,
-    chunk: int = 32,
-    stride: int = 24,
     sample_pct: int = 100,
     n_shards: int = 8,
 ) -> dict:
@@ -61,9 +62,9 @@ def curate_corpus(
 
     obs = Observation("curate_kept")
     kept = scrubbed.filter(
-        (F.length("text") > 0) & (X.quality_score(F.col("text")) > min_quality)
+        (F.length("text") > 0) & (X.quality_score(F.col("text")) > MIN_QUALITY)
     ).observe(obs, F.count(F.lit(1)).alias("n"))
-    chunks = X.chunk_tokens(kept.select("doc_id", "text"), "doc_id", "text", chunk, stride)
+    chunks = X.chunk_tokens(kept.select("doc_id", "text"), "doc_id", "text", CHUNK, STRIDE)
     keyed = chunks.select(
         "doc_id",
         "chunk_idx",

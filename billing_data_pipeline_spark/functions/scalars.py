@@ -68,19 +68,14 @@ def row_content_hash_sql(*cols: str) -> str:
     return f"md5(concat_ws(chr(1), {', '.join(rendered)}))"
 
 
-def date_spine(
-    spark: SparkSession, start: str, end: str, step_days: int = 1
-) -> DataFrame:
+def date_spine(spark: SparkSession, start: str, end: str) -> DataFrame:
     """One row per date in [start, end] (F3: the reference's Python day-walk
     loop as a declarative sequence + explode — generated on executors, so a
     100-year spine is still trivial).
 
-    Edge contract (review r7): ``step_days <= 0`` fails at PLAN time
-    (F.sequence would throw mid-job); ``end < start`` yields the EMPTY
-    spine — what the reference's day-walk loop and DuckDB's
-    generate_series both produce — instead of an execution-time error."""
-    if step_days <= 0:
-        raise ValueError(f"date_spine: step_days must be >= 1, got {step_days}")
+    Edge contract (review r7): ``end < start`` yields the EMPTY spine —
+    what the reference's day-walk loop and DuckDB's generate_series both
+    produce — instead of an execution-time error."""
     from datetime import date as _date
 
     if _date.fromisoformat(end) < _date.fromisoformat(start):
@@ -90,7 +85,7 @@ def date_spine(
             F.sequence(
                 F.to_date(F.lit(start)),
                 F.to_date(F.lit(end)),
-                F.expr(f"interval {step_days} days"),
+                F.expr("interval 1 days"),
             )
         ).alias("d")
     )

@@ -11,7 +11,9 @@ loop or catalog sweep leaks one corpus-sized cache entry per call
 ``swept_persist`` keeps the persist but bounds the leak to the LAST
 call: each new registration unpersists every previously registered
 frame first — by which point prior returned frames have been consumed
-(the `_stream_scratch_dir` contract). Unpersisting early is always
+(the `_stream_scratch_dir` contract). There is no opt-out: an operator
+persists at most one frame through here per call, since a second
+registration would evict the first. Unpersisting early is always
 SAFE, never wrong: a consumer that somehow still holds an old frame
 just recomputes its lineage. Do NOT route persists whose role is a
 SEMANTIC plan barrier (e.g. ml_minhash's UDF-predicate fence) through
@@ -25,13 +27,11 @@ from pyspark.sql import DataFrame
 _LIVE: list[DataFrame] = []
 
 
-def swept_persist(df: DataFrame, eager: bool = False, sweep: bool = True) -> DataFrame:
+def swept_persist(df: DataFrame, eager: bool = False) -> DataFrame:
     """Persist ``df``, unpersisting all previously registered frames.
 
     ``eager`` materializes the cache with a count() — use when several
     independent downstream stages would otherwise race to fill it.
-    ``sweep=False`` skips the sweep for the SECOND persist of one
-    operator call (sweeping would evict the first).
 
     A swept frame may belong to an ALREADY-STOPPED SparkContext (tools
     that spin one session per measurement — co_measure's per-mult
@@ -39,14 +39,13 @@ def swept_persist(df: DataFrame, eager: bool = False, sweep: bool = True) -> Dat
     MinHash tier NPE'd co_measure at x8). Such frames died with their
     JVM, so the sweep's only job is dropping the reference; swallow the
     dead-context error instead of killing the NEW session's first call."""
-    if sweep:
-        while _LIVE:
-            try:
-                _LIVE.pop().unpersist()
-            except Exception:
-                # frame belonged to a stopped SparkContext — its cache
-                # memory is already gone with the JVM
-                pass
+    while _LIVE:
+        try:
+            _LIVE.pop().unpersist()
+        except Exception:
+            # frame belonged to a stopped SparkContext — its cache
+            # memory is already gone with the JVM
+            pass
     out = df.persist()
     if eager:
         out.count()

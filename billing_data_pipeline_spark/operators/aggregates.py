@@ -306,15 +306,14 @@ def top_k(
     order_col: str,
     k: int,
     tiebreak: Sequence[str] = (),
-    ascending: bool = False,
 ) -> DataFrame:
-    """ORDER BY .. LIMIT k (reference: reports.py:30-44, top-5 users/regions).
+    """ORDER BY order_col DESC .. LIMIT k (reference: reports.py:30-44,
+    top-5 users/regions).
 
     Plans as TakeOrderedAndProject (no global sort). ``tiebreak`` makes the
     k-th row deterministic when order_col ties — required for oracle parity.
     """
-    key = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    order = [key, *[F.col(c).asc() for c in tiebreak]]
+    order = [F.col(order_col).desc(), *[F.col(c).asc() for c in tiebreak]]
     return df.orderBy(*order).limit(k)
 
 

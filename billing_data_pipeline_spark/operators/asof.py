@@ -39,10 +39,9 @@ def asof_join_backward(
     entity_col: str,
     ts_col: str,
     value_cols: list[str],
-    strict: bool = False,
 ) -> DataFrame:
     """Backward as-of join: left columns + ``value_cols`` from the latest
-    right row with right.ts <= left.ts (< when ``strict``) per entity.
+    right row with right.ts <= left.ts per entity.
 
     Right-side ties on (entity, ts) must be resolved by the caller (e.g.
     keep max id per (entity, ts)) — as-of is only well-defined with unique
@@ -58,11 +57,6 @@ def asof_join_backward(
             f"asof_join_backward: left frame carries reserved working/"
             f"output column(s) {sorted(reserved & set(left.columns))}"
         )
-    # side ordering at equal ts: right first (0) so inclusive <= sees it;
-    # strict mode orders left first so an equal-ts right row is NOT visible.
-    right_tag = 1 if strict else 0
-    left_tag = 1 - right_tag
-
     # NULL timestamps: a right row with unknown time can never be proven
     # at-or-before anything (asc NULLS FIRST would otherwise sort it ahead
     # of every left row and match it); left rows with NULL ts likewise get
@@ -80,7 +74,9 @@ def asof_join_backward(
 
     qe, qt = _q(entity_col), _q(ts_col)
     right = right.filter(f"{qt} IS NOT NULL AND {qe} IS NOT NULL")
-    l_tagged = left.selectExpr("*", f"{left_tag} AS _side")
+    # side ordering at equal ts: right (0) before left (1), so the
+    # inclusive <= sees an equal-ts right row
+    l_tagged = left.selectExpr("*", "1 AS _side")
     # ALL right value columns ride in ONE struct: the struct is non-null
     # exactly when a right ROW exists, so last(ignorenulls) tracks row
     # presence — per-column last() would skip a genuine NULL value and
@@ -94,7 +90,7 @@ def asof_join_backward(
         qe,
         qt,
         f"named_struct({fields}) AS _rv",
-        f"{right_tag} AS _side",
+        "0 AS _side",
     )
     unioned = l_tagged.unionByName(r_tagged, allowMissingColumns=True)
 
@@ -104,7 +100,7 @@ def asof_join_backward(
         f"ORDER BY {qt} ASC, _side ASC "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _asof_rv",
     )
-    out = filled.filter(f"_side = {left_tag}").selectExpr(
+    out = filled.filter("_side = 1").selectExpr(
         *[_q(c) for c in left.columns],
         *[f"_asof_rv.{_q(c)} AS {_q(f'asof_{c}')}" for c in value_cols],
     )
@@ -235,13 +231,12 @@ def range_join(
     ts_col: str,
     window_seconds: int,
     right_cols: list[str],
-    left_prefix: str = "l_",
 ) -> DataFrame:
     """All (left, right) pairs with the same entity and
     left.ts - window <= right.ts <= left.ts, via time-bucketed equi-join
     (each left bucket joins bucket b and b-1 only).
 
-    Output: entity, prefixed left columns, ``right_cols``, and ``r_ts``
+    Output: entity, ``l_``-prefixed left columns, ``right_cols``, and ``r_ts``
     (the matched right row's timestamp).
     """
     if window_seconds <= 0:
@@ -265,9 +260,9 @@ def range_join(
 
     l = left.select(
         F.col(entity_col).alias("_ent"),
-        F.col(ts_col).alias(f"{left_prefix}ts"),
-        *[F.col(c).alias(f"{left_prefix}{c}") for c in left.columns if c not in (entity_col, ts_col)],
-    ).withColumn("_lb", bucket(f"{left_prefix}ts"))
+        F.col(ts_col).alias("l_ts"),
+        *[F.col(c).alias(f"l_{c}") for c in left.columns if c not in (entity_col, ts_col)],
+    ).withColumn("_lb", bucket("l_ts"))
     # each left row probes its own and the previous bucket
     l = l.withColumn("_b", F.explode(F.array(F.col("_lb"), F.col("_lb") - 1)))
 
@@ -280,9 +275,9 @@ def range_join(
     ).withColumn("_b", bucket("r_ts"))
 
     pairs = l.join(r, ["_ent", "_b"]).filter(
-        (F.col("r_ts") <= F.col(f"{left_prefix}ts"))
+        (F.col("r_ts") <= F.col("l_ts"))
         & (
-            F.unix_micros(F.col(f"{left_prefix}ts")) - F.unix_micros(F.col("r_ts"))
+            F.unix_micros(F.col("l_ts")) - F.unix_micros(F.col("r_ts"))
             <= us
         )
     )

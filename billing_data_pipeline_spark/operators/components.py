@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_ROUNDS = 25
+
 
 def _star_contract(edges: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star contraction. ``edges`` must be
@@ -120,7 +122,7 @@ def _star_contract(edges: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
 
 
 def connected_components(
-    nodes: DataFrame, edges: DataFrame, id_col: str = "id", max_rounds: int = 25
+    nodes: DataFrame, edges: DataFrame, id_col: str = "id"
 ) -> DataFrame:
     """(id) + undirected (src, dst) edges -> (id, component_id) where
     component_id = min node id reachable from id. Deterministic; singleton
@@ -140,7 +142,7 @@ def connected_components(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    stars, _rounds = _star_contract(canon, max_rounds)
+    stars, _rounds = _star_contract(canon, MAX_ROUNDS)
     centers = stars.groupBy("a").agg(F.min("b").alias("component_id"))
     return nodes.select(F.col(id_col).alias("id")).join(
         centers, F.col("id") == F.col("a"), "left"

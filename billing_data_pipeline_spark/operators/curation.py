@@ -25,13 +25,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .sampling import MIX_PRIME, mix_rank, mix_rank_sql
+from .sampling import mix_rank, mix_rank_sql
 from .text import JAVA_WS_SPLIT_SQL as WS
 from .text import chunk_tokens, chunk_tokens_oracle_sql
 
 #: Gram windows per chunk in ``decontaminate``'s kernel: bounds its peak
 #: memory whatever a batch's gram count (tests shrink it to force chunks).
 _WINDOW_CHUNK = 1 << 20
+
+#: ``decontaminate_bloom``'s filter size and probe count.
+BLOOM_BITS_PER_GRAM = 16
+BLOOM_HASHES = 4
+
+#: ``mix_to_budget``: the kept share of all tokens, and its mixer salt.
+BUDGET_NUM = 1
+BUDGET_DEN = 2
+MIX_SALT = 17
+
+#: ``epoch_shard_manifest``'s mixer salt.
+SHARD_SALT = 23
 
 # ---------------------------------------------------------------------------
 # PII scrubbing
@@ -101,7 +113,6 @@ def segment_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     seg: int = 10,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Line/paragraph-level dedup (the CCNet move, applied to word windows):
     split each doc into non-overlapping ``seg``-token segments, drop every
@@ -116,37 +127,16 @@ def segment_dedup(
     documents must survive as empty shells (repeated_ngram_stats shows
     the pattern).
 
-    Scale shape, default (window) form: one hash-partitioned window over
-    the 16-byte segment hash (the only shuffle over segment rows), then
-    one groupBy(doc) to reassemble. Segment rows are ~n_tokens/seg per doc
-    — smaller than the token explosion of n-gram methods. Keep-first via
-    window-min avoids a join-back, reusing the same exchange for dedup
-    decision and dedup application.
-
-    ``skew_safe=True`` swaps the window for groupBy(hash).min + join-back.
-    Window partitions cannot be split: a boilerplate segment repeated
-    billions of times ("click here to subscribe") lands its ENTIRE row set
-    on one reducer in the window form. The aggregate form collapses those
-    duplicates map-side (partial min before the exchange), and the
-    join-back is an equi-join AQE's skew-join splitting applies to — one
-    more exchange in the plan, but no unsplittable hot partition. Same
-    result bit-for-bit (tests/test_curation.py asserts equality); choose
-    by corpus: window for organic text, skew_safe for boilerplate-heavy
-    web scrapes.
+    Scale shape: one hash-partitioned window over the 16-byte segment hash
+    (the only shuffle over segment rows), then one groupBy(doc) to
+    reassemble. Segment rows are ~n_tokens/seg per doc — smaller than the
+    token explosion of n-gram methods. Keep-first via window-min avoids a
+    join-back, reusing the same exchange for dedup decision and dedup
+    application. Window partitions cannot be split: a boilerplate segment
+    repeated billions of times lands its ENTIRE row set on one reducer
+    (LIMITATIONS.md).
     """
     segs = chunk_tokens(df, id_col, text_col, chunk=seg, stride=seg)
-    h = F.md5(F.col("chunk_text"))
-    if skew_safe:
-        keyed = segs.withColumn("_h", h)
-        canon = keyed.groupBy("_h").agg(
-            F.min(F.struct(F.col(id_col), F.col("chunk_idx"))).alias("_first")
-        )
-        flagged = keyed.join(canon, on="_h", how="inner").withColumn(
-            "_kept",
-            (F.col(id_col) == F.col("_first")[id_col])
-            & (F.col("chunk_idx") == F.col("_first")["chunk_idx"]),
-        )
-        return _reassemble(flagged, id_col)
     # expr-string window (r11 construction pass — see _names.sql_ident):
     # the same min-struct-over-hash keep-first rule, fewer py4j
     # round-trips; _first is pruned before the shuffle (unreferenced by
@@ -533,15 +523,13 @@ def decontaminate_bloom(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 5,
-    bits_per_gram: int = 16,
-    n_hashes: int = 4,
 ) -> DataFrame:
     """Bloom-prefilter decontamination — the 100 TB path when the eval
     set is too large for ``decontaminate``'s broadcast Python SET of
     gram strings (a set of 100M grams is ~10 GB of Python objects per
-    executor; the Bloom filter is n_grams * bits_per_gram BITS — 200 MB
-    for the same 100M at the default 16, with a ~0.24% false-positive
-    rate at k=4). Results are EXACT, not approximate: the Bloom only
+    executor; the Bloom filter is n_grams * BLOOM_BITS_PER_GRAM BITS —
+    200 MB for the same 100M at 16, with a ~0.24% false-positive rate at
+    BLOOM_HASHES = 4). Results are EXACT, not approximate: the Bloom only
     PREFILTERS candidate (doc, gram) rows, and an exact string join
     against the eval grams removes its false positives (Bloom filters
     have no false negatives, so nothing is lost) — hence this tier rides
@@ -584,13 +572,13 @@ def decontaminate_bloom(
         .astype(np.uint64)
     )
 
-    m = 1 << max(10, int(len(ev_hashes) * bits_per_gram - 1).bit_length())
+    m = 1 << max(10, int(len(ev_hashes) * BLOOM_BITS_PER_GRAM - 1).bit_length())
     mask = np.uint64(m - 1)
     words = np.zeros(m >> 6, dtype=np.uint64)
     GOLD = np.uint64(0x9E3779B97F4A7C15)
     with np.errstate(over="ignore"):
         h2 = ev_hashes * GOLD | np.uint64(1)  # odd => full-period stride
-        for i in range(n_hashes):
+        for i in range(BLOOM_HASHES):
             pos = (ev_hashes + np.uint64(i) * h2) & mask
             np.bitwise_or.at(
                 words, (pos >> np.uint64(6)).astype(np.int64),
@@ -615,7 +603,7 @@ def decontaminate_bloom(
             with np.errstate(over="ignore"):
                 hh2 = h * GOLD | np.uint64(1)
                 ok = np.ones(len(h), dtype=bool)
-                for i in range(n_hashes):
+                for i in range(BLOOM_HASHES):
                     pos = (h + np.uint64(i) * hh2) & mask
                     bits = (
                         w[(pos >> np.uint64(6)).astype(np.int64)]
@@ -692,13 +680,9 @@ def mix_to_budget(
     id_col: str,
     token_count_col,
     weight_col,
-    budget_num: int = 1,
-    budget_den: int = 2,
-    salt: int = 17,
-    coarse_buckets: int | None = None,
 ) -> DataFrame:
     """Per-source token-budget corpus mixing: give source s a budget of
-    ``(budget_num/budget_den) * total_tokens * w_s / sum(w)`` tokens and
+    ``(BUDGET_NUM/BUDGET_DEN) * total_tokens * w_s / sum(w)`` tokens and
     greedily keep its documents in deterministic mixed-hash order until the
     budget is exhausted. Returns a per-source summary
     (source, budget_tokens, docs_kept, tokens_kept).
@@ -708,8 +692,7 @@ def mix_to_budget(
     the summary (not a docs_kept=0 row) — the SQL twin shares the
     semantics, so the gate holds; a downstream mixer must treat a
     missing source as budget-starved. (b) ``weight_col`` must be
-    CONSTANT per source: per-row weights double-count the weight sum and
-    make the coarse form's bucket ordering nondeterministic.
+    CONSTANT per source: per-row weights double-count the weight sum.
 
     Determinism: budgets are integer arithmetic (DIV), the keep order is
     the sampling.py multiplicative mixer on the id — no RNG, so a doc's
@@ -720,11 +703,8 @@ def mix_to_budget(
     window partitioned by source for the running token sum, then the
     summary groupBy reusing the same partitioning. The per-source cumsum is
     the inherently sequential part of greedy budgeting; with thousands of
-    sources it parallelizes across them. For a skewed mega-source pass
-    ``coarse_buckets`` (e.g. 1024): the cut point is then bounded by a
-    prefix sum over BUCKET subtotals (tiny) and the row-level ordering
-    runs only inside the one boundary bucket per source —
-    ``_coarse_budget_keep`` below; identical keep-set, test-asserted.
+    sources it parallelizes across them, but one mega-source's rows all
+    sort on one reducer (LIMITATIONS.md).
     """
     base = df.select(
         F.col(source_col).alias("source"),
@@ -738,7 +718,7 @@ def mix_to_budget(
         .distinct()
         .agg(F.sum("_w").alias("_wsum"))
     )
-    rank = mix_rank(F.col("_id"), salt)  # the shared mixer (review r5)
+    rank = mix_rank(F.col("_id"), MIX_SALT)  # the shared mixer (review r5)
     budgeted = (
         base.withColumn("_rank", rank)
         .crossJoin(F.broadcast(totals))
@@ -746,70 +726,22 @@ def mix_to_budget(
         .withColumn(
             "_budget",
             F.expr(
-                f"(_total_tokens * _w * {budget_num}) DIV (_wsum * {budget_den})"
+                f"(_total_tokens * _w * {BUDGET_NUM}) DIV (_wsum * {BUDGET_DEN})"
             ),
         )
     )
-    if coarse_buckets:
-        kept = _coarse_budget_keep(budgeted, coarse_buckets)
-    else:
-        w = (
-            Window.partitionBy("source")
-            .orderBy("_rank", "_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        scored = budgeted.withColumn("_cum", F.sum("_tokens").over(w))
-        kept = scored.filter(F.col("_cum") <= F.col("_budget"))
+    w = (
+        Window.partitionBy("source")
+        .orderBy("_rank", "_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    scored = budgeted.withColumn("_cum", F.sum("_tokens").over(w))
+    kept = scored.filter(F.col("_cum") <= F.col("_budget"))
     return kept.groupBy("source").agg(
         F.max("_budget").alias("budget_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("docs_kept"),
         F.sum("_tokens").alias("tokens_kept"),
     )
-
-
-def _coarse_budget_keep(budgeted: DataFrame, n_buckets: int) -> DataFrame:
-    """Two-level prefix sum for the greedy budget cut (the mega-source
-    path): bucket rows by rank prefix, prefix-sum BUCKET token totals
-    (tiny: sources x n_buckets rows), then evaluate the row-level cumsum
-    ONLY inside each source's boundary bucket. Buckets wholly under budget
-    are kept without ordering their rows; buckets past the boundary are
-    dropped the same way. Identical keep-set to the row-level form (same
-    total order, same prefix semantics — test-asserted); the sequential
-    window touches ~1/n_buckets of the source's rows.
-    """
-    width = MIX_PRIME // n_buckets + 1
-    rows = budgeted.withColumn("_bkt", (F.col("_rank") / width).cast("long"))
-    bsums = rows.groupBy("source", "_bkt", "_budget").agg(
-        F.sum("_tokens").alias("_btok")
-    )
-    wb = (
-        Window.partitionBy("source")
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    marked = bsums.withColumn("_bcum", F.sum("_btok").over(wb)).withColumn(
-        "_bprev", F.col("_bcum") - F.col("_btok")
-    )
-    # whole buckets strictly under budget after their last row
-    full = marked.filter(F.col("_bcum") <= F.col("_budget")).select("source", "_bkt")
-    full_rows = rows.join(full, on=["source", "_bkt"], how="left_semi")
-    # the boundary bucket: first bucket whose cumulative total crosses the
-    # budget — row-level cumsum there, offset by the previous buckets' sum
-    boundary = marked.filter(
-        (F.col("_bcum") > F.col("_budget")) & (F.col("_bprev") <= F.col("_budget"))
-    ).select("source", "_bkt", "_bprev")
-    wr = (
-        Window.partitionBy("source", "_bkt")
-        .orderBy("_rank", "_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    boundary_rows = (
-        rows.join(boundary, on=["source", "_bkt"], how="inner")
-        .withColumn("_cum", F.col("_bprev") + F.sum("_tokens").over(wr))
-        .filter(F.col("_cum") <= F.col("_budget"))
-        .drop("_bprev", "_cum")
-    )
-    return full_rows.unionByName(boundary_rows)
 
 
 def epoch_shard_manifest(
@@ -819,7 +751,6 @@ def epoch_shard_manifest(
     token_count_col,
     epochs_col,
     n_shards: int = 8,
-    salt: int = 23,
 ) -> DataFrame:
     """Epoch upsampling + deterministic shard assignment — the final
     write-ordering step of a training-data pipeline: replicate each
@@ -861,7 +792,7 @@ def epoch_shard_manifest(
     # column wrapped _id*31 silently at ids >= 2^31/31 under non-ANSI int
     # arithmetic while the oracle's BIGINT multiply computed the true
     # value — shard assignment scrambled only on int-typed ids
-    key = F.col("_id").cast("long") * 31 + F.col("epoch") + F.lit(salt)
+    key = F.col("_id").cast("long") * 31 + F.col("epoch") + F.lit(SHARD_SALT)
     rank = mix_rank(key)  # salt already folded into the composite key
     return (
         base.withColumn("shard_id", F.pmod(rank, n_shards).cast("int"))
@@ -881,11 +812,10 @@ def epoch_shard_manifest_sql(
     token_count_sql: str,
     epochs_sql: str,
     n_shards: int = 8,
-    salt: int = 23,
 ) -> str:
     """DuckDB twin of epoch_shard_manifest (range() excludes its stop =>
     range(1, e+1); portable pmod chain)."""
-    key = f"({id_col} * 31 + epoch + {salt})"
+    key = f"({id_col} * 31 + epoch + {SHARD_SALT})"
     rank = mix_rank_sql(key)  # salt already folded into the composite key
     return f"""
 WITH rows AS (
@@ -909,13 +839,10 @@ def mix_to_budget_sql(
     id_col: str,
     token_count_sql: str,
     weight_sql: str,
-    budget_num: int = 1,
-    budget_den: int = 2,
-    salt: int = 17,
 ) -> str:
     """DuckDB twin of mix_to_budget (portable pmod spelled out; // is
     integer floor-div on BIGINTs, matching Spark's DIV for non-negatives)."""
-    rank = mix_rank_sql(id_col, salt)
+    rank = mix_rank_sql(id_col, MIX_SALT)
     return f"""
 WITH base AS (
     SELECT {source_col} AS source, {id_col} AS _id,
@@ -929,8 +856,8 @@ ws AS (SELECT CAST(SUM(_w) AS BIGINT) AS _wsum
        FROM (SELECT DISTINCT source, _w FROM base)),
 scored AS (
     SELECT base.*,
-           CAST((_total_tokens * _w * {budget_num})
-                // (_wsum * {budget_den}) AS BIGINT) AS _budget,
+           CAST((_total_tokens * _w * {BUDGET_NUM})
+                // (_wsum * {BUDGET_DEN}) AS BIGINT) AS _budget,
            SUM(_tokens) OVER (
                PARTITION BY source ORDER BY _rank, _id
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW

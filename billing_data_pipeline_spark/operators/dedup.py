@@ -534,6 +534,13 @@ def shingle_hashes(text_col: str, n: int = 3) -> F.Column:
     return grams
 
 
+# Signature components, components per band key (must divide MINHASH_K),
+# and the estimated-Jaccard floor of a pair.
+MINHASH_K = 16
+MINHASH_BAND_SIZE = 2
+MINHASH_MIN_JACCARD = 0.4
+
+
 def minhash_agreement_est(k: int) -> F.Column:
     """Estimated Jaccard from two aligned ``sig_a``/``sig_b`` columns:
     the agreeing-component share over ``k`` components. The ONE estimator
@@ -565,13 +572,11 @@ def minhash_neardup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 16,
-    band_size: int = 2,
-    min_jaccard: float = 0.4,
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Approximate near-duplicate pairs via MinHash + banded LSH:
-    shingle -> k-component signature -> k/band_size band keys -> self-join
+    shingle -> MINHASH_K-component signature -> MINHASH_K/MINHASH_BAND_SIZE
+    band keys -> self-join
     on (band, key) -> estimated Jaccard = fraction of agreeing components.
 
     The classic shingle->minhash->band->bucket-join pipeline expressed
@@ -596,17 +601,7 @@ def minhash_neardup_pairs(
     evaluated after its persist is swept transparently recomputes its
     (deterministic) lineage — correct, just slower.
     """
-    if k % band_size:
-        # loud plan-time guard (review r7): flooring k // band_size
-        # silently left the trailing k % band_size signature components
-        # out of EVERY band key — recall loss with no error, while the
-        # estimator still divided by the full k (same misconfiguration
-        # class portable_dedup's k > len(MINHASH_AB) guard fails on)
-        raise ValueError(
-            f"minhash banding: k={k} is not divisible by "
-            f"band_size={band_size} — the last {k % band_size} signature "
-            "components would never join any band"
-        )
+    k, band_size = MINHASH_K, MINHASH_BAND_SIZE
     n_bands = k // band_size
     # Arithmetic shingle hashing: one string pass (token xxhash64), then
     # long-only mixing — no shingle strings are ever built.
@@ -677,7 +672,7 @@ def minhash_neardup_pairs(
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= min_jaccard)
+        .filter(F.col("est_jaccard") >= MINHASH_MIN_JACCARD)
         .select("doc_a", "doc_b", "est_jaccard")
     )
 
@@ -686,10 +681,6 @@ def ml_minhash_neardup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hash_tables: int = 8,
-    max_jaccard_distance: float = 0.6,
-    num_features: int = 1 << 18,
-    seed: int = 42,
 ) -> DataFrame:
     """pyspark.ml variant (HashingTF -> MinHashLSH.approxSimilarityJoin) —
     same semantics through the MLlib API; measurably slower than the
@@ -719,14 +710,14 @@ def ml_minhash_neardup_pairs(
         .localCheckpoint(eager=False)
     )
     tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=num_features, binary=True
+        inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
     )
     feats = tf.transform(docs)
     lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
+        inputCol="features", outputCol="hashes", numHashTables=8, seed=42
     )
     model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, max_jaccard_distance, distCol="dist")
+    pairs = model.approxSimilarityJoin(feats, feats, 0.6, distCol="dist")
     return (
         pairs.filter(F.col("datasetA.doc") < F.col("datasetB.doc"))
         .select(
@@ -737,8 +728,8 @@ def ml_minhash_neardup_pairs(
     )
 
 
-SIMHASH_BITS = 64
 SIMHASH_BANDS = 4  # 16-bit bands; Hamming<=3 pairs share >=1 band
+SIMHASH_MAX_HAMMING = 3
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -784,26 +775,16 @@ def simhash_neardup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_hamming: int = 3,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
-    """SimHash near-dup pairs with Hamming distance <= max_hamming.
+    """SimHash near-dup pairs with Hamming distance <= SIMHASH_MAX_HAMMING.
 
     Banding: two signatures within Hamming 3 of 64 bits agree exactly on at
     least one of 4 16-bit bands (pigeonhole), so the self-join runs on band
-    keys — linear candidate generation, no cross join. ``bucket_cap``
-    (r10) is the same degenerate-bucket guard as the MinHash tier: a
-    (band, key) bucket with more members is dropped from candidate
-    generation (boilerplate corpora collapse a 16-bit band onto one
-    value for a large doc fraction). Capping a band WEAKENS the
-    pigeonhole guarantee for pairs whose only agreeing band overflowed —
-    the documented recall/cost dial, same as prefix blocking. Caller
-    beware (measured r10): 16-bit band keys concentrate mass on CLEAN
-    data too (17% of the testdata corpus in one bucket at sf0.1), so
-    size the cap to YOUR corpus or prefer wider band keys; the catalog
-    query runs uncapped for exactly this reason. The portable tiers
-    stay uncapped on purpose: they are the oracle-checked
-    proof-of-semantics path, not the throughput path.
+    keys — linear candidate generation, no cross join. Uncapped, unlike
+    the MinHash tier: 16-bit band keys concentrate mass on CLEAN data too
+    (measured r10: 17% of the testdata corpus in one bucket at sf0.1), so
+    a degenerate-bucket cap either drops real pairs or bounds nothing;
+    wider band keys are the scale fix.
     """
     sigs = simhash_signatures(df, id_col, text_col)
     bands = sigs.select(
@@ -823,7 +804,6 @@ def simhash_neardup_pairs(
             )
         ).alias("bk"),
     ).select("doc", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    bands = _cap_blocks(bands, ["band", "key"], bucket_cap)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -844,6 +824,6 @@ def simhash_neardup_pairs(
         cand.withColumn(
             "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )

@@ -66,7 +66,6 @@ def dedup_append(
     existing: DataFrame,
     keys: Sequence[str],
     dedup_batch: bool = True,
-    strict: bool = False,
 ) -> DataFrame:
     """Rows of ``batch`` whose natural key is absent from ``existing``.
 
@@ -78,33 +77,10 @@ def dedup_append(
     shuffle of the batch): use it when the batch is known key-unique — the
     anti-join itself then needs no batch-side shuffle at all (broadcast
     existing keys).
-
-    ``strict=True`` replicates the reference's UNIQUE-constraint behavior
-    (ingest.py:190): intra-batch duplicate keys abort the load with
-    ``ValueError`` instead of being silently collapsed. (NULL-keyed rows
-    are never duplicates of each other, same as SQL UNIQUE.)
     """
     keys = list(keys)
     existing_keys = existing.select(*keys)
-    if strict:
-        non_null = batch.na.drop(subset=keys)
-        dupes = (
-            non_null.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
-        )
-        if dupes:
-            key_vals = {k: dupes[0][k] for k in keys}
-            raise ValueError(
-                f"strict dedup_append: intra-batch duplicate natural key {key_vals} "
-                "(reference UNIQUE-constraint semantics, ingest.py:190)"
-            )
-    # strict mode: the batch just passed the uniqueness check, and
-    # dropDuplicates would collapse NULL-keyed rows (it treats NULLs as
-    # equal — SQL UNIQUE does not), so skip the in-batch collapse entirely.
-    clean = (
-        batch
-        if strict
-        else (dedup_within_batch(batch, keys) if dedup_batch else batch)
-    )
+    clean = dedup_within_batch(batch, keys) if dedup_batch else batch
     # a USING join moves the key columns first: restore the batch's
     # order, or appends to one table land in two column orders
     return clean.join(existing_keys, on=keys, how="left_anti").select(
@@ -182,27 +158,30 @@ def append_new_rows_per_file(
     return sum(per_file.values()), per_file
 
 
+#: ``bloom_prefiltered_new_rows``' bitmap size (1 MB) and probes per key.
+BLOOM_BITS = 1 << 23
+BLOOM_PROBES = 5
+
+
 def bloom_prefiltered_new_rows(
     batch: DataFrame,
     existing: DataFrame,
     key: Column | str,
-    num_bits: int = 1 << 23,
-    n_probes: int = 5,
 ) -> DataFrame:
     """EXACT incremental dedup with a bloom-pruned join probe — the 100 TB
     ingest accelerator for the ``dedup_append`` anti-join shape.
 
     Build: each scan partition of the existing side folds its keys into a
-    local ``num_bits`` bitmap (numpy, mapInPandas); the driver ORs the
+    local ``BLOOM_BITS`` bitmap (numpy, mapInPandas); the driver ORs the
     per-partition bitmaps — materialization is bounded by
-    #partitions x bitmap bytes (1 MB default), NEVER by key count. Probe:
+    #partitions x bitmap bytes (1 MB), NEVER by key count. Probe:
     batch rows test the broadcast bitmap scan-side (vectorized double
     hashing over JVM xxhash64 columns — build and probe share the exact
     same hash values by construction):
 
     - "definitely not seen" rows (bloom has no false negatives) skip the
       anti-join entirely — for mostly-new batches that is almost all;
-    - "maybe seen" rows (true dups + ~<1% false positives at defaults)
+    - "maybe seen" rows (true dups + ~<1% false positives)
       are verified by the exact LEFT ANTI join against existing keys.
 
     The union is EXACTLY the plain anti-join result — the bloom prunes
@@ -216,7 +195,7 @@ def bloom_prefiltered_new_rows(
     from pyspark.sql import types as T
 
     k = F.col(key) if isinstance(key, str) else key
-    m = int(num_bits)
+    m = BLOOM_BITS
 
     def hashed(df: DataFrame, kc: Column) -> DataFrame:
         # Kirsch-Mitzenmacher double hashing over two independent JVM
@@ -228,7 +207,7 @@ def bloom_prefiltered_new_rows(
     def positions(h1: "np.ndarray", h2: "np.ndarray") -> "np.ndarray":
         u1 = h1.astype(np.uint64)
         u2 = h2.astype(np.uint64)
-        probes = np.arange(n_probes, dtype=np.uint64)
+        probes = np.arange(BLOOM_PROBES, dtype=np.uint64)
         return ((u1[:, None] + probes[None, :] * u2[:, None]) % np.uint64(m))
 
     bitmap_schema = T.StructType([T.StructField("bits", T.BinaryType())])

@@ -29,20 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        # all nullable (review r8): lake reality — failed downloads leave
-        # NULL blobs, joins leave NULL ids — and the decode kernels
-        # contain both (valid=false / NULL-id manifest row) rather than
-        # reject them at the schema door. Parquet scans surface nullable
-        # columns anyway; the old non-null declaration only ever bound
-        # createDataFrame test fixtures.
-        T.StructField("media_id", T.LongType(), True),
-        T.StructField("kind", T.StringType(), True),  # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         # media_id/kind nullable (review r8, NULL-key probe): a record
@@ -202,10 +188,10 @@ def decode_media(df: DataFrame, fake: bool = True) -> DataFrame:
     return df.mapInPandas(run, schema=DECODED_SCHEMA)
 
 
-def sample_frames(df: DataFrame, every_n: int, fake: bool = True) -> DataFrame:
-    """Frame sampling for video records: emits one row per sampled frame
-    index (schema-level plumbing; frame bytes extraction is codec work that
-    slots into the same kernel)."""
+def sample_frames(df: DataFrame, every_n: int) -> DataFrame:
+    """Frame sampling for video records (synthetic-header kernel): emits one
+    row per sampled frame index (schema-level plumbing; frame bytes
+    extraction is codec work that slots into the same kernel)."""
     if every_n < 1:
         # fail at plan time like chunk_tokens, not mid-job in F.sequence
         raise ValueError(f"every_n must be >= 1, got {every_n}")
@@ -217,7 +203,7 @@ def sample_frames(df: DataFrame, every_n: int, fake: bool = True) -> DataFrame:
     # malformed by fiat and yields no frames, like any other parse reject.
     max_samples = 4_000_000
     n_sampled = (F.col("n_frames") - 1) / F.lit(every_n) + 1
-    decoded = decode_media(df, fake=fake)
+    decoded = decode_media(df)
     return (
         # n_frames > 0: a zero-frame (or NULL-frame-count) video has no
         # frames to sample — the old greatest(n-1, 0) clamp emitted a

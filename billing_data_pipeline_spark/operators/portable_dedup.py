@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import minhash_agreement_est
+from .dedup import MINHASH_MIN_JACCARD, minhash_agreement_est
 from .text import JAVA_WS_SPLIT_SQL as WS
 
 # 31-bit Mersenne prime: (a * h + b) stays < 2^62 for a, h < 2^31 — exact
@@ -48,8 +48,14 @@ MINHASH_AB: tuple[tuple[int, int], ...] = tuple(
 )
 del _rng
 
+# Signature components (a prefix of MINHASH_AB) and components per band
+# key (must divide MINHASH_K); the Jaccard floor is the fast tier's.
+MINHASH_K = 12
+MINHASH_BAND_SIZE = 2
+
 SIMHASH_PORTABLE_BITS = 60  # portable_hash60 yields 60-bit values
 SIMHASH_PORTABLE_BANDS = 4  # 15-bit bands; Hamming<=3 shares >=1 band
+SIMHASH_MAX_HAMMING = 3
 
 # Peak element budget for the minhash kernel's (k, grams) affine slice
 # (r12, ADVICE r11): each numpy temporary stays ≤ ~8M int64 (~64 MB)
@@ -79,9 +85,6 @@ def minhash_portable_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 12,
-    band_size: int = 2,
-    min_jaccard: float = 0.4,
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup pairs, every step engine-portable:
@@ -119,7 +122,7 @@ def minhash_portable_pairs(
     # dedup.minhash_neardup_pairs, whose FOUR branches keep eager.)
     from ._persist import swept_persist
 
-    sigs = swept_persist(_minhash_sigs(df, id_col, text_col, k))
+    sigs = swept_persist(_minhash_sigs(df, id_col, text_col, MINHASH_K))
 
     # The signature (k longs, ~100 B) rides THROUGH the band self-join so
     # the agreement estimate is computed in the join projection itself —
@@ -132,13 +135,13 @@ def minhash_portable_pairs(
     from .dedup import _cap_blocks
 
     bands = _cap_blocks(
-        _band_keys(sigs.select("doc", "sig"), k, band_size),
+        _band_keys(sigs.select("doc", "sig"), MINHASH_K, MINHASH_BAND_SIZE),
         ["band", "key"],
         bucket_cap,
     )
     a = bands.alias("a")
     b = bands.alias("b")
-    est = minhash_agreement_est(k)
+    est = minhash_agreement_est(MINHASH_K)
     return (
         a.join(
             b,
@@ -153,7 +156,7 @@ def minhash_portable_pairs(
             F.col("b.sig").alias("sig_b"),
         )
         .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= min_jaccard)
+        .filter(F.col("est_jaccard") >= MINHASH_MIN_JACCARD)
         .select("doc_a", "doc_b", "est_jaccard")
         .distinct()
     )
@@ -175,16 +178,7 @@ def _minhash_sigs(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFram
     (str.strip(' ')), Java's regex \\s is ASCII-only (re.ASCII), and a
     leading separator yields the same empty first token in both engines —
     the extreme-values sweep (unicode whitespace, metachar/empty docs)
-    guards the contract."""
-    if k > len(MINHASH_AB):
-        # MINHASH_AB[:k] would silently truncate: bands past the real
-        # signature slice to '' keys, degenerating the band self-join to
-        # an all-pairs cross product, and the estimator divides by the
-        # wrong k — fail loudly instead (review r6)
-        raise ValueError(
-            f"k={k} exceeds the {len(MINHASH_AB)} fixed minhash "
-            "(a,b) pairs — extend MINHASH_AB (and its oracle twin) first"
-        )
+    guards the contract. ``k`` is at most len(MINHASH_AB)."""
     id_dt = df.schema[id_col].dataType
     schema = T.StructType(
         [
@@ -328,16 +322,6 @@ def _band_keys(sigs: DataFrame, k: int, band_size: int) -> DataFrame:
     free: distinct component tuples always render distinct strings.
     Input columns (doc, sig, ...) pass through so callers can compute the
     agreement estimate inside the band join instead of re-joining sigs."""
-    if k % band_size:
-        # same loud guard as the fast tier (review r7): a floored band
-        # count silently excluded the trailing components from candidate
-        # generation — and the oracle truncated IDENTICALLY, so the
-        # parity gate could never catch the recall loss
-        raise ValueError(
-            f"minhash banding: k={k} is not divisible by "
-            f"band_size={band_size} — the last {k % band_size} signature "
-            "components would never join any band"
-        )
     n_bands = k // band_size
     # one selectExpr round-trip for the whole band array (r11
     # construction pass — see _names.sql_ident); named_struct/array_join/
@@ -357,9 +341,6 @@ def minhash_portable_pairs_between(
     incoming: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 12,
-    band_size: int = 2,
-    min_jaccard: float = 0.4,
 ) -> DataFrame:
     """INCREMENTAL near-dup: candidates pair an EXISTING doc with an
     INCOMING doc — the ingestion-time dedup shape. At 100 TB you never
@@ -375,15 +356,15 @@ def minhash_portable_pairs_between(
     # frame feeds exactly ONE band-join side — there is no plan-branch
     # reuse for a cache to deduplicate, so the two eager count() jobs
     # were pure overhead.
-    ex_sigs = _minhash_sigs(existing, id_col, text_col, k)
-    in_sigs = _minhash_sigs(incoming, id_col, text_col, k)
+    ex_sigs = _minhash_sigs(existing, id_col, text_col, MINHASH_K)
+    in_sigs = _minhash_sigs(incoming, id_col, text_col, MINHASH_K)
     # Same sig-through-the-band-join fold as the self-join tier: the
     # estimate is computed in the band-join projection and the pair
     # distinct happens after thresholding — 3 exchanges, no sig rejoins
     # (and at ingestion scale the tiny incoming side broadcasts).
-    a = _band_keys(ex_sigs, k, band_size).alias("a")
-    b = _band_keys(in_sigs, k, band_size).alias("b")
-    est = minhash_agreement_est(k)
+    a = _band_keys(ex_sigs, MINHASH_K, MINHASH_BAND_SIZE).alias("a")
+    b = _band_keys(in_sigs, MINHASH_K, MINHASH_BAND_SIZE).alias("b")
+    est = minhash_agreement_est(MINHASH_K)
     return (
         a.join(
             b,
@@ -396,7 +377,7 @@ def minhash_portable_pairs_between(
             F.col("b.sig").alias("sig_b"),
         )
         .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= min_jaccard)
+        .filter(F.col("est_jaccard") >= MINHASH_MIN_JACCARD)
         .select("existing_doc", "incoming_doc", "est_jaccard")
         .distinct()
     )
@@ -408,12 +389,10 @@ def minhash_portable_between_oracle_sql(
     text_col: str,
     existing_pred: str,
     incoming_pred: str,
-    k: int = 12,
-    band_size: int = 2,
-    min_jaccard: float = 0.4,
 ) -> str:
     """DuckDB twin of minhash_portable_pairs_between over one table split
     by predicates."""
+    k, band_size = MINHASH_K, MINHASH_BAND_SIZE
     n_bands = k // band_size
     params = ", ".join(
         f"({i}, CAST({a} AS BIGINT), CAST({b} AS BIGINT))"
@@ -459,7 +438,7 @@ est AS (
     JOIN sigs sb ON sb.doc = c.incoming_doc
 )
 SELECT existing_doc, incoming_doc, est_jaccard
-FROM est WHERE est_jaccard >= {min_jaccard}
+FROM est WHERE est_jaccard >= {MINHASH_MIN_JACCARD}
 """
 
 
@@ -467,14 +446,12 @@ def minhash_portable_oracle_sql(
     table: str,
     id_col: str,
     text_col: str,
-    k: int = 12,
-    band_size: int = 2,
-    min_jaccard: float = 0.4,
     bucket_cap: int | None = None,
 ) -> str:
     """DuckDB twin of minhash_portable_pairs — identical md5/modular math,
     so buckets, candidates, and the estimate all agree exactly; with
     ``bucket_cap`` the identical (band, key) window-count drop too."""
+    k, band_size = MINHASH_K, MINHASH_BAND_SIZE
     n_bands = k // band_size
     params = ", ".join(
         f"({i}, CAST({a} AS BIGINT), CAST({b} AS BIGINT))"
@@ -523,7 +500,7 @@ est AS (
     JOIN sigs sa ON sa.doc = c.doc_a
     JOIN sigs sb ON sb.doc = c.doc_b
 )
-SELECT doc_a, doc_b, est_jaccard FROM est WHERE est_jaccard >= {min_jaccard}
+SELECT doc_a, doc_b, est_jaccard FROM est WHERE est_jaccard >= {MINHASH_MIN_JACCARD}
 """
 
 
@@ -562,10 +539,8 @@ def simhash_portable_signatures(df: DataFrame, id_col: str, text_col: str) -> Da
     )
 
 
-def simhash_portable_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
-    """Portable SimHash near-dup pairs (Hamming <= max_hamming over 60
+def simhash_portable_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Portable SimHash near-dup pairs (Hamming <= SIMHASH_MAX_HAMMING over 60
     bits). 4 bands x 15 bits: pigeonhole guarantees any pair within
     Hamming 3 collides on at least one band, so candidate generation is a
     linear band-key equi-join — same plan shape as the 64-bit fast tier."""
@@ -608,14 +583,12 @@ def simhash_portable_pairs(
             "hamming",
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
 
-def simhash_portable_oracle_sql(
-    table: str, id_col: str, text_col: str, max_hamming: int = 3
-) -> str:
+def simhash_portable_oracle_sql(table: str, id_col: str, text_col: str) -> str:
     """DuckDB twin of simhash_portable_pairs: bit votes via an unnested
     (token-hash x bit) grid, signature reassembly, band join, bit_count
     Hamming — all exact integer ops."""
@@ -648,5 +621,5 @@ cand AS (
       ON a.band = b.band AND a.key = b.key AND a.doc < b.doc
 )
 SELECT doc_a, doc_b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-FROM cand WHERE bit_count(xor(sa, sb)) <= {max_hamming}
+FROM cand WHERE bit_count(xor(sa, sb)) <= {SIMHASH_MAX_HAMMING}
 """

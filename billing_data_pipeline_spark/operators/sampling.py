@@ -63,14 +63,14 @@ def hash_bucket_sql(key: str, salt: int = 0) -> str:
     return f"{mix_rank_sql(key, salt)} % 100"
 
 
-def hash_sample(df: DataFrame, key_col: str, pct: int, salt: int = 0) -> DataFrame:
+def hash_sample(df: DataFrame, key_col: str, pct: int) -> DataFrame:
     """Uniform ~pct% sample: keep rows whose key bucket < pct. A pure
     filter — pushes to the scan, no shuffle, no driver coordination."""
-    return df.filter(hash_bucket(F.col(key_col), salt) < pct)
+    return df.filter(hash_bucket(F.col(key_col)) < pct)
 
 
 def stratified_sample(
-    df: DataFrame, key_col: str, stratum_col: str, rates: dict[str, int], salt: int = 0
+    df: DataFrame, key_col: str, stratum_col: str, rates: dict[str, int]
 ) -> DataFrame:
     """Per-stratum rates (e.g. downsample dominant languages, keep the
     tail): rate lookup is a CASE chain on the stratum column — still a pure
@@ -79,11 +79,11 @@ def stratified_sample(
     rate = F.lit(0)
     for stratum, pct in sorted(rates.items()):
         rate = F.when(F.col(stratum_col) == stratum, F.lit(pct)).otherwise(rate)
-    return df.filter(hash_bucket(F.col(key_col), salt) < rate)
+    return df.filter(hash_bucket(F.col(key_col)) < rate)
 
 
 def stratified_sample_sql(
-    table: str, key_col: str, stratum_col: str, rates: dict[str, int], salt: int = 0
+    table: str, key_col: str, stratum_col: str, rates: dict[str, int]
 ) -> str:
     # stratum keys are DATA values: double embedded single quotes or a
     # key like "o'reilly" breaks the oracle SQL (review r4)
@@ -97,12 +97,12 @@ def stratified_sample_sql(
     )
     return (
         f"SELECT * FROM {table} "
-        f"WHERE {hash_bucket_sql(key_col, salt)} < (CASE {cases} ELSE 0 END)"
+        f"WHERE {hash_bucket_sql(key_col)} < (CASE {cases} ELSE 0 END)"
     )
 
 
 def per_group_sample(
-    df: DataFrame, key_col: str, group_col: str, n: int, salt: int = 0
+    df: DataFrame, key_col: str, group_col: str, n: int
 ) -> DataFrame:
     """Fixed-size deterministic sample per group (the 'N examples per
     class' curation op): rank rows within each group by mixed key (a
@@ -127,7 +127,7 @@ def per_group_sample(
             "rename the input column of that name"
         )
     w = Window.partitionBy(group_col).orderBy(
-        hash_bucket(F.col(key_col), salt).asc(), F.col(key_col).asc()
+        hash_bucket(F.col(key_col)).asc(), F.col(key_col).asc()
     )
     return (
         df.withColumn("sample_rank", F.row_number().over(w))
@@ -137,7 +137,7 @@ def per_group_sample(
 
 
 def per_group_sample_sql(
-    table: str, key_col: str, group_col: str, n: int, salt: int = 0, cols: str = "*"
+    table: str, key_col: str, group_col: str, n: int, cols: str = "*"
 ) -> str:
     # The engine twin drops sample_rank; with cols="*" the outer SELECT *
     # would leak it into the oracle schema (review r5) — EXCLUDE it
@@ -147,7 +147,7 @@ def per_group_sample_sql(
 WITH ranked AS (
     SELECT {cols},
            row_number() OVER (PARTITION BY {group_col}
-                              ORDER BY {hash_bucket_sql(key_col, salt)} ASC,
+                              ORDER BY {hash_bucket_sql(key_col)} ASC,
                                        {key_col} ASC) AS sample_rank
     FROM {table}
 )
@@ -155,14 +155,15 @@ SELECT {outer} FROM ranked WHERE sample_rank <= {n}
 """
 
 
-def assign_split(
-    key: Column,
-    boundaries: tuple[int, ...] = (90, 95),
-    labels: tuple[str, ...] = ("train", "val", "test"),
-    salt: int = 7,
-) -> Column:
+#: ``assign_split``: bucket cut points (90/5/5), their labels, mixer salt.
+SPLIT_BOUNDARIES = (90, 95)
+SPLIT_LABELS = ("train", "val", "test")
+SPLIT_SALT = 7
+
+
+def assign_split(key: Column) -> Column:
     """Deterministic train/val/test assignment: the mixer bucket in
-    [0,100) cut at ``boundaries`` (default 90/5/5). A labeled 3-way
+    [0,100) cut at SPLIT_BOUNDARIES. A labeled 3-way
     partition, not a keep/drop sample — every row gets exactly one split,
     the assignment is a scan-side expression (no shuffle, no RNG), and a
     document keeps its split when the corpus around it changes — the
@@ -170,38 +171,17 @@ def assign_split(
     re-curations (a doc that once entered `test` can never drift into
     `train` on a later run).
     """
-    if len(labels) != len(boundaries) + 1:
-        raise ValueError("need exactly one more label than boundary")
-    b = hash_bucket(key, salt)
-    expr = F.lit(labels[-1])
-    for bound, lab in zip(reversed(boundaries), reversed(labels[:-1])):
+    b = hash_bucket(key, SPLIT_SALT)
+    expr = F.lit(SPLIT_LABELS[-1])
+    for bound, lab in zip(reversed(SPLIT_BOUNDARIES), reversed(SPLIT_LABELS[:-1])):
         expr = F.when(b < bound, lab).otherwise(expr)
     return expr
 
 
-def assign_split_sql(
-    key: str,
-    boundaries: tuple[int, ...] = (90, 95),
-    labels: tuple[str, ...] = ("train", "val", "test"),
-    salt: int = 7,
-) -> str:
-    if len(labels) != len(boundaries) + 1:
-        # mirror the engine twin's guard (review r6: zip() silently
-        # truncated a mis-parameterized oracle — the 'val' label vanished
-        # without error while assign_split raised)
-        raise ValueError("need exactly one more label than boundary")
-    b = hash_bucket_sql(key, salt)
-
-    def q(s: str) -> str:
-        # SQL-quote the label: a label like "o'reilly" broke the oracle
-        # SQL (review r7 — same class stratified_sample_sql fixed in r4)
-        return s.replace(chr(39), chr(39) * 2)
-
-    if not boundaries:
-        # a WHEN-less CASE is a syntax error; single-label = constant
-        return f"('{q(labels[-1])}')"
+def assign_split_sql(key: str) -> str:
+    b = hash_bucket_sql(key, SPLIT_SALT)
     cases = " ".join(
-        f"WHEN ({b}) < {bound} THEN '{q(lab)}'"
-        for bound, lab in zip(boundaries, labels[:-1])
+        f"WHEN ({b}) < {bound} THEN '{lab}'"
+        for bound, lab in zip(SPLIT_BOUNDARIES, SPLIT_LABELS[:-1])
     )
-    return f"(CASE {cases} ELSE '{q(labels[-1])}' END)"
+    return f"(CASE {cases} ELSE '{SPLIT_LABELS[-1]}' END)"

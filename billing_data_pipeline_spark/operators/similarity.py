@@ -701,24 +701,27 @@ GROUP BY tr.{id_col}
 """
 
 
+#: IVF cells, and the cells each query probes.
+IVF_N_LISTS = 16
+IVF_N_PROBE = 4
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_lists: int = 16,
-    n_probe: int = 4,
     dim: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: the corpus is partitioned into
-    ``n_lists`` Voronoi cells around deterministic centroids (every
-    (|corpus|/n_lists)-th corpus vector by id — training-free and seeded by
-    the data itself); each query scores only the cells of its ``n_probe``
-    nearest centroids.
+    ``IVF_N_LISTS`` Voronoi cells around deterministic centroids (every
+    (|corpus|/IVF_N_LISTS)-th corpus vector by id — training-free and
+    seeded by the data itself); each query scores only the cells of its
+    ``IVF_N_PROBE`` nearest centroids.
 
     Scale shape: assignment is one corpus-linear pass; search work drops to
-    ~n_probe/n_lists of brute force; candidates meet queries through an
+    ~IVF_N_PROBE/IVF_N_LISTS of brute force; candidates meet queries through an
     equi-join on the cell id (no cross join).
 
     Oracle-checked despite being approximate: cell assignment and probe
@@ -746,14 +749,14 @@ def ivf_topk(
     # deterministic centroids: every stride-th corpus vector by sorted id,
     # picked distributed (ids-only rank + broadcast semi-join — no O(N)
     # driver materialization; see stride_seed_rows)
-    cent_rows = stride_seed_rows(corpus, id_col, vec_col, n_lists)
+    cent_rows = stride_seed_rows(corpus, id_col, vec_col, IVF_N_LISTS)
     if not cent_rows:  # empty corpus: no cells, no candidates
         return _empty_topk(corpus)
     # clamp (review r7): a tiny corpus yields fewer centroids than
-    # n_probe — order[:, :n_probe] then has fewer columns than the
+    # IVF_N_PROBE — order[:, :n_probe] then has fewer columns than the
     # n_probe-repeated qid/qvec arrays and the kernel crashed with a
     # length mismatch; the oracle's rnk <= n_probe self-clamps
-    n_probe = min(n_probe, len(cent_rows))
+    n_probe = min(IVF_N_PROBE, len(cent_rows))
     Cm = np.array([[float(x) for x in r[1]] for r in cent_rows], dtype=np.float64)
     Cn = _seq_norms(Cm)
 
@@ -880,14 +883,12 @@ def ivf_topk_oracle_sql(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    n_lists: int = 16,
-    n_probe: int = 4,
     query_pred: str = "TRUE",
     dim: int | None = None,
 ) -> str:
     """DuckDB twin of ivf_topk: stride-selected centroids, rank-1 cell
-    assignment, rank<=n_probe probes, exact cosine rerank — every double
-    from the same fold, every tie broken (sim desc, idx asc)."""
+    assignment, rank<=IVF_N_PROBE probes, exact cosine rerank — every
+    double from the same fold, every tie broken (sim desc, idx asc)."""
     vec_ok = geometry_pred_sql(vec_col, dim)
     d_vc = _dot_sql("v.vec", "c.cv")
     d_vv = _dot_sql("v.vec", "v.vec")
@@ -903,12 +904,12 @@ WITH ids AS (
     SELECT {id_col} AS id, row_number() OVER (ORDER BY {id_col}) - 1 AS rn
     FROM {table} WHERE {vec_ok}
 ),
-params AS (SELECT greatest(1, COUNT(*) // {n_lists}) AS stride FROM ids),
+params AS (SELECT greatest(1, COUNT(*) // {IVF_N_LISTS}) AS stride FROM ids),
 cents AS (
     SELECT CAST(i.rn // p.stride AS INTEGER) AS cidx, e.{vec_col} AS cv
     FROM ids i CROSS JOIN params p
     JOIN {table} e ON e.{id_col} = i.id
-    WHERE i.rn % p.stride = 0 AND i.rn // p.stride < {n_lists}
+    WHERE i.rn % p.stride = 0 AND i.rn // p.stride < {IVF_N_LISTS}
 ),
 vecs AS (SELECT {id_col} AS id, {vec_col} AS vec FROM {table}
          WHERE {vec_ok}),
@@ -927,7 +928,7 @@ probes AS (
     SELECT id AS qid, cidx AS cell FROM (
         SELECT id, cidx,
                row_number() OVER (PARTITION BY id ORDER BY sim DESC, cidx ASC) AS rnk
-        FROM sims WHERE {query_pred}) WHERE rnk <= {n_probe}
+        FROM sims WHERE {query_pred}) WHERE rnk <= {IVF_N_PROBE}
 ),
 scored AS (
     SELECT p.qid AS query_id, ca.id AS candidate_id,
@@ -1126,9 +1127,15 @@ WHERE d.id IS NULL
 """
 
 
-def _lsh_tables_planes(
-    n_tables: int, n_bits: int, dim: int, seed: int
-) -> list[list[list[float]]]:
+#: Random-hyperplane LSH: bits per signature, the planes' seed, and the
+#: signatures (tables) per near-dup pair search and per top-k search.
+LSH_BITS = 6
+LSH_SEED = 42
+LSH_PAIR_TABLES = 4
+LSH_TOPK_TABLES = 8
+
+
+def _lsh_tables_planes(n_tables: int) -> list[list[list[float]]]:
     """The seeded hyperplane constant shared by lsh_neardup_pairs and its
     DuckDB oracle builder: same Python floats land as literals in BOTH the
     Spark plan and the SQL text (repr round-trips doubles exactly), so the
@@ -1136,10 +1143,10 @@ def _lsh_tables_planes(
     return [
         [
             [
-                random.Random((seed + 1) * 10_007 + t * 101 + i).gauss(0.0, 1.0)
-                for _ in range(dim)
+                random.Random((LSH_SEED + 1) * 10_007 + t * 101 + i).gauss(0.0, 1.0)
+                for _ in range(EMBED_DIM)
             ]
-            for i in range(n_bits)
+            for i in range(LSH_BITS)
         ]
         for t in range(n_tables)
     ]
@@ -1164,28 +1171,24 @@ def lsh_neardup_pairs_oracle_sql(
     id_col: str,
     vec_col: str,
     threshold: float = 0.4,
-    n_bits: int = 6,
-    dim: int = 64,
-    seed: int = 42,
-    n_tables: int = 4,
 ) -> str:
     """DuckDB twin of lsh_neardup_pairs. The hyperplanes are embedded as
     double literals, the sign tests reuse the bit-identical fold, and the
     rerank is the exact cosine — so the approximate LSH pipeline is
     oracle-checked end-to-end, not rows-only."""
-    planes = _lsh_tables_planes(n_tables, n_bits, dim, seed)
+    planes = _lsh_tables_planes(LSH_PAIR_TABLES)
     # Geometry contract (r9): the signature CTE excludes NULL/ragged
     # vectors, mirroring the plan-side filter in lsh_neardup_pairs. For
     # NULLs this is output-identical to the r8 form (bucket-0 collisions
     # always reranked to NULL cosine and fell to the threshold); for
     # ragged lengths it is load-bearing — a truncated vector's zip fold
     # silently scores on the shorter prefix.
-    vec_ok = geometry_pred_sql(vec_col, dim)
+    vec_ok = geometry_pred_sql(vec_col, EMBED_DIM)
     sigs = "\nUNION ALL\n".join(
         f"SELECT {id_col} AS id, {vec_col} AS v, {t} AS tbl, "
-        f"{_signature_sql(vec_col, planes[t])} AS bucket FROM {table} "
+        f"{_signature_sql(vec_col, p)} AS bucket FROM {table} "
         f"WHERE {vec_ok}"
-        for t in range(n_tables)
+        for t, p in enumerate(planes)
     )
     d_ab = _dot_sql("va.v", "vb.v")
     d_aa = _dot_sql("va.v", "va.v")
@@ -1221,16 +1224,12 @@ def lsh_bucketed_topk_oracle_sql(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    n_bits: int = 6,
-    dim: int = 64,
-    seed: int = 42,
     query_pred: str = "TRUE",
-    n_tables: int = 8,
 ) -> str:
-    """DuckDB twin of lsh_bucketed_topk (OR over ``n_tables`` plane sets —
-    a UNION ALL of per-table bucket selects — distinct candidate pairs,
-    exact cosine rerank, deterministic (sim desc, id asc) top-k)."""
-    all_planes = _lsh_tables_planes(n_tables, n_bits, dim, seed)
+    """DuckDB twin of lsh_bucketed_topk (OR over ``LSH_TOPK_TABLES`` plane
+    sets — a UNION ALL of per-table bucket selects — distinct candidate
+    pairs, exact cosine rerank, deterministic (sim desc, id asc) top-k)."""
+    all_planes = _lsh_tables_planes(LSH_TOPK_TABLES)
     buckets = "\nUNION ALL\n".join(
         f"SELECT id, {t} AS tbl, {_signature_sql('v', planes)} AS bucket FROM s"
         for t, planes in enumerate(all_planes)
@@ -1246,7 +1245,7 @@ def lsh_bucketed_topk_oracle_sql(
     return f"""
 WITH s AS (
     SELECT {id_col} AS id, {vec_col} AS v FROM {table}
-    WHERE {geometry_pred_sql(vec_col, dim)}
+    WHERE {geometry_pred_sql(vec_col, EMBED_DIM)}
 ),
 e AS (
 {buckets}
@@ -1285,8 +1284,6 @@ def _lsh_sig_frame(
     id_col: str,
     vec_col: str,
     all_planes: list,
-    n_tables: int,
-    n_bits: int,
 ) -> DataFrame:
     """(id, v, n, buckets) per row: ALL table bucket ids + the sequential
     norm, computed in ONE Arrow pass (shared by lsh_neardup_pairs and
@@ -1307,7 +1304,7 @@ def _lsh_sig_frame(
 
     from pyspark.sql import types as T
 
-    dim = len(all_planes[0][0])
+    n_tables, n_bits, dim = len(all_planes), LSH_BITS, EMBED_DIM
     PF = np.array(all_planes, dtype=np.float64).reshape(n_tables * n_bits, dim)
     sig_schema = T.StructType(
         [
@@ -1432,21 +1429,17 @@ def lsh_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.4,
-    n_bits: int = 6,
-    dim: int = 64,
-    seed: int = 42,
-    n_tables: int = 4,
 ) -> DataFrame:
     """Scale-path near-dup: OR-of-ANDs banding over random-hyperplane
-    signatures. Each of ``n_tables`` independent signatures buckets the
+    signatures. Each of ``LSH_PAIR_TABLES`` independent signatures buckets the
     corpus; candidate pairs form via a self-equi-join on (table, bucket)
     (shuffle on the bucket key, linear in corpus + collisions — no n^2
     anywhere); dropDuplicates merges pairs that collide in several tables
     before the exact-cosine rerank so each pair is scored once.
 
     Recall for a pair at cosine c: per-bit collision p = 1 - acos(c)/pi,
-    per-table p^n_bits, overall 1 - (1 - p^n_bits)^n_tables — tune
-    n_bits down / n_tables up for looser thresholds. Approximate =>
+    per-table p^LSH_BITS, overall 1 - (1 - p^LSH_BITS)^LSH_PAIR_TABLES —
+    fewer bits / more tables suit looser thresholds. Approximate =>
     rows-only check; `cosine_neardup_pairs` is the exact baseline.
 
     Plan shape (r4 rework — the r3 form carried BOTH full vectors through
@@ -1472,15 +1465,15 @@ def lsh_neardup_pairs(
     evaluated after its persist is swept transparently recomputes its
     (deterministic) lineage — correct, just slower.
     """
-    all_planes = _lsh_tables_planes(n_tables, n_bits, dim, seed)
+    all_planes = _lsh_tables_planes(LSH_PAIR_TABLES)
     # Geometry contract (r9): NULL/ragged vectors are excluded plan-side
-    # — this tier's planes declare `dim`, so the check is always on. The
+    # — this tier's planes declare EMBED_DIM, so the check is always on. The
     # old NULL path (bucket 0 + NULL-cosine rerank, dropped by the
     # threshold) produced the identical pair set at the cost of a
     # bucket-0 collision flood; ragged vectors CRASHED the signature
     # kernel's batch stack. Output unchanged for NULLs, crash closed
     # for ragged, one contract across every similarity tier.
-    df = df.filter(geometry_ok(vec_col, dim))
+    df = df.filter(geometry_ok(vec_col, EMBED_DIM))
     id_type = df.schema[id_col].dataType
 
     # Persist: the signature frame feeds three consumers (candidate
@@ -1488,9 +1481,7 @@ def lsh_neardup_pairs(
     # and kernel run three times. swept_persist bounds cache residency to
     # the last call (review r4 — bench's min-of-3 loop leaked one
     # corpus-sized cache entry per call).
-    sig = swept_persist(
-        _lsh_sig_frame(df, id_col, vec_col, all_planes, n_tables, n_bits)
-    )
+    sig = swept_persist(_lsh_sig_frame(df, id_col, vec_col, all_planes))
 
     cand = sig.select("id", F.posexplode("buckets").alias("tbl", "bucket"))
     pairs = (
@@ -1521,14 +1512,10 @@ def lsh_bucketed_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_bits: int = 6,
-    dim: int = 64,
-    seed: int = 42,
-    n_tables: int = 8,
 ) -> DataFrame:
     """Approximate top-k: OR-of-ANDs random-hyperplane bucketing — a
     candidate is scored if it shares a bucket with the query in ANY of
-    ``n_tables`` independent ``n_bits``-bit signatures, then exact-cosine
+    ``LSH_TOPK_TABLES`` independent ``LSH_BITS``-bit signatures, then exact-cosine
     reranked. A single AND signature has recall 1-in-2^b for weakly
     correlated vectors (measured 5% on the driver embeddings); the OR
     construction multiplies candidate coverage while keeping per-table
@@ -1557,21 +1544,19 @@ def lsh_bucketed_topk(
     """
     from pyspark.sql import Window
 
-    all_planes = _lsh_tables_planes(n_tables, n_bits, dim, seed)
+    all_planes = _lsh_tables_planes(LSH_TOPK_TABLES)
     # Geometry contract (r9): NULL/ragged vectors excluded on both sides
-    # plan-side (dim is always declared by this tier's planes). This
+    # plan-side (EMBED_DIM is always declared by this tier's planes). This
     # retires the r8 NULL-keep path (NULL candidates used to fill top-k
     # slots with NULL sims via bucket 0) — exclusion is the contract
     # every other similarity tier already had, and ragged rows CRASHED
     # the signature kernel's batch stack before this filter.
-    corpus = corpus.filter(geometry_ok(vec_col, dim))
-    queries = queries.filter(geometry_ok(vec_col, dim))
+    corpus = corpus.filter(geometry_ok(vec_col, EMBED_DIM))
+    queries = queries.filter(geometry_ok(vec_col, EMBED_DIM))
     id_type = corpus.schema[id_col].dataType
 
-    sig_c = swept_persist(
-        _lsh_sig_frame(corpus, id_col, vec_col, all_planes, n_tables, n_bits)
-    )
-    sig_q = _lsh_sig_frame(queries, id_col, vec_col, all_planes, n_tables, n_bits)
+    sig_c = swept_persist(_lsh_sig_frame(corpus, id_col, vec_col, all_planes))
+    sig_q = _lsh_sig_frame(queries, id_col, vec_col, all_planes)
 
     c = sig_c.select(
         F.col("id").alias("candidate_id"),
@@ -1658,20 +1643,23 @@ def _pq_codebook(
     return S, dim // m
 
 
+#: PQ subspaces (codes per vector), and codebook entries per subspace.
+PQ_M = 16
+PQ_K_CODES = 128
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    m: int = 16,
-    k_codes: int = 128,
     dim: int | None = None,
 ) -> DataFrame:
     """Product-quantization top-k (asymmetric distance computation).
 
     The 100 TB memory story of the ANN stack: every corpus vector is
-    L2-normalized and compressed to ``m`` codebook indices (64 float32 =
+    L2-normalized and compressed to ``PQ_M`` codebook indices (64 float32 =
     256 B -> 16 one-byte codes here, 16x), and queries scan the *codes*, not the
     vectors — each candidate costs m table lookups + m-1 adds instead of a
     dim-length dot product. Normalization makes the ADC inner product a
@@ -1698,6 +1686,7 @@ def pq_topk(
     from pyspark.sql import Window
     from pyspark.sql import types as T
 
+    m, k_codes = PQ_M, PQ_K_CODES
     # geometry contract (r9): NULL/ragged vectors excluded plan-side on
     # both sides (a ragged row crashed the encode kernel's batch stack)
     corpus = corpus.filter(geometry_ok(vec_col, dim))
@@ -1937,15 +1926,14 @@ def pq_topk_oracle_sql(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    m: int = 16,
-    k_codes: int = 128,
-    sub: int = 4,
     query_pred: str = "TRUE",
     dim: int | None = None,
 ) -> str:
-    """DuckDB twin of pq_topk: stride-sampled normalized codebook, per-
-    subspace sequential-fold L2 argmin codes, ADC = fold over the m lookup
-    values in subspace order — bit-identical doubles throughout."""
+    """DuckDB twin of pq_topk on EMBED_DIM-long vectors: stride-sampled
+    normalized codebook, per-subspace sequential-fold L2 argmin codes,
+    ADC = fold over the PQ_M lookup values in subspace order —
+    bit-identical doubles throughout."""
+    m, k_codes, sub = PQ_M, PQ_K_CODES, EMBED_DIM // PQ_M
     d_vv = _dot_sql(f"e.{vec_col}", f"e.{vec_col}")
     sq = (
         "p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2])"

@@ -20,7 +20,6 @@ def salted_join(
     small: DataFrame,
     on: list[str],
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join with the hot-key shuffle split across ``n_salts`` buckets.
 
@@ -33,20 +32,8 @@ def salted_join(
     replication. Position-based salts spread identical rows evenly;
     correctness never depends on WHICH salt a row gets (every salt joins
     the same replicated small side).
-    Result is exactly ``big.join(small, on, how)`` for ``inner`` and
-    ``left``/``left_outer``/``left_semi``/``left_anti`` joins. Right/full
-    outer joins are rejected: the small side is replicated once per salt,
-    so its UNMATCHED rows would surface ``n_salts`` times (review r3) —
-    salt the other side instead (swap the arguments).
+    Result is exactly ``big.join(small, on)``, an inner join.
     """
-    if how.lower().replace("outer", "").replace("_", "") not in (
-        "inner", "left", "leftsemi", "leftanti", "semi", "anti", "cross",
-    ):
-        raise ValueError(
-            f"salted_join supports inner/left joins only, got how={how!r}: "
-            "the replicated small side would duplicate unmatched rows in "
-            "right/full outer results — swap the sides instead"
-        )
     if "_salt" in big.columns or "_salt" in small.columns:
         raise ValueError("salted_join: input already has a _salt column")
     if n_salts < 1:
@@ -60,4 +47,4 @@ def salted_join(
     small_s = small.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    return big_s.join(small_s, [*on, "_salt"], how).drop("_salt")
+    return big_s.join(small_s, [*on, "_salt"], "inner").drop("_salt")

@@ -258,7 +258,11 @@ def model_quality_score_sql(text_expr: str) -> str:
     return expr
 
 
-def rolling_fingerprint(text: Column, modulus: int = 2147483647) -> Column:
+#: ``rolling_fingerprint``'s modulus, 2^31-1.
+FINGERPRINT_MODULUS = 2147483647
+
+
+def rolling_fingerprint(text: Column) -> Column:
     """Polynomial rolling hash over characters (base 31, mod 2^31-1) —
     a deterministic document fingerprint computed with a higher-order fold
     (F.aggregate), no UDF. Guard empty strings upstream (fold needs >=1 char
@@ -266,15 +270,18 @@ def rolling_fingerprint(text: Column, modulus: int = 2147483647) -> Column:
     chars = F.split(text, "")
     codes = F.transform(chars, lambda c: F.ascii(c).cast("long"))
     return F.aggregate(
-        codes, F.lit(0).cast("long"), lambda acc, x: (acc * 31 + x) % modulus
+        codes,
+        F.lit(0).cast("long"),
+        lambda acc, x: (acc * 31 + x) % FINGERPRINT_MODULUS,
     )
 
 
-def fingerprint_sql(expr: str, modulus: int = 2147483647) -> str:
+def fingerprint_sql(expr: str) -> str:
     """DuckDB-side rolling fingerprint identical to rolling_fingerprint."""
     return (
         f"list_reduce(list_transform(regexp_split_to_array({expr}, ''), "
-        f"c -> CAST(ascii(c) AS BIGINT)), (a, b) -> (a * 31 + b) % {modulus})"
+        f"c -> CAST(ascii(c) AS BIGINT)), "
+        f"(a, b) -> (a * 31 + b) % {FINGERPRINT_MODULUS})"
     )
 
 
@@ -1139,11 +1146,11 @@ ORDER BY u.{id_col}
 """
 
 
-def pack_chunks(chunks, capacity: int, id_col: str = "doc_id",
-                idx_col: str = "chunk_idx", size_col: str = "n_chunk_tokens"):
-    """Greedy sequence packing: walk each document's chunks in order and
-    close the current bin whenever the next chunk would overflow
-    ``capacity`` (a chunk larger than capacity gets its own bin). This is
+def pack_chunks(chunks, capacity: int, size_col: str = "n_chunk_tokens"):
+    """Greedy sequence packing: walk each document's (doc_id) chunks in
+    chunk_idx order and close the current bin whenever the next chunk
+    would overflow ``capacity`` (a chunk larger than capacity gets its own
+    bin). This is
     inherently sequential per document — the applyInPandas case: one
     shuffle on the doc key ships each doc's chunk list to a worker, the
     loop runs vectorized-adjacent in pandas, and docs pack in parallel.
@@ -1155,22 +1162,22 @@ def pack_chunks(chunks, capacity: int, id_col: str = "doc_id",
 
     out_fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in chunks.schema.fields
-        if f.name in (id_col, idx_col, size_col)
+        if f.name in ("doc_id", "chunk_idx", size_col)
     )
 
     def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(idx_col)
+        pdf = pdf.sort_values("chunk_idx")
         bins, fill, b = [], 0, 0
         for n in pdf[size_col]:
             if fill and fill + n > capacity:
                 b, fill = b + 1, 0
             fill += n
             bins.append(b)
-        pdf = pdf[[id_col, idx_col, size_col]].copy()
+        pdf = pdf[["doc_id", "chunk_idx", size_col]].copy()
         pdf["bin"] = bins
         return pdf
 
-    return chunks.groupBy(id_col).applyInPandas(pack, f"{out_fields}, bin int")
+    return chunks.groupBy("doc_id").applyInPandas(pack, f"{out_fields}, bin int")
 
 
 def pack_chunks_oracle_sql(
@@ -1473,12 +1480,15 @@ def unigram_logprob_sql(text_expr: str) -> str:
     )
 
 
+#: Misra–Gries counters per partition, as a multiple of 1/threshold.
+MG_SLACK = 4
+
+
 def heavy_hitter_terms(
     df,
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold_ppm: int = 2000,
-    slack: int = 4,
 ):
     """EXACT corpus heavy hitters — every term whose occurrence count
     exceeds ``threshold_ppm`` parts-per-million of all tokens — with
@@ -1489,7 +1499,7 @@ def heavy_hitter_terms(
     open web text):
 
     1. **Candidate pass** (one scan, mapInPandas): each partition runs a
-       Misra–Gries summary with ``slack/threshold`` counters; MG
+       Misra–Gries summary with ``MG_SLACK/threshold`` counters; MG
        guarantees any item with global frequency > N*threshold survives
        in at least one partition's summary, so the union of partition
        candidates is a SUPERSET of the true heavy hitters. Emitted rows
@@ -1513,7 +1523,7 @@ def heavy_hitter_terms(
     largest and drop non-positives — Agarwal et al., PODS'12, preserves
     the superset guarantee) — and the verify pass emits per-partition
     (candidate, n) partials plus a sentinel total row, reduced by a
-    threshold-bounded groupBy and cut driver-side (<= slack/threshold + 2
+    threshold-bounded groupBy and cut driver-side (<= MG_SLACK/threshold + 2
     rows ever reach the driver; the result itself is <= 10^6/threshold
     rows by definition of a heavy hitter). Measured: 1.10 s at 1x /
     1.27 s at 32x docs (was 1.34 / 8.21); flat because both scans are
@@ -1525,7 +1535,7 @@ def heavy_hitter_terms(
     import pyarrow as pa
 
     spark = df.sparkSession
-    n_counters = max(1, slack * 1_000_000 // threshold_ppm)
+    n_counters = max(1, MG_SLACK * 1_000_000 // threshold_ppm)
     cand_schema = T.StructType([T.StructField("term", T.StringType())])
 
     def _tokens(col):

@@ -62,15 +62,15 @@ def running_total(
     ts_col: str,
     tiebreak_col: str,
     measure: str,
-    alias: str = "running_total",
 ) -> DataFrame:
-    """Exact-decimal running sum over the per-entity timeline."""
+    """Exact-decimal running sum over the per-entity timeline, as column
+    ``running_total``."""
     w = (
         entity_window(entity_col, ts_col, tiebreak_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumn(
-        alias, F.sum(F.col(measure).cast(MEASURE_DECIMAL)).over(w).cast("double")
+        "running_total", F.sum(F.col(measure).cast(MEASURE_DECIMAL)).over(w).cast("double")
     )
 
 

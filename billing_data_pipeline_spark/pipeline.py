@@ -309,15 +309,14 @@ class BillingPipeline:
 
     def build_aggregates(
         self, staging: str, raw_version: int, total: Observation
-    ) -> dict:
+    ) -> tuple[dict, dict]:
         """Write the four tables, built from raw_billing at
         ``raw_version``, into ``staging/<name>``, one Spark write each. The
         daily_aggs write also observes into ``total`` raw's exact
-        credit_usage total (``aggregate_frames``)."""
+        credit_usage total (``aggregate_frames``). Returns the tables' row
+        counts and the schemas they are written with."""
         raw = self.read("raw_billing", RAW_BILLING_TABLE_SCHEMA, raw_version)
         tables = aggregate_frames(raw, total)
-        # insights reads the tables back with the schemas they are written with
-        self._aggregate_schemas = {name: df.schema for name, df in tables.items()}
         # O2 metrics via the Observation API: row counts are collected from
         # the SAME job that writes each table — no read-back count scan.
         # run() rebuilds only over a raw_billing that holds rows, so every
@@ -329,19 +328,19 @@ class BillingPipeline:
                 os.path.join(staging, name)
             )
             metrics[f"{name}_rows"] = obs.get["rows"]
-        return metrics
+        return metrics, {name: df.schema for name, df in tables.items()}
 
     # -- stage 3: insights --------------------------------------------------
 
     def insights(
-        self, staging: str, raw_version: int, total: float
+        self, staging: str, schemas: dict, raw_version: int, total: float
     ) -> tuple[str, dict]:
         """The report over the tables ``build_aggregates`` staged, read
-        with the schemas it wrote them with (no footer job), the ledger
+        with the ``schemas`` it wrote them with (no footer job), the ledger
         folded to ``raw_version``, and ``total``, raw's exact credit_usage
         total that the daily_aggs write observed."""
         user, region, service = (
-            self.spark.read.schema(self._aggregate_schemas[t]).parquet(
+            self.spark.read.schema(schemas[t]).parquet(
                 os.path.join(staging, t)
             )
             for t in ("user_aggs", "region_aggs", "service_aggs")
@@ -358,8 +357,10 @@ class BillingPipeline:
 
         def write(staging: str) -> dict:
             total = Observation("raw_total_obs")
-            aggregates = self.build_aggregates(staging, raw_version, total)
-            report, insights = self.insights(staging, raw_version, total.get["total"])
+            aggregates, schemas = self.build_aggregates(staging, raw_version, total)
+            report, insights = self.insights(
+                staging, schemas, raw_version, total.get["total"]
+            )
             with open(_report_file(staging), "w", encoding="utf-8", newline="") as f:
                 f.write(report)
             built.extend((aggregates, insights, report))

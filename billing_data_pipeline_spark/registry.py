@@ -275,19 +275,6 @@ DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
     "token_runs_builtin",
 )
 
-#: The only rows-only (no-oracle) names allowed in the driver sample — the
-#: three never-externally-checked sketch tiers (r6) plus the r6-changed
-#: ml persist-barrier variant. Everything else in the sample must be
-#: value-hash checkable.
-ROWS_ONLY_SAMPLE_ALLOWED: frozenset[str] = frozenset(
-    {
-        "event_value_deciles_scalable",
-        "incremental_rollup_merge",
-        "usage_percentiles_approx",
-        "ml_minhash_neardup_pairs",
-    }
-)
-
 
 def load_catalog() -> dict[str, QuerySpec]:
     """Import all plan modules (side effect: they register) and return the

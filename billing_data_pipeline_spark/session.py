@@ -32,7 +32,7 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
-def input_sized_conf(input_bytes: int, cores: int | None = None) -> dict[str, str]:
+def input_sized_conf(input_bytes: int) -> dict[str, str]:
     """Statically size the shuffle for a job whose total input size is known
     from file statistics (a directory listing — free at plan time).
 
@@ -60,7 +60,7 @@ def input_sized_conf(input_bytes: int, cores: int | None = None) -> dict[str, st
     on a 1000-executor cluster the same formula yields thousands of
     partitions, the standard 100-200 MB/task sizing.
     """
-    cores = cores or default_parallelism()
+    cores = default_parallelism()
     aqe_threshold = 1 << 30  # 1 GiB: below this, runtime re-planning buys nothing
     by_size = -(-input_bytes // (64 << 20))  # ceil(bytes / 64 MB)
     if input_bytes >= aqe_threshold:
@@ -93,20 +93,17 @@ def dir_input_bytes(path: str) -> int:
     return total
 
 
-def s3a_conf(
-    public_bucket: bool | None = None, endpoint: str | None = None
-) -> dict[str, str]:
-    """S3A resource configuration (SURVEY §2.11 O3).
+def s3a_conf() -> dict[str, str]:
+    """S3A resource configuration (SURVEY §2.11 O3), from the environment.
 
     The reference reads its public bucket anonymously
     (``s3fs.S3FileSystem(anon=True)`` — reference:
     pipeline/s3_utils.py:41-45); the Hadoop-S3A equivalent is the
-    anonymous credentials provider. ``public_bucket`` defaults from
-    ``SPARK_GRAFT_S3_ANON`` (truthy => anonymous) so deployments flip it
-    without code; when False/unset, S3A's default provider chain applies
+    anonymous credentials provider, selected by a truthy
+    ``SPARK_GRAFT_S3_ANON``. Unset, S3A's default provider chain applies
     (env keys, instance profile), which is the authenticated path the
-    reference documents as the alternative. ``endpoint`` (or
-    ``SPARK_GRAFT_S3_ENDPOINT``) targets S3-compatible stores.
+    reference documents as the alternative. ``SPARK_GRAFT_S3_ENDPOINT``
+    targets S3-compatible stores.
 
     Returned as a plain conf dict (unit-testable offline) — pass through
     ``get_spark(extra_conf=...)`` or apply to an existing session via
@@ -114,15 +111,9 @@ def s3a_conf(
     Hadoop FileSystem layer on first use of an ``s3a://`` path, so
     setting them on a LIVE session works until a filesystem instance for
     that bucket is cached — prefer configuring at session build."""
-    if public_bucket is None:
-        public_bucket = os.environ.get("SPARK_GRAFT_S3_ANON", "").lower() in (
-            "1",
-            "true",
-            "yes",
-        )
-    endpoint = endpoint or os.environ.get("SPARK_GRAFT_S3_ENDPOINT")
+    endpoint = os.environ.get("SPARK_GRAFT_S3_ENDPOINT")
     conf: dict[str, str] = {}
-    if public_bucket:
+    if os.environ.get("SPARK_GRAFT_S3_ANON", "").lower() in ("1", "true", "yes"):
         conf["spark.hadoop.fs.s3a.aws.credentials.provider"] = (
             "org.apache.hadoop.fs.s3a.AnonymousAWSCredentialsProvider"
         )
@@ -134,7 +125,6 @@ def s3a_conf(
 
 def get_spark(
     app_name: str = "billing-data-pipeline-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -142,7 +132,7 @@ def get_spark(
 
     In local mode there is a single JVM; on a cluster the same config applies
     unchanged — nothing here assumes local execution except the default
-    master. S3A credentials (anonymous public-bucket mode, custom
+    master, which ``SPARK_MASTER`` overrides. S3A credentials (anonymous public-bucket mode, custom
     endpoints) ride ``s3a_conf()`` — env-driven, merged below
     ``extra_conf`` so explicit callers win.
     """
@@ -177,9 +167,7 @@ def get_spark(
                 in ("1", "true", "yes")).lower(),
         )
     )
-    if master:
-        builder = builder.master(master)
-    elif os.environ.get("SPARK_MASTER"):
+    if os.environ.get("SPARK_MASTER"):
         # actually APPLY the env master (review r7): Spark itself never
         # reads SPARK_MASTER — merely suppressing the local[] default
         # made plain-python launches die with "A master URL must be set"

@@ -161,7 +161,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     setattr(spark, _REGISTERED_ATTR, sf_dir)
 
 
-def duckdb_connect(sf_dir: str, threads: int | None = None):
+def duckdb_connect(sf_dir: str):
     """One DuckDB connection with every testdata table registered as a
     view — the single definition shared by the oracle-parity tests, the
     driver-contract simulation, bench.py's co-measure and the plan-audit
@@ -173,7 +173,7 @@ def duckdb_connect(sf_dir: str, threads: int | None = None):
     import os
 
     con = duckdb.connect()
-    con.execute(f"SET threads TO {threads or default_parallelism()}")
+    con.execute(f"SET threads TO {default_parallelism()}")
     for name in TABLES:
         path = f"{sf_dir}/{name}.parquet"
         if not os.path.exists(path):  # partial fixture dirs

@@ -11,7 +11,7 @@ window, not their arrival time).
 Scale notes (100 TB / unbounded):
 - The watermark bounds state: tumbling/sliding state is O(open windows x
   groups), session state O(open sessions). Without it, streaming aggs grow
-  forever — every function here REQUIRES a watermark argument on purpose.
+  forever — every function here sets a watermark on purpose.
 - ``dropDuplicatesWithinWatermark`` keeps only in-horizon keys, which is
   the streaming analogue of the reference's anti-join idempotency (J1).
 - State store: the default provider keeps state on the JVM heap, which is
@@ -31,14 +31,12 @@ from pyspark.sql import types as T
 from ..operators.aggregates import exact_sum
 
 
-def tumbling_counts_stream(
-    events: DataFrame, window: str = "10 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Tumbling event-time windows per event type (batch twin:
-    plans/streaming_queries.py::tumbling_event_counts)."""
+def tumbling_counts_stream(events: DataFrame) -> DataFrame:
+    """10-minute tumbling event-time windows per event type, 30-minute
+    watermark (batch twin: plans/streaming_queries.py::tumbling_event_counts)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "10 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.unix_timestamp(F.col("window.start")).alias("window_start_sec"),
@@ -48,16 +46,12 @@ def tumbling_counts_stream(
     )
 
 
-def sliding_volume_stream(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Sliding event-time windows (batch twin: sliding_window_volume)."""
+def sliding_volume_stream(events: DataFrame) -> DataFrame:
+    """10-minute event-time windows sliding by 5 minutes, 30-minute
+    watermark (batch twin: sliding_window_volume)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide))
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "10 minutes", "5 minutes"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.unix_timestamp(F.col("window.start")).alias("window_start_sec"), "n"
@@ -65,14 +59,13 @@ def sliding_volume_stream(
     )
 
 
-def session_stats_stream(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Gap-based session windows per user (batch twin: session_window_stats).
-    Session state closes once the watermark passes start+gap."""
+def session_stats_stream(events: DataFrame) -> DataFrame:
+    """Session windows per user with a 30-minute gap and a 30-minute
+    watermark (batch twin: session_window_stats). Session state closes once
+    the watermark passes start+gap."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -82,9 +75,7 @@ def session_stats_stream(
     )
 
 
-def enriched_segment_stream(
-    events: DataFrame, customer: DataFrame, watermark: str = "30 minutes"
-) -> DataFrame:
+def enriched_segment_stream(events: DataFrame, customer: DataFrame) -> DataFrame:
     """Stream-static enrichment: the event stream joins a STATIC dimension
     (customer) — Spark re-plans the static side per micro-batch and keeps
     the join stateless (no watermark needed on the dim, no join state at
@@ -99,7 +90,7 @@ def enriched_segment_stream(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "30 minutes")
         .join(dim, "user_id")
         .groupBy("segment")
         .agg(
@@ -165,18 +156,11 @@ def streaming_dedup(
     )
 
 
-def interval_join_stream(
-    events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    lag_minutes: int = 30,
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval self-join: each ``right_type`` event joined to
-    every same-user ``left_type`` event it follows within ``lag_minutes``
+def interval_join_stream(events: DataFrame, how: str = "inner") -> DataFrame:
+    """Stream-stream interval self-join: each ``purchase`` event joined to
+    every same-user ``click`` event it follows within 30 minutes
     (click->purchase attribution as an unbounded join). Both branches carry
-    watermarks and the join condition bounds BOTH event-time columns, which
+    2-hour watermarks and the join condition bounds BOTH event-time columns, which
     is what lets Spark expire join state: a click older than
     watermark + lag can never match again and is dropped. Inner join =>
     matches emit as they form (append mode); state is
@@ -191,26 +175,26 @@ def interval_join_stream(
     sentinel-batch flush pattern.
     """
     c = (
-        events.filter(F.col("event_type") == left_type)
+        events.filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
             F.col("event_id").alias("left_id"),
             F.col("ts").alias("left_ts"),
         )
-        .withWatermark("left_ts", watermark)
+        .withWatermark("left_ts", "2 hours")
     )
     p = (
-        events.filter(F.col("event_type") == right_type)
+        events.filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
             F.col("event_id").alias("right_id"),
             F.col("ts").alias("right_ts"),
         )
-        .withWatermark("right_ts", watermark)
+        .withWatermark("right_ts", "2 hours")
     )
     cond = F.expr(
         "c_user = p_user AND right_ts >= left_ts "
-        f"AND right_ts <= left_ts + interval {int(lag_minutes)} minutes"
+        "AND right_ts <= left_ts + interval 30 minutes"
     )
     return c.join(p, cond, how).select(
         F.col("c_user").alias("user_id"),
@@ -278,10 +262,9 @@ def run_to_memory(
     return session.table(name)
 
 
-def ohlc_stream(
-    events: DataFrame, window: str = "1 day", watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming OHLC bars per (user, event-time window): open/close via
+def ohlc_stream(events: DataFrame) -> DataFrame:
+    """Streaming OHLC bars per (user, 1-day event-time window, 1-hour
+    watermark): open/close via
     min_by/max_by over a (epoch-µs, event_id) order key INSIDE the
     streaming aggregate — the same argmin-in-hash-agg shape as the batch
     twin (plans/timeseries.daily_value_ohlc), running incrementally under
@@ -297,8 +280,8 @@ def ohlc_stream(
     )
     return (
         events.filter(F.col("value").isNotNull())
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "user_id")
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 day"), "user_id")
         .agg(
             F.min_by("value", order).alias("open"),
             F.max("value").alias("high"),

@@ -46,7 +46,7 @@ def test_dedup_append_keeps_the_batch_column_order(spark):
         "credit_usage", "invoice_id", "timestamp", "user_id", "resource_id"
     )
     existing = _df(spark, [_row(i) for i in range(5)])
-    for kwargs in ({}, {"dedup_batch": False}, {"strict": True}):
+    for kwargs in ({}, {"dedup_batch": False}):
         out = dedup_append(batch, existing, KEYS, **kwargs)
         assert out.columns == batch.columns, kwargs
     assert dedup_within_batch(batch, KEYS).columns == batch.columns
@@ -190,27 +190,6 @@ def test_ledger_keys_distinguish_hive_partitions(spark, tmp_path):
     # Third run: NOTHING is re-processed and no entry was evicted.
     assert len(ledger.filter_unprocessed(hash_files(spark, paths))) == 0
     assert len(ledger.latest()) == 3
-
-
-def test_strict_dedup_append_replicates_unique_violation(spark):
-    """strict=True aborts on intra-batch duplicate keys (the reference's
-    UNIQUE constraint, ingest.py:190); NULL-keyed rows never count as
-    duplicates (SQL UNIQUE semantics)."""
-    import pytest
-
-    from billing_data_pipeline_spark.operators.ingest import dedup_append
-
-    existing = spark.createDataFrame([], "k string, v int")
-    dup_batch = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("b", 3)], "k string, v int"
-    )
-    with pytest.raises(ValueError, match="duplicate natural key"):
-        dedup_append(dup_batch, existing, ["k"], strict=True)
-
-    null_batch = spark.createDataFrame(
-        [(None, 1), (None, 2), ("b", 3)], "k string, v int"
-    )
-    assert dedup_append(null_batch, existing, ["k"], strict=True).count() == 3
 
 
 def test_bloom_prefilter_exactness_and_pruning(spark):

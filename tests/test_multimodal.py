@@ -8,11 +8,27 @@ import struct
 
 import pytest
 
+from pyspark.sql import types as T
+
 from billing_data_pipeline_spark.operators.multimodal import (
     MAGIC,
-    MEDIA_SCHEMA,
     decode_media,
     sample_frames,
+)
+
+# The input shape the decode kernels take: an id, a kind, and the bytes.
+MEDIA_SCHEMA = T.StructType(
+    [
+        # all nullable (review r8): lake reality — failed downloads leave
+        # NULL blobs, joins leave NULL ids — and the decode kernels
+        # contain both (valid=false / NULL-id manifest row) rather than
+        # reject them at the schema door. Parquet scans surface nullable
+        # columns anyway; the old non-null declaration only ever bound
+        # createDataFrame test fixtures.
+        T.StructField("media_id", T.LongType(), True),
+        T.StructField("kind", T.StringType(), True),  # image|audio|video
+        T.StructField("content", T.BinaryType(), True),
+    ]
 )
 
 

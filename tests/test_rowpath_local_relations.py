@@ -68,12 +68,12 @@ def test_pq_small_tier_rowpath(spark):
         )
 
     arrow = rows(
-        S.pq_topk(corpus, queries, "vec_id", "embedding", k=3, m=4, dim=16)
+        S.pq_topk(corpus, queries, "vec_id", "embedding", k=3, dim=16)
     )
     with arrow_disabled(spark):
         rowpath = rows(
             S.pq_topk(
-                corpus, queries, "vec_id", "embedding", k=3, m=4, dim=16
+                corpus, queries, "vec_id", "embedding", k=3, dim=16
             )
         )
     assert rowpath == arrow and len(rowpath) > 0
@@ -94,7 +94,7 @@ def test_pq_small_tier_rowpath_zero_norm_query(spark):
     queries = corpus.filter(F.col("vec_id") % 40 == 0)  # includes 80
     with arrow_disabled(spark):
         out = S.pq_topk(
-            corpus, queries, "vec_id", "embedding", k=3, m=4, dim=16
+            corpus, queries, "vec_id", "embedding", k=3, dim=16
         ).collect()
     got_queries = {r["query_id"] for r in out}
     assert len(out) > 0

@@ -409,7 +409,7 @@ def test_ivf_topk_clamps_probes_on_tiny_corpus(spark):
 
     rows = [(i, [float(i), 1.0]) for i in range(3)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = ivf_topk(df, df.limit(1), k=2, n_lists=16, n_probe=4)
+    got = ivf_topk(df, df.limit(1), k=2)
     assert got.count() >= 1  # degrades, never crashes
 
 
@@ -441,26 +441,6 @@ def test_matmul_topk_matches_baseline_on_ties_and_zero_norms(spark):
     assert base == fast
     # the zero-norm candidate fills the last slot with a NULL sim
     assert any(c == 100 for (_, c, _) in fast)
-
-
-def test_minhash_band_size_must_divide_k(spark):
-    """Review r7: flooring k // band_size silently dropped the trailing
-    signature components from every band key (recall loss both engines,
-    invisible to the parity gate) — both tiers now fail loudly."""
-    import pytest
-
-    from billing_data_pipeline_spark.operators.dedup import minhash_neardup_pairs
-    from billing_data_pipeline_spark.operators.portable_dedup import (
-        minhash_portable_pairs,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="divisible"):
-        minhash_neardup_pairs(df, "doc_id", "text", k=16, band_size=3)
-    with pytest.raises(ValueError, match="divisible"):
-        minhash_portable_pairs(df, "doc_id", "text", k=12, band_size=5)
 
 
 def test_ann_recall_floors(spark):
@@ -729,7 +709,7 @@ def test_pq_fold_tiers_identical(spark, monkeypatch):
 
     def run():
         return rows(
-            S.pq_topk(corpus, queries, "vec_id", "embedding", k=3, m=4, dim=16)
+            S.pq_topk(corpus, queries, "vec_id", "embedding", k=3, dim=16)
         )
 
     folded = run()  # default threshold: both sides small -> fold
@@ -784,11 +764,11 @@ def test_pq_qtables_small_tier_matches_kernel(spark, monkeypatch):
         )
 
     small = rows(
-        S.pq_topk(corpus, queries, "vec_id", "embedding", k=3, m=4, dim=16)
+        S.pq_topk(corpus, queries, "vec_id", "embedding", k=3, dim=16)
     )
     monkeypatch.setattr(S, "_SEED_SMALL_BYTES", 0)
     dist = rows(
-        S.pq_topk(corpus, queries, "vec_id", "embedding", k=3, m=4, dim=16)
+        S.pq_topk(corpus, queries, "vec_id", "embedding", k=3, dim=16)
     )
     assert small == dist and len(small) > 0
 

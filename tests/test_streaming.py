@@ -123,7 +123,7 @@ def test_append_mode_emits_only_watermark_closed_windows(spark, tmp_path):
 
     stream = _event_stream(spark, str(src))
     got = run_to_memory(
-        tumbling_counts_stream(stream, window="10 minutes", watermark="30 minutes"),
+        tumbling_counts_stream(stream),
         "t_wm_append",
         "append",
     )
